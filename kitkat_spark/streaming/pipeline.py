@@ -3,8 +3,8 @@
 Each function maps a reference operator (SURVEY.md §2.A) onto a narrow,
 shuffle-free transformation that works identically on a batch DataFrame and a
 streaming one — the whole consume pipeline is a single whole-stage-codegen
-map chain plus one Arrow-batched UDF for the two binary codecs Spark SQL
-lacks (protobuf, zlib).
+map chain plus one Arrow-batched UDF per binary codec Spark SQL lacks
+(protobuf, zlib), each run once per record, DLQ decode pass included.
 
 Reference pipeline (consumer.go:148-209): GetRecords -> [aggregated? ->
 deaggregate -> N records] -> [zlib? -> inflate] -> bytes->text + trim one
@@ -25,17 +25,18 @@ from kitkat_spark.functions.kpl import is_aggregated_col, kpl_deaggregate_udf
 TS_FORMAT = "yyyy-MM-dd HH:mm:ss"  # Go layout 2006-01-02 15:04:05 (consumer.go:193)
 
 
-def deaggregate(df: DataFrame) -> DataFrame:
-    """X1: expand KPL aggregates in-line; pass plain records through.
+def deaggregate_outer(df: DataFrame) -> DataFrame:
+    """X1, failures kept: expand KPL aggregates in-line, pass plain records
+    through. A blob that fails magic/md5/protobuf checks (consumer.go:177-179)
+    is ONE row with ``_kpl_failed`` set and null ``partitionKey``/``data``/
+    ``tags``, which the DLQ sink (sinks.py) quarantines from its decode pass.
 
     Inner records inherit the outer record's arrival timestamp, sequence
     number, shard and encryption type (consumer.go:183-188); the partition
-    key is dictionary-decoded inside the UDF (consumer.go:186). A blob that
-    fails magic/md5/protobuf checks yields zero rows (consumer.go:177-179).
-
-    Single-pass form: wrap plain payloads as a 1-element array and explode,
-    so there is no filter/union plan split — one projection, one explode,
-    no second scan of the source.
+    key is dictionary-decoded inside the UDF (consumer.go:186). Plain
+    payloads are wrapped as a 1-element array so one ``explode_outer`` does
+    both: no filter/union split, no second scan of the source. Only a
+    failed decode (an empty array) explodes to a null ``_rec``.
     """
     recs = F.when(
         is_aggregated_col(F.col("data")), kpl_deaggregate_udf(F.col("data"))
@@ -49,12 +50,18 @@ def deaggregate(df: DataFrame) -> DataFrame:
         )
     )
     return (
-        df.withColumn("_rec", F.explode(recs))
+        df.withColumn("_rec", F.explode_outer(recs))
+        .withColumn("_kpl_failed", F.col("_rec").isNull())
         .withColumn("partitionKey", F.col("_rec.partition_key"))
         .withColumn("data", F.col("_rec.data"))
         .withColumn("tags", F.col("_rec.tags"))
         .drop("_rec")
     )
+
+
+def deaggregate(df: DataFrame) -> DataFrame:
+    """X1: ``deaggregate_outer`` minus failed blobs, which yield zero rows."""
+    return deaggregate_outer(df).filter(~F.col("_kpl_failed")).drop("_kpl_failed")
 
 
 def decompress(df: DataFrame, compression: str | None) -> DataFrame:

@@ -4,9 +4,10 @@ quarantine.
 The reference SILENTLY drops undecodable payloads (consumer.go:177-179:
 failed deagg -> zero rows; 213-216: failed inflate -> passthrough). At
 100 TB silent drops are unacceptable — a corrupt-blob burst must be
-observable and replayable. ``consume_with_dlq`` splits the stream on
-decodability: good records flow through the normal pipeline, undecodable
-ones land in a quarantine table with the raw payload and a reason column.
+observable and replayable. ``consume_with_dlq`` decodes each record ONCE
+(``classify_records``: KPL per outer record, zlib per inner record) and
+splits that pass: healthy rows are only rendered, undecodable ones land in
+a quarantine table with the raw payload and a reason column.
 
 Both paths are written by ONE foreachBatch so a micro-batch commits good
 and bad rows atomically-enough for replay (checkpointed offsets + idempotent
@@ -16,35 +17,33 @@ a transactional table format, which is a deployment choice not taken here).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from kitkat_spark.functions.compression import zlib_decompress_udf
-from kitkat_spark.functions.kpl import is_aggregated_col, kpl_deaggregate_udf
-from kitkat_spark.streaming.pipeline import render
+from kitkat_spark.streaming.pipeline import decompress, deaggregate_outer, render
 
 
 def classify_records(df: DataFrame, compression: str | None = None) -> DataFrame:
-    """Adds ``_dlq_reason`` (null = healthy). A KPL-magic payload that decodes
-    to zero records is quarantined (bad md5 / truncated / bad protobuf); a
-    zlib stream that fails to inflate is quarantined when compression is on."""
-    decoded_n = F.when(
-        is_aggregated_col(F.col("data")), F.size(kpl_deaggregate_udf(F.col("data")))
-    )
-    reason = F.when(decoded_n == 0, F.lit("kpl_decode_failed"))
+    """The decode pass: one row per inner record, deaggregated and inflated,
+    plus ``_dlq_reason`` (null = healthy) and ``_raw``, the outer ``data``
+    and ``partitionKey`` of a quarantined row (null on healthy rows, so a
+    cached batch does not hold a KPL blob once per inner record). A
+    KPL-magic payload that decodes to zero records is one
+    ``kpl_decode_failed`` row (bad md5 / truncated / bad protobuf); with
+    zlib on, a plain payload that fails to inflate is ``zlib_decode_failed``.
+    A bad ``compression`` raises here."""
+    out = decompress(deaggregate_outer(df.withColumn("_raw", F.struct("data", "partitionKey"))), compression)
+    raw = F.col("_raw.data")
+    reason = F.when(F.col("_kpl_failed"), F.lit("kpl_decode_failed"))
     if compression == "zlib":
         # inflate failure passthrough returns input unchanged; flag only
-        # payloads that LOOK deflated (0x78 header) yet fail to inflate
-        looks_zlib = F.startswith(F.col("data"), F.lit(b"\x78"))
-        inflated = zlib_decompress_udf(F.col("data"))
-        reason = reason.otherwise(
-            F.when(
-                (~is_aggregated_col(F.col("data"))) & looks_zlib & (inflated == F.col("data")),
-                F.lit("zlib_decode_failed"),
-            )
-        )
-    return df.withColumn("_dlq_reason", reason)
+        # plain payloads that LOOK deflated (0x78 header, never the KPL
+        # magic) yet fail to inflate
+        looks_zlib = F.startswith(raw, F.lit(b"\x78"))
+        reason = reason.when(looks_zlib & (F.col("data") == raw), F.lit("zlib_decode_failed"))
+    out = out.withColumn("_dlq_reason", reason).drop("_kpl_failed")
+    return out.withColumn("_raw", F.when(F.col("_dlq_reason").isNotNull(), F.col("_raw")))
 
 
 def consume_with_dlq(
@@ -56,29 +55,22 @@ def consume_with_dlq(
     verbose: bool = True,
 ) -> StreamingQuery:
     """EP2 with quarantine: decode-able records -> rendered parquet append;
-    undecodable -> raw payload + reason + arrival metadata in the DLQ."""
-    from kitkat_spark.streaming.pipeline import consume_transform
-
+    undecodable -> raw payload + reason + arrival metadata in the DLQ. Two
+    jobs per micro-batch: the good write persists the decoded batch and
+    counts its bad rows (Observation); the DLQ write reads the cache."""
     classified = classify_records(records, compression)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.persist()
         try:
-            good = batch_df.filter(F.col("_dlq_reason").isNull()).drop("_dlq_reason")
-            bad = batch_df.filter(F.col("_dlq_reason").isNotNull())
-            consume_transform(good, compression=compression, verbose=verbose).write.mode(
-                "append"
-            ).parquet(good_path)
-            if bad.limit(1).count():
-                bad.select(
-                    "data",
-                    "partitionKey",
-                    "sequenceNumber",
-                    "approximateArrivalTimestamp",
-                    "shardId",
-                    "streamName",
-                    F.col("_dlq_reason").alias("reason"),
-                    F.lit(batch_id).alias("batch_id"),
+            reason = F.col("_dlq_reason")
+            n_bad = Observation()
+            good = batch_df.observe(n_bad, F.count_if(reason.isNotNull()).alias("n"))
+            render(good.filter(reason.isNull()), verbose=verbose).write.mode("append").parquet(good_path)
+            if n_bad.get["n"]:
+                batch_df.filter(reason.isNotNull()).select(
+                    "_raw.*", "sequenceNumber", "approximateArrivalTimestamp", "shardId", "streamName",
+                    reason.alias("reason"), F.lit(batch_id).alias("batch_id"),
                 ).write.mode("append").parquet(dlq_path)
         finally:
             batch_df.unpersist()

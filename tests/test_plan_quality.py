@@ -57,6 +57,47 @@ def test_consume_pipeline_is_shuffle_free(spark):
     assert shuffle_count(out) == 0
 
 
+def _run_plan_nodes(spark, query_id: str) -> list[tuple[str, str]]:
+    """(name, description) of every physical node, cached plans included,
+    of the SQL executions a streaming run made, read from the SQL status
+    store (its executions carry the query id in their description)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    execs = store.executionsList(max(0, n - 50), min(n, 50))
+    out = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if query_id in (e.description() or ""):
+            nodes = store.planGraph(e.executionId()).allNodes()
+            out += [(nodes.apply(j).name(), nodes.apply(j).desc()) for j in range(nodes.size())]
+    return out
+
+
+def test_dlq_batch_decodes_each_record_once(spark, tmp_path):
+    """consume_with_dlq decodes once (streaming/sinks.py): the KPL UDF and
+    the zlib UDF each run in ONE ArrowEvalPython node, and the batch pays
+    zero shuffles. The good write executes the micro-batch plan (the
+    foreachBatch frame wraps its RDD), so both plans count as its path; the
+    write itself only renders the persisted rows."""
+    from kitkat_spark.streaming import replay_stream
+    from kitkat_spark.streaming.sinks import consume_with_dlq
+    from tests.test_sinks import _mixed_rows, _write
+
+    rows, _ = _mixed_rows()
+    _write(spark, rows, str(tmp_path / "src"))
+    q = consume_with_dlq(
+        replay_stream(spark, str(tmp_path / "src")),
+        *(str(tmp_path / d) for d in ("good", "dlq", "ckpt")),
+        compression="zlib",
+    )
+    assert q.awaitTermination(180)
+    nodes = _run_plan_nodes(spark, str(q.id))
+    arrow = [d for name, d in nodes if name == "ArrowEvalPython"]
+    assert sum("kpl_deaggregate_udf" in d for d in arrow) == 1, arrow
+    assert sum("zlib_decompress_udf" in d for d in arrow) == 1, arrow
+    assert not [name for name, _ in nodes if "Exchange" in name]
+
+
 def test_agg_group_partial_aggregation(spark):
     """Map-side combine: exactly one shuffle for a single groupBy, with
     partial aggregation below the Exchange (the bit that makes a 100 TB

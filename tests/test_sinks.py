@@ -1,14 +1,19 @@
-"""DLQ sink: corrupt KPL blobs are quarantined with a reason while healthy
-records flow to the good table; checkpoint resume processes late-arriving
-files exactly once."""
+"""DLQ sink: corrupt KPL blobs and undecodable zlib payloads are quarantined
+with a reason and their raw bytes while healthy records flow to the good
+table, exactly as the plain consume pipeline renders them; checkpoint resume
+processes late-arriving files exactly once."""
 
 from __future__ import annotations
 
 import datetime as dt
+import os
+import zlib
+from collections import Counter
 
-from pyspark.sql import functions as F
+import pytest
 
 from kitkat_spark.functions.kpl import aggregate_records
+from kitkat_spark.streaming.pipeline import consume_transform
 from kitkat_spark.streaming.records import RECORD_SCHEMA, replay_stream
 from kitkat_spark.streaming.sinks import consume_with_dlq
 
@@ -48,3 +53,76 @@ def test_dlq_quarantines_corrupt_blobs(spark, tmp_path):
     msgs = sorted(r.message for r in spark.read.parquet(good_p).collect())
     assert msgs == ["inner", "late", "plain"]
     assert spark.read.parquet(dlq_p).count() == 1  # corrupt NOT reprocessed
+
+
+def _run_dlq(spark, tmp_path, rows, **kw):
+    """Drains ``rows`` through consume_with_dlq; returns (good, dlq) rows."""
+    src = str(tmp_path / "src")
+    _write(spark, rows, src)
+    good_p, dlq_p, ckpt = (str(tmp_path / d) for d in ("good", "dlq", "ckpt"))
+    assert consume_with_dlq(replay_stream(spark, src), good_p, dlq_p, ckpt, **kw).awaitTermination(180)
+    dlq = spark.read.parquet(dlq_p).collect() if os.path.isdir(dlq_p) else []
+    return spark.read.parquet(good_p).collect(), dlq
+
+
+def test_dlq_zlib_path(spark, tmp_path):
+    undeflatable = b"\x78not deflate\n"
+    blob = aggregate_records(
+        ["k0", "k1"],
+        [
+            {"partition_key_index": 0, "data": zlib.compress(b"a\n")},
+            {"partition_key_index": 1, "data": zlib.compress(b"b\n"), "tags": [("t", "v")]},
+        ],
+    )
+    rows = [_rec(undeflatable, "1"), _rec(b"plain text\n", "2"), _rec(blob, "3")]
+    good, dlq = _run_dlq(spark, tmp_path, rows, compression="zlib", verbose=False)
+
+    assert sorted(r.message for r in good) == ["a", "b", "plain text"]
+    assert [(r.reason, r.sequenceNumber, r.data, r.partitionKey) for r in dlq] == [
+        ("zlib_decode_failed", "1", undeflatable, "pk-1")
+    ]
+
+
+def _mixed_rows():
+    tagged = aggregate_records(
+        ["k0", "k1"],
+        [
+            {"partition_key_index": 0, "data": zlib.compress(b"in0\n"), "tags": [("t", "v"), ("u", None)]},
+            {"partition_key_index": 1, "data": b"\x78inner passthrough\n"},
+            {"partition_key_index": 1, "data": zlib.compress(b"in2\n\n")},
+        ],
+    )
+    bad_md5 = tagged[:-1] + bytes([tagged[-1] ^ 0xFF])
+    return [
+        _rec(zlib.compress(b"p1\n"), "1"),
+        _rec(tagged, "2"),
+        _rec(bad_md5, "3"),
+        _rec(b"\x78not deflate", "4"),
+        _rec(b"p5", "5"),
+    ], {"3": "kpl_decode_failed", "4": "zlib_decode_failed"}
+
+
+@pytest.mark.parametrize("verbose", [True, False])
+def test_dlq_good_table_matches_consume_transform(spark, tmp_path, verbose):
+    rows, corrupt = _mixed_rows()
+    good, dlq = _run_dlq(spark, tmp_path, rows, compression="zlib", verbose=verbose)
+
+    healthy = spark.createDataFrame([r for r in rows if r[2] not in corrupt], RECORD_SCHEMA)
+    want = consume_transform(healthy, compression="zlib", verbose=verbose).collect()
+    assert Counter(good) == Counter(want) and len(good) == 5
+
+    # each corrupt record lands in exactly one table: the DLQ, raw bytes intact
+    raw = {r[2]: r for r in rows}
+    assert {r.sequenceNumber: r.reason for r in dlq} == corrupt and len(dlq) == len(corrupt)
+    assert all((r.data, r.partitionKey) == raw[r.sequenceNumber][:2] for r in dlq)
+    if verbose:
+        assert not {r.sequence_number for r in good} & set(corrupt)
+
+
+def test_dlq_rejects_unknown_compression_before_start(spark, tmp_path):
+    src = str(tmp_path / "src")
+    _write(spark, [_rec(b"x", "1")], src)
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(ValueError, match="gzip"):
+        consume_with_dlq(replay_stream(spark, src), str(tmp_path / "g"), str(tmp_path / "d"), ckpt, compression="gzip")
+    assert not os.path.exists(ckpt)
