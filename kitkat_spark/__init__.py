@@ -15,5 +15,3 @@ driver-mandated analytic surface (SURVEY.md §2.B) is pure DataFrame/Catalyst.
 """
 
 __version__ = "0.1.0"
-
-from kitkat_spark.session import get_spark  # noqa: F401

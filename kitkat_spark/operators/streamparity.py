@@ -41,6 +41,10 @@ def _sink_suffix(path: str) -> int:
     return int(hashlib.md5(path.encode()).hexdigest()[:8], 16)
 
 
+# scratch root of the replay fixtures, sources, sinks and checkpoints
+REPLAY_ROOT = "/tmp/kitkat_replay"
+
+
 def _scratch_dir(spark: SparkSession, root: str, variant: str, sf_dir: str) -> str:
     """Per-(session, variant, sf_dir) scratch path for replay fixtures and
     checkpoints. Keyed on a HASH of the fully-resolved sf_dir, not its
@@ -196,7 +200,7 @@ def _replay_info(spark: SparkSession, sf_dir: str, variant: str, df_fn) -> tuple
 
     key = (spark.sparkContext.applicationId, sf_dir, variant)
     if key not in _REPLAY_CACHE:
-        path = _scratch_dir(spark, "/tmp/kitkat_replay", variant, sf_dir)
+        path = _scratch_dir(spark, REPLAY_ROOT, variant, sf_dir)
         df = df_fn()
         df.write.mode("overwrite").parquet(path)
         _REPLAY_CACHE[key] = (path, df.count())
@@ -965,7 +969,7 @@ def q_stream_late_drop_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "ts")
     key = (spark.sparkContext.applicationId, sf_dir, "late_drop")
     if key not in _REPLAY_CACHE:
-        base = _scratch_dir(spark, "/tmp/kitkat_replay", "late_drop", sf_dir)
+        base = _scratch_dir(spark, REPLAY_ROOT, "late_drop", sf_dir)
         src = os.path.join(base, "src")
         sink = os.path.join(base, "sink")
         ckpt = os.path.join(base, "ckpt")
@@ -1568,7 +1572,7 @@ def _fresh_scratch(spark: SparkSession, variant: str, sf_dir: str) -> str:
 
     key = (spark.sparkContext.applicationId, variant, sf_dir)
     base = (
-        _scratch_dir(spark, "/tmp/kitkat_replay", variant, sf_dir)
+        _scratch_dir(spark, REPLAY_ROOT, variant, sf_dir)
         + f"-call{next(_FRESH_NONCE)}"
     )
     prior = _FRESH_DIRS.pop(key, None)
@@ -2726,6 +2730,17 @@ def q_stream_ttl_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
     for k in range(TTL_WAVES):
         for f in _glob.glob(os.path.join(src, f"wave={k}", "*.parquet")):
             os.utime(f, (1_700_000_000 + k, 1_700_000_000 + k))
+    # a split wave replays its fragments in arbitrary order and an empty
+    # wave drops a micro-batch: either silently breaks the gap chain
+    per_wave = [
+        len(_glob.glob(os.path.join(d, "*.parquet")))
+        for d in _glob.glob(os.path.join(src, "wave=*"))
+    ]
+    if per_wave != [1] * TTL_WAVES:
+        raise RuntimeError(
+            f"q_stream_ttl_evict replay needs {TTL_WAVES} wave directories "
+            f"of one parquet file each, found files per wave {per_wave}"
+        )
     last_rows = 0
     with _state_partitions(spark, span, pandas_state=True):
         stream = (

@@ -1,17 +1,17 @@
 #!/usr/bin/env python
-"""Round-14 optimization measurement harness (guide §1).
+"""Optimization measurement harness (guide §1), for the round in ``ROUND``.
 
 For each named query: time `.count()` (the bench's timed action, kept for
 round-over-round comparability) and the noop sink (guide §1.4 — computes
 every column, isolates computation from sink/driver transfer), N runs each,
-and optionally dump `.explain("formatted")` to plans/r15/<query>_<tag>.txt.
+and optionally dump `.explain("formatted")` to plans/<ROUND>/<query>_<tag>.txt.
 
 Usage:
   python tools/opt_measure.py q_a q_b ...            # time only
   python tools/opt_measure.py --plans before q_a ... # also write plan files
   python tools/opt_measure.py --runs 3 q_a
   python tools/opt_measure.py --all-slow 1.0         # everything >= 1.0 s in
-                                                     # the r14 pool fold
+                                                     # the ROUND pool fold
 Writes one JSON line per query to stdout and appends to
 /tmp/opt_measure_log.jsonl.
 """
@@ -29,17 +29,21 @@ import pandas as pd  # noqa: F401 — resolves UDF type hints under PEP 563
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kitkat_spark.caches import release_caches  # noqa: E402
+from kitkat_spark.operators.streamparity import REPLAY_ROOT  # noqa: E402
 from kitkat_spark.plans.explain import explain_str  # noqa: E402
 from kitkat_spark.queries import QUERIES  # noqa: E402
 from kitkat_spark.session import get_spark  # noqa: E402
+
+# the round whose pool fold --all-slow reads and whose plans/ dir --plans writes
+ROUND = "r15"
 
 
 def pool_fold(repo: str) -> dict[str, float]:
     import glob
 
     runs = []
-    for f in [os.path.join(repo, "BENCH_LOCAL_r14.json")] + sorted(
-        glob.glob(os.path.join(repo, "bench_runs", "BENCH_LOCAL_r14_*.json"))
+    for f in [os.path.join(repo, f"BENCH_LOCAL_{ROUND}.json")] + sorted(
+        glob.glob(os.path.join(repo, "bench_runs", f"BENCH_LOCAL_{ROUND}_*.json"))
     ):
         try:
             runs.append(json.load(open(f)))
@@ -53,16 +57,17 @@ def pool_fold(repo: str) -> dict[str, float]:
 
 
 def _calibrate_fsync(n: int = 50) -> float:
-    """Timed small-write+fsync loop on the scratch filesystem (ADVICE r14):
+    """Timed small-write+fsync loop in the replay scratch root (ADVICE r14):
     streaming-lane wall time is dominated by checkpoint/commit fsyncs, which
     the CPU/Spark calibrations do not capture. Returns seconds (best of 3)."""
     import tempfile
     import time as _t
 
+    os.makedirs(REPLAY_ROOT, exist_ok=True)
     best = float("inf")
     for _ in range(3):
         t0 = _t.perf_counter()
-        with tempfile.NamedTemporaryFile(dir="/tmp", delete=True) as fh:
+        with tempfile.NamedTemporaryFile(dir=REPLAY_ROOT, delete=True) as fh:
             for i in range(n):
                 fh.write(b"x" * 4096)
                 fh.flush()
@@ -74,7 +79,7 @@ def _calibrate_fsync(n: int = 50) -> float:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="*")
-    ap.add_argument("--plans", default=None, help="tag: write plans/r14/<q>_<tag>.txt")
+    ap.add_argument("--plans", default=None, help=f"tag: write plans/{ROUND}/<q>_<tag>.txt")
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--noop", action="store_true", help="also time the noop sink")
     ap.add_argument("--all-slow", type=float, default=None)
@@ -106,7 +111,7 @@ def main() -> None:
     }
     print(json.dumps({"window": calib}), flush=True)
 
-    plan_dir = os.path.join(repo, "plans", "r15")
+    plan_dir = os.path.join(repo, "plans", ROUND)
     os.makedirs(plan_dir, exist_ok=True)
     log = open("/tmp/opt_measure_log.jsonl", "a")
     for name in names:
