@@ -24,270 +24,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from kitkat_spark.queries import QUERIES  # noqa: E402
 from kitkat_spark.session import get_spark  # noqa: E402
 
-# Headline set: one per operator family (scan, joins, agg, window, temporal,
-# dedup families, similarity, text, payload codecs).
 _LOAD0 = (0.0, 0.0, 0.0)
 
-HEADLINE = [
-    "q_scan_filter",
-    "q_hash_join",
-    "q_broadcast_join",
-    "q_outer_join",
-    "q_minmax_by",
-    "q_sample_split",
-    "q_stratified_sample",
-    "q_mjoin_revenue",
-    "q_mjoin_region_revenue",
-    "q_forecast_revenue",
-    "q_min_cost_supplier",
-    "q_returned_revenue",
-    "q_market_share",
-    "q_product_profit",
-    "q_late_priority_lines",
-    "q_top_supplier",
-    "q_excess_suppliers",
-    "q_waiting_orders",
-    "q_range_join",
-    "q_asof_join",
-    "q_agg_group",
-    "q_rollup_cube",
-    "q_window_rank",
-    "q_window_range",
-    "q_first_last",
-    "q_posexplode",
-    "q_sort_limit",
-    "q_stream_tumbling",
-    "q_stream_sliding",
-    "q_sessionize",
-    "q_dedup",
-    "q_ngram_jaccard",
-    "q_near_dedup",
-    "q_simhash",
-    "q_similarity_search",
-    "q_ann_ivf",
-    "q_ann_multiprobe",
-    "q_skew_join_salted",
-    "q_skew_join_auto",
-    "q_knn_classify",
-    "q_text_analysis",
-    "q_token_count",
-    "q_kpl_deagg",
-    "q_zlib",
-    "q_consume_plain",
-    "q_consume_pipeline",
-    "q_multimodal_decode",
-    "q_image_decode",
-    "q_frame_sample",
-    "q_vocab",
-    "q_tfidf",
-    "q_pii_redact",
-    "q_funnel",
-    "q_cohort_retention",
-    "q_in_subquery",
-    "q_unpivot",
-    "q_cross_join_grid",
-    "q_dedup_clusters",
-    "q_canonical_docs",
-    "q_chunk_docs",
-    "q_length_outliers",
-    "q_corpus_mix",
-    "q_mix_rebalance",
-    "q_merge_upsert",
-    "q_scd2",
-    "q_exists_join",
-    "q_having_scalar",
-    "q_count_distribution",
-    "q_group_filter_join",
-    "q_centroid_assign",
-    "q_decontaminate",
-    "q_incremental_dedup",
-    "q_bigram_lm",
-    "q_lm_score",
-    "q_stream_enrich",
-    "q_nation_volume",
-    "q_promo_revenue",
-    "q_part_supplier_count",
-    "q_small_qty_revenue",
-    "q_disjunctive_join",
-    "q_idle_customers",
-    "q_repetition_filter",
-    "q_label_centroid",
-    "q_pack_sequences",
-    "q_event_growth",
-    "q_dup_rate_by_source",
-    "q_corpus_pipeline",
-    # full-surface tail: every remaining registry query, so every declared
-    # operator has per-round perf data
-    "q_json_funcs",
-    "q_stateful_profile",
-    "q_consume_since",
-    "q_shard_status",
-    "q_quality_score",
-    "q_grouping_sets",
-    "q_histogram",
-    "q_agg_distinct",
-    "q_array_map_funcs",
-    "q_conditional_funcs",
-    "q_datetime_funcs",
-    "q_embedding_near_dup",
-    "q_fingerprint",
-    "q_lang_id",
-    "q_lang_mismatch",
-    "q_media_resize",
-    "q_multimodal",
-    "q_percentiles",
-    "q_pivot",
-    "q_scalar_funcs",
-    "q_semi_anti_join",
-    "q_set_ops",
-    "q_split_leakage",
-    "q_stats_agg",
-    "q_string_agg",
-    "q_subquery_scalar",
-    "q_window_frame",
-    "q_window_ntile",
-    "q_winnow_fingerprint",
-    "q_stream_dedup_wm",
-    "q_stream_interval_join_wm",
-    "q_stream_session_wm",
-    "q_shuffle_shards",
-    "q_consume_dlq",
-    "q_ann_kmeans_ivf",
-    "q_bloom_join",
-    "q_pagerank",
-    "q_span_dedup",
-    "q_column_profile",
-    "q_column_profile_approx",
-    "q_embedding_audit",
-    "q_count_min",
-    "q_triangle_count",
-    "q_zorder_cluster",
-    "q_bucketed_join",
-    "q_quantile_sketch",
-    "q_format_roundtrip",
-    "q_trend_slope",
-    "q_anomaly_zscore",
-    "q_groupmap_normalize",
-    "q_normalize_window",
-    "q_stream_dedup_agg_wm",
-    "q_stream_late_drop_wm",
-    "q_train_manifest",
-    "q_token_pmi",
-    "q_weighted_sample",
-    "q_bm25",
-    "q_mix_rebalance_rate",
-    "q_dedup_apply",
-    "q_ann_recall",
-    "q_embedding_quantize",
-    "q_minhash_accuracy",
-    # round-8 audit/ingest additions
-    "q_dedup_verify",
-    "q_ann_recall_multiprobe",
-    "q_stream_mix_rebalance",
-    "q_oov_rate",
-    "q_pack_efficiency",
-    "q_gap_fill",
-    "q_edit_dedup",
-    "q_passjoin_dedup",
-    "q_partition_prune",
-    "q_ship_priority",
-    "q_local_supplier_volume",
-    "q_big_orders",
-    "q_vocab_coverage",
-    "q_zipf_slope",
-    "q_doc_entropy",
-    "q_pq_codebook",
-    "q_stream_topk_wm",
-    "q_cdc_chunk",
-    "q_semdedup",
-    "q_dsir_weights",
-    "q_csv_roundtrip",
-    "q_stream_gap_fill",
-    "q_hll_distinct",
-    "q_bpe_pairs",
-    "q_skyline",
-    "q_binary_ingest",
-    "q_stream_hll_wm",
-    "q_ewma",
-    "q_anomaly_mad",
-    "q_winsorize",
-    "q_kmv_intersect",
-    "q_rrf_fusion",
-    "q_active_intervals",
-    "q_chi2_tokens",
-    "q_ks_drift",
-    "q_orc_roundtrip",
-    "q_stream_ewma",
-    "q_pq_search",
-    "q_kn_bigram",
-    "q_assoc_rules",
-    "q_markov_transitions",
-    "q_triplet_mining",
-    "q_ngram_novelty",
-    "q_source_overlap",
-    "q_stream_anomaly_wm",
-    # round-10 additions
-    "q_curriculum",
-    "q_reservoir_sample",
-    "q_label_prop",
-    "q_session_paths",
-    "q_kn_trigram",
-    "q_stream_cms_wm",
-    "q_dataset_card",
-    "q_kanon_audit",
-    "q_dp_counts",
-    "q_weighted_reservoir",
-    "q_gram_matrix",
-    "q_ldiv_audit",
-    # round-11 additions
-    "q_tclose_audit",
-    "q_lcp_dedup",
-    "q_gram_blocked",
-    "q_lm_calibration",
-    "q_stream_session_paths",
-    # round-12 additions
-    "q_ann_hnsw",
-    "q_ann_recall_hnsw",
-    "q_ndcg_eval",
-    "q_lsh_tuning",
-    "q_ann_index_stats",
-    "q_lsh_source_curve",
-    # round-13 additions
-    "q_stream_incr_dedup",
-    "q_ann_index_merge",
-    "q_ann_probe_planner",
-    "q_minhash_merge",
-    "q_longest_repeat",
-    "q_boilerplate_coverage",
-    "q_token_fertility",
-    # round-14 additions
-    "q_ann_index_delete",
-    "q_stream_boilerplate",
-    "q_stream_passjoin",
-    "q_fertility_drift",
-    "q_ann_index_update",
-    "q_passjoin_delete",
-    "q_stream_fertility",
-    "q_boilerplate_sources",
-    "q_dedup_ttl",
-    "q_ann_rebalance",
-    "q_span_overlap",
-    "q_stream_dedup_ttl",
-    "q_stream_boiler_sources",
-    "q_span_attribution",
-    "q_passjoin_planner",
-    "q_stream_ttl_evict",
-    "q_token_budget",
-    "q_stream_token_budget",
-    "q_ann_gen_gc",
-    "q_budget_realize",
-    # Excluded on purpose (NOT a silent cap): q_cc_chain is the adversarial
-    # deep-diameter CC verification query — it deliberately runs ~25 star
-    # rounds on a path graph, so its wall time is per-round scheduler
-    # overhead x round count, independent of data volume. It stays in the
-    # driver correctness set; timing it here would only measure the
-    # scheduler.
-]
+# Headline set: every registry query, in registry order, except q_cc_chain —
+# its wall time is per-round scheduler overhead on a deep path graph, not data.
+HEADLINE = [n for n in QUERIES if n != "q_cc_chain"]
 
 
 IDLE_LOAD_1M = 1.0  # 1-min loadavg below this counts as an idle machine

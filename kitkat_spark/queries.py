@@ -1,17 +1,9 @@
 """Query registry: the declared SURVEY.md §2 surface the driver verifies.
 
 ``QUERIES`` maps name -> callable(spark, sf_dir) -> DataFrame.
-``ORACLES`` maps the SQL-expressible subset to DuckDB twins (names/aliases
-match column-for-column — driver hashes values after sorting columns by name).
-Names absent from ``ORACLES`` get the driver's weaker rows-only check.
-
-ORDER MATTERS: the driver verifies the first 50 registry entries per round
-(observed in round 1: CORRECTNESS_r01.json stops at exactly entry 50 in
-registry iteration order). ``_VERIFY_FIRST`` therefore front-loads (a)
-queries never driver-verified before, (b) queries changed this round, and
-(c) new queries; the tail holds queries already hash-verified green in a
-prior round AND covered by the local pytest oracle-parity suite
-(tests/test_oracle_parity.py runs ALL oracled queries every round).
+``ORACLES`` maps every query to its DuckDB twin (names/aliases match
+column-for-column — driver hashes values after sorting columns by name);
+tests/test_smoke_all_queries.py keeps the two key sets equal.
 """
 
 from __future__ import annotations
@@ -99,116 +91,7 @@ for _m in _MODULES:
             _ALL[_name] = _cache_scoped(getattr(_m, _name))
     ORACLES.update(getattr(_m, "ORACLE", {}))
 
-# The 50 driver-verified slots this round (round 14). Blocks, per the
-# staleness gate (tests/test_driver_staleness.py) and the round-13 verdict:
-# (a) the gate's 20 forced queries — r10 greens whose host modules changed
-# during round 13 (the gate's own output at the r13 HEAD, also listed
-# verbatim in VERDICT.md next-round #1); (b) the 21 queries NEW this
-# round (six waves) — never driver-verified, always forced — plus the one
-# changed query; (c) the three r7 rotations
-# displaced last round (queued first by both the r12 tail comment and the
-# r13 verdict); (d) the full r8 block (oldest unchanged-module greens);
-# (e) 1 of the 13 r9 greens — the second and third round-14 operator waves
-# displaced q_window_rank, q_trend_slope, q_winsorize,
-# q_local_supplier_volume, q_ship_priority, q_skyline, q_stats_agg,
-# q_big_orders, q_csv_roundtrip, q_hll_distinct, q_kmv_intersect,
-# q_orc_roundtrip (unchanged modules, sibling queries slotted) to r15,
-# which must also budget for the r11 greens of similarity/streamparity/
-# textops/dedup/corpus hitting the 4-round horizon with this round's
-# changes. 20 + 21 + 3 + 5 + 1 = 50.
-_VERIFY_FIRST = [
-    # -- (a) the gate's 20 forced r10 greens (changed modules) --
-    "q_corpus_pipeline",
-    "q_dataset_card",
-    "q_decontaminate",
-    "q_dp_counts",
-    "q_gram_matrix",
-    "q_incremental_dedup",
-    "q_kanon_audit",
-    "q_kn_trigram",
-    "q_lang_mismatch",
-    "q_ldiv_audit",
-    "q_lm_score",
-    "q_mix_rebalance",
-    "q_normalize_window",
-    "q_simhash",
-    "q_stream_cms_wm",
-    "q_stream_session_wm",
-    "q_tfidf",
-    "q_unpivot",
-    "q_weighted_reservoir",
-    "q_winnow_fingerprint",
-    # -- (b) new this round, plus the one query whose SEMANTICS changed
-    #    this round (q_boilerplate_coverage: the commodity threshold moved
-    #    from a vacuous 10% to a 4-per-mille rate so the TRUE arm actually
-    #    fires at every SF; changed queries are always front-loaded) --
-    "q_ann_index_delete",    # NEW: tombstone + compact audit (lifecycle)
-    "q_stream_boilerplate",  # NEW: commodity-gram DF in streaming state
-    "q_stream_passjoin",     # NEW: incremental edit-distance near-dup
-    "q_fertility_drift",     # NEW: per-source tokenizer drift over ingest
-    "q_ann_index_update",    # NEW: re-embed wave moved between posting lists
-    "q_passjoin_delete",     # NEW: retire wave on the standing PassJoin index
-    "q_stream_fertility",    # NEW: fertility drift in streaming state
-    "q_boilerplate_sources", # NEW: per-source boilerplate attribution
-    "q_dedup_ttl",           # NEW: TTL sweep over the fingerprint index
-    "q_ann_rebalance",       # NEW: versioned-generation plane re-training
-    "q_span_overlap",        # NEW: span-granularity cross-source overlap
-    "q_stream_dedup_ttl",    # NEW: refresh-on-arrival TTL in custom state
-    "q_stream_boiler_sources",  # NEW: per-source commodity state at ingest
-    "q_span_attribution",    # NEW: top shared spans behind the overlap rank
-    "q_passjoin_planner",    # NEW: segment-index probe-cost capacity model
-    "q_stream_ttl_evict",    # NEW: TTL with event-time-timeout eviction
-    "q_token_budget",        # NEW: UniMax-capped token-budget waterfilling
-    "q_stream_token_budget", # NEW: the allocation recomputed at ingest
-    "q_ann_gen_gc",          # NEW: generation-0 retirement coverage audit
-    "q_budget_realize",      # NEW: executes the allocation, audits realized
-    "q_boilerplate_coverage",  # CHANGED: per-mille commodity threshold
-    # -- (c) the three displaced r7 rotations --
-    "q_range_join",
-    "q_json_funcs",
-    "q_embedding_quantize",
-    # -- (d) the r8 block (5 of 12; the fourth through sixth round-14
-    #    waves displaced q_scalar_funcs / q_semi_anti_join / q_set_ops /
-    #    q_outer_join / q_percentiles / q_rollup_cube / q_minmax_by —
-    #    relational.py unchanged since their r8 green, gate-safe) --
-    "q_array_map_funcs",
-    "q_broadcast_join",
-    "q_first_last",
-    "q_hash_join",
-    "q_kpl_deagg",
-    # -- (e) r9 greens (1 of 13; the third round-14 operator wave displaced
-    #    q_csv_roundtrip / q_hll_distinct / q_kmv_intersect /
-    #    q_orc_roundtrip — sketches.py / interchange.py unchanged since
-    #    their r9 green, so the displacement is gate-safe) --
-    "q_anomaly_mad",
-    # -- Re-verify-next-round tail (round 15): FIRST q_csv_roundtrip,
-    # q_hll_distinct, q_kmv_intersect, q_orc_roundtrip, q_scalar_funcs,
-    # q_semi_anti_join, q_set_ops, q_outer_join, q_percentiles,
-    # q_rollup_cube, q_minmax_by (displaced this
-    # round), then q_window_rank,
-    # q_trend_slope, q_winsorize, q_local_supplier_volume, q_ship_priority,
-    # q_skyline, q_stats_agg and q_big_orders (the eight deferred r9
-    # greens), then the r11 greens living
-    # in modules round 14 touched (similarity.py, streamparity.py,
-    # textops.py, dedup.py — run the gate at the r14 HEAD for the
-    # authoritative list), then the oldest unchanged-module r10 greens
-    # (q_column_profile(_approx), q_embedding_audit, q_conditional_funcs,
-    # the tpchx r10 block, ...). Every non-slotted query stays
-    # value-proven by the local parity suite (tests/test_oracle_parity.py,
-    # every run).
-]
-
-assert len(_VERIFY_FIRST) == 50, len(_VERIFY_FIRST)
-_missing = [n for n in _VERIFY_FIRST if n not in _ALL]
-assert not _missing, f"priority names without implementation: {_missing}"
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    n: _ALL[n] for n in _VERIFY_FIRST
-}
-# Tail: everything else, already hash-verified green in a prior round and
-# exercised by the local parity suite each round.
-for _name in sorted(_ALL):
-    QUERIES.setdefault(_name, _ALL[_name])
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = dict(sorted(_ALL.items()))
 
 _unmatched = set(ORACLES) - set(QUERIES)
 assert not _unmatched, f"oracle without query: {_unmatched}"

@@ -10,7 +10,7 @@ import sys
 
 from kitkat_spark.streaming.records import RECORD_SCHEMA
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_cli_consume_once(spark, tmp_path):

@@ -15,18 +15,22 @@ commit the regenerated file alongside the change.
 
 from __future__ import annotations
 
+import os
 import re
 
 from kitkat_spark.plans import plan_facts
 from kitkat_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
+PLAN_FACTS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLAN_FACTS.md"
+)
 ROW = re.compile(r"^\| (q_\w+) \| (\d+) \| (\d+) \| (\d+) \| (\d+) \|")
 
 
 def _recorded() -> dict[str, tuple[int, int]]:
     out = {}
-    for line in open("/root/repo/PLAN_FACTS.md"):
+    for line in open(PLAN_FACTS):
         m = ROW.match(line)
         if m:
             name, shuffles, _bc, _smj, pyudf = m.groups()[:5]

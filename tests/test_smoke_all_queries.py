@@ -1,29 +1,8 @@
-"""Every queries() entry — including rows-only ones with no DuckDB oracle —
-must at least build a plan and execute at sf0.001. Catches plan-construction
-errors (bad lambda signatures, unresolved columns) that the oracle-parity
-suite skips for non-SQL-expressible operators.
+"""The driver contract's flagship query executes, and every registry query
+has a DuckDB oracle, so tests/test_oracle_parity.py executes all of them.
 """
 
 from __future__ import annotations
-
-import os
-
-import pytest
-
-from kitkat_spark.queries import ORACLES, QUERIES
-
-SMOKE_SF = os.environ.get("SPARK_GRAFT_PARITY_SF", "/root/testdata/sf0.001")
-
-ROWS_ONLY = sorted(set(QUERIES) - set(ORACLES))
-
-
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_executes(spark, name):
-    df = QUERIES[name](spark, SMOKE_SF)
-    n = df.count()
-    assert n >= 0
-    # schema must be stable/concrete
-    assert len(df.schema.fields) > 0
 
 
 def test_entry_smoke(spark):
@@ -31,18 +10,4 @@ def test_entry_smoke(spark):
 
     df = e.entry(spark)
     assert df.count() >= 0
-    assert set(e.oracle_sql()) <= set(e.queries())
-
-
-def test_bench_headline_covers_registry():
-    """Every registry query is benched each round except the documented
-    exclusion (q_cc_chain times the scheduler, not data — see bench.py).
-    A query added to the registry but not to HEADLINE would silently lose
-    its per-round perf record; make that a test failure instead."""
-    import bench
-    from kitkat_spark.queries import QUERIES
-
-    missing = set(QUERIES) - set(bench.HEADLINE)
-    assert missing == {"q_cc_chain"}, f"bench HEADLINE vs registry mismatch: {missing}"
-    unknown = set(bench.HEADLINE) - set(QUERIES)
-    assert not unknown, f"benched but not in registry: {unknown}"
+    assert set(e.oracle_sql()) == set(e.queries())

@@ -5,8 +5,8 @@ actually uses (ANSI mode on, 200 shuffle partitions, no kitkat_spark
 session factory), which the pytest suite's tuned session does not cover.
 
 Usage:
-    python tools/driver_sim.py                     # first 50 slots, sf0.01
-    python tools/driver_sim.py --sf sf0.001 -n 10  # first 10 slots
+    python tools/driver_sim.py                     # every registry query, sf0.01
+    python tools/driver_sim.py --sf sf0.001
     python tools/driver_sim.py -q q_semdedup -q q_cdc_chunk
 
 Run in a FRESH process (two differently-configured SparkSessions cannot
@@ -29,7 +29,6 @@ sys.path.insert(0, os.path.join(HERE, "tests"))
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="sf0.01")
-    ap.add_argument("-n", type=int, default=50, help="first N registry slots")
     ap.add_argument("-q", "--query", action="append", default=[])
     args = ap.parse_args()
 
@@ -47,14 +46,10 @@ def main() -> int:
     from oracle_harness import compare
 
     qs, osql = entry.queries(), entry.oracle_sql()
-    names = args.query or list(qs)[: args.n]
+    names = args.query or list(qs)
     sf_dir = f"/root/testdata/{args.sf}"
     failures = 0
     for name in names:
-        if name not in osql:
-            n = qs[name](spark, sf_dir).count()
-            print(f"{name}: rows-only ({n} rows)")
-            continue
         err = compare(qs[name](spark, sf_dir), osql[name], sf_dir)
         if err:
             failures += 1
