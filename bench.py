@@ -18,11 +18,13 @@ import sys
 import time
 
 import pandas as pd  # noqa: F401 — resolves UDF type hints under PEP 563
+from pyspark.sql.streaming import StreamingQueryListener
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kitkat_spark.queries import QUERIES  # noqa: E402
 from kitkat_spark.session import get_spark  # noqa: E402
+from perfbench.run import calibrate_cpu  # noqa: E402
 
 _LOAD0 = (0.0, 0.0, 0.0)
 
@@ -54,21 +56,6 @@ def _wait_for_idle() -> int:
         time.sleep(5)
         waited += 5
     return waited
-
-
-def _calibrate_cpu() -> float:
-    """Fixed single-core arithmetic loop (round-11 verdict #4): a pure-Python
-    integer workload whose wall time tracks per-core container speed, so
-    round-over-round bench comparisons can normalize for environment drift
-    mechanically instead of by prose. Returns seconds (best of 3)."""
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        acc = 0
-        for i in range(2_000_000):
-            acc = (acc * 1103515245 + i) & 0x7FFFFFFF
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 4)
 
 
 def _calibrate_spark(spark) -> float:
@@ -114,19 +101,31 @@ def _code_stamp() -> str:
     return h.hexdigest()[:16]
 
 
-def _is_streaming_lane(name: str) -> bool:
-    """Checkpointed Structured Streaming queries: their wall time is
+class _StreamStarts(StreamingQueryListener):
+    """Counts Structured Streaming query starts in the session: a query
+    whose timed call starts one is in the streaming lane. Its wall time is
     dominated by state-store/checkpoint I/O (delta files, commit fsyncs),
-    which scatters run-to-run far more than compute-bound plans — they get
-    their own sub-total so cross-round raw ratios aren't hostage to it."""
-    return name.startswith("q_stream_") or name == "q_consume_dlq"
+    which scatters run-to-run far more than compute-bound plans — the lane
+    gets its own sub-total so cross-round raw ratios aren't hostage to it.
+    The count is synchronous: onQueryStarted fires inside start()."""
+
+    n = 0
+
+    def onQueryStarted(self, event):
+        self.n += 1
+
+    def onQueryProgress(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        pass
 
 
 def main() -> None:
     global _LOAD0
     idle_waited = _wait_for_idle()
     _LOAD0 = os.getloadavg()
-    calib_cpu_s = _calibrate_cpu()
+    calib_cpu_s = round(calibrate_cpu(), 4)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(app_name="kitkat_spark_bench")
@@ -143,13 +142,22 @@ def main() -> None:
     # at any real data scale); pass 2 is the steady-state execution cost
     # that actually scales with the data.
     timings: dict[str, float] = {}
+    streaming: set[str] = set()
+    starts = _StreamStarts()
+    spark.streams.addListener(starts)
     for _pass in range(2):
         for name in HEADLINE:
+            n0 = starts.n
             t0 = time.time()
             QUERIES[name](spark, sf_dir).count()
             dt = round(time.time() - t0, 3)
             timings[name] = min(timings.get(name, dt), dt)
+            if starts.n > n0:
+                streaming.add(name)
             _drop_persisted(spark)
+    # detach before the session stops: a live listener's callbacks would
+    # hit a closed py4j gateway at exit
+    spark.streams.removeListener(starts)
 
     code_stamp = _code_stamp()
     out = {
@@ -260,11 +268,9 @@ def main() -> None:
     def _lane_totals(m: dict[str, float]) -> dict[str, float]:
         return {
             "batch": round(
-                sum(s for q, s in m.items() if not _is_streaming_lane(q)), 3
+                sum(s for q, s in m.items() if q not in streaming), 3
             ),
-            "streaming": round(
-                sum(s for q, s in m.items() if _is_streaming_lane(q)), 3
-            ),
+            "streaming": round(sum(s for q, s in m.items() if q in streaming), 3),
         }
 
     compact = {

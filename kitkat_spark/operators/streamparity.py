@@ -13,9 +13,12 @@ value-oracled by the driver:
   corrupt blob drops its 5 inner records).
 - q_shard_status: A1 conditional aggregation over a shard fixture derived
   from events (active vs closed shard counts) — oracled.
-- q_stream_dedup_wm / q_stream_interval_join_wm: REAL Structured Streaming
-  runs (watermarked file replay -> stateful op -> memory sink) shaped so the
-  driver can still value-verify them against a batch SQL oracle.
+- q_stream_* and q_consume_dlq: REAL Structured Streaming runs (file
+  replay -> stateful op -> sink) shaped so the driver can still value-verify
+  them against a batch SQL oracle. Every one runs through the shared replay
+  harness (operators/replay.py run_replay): cached fixtures, fresh per-call
+  sinks and checkpoints, a parquet sink in append mode (memory in update
+  mode), and progress kept in REPLAY_PROGRESS.
 
 Scale: fixtures are narrow maps over events; the consume pipeline itself is
 shuffle-free (see streaming/pipeline.py docstring).
@@ -23,41 +26,15 @@ shuffle-free (see streaming/pipeline.py docstring).
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kitkat_spark.operators.payloads import build_kpl_blobs
+from kitkat_spark.operators.replay import _replay_info, replay_scope, run_replay
 from kitkat_spark.operators.temporal import SP_K, SP_N
 from kitkat_spark.sources import load_table
 from kitkat_spark.streaming.consumer import ConsumeOptions, consume
 from kitkat_spark.streaming.pipeline import consume_transform
-
-
-def _sink_suffix(path: str) -> int:
-    """Deterministic per-path memory-sink name suffix (md5, not Python
-    ``hash`` — string hashing is PYTHONHASHSEED-salted across processes)."""
-    return int(hashlib.md5(path.encode()).hexdigest()[:8], 16)
-
-
-# scratch root of the replay fixtures, sources, sinks and checkpoints
-REPLAY_ROOT = "/tmp/kitkat_replay"
-
-
-def _scratch_dir(spark: SparkSession, root: str, variant: str, sf_dir: str) -> str:
-    """Per-(session, variant, sf_dir) scratch path for replay fixtures and
-    checkpoints. Keyed on a HASH of the fully-resolved sf_dir, not its
-    basename: two fixture dirs sharing a final component (`a/sf0.01` vs
-    `b/sf0.01`) must never map to the same checkpoint/source state. The
-    basename is kept as a human-readable prefix only."""
-    import os
-
-    resolved = os.path.abspath(os.path.normpath(sf_dir))
-    tag = "{}-{}".format(
-        os.path.basename(resolved), hashlib.md5(resolved.encode()).hexdigest()[:10]
-    )
-    return os.path.join(root, spark.sparkContext.applicationId, variant, tag)
 
 
 N_SHARD_BUCKETS = 16
@@ -157,172 +134,11 @@ def q_shard_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# replay fixtures for the streaming-native queries: written once per
-# (session, sf_dir, variant) — test scaffolding (production reads a real
-# source), so repeat invocations (bench's two passes) measure the streaming
-# op, not the fixture write. Caches (path, row_count): the count prices the
-# state-partition sizing below and is known for free at write time.
-_REPLAY_CACHE: dict[tuple[str, str, str], tuple[str, int]] = {}
-
-# target rows per state-store task (see _state_partitions)
-STATE_ROWS_PER_TASK = 16_384
-
-# target rows per task for applyInPandasWithState queries (r15): their
-# per-batch cost is dominated by the PYTHON group runner (~1-3 ms per group
-# call: per-group Arrow framing + state round-trip + fn body), which is
-# serial within a task — not by the per-partition state-store fixed cost
-# (~50-80 ms/partition/batch) that motivates the 16k budget above. With
-# ~1 row per group (the TTL fingerprint streams), the break-even between
-# "more parallel group calls" and "more per-partition fixed cost" sits
-# around a few hundred rows per task: measured on q_stream_ttl_evict at
-# sf0.1, 4 partitions (16k budget) ran the replay in ~12-15 s, 16
-# partitions in ~6-7 s, 32 in ~7-14 s (per-partition cost catches up).
-# Still capped at cluster parallelism, so it stays scale-adaptive.
-PANDAS_STATE_ROWS_PER_TASK = 320
-
-# RocksDB state store + changelog checkpointing for the custom-state
-# (applyInPandasWithState) family (r14 verdict #1): the default HDFS-backed
-# provider keeps every state map on-heap and snapshots FULL maps per
-# maintenance cycle — at 100 TB ingest the live-fingerprint index is
-# millions of rows per partition, an executor-heap liability and a
-# commit-amplification cost. RocksDB spills off-heap and changelog
-# checkpointing writes per-commit deltas instead of full snapshots. At
-# sf0.1 the two providers measure within noise of each other (interleaved
-# A/B, min-of-4: 12.54 s RocksDB vs 12.88 s HDFS on the ttl_evict replay),
-# so adopting the production-correct provider costs the bench nothing.
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def _replay_info(spark: SparkSession, sf_dir: str, variant: str, df_fn) -> tuple[str, int]:
-    import os
-
-    key = (spark.sparkContext.applicationId, sf_dir, variant)
-    if key not in _REPLAY_CACHE:
-        path = _scratch_dir(spark, REPLAY_ROOT, variant, sf_dir)
-        df = df_fn()
-        df.write.mode("overwrite").parquet(path)
-        _REPLAY_CACHE[key] = (path, df.count())
-    return _REPLAY_CACHE[key]
-
-
-def _replay_path(spark: SparkSession, sf_dir: str, variant: str, df_fn) -> str:
-    return _replay_info(spark, sf_dir, variant, df_fn)[0]
-
-
-class _state_partitions:
-    """Size spark.sql.shuffle.partitions for the STATE STORE while a
-    streaming query PLANS (the state-partition count is frozen from this
-    conf at first start, for the life of the checkpoint).
-
-    Why not just inherit the session default? Each state partition is not a
-    shuffle bucket but a set of persistent stores (a stream-stream join
-    keeps FOUR per partition) that pay per-micro-batch fixed costs: delta
-    files, snapshot maintenance, commit round-trips. Oversizing multiplies
-    that fixed cost: the relational default of 200 measured 27 s for the
-    sessionize pipeline vs ~7 s at 32; pinning to local parallelism (32)
-    still paid 6 s for the interval join whose batch holds only 100k rows —
-    rows-per-task sizing (ceil(rows / 16k), floor 4, capped at the cluster
-    parallelism) runs the same join in 2.7 s with identical results. Same
-    lesson as the skew-join threshold (skew.py): absolute knobs rot as data
-    scales; per-task budgets transfer. On a real cluster the batch rate is
-    estimated from the source (e.g. maxFilesPerTrigger x file size), and a
-    checkpoint keeps whatever count it started with — resizing requires a
-    new checkpoint (repartition-state via offline rewrite at 100 TB).
-
-    ``pandas_state=True`` marks an applyInPandasWithState query: partitions
-    are sized from the much smaller PANDAS_STATE_ROWS_PER_TASK budget (the
-    Python group runner, not the state store, is the per-batch cost — see
-    the constant's note), and the state store is pinned to RocksDB with
-    changelog checkpointing (ROCKSDB_PROVIDER note) for the duration.
-
-    Restores the previous conf on exit, so the host session's relational
-    queries are untouched."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        rows_per_batch: int | None = None,
-        pandas_state: bool = False,
-    ):
-        self.spark = spark
-        self.pandas_state = pandas_state
-        par = spark.sparkContext.defaultParallelism
-        if rows_per_batch is None:
-            self.n = par
-        else:
-            per_task = (
-                PANDAS_STATE_ROWS_PER_TASK if pandas_state else STATE_ROWS_PER_TASK
-            )
-            self.n = min(par, max(4, -(-rows_per_batch // per_task)))
-
-    # Every wm query's sealed-set contract (append mode emits exactly the
-    # watermark-closed windows) relies on the availableNow no-data flush
-    # micro-batch; pin it rather than inherit a host session that may have
-    # disabled it.
-    _PINNED = {"spark.sql.streaming.noDataMicroBatches.enabled": "true"}
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions", None)
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        pinned = dict(self._PINNED)
-        if self.pandas_state:
-            pinned["spark.sql.streaming.stateStore.providerClass"] = (
-                ROCKSDB_PROVIDER
-            )
-            pinned[
-                "spark.sql.streaming.stateStore.rocksdb"
-                ".changelogCheckpointing.enabled"
-            ] = "true"
-        self.prev_pinned = {k: self.spark.conf.get(k, None) for k in pinned}
-        for k, v in pinned.items():
-            self.spark.conf.set(k, v)
-
-    def __exit__(self, *exc):
-        if self.prev is None:
-            self.spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        for k, v in self.prev_pinned.items():
-            if v is None:
-                self.spark.conf.unset(k)
-            else:
-                self.spark.conf.set(k, v)
-        return False
-
-
-def _drain_append_parquet(
-    spark: SparkSession, sdf: DataFrame, variant: str, sf_dir: str
-) -> DataFrame:
-    """Drain an append-mode availableNow streaming DataFrame to a per-call
-    parquet sink and return the read-back result (r14 optimization, guide
-    §5 driver discipline): a memory sink collects every emitted row
-    single-threaded onto the driver — ~100k rows for the dedup / interval
-    -join / session drains at sf0.1, and O(stream) at production scale —
-    while the parquet sink writes executor-side and the read-back scan
-    parallelizes downstream consumption. Same rows, same append-mode
-    sealing; the sink swap is result-invisible (drive-verified)."""
-    import os
-
-    base = _fresh_scratch(spark, variant, sf_dir)
-    q = (
-        sdf.writeStream.format("parquet")
-        .option("path", os.path.join(base, "out"))
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.schema(sdf.schema).parquet(os.path.join(base, "out"))
-
-
 def q_stream_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL Structured Streaming dedup, driver-verifiable: events are doubled
     (every row twice), replayed through a file-stream source with a
     watermark, deduped with ``dropDuplicatesWithinWatermark`` (streaming/
-    analytics.py stream_dedup), and drained to a memory sink whose table is
+    analytics.py stream_dedup), and drained to a parquet sink whose rows are
     returned. The doubled input makes the state op load-bearing: broken
     dedup returns 2x rows and fails the row/hash gate.
 
@@ -332,8 +148,7 @@ def q_stream_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     events. Scale: state holds only keys within the watermark horizon —
     eviction as event time advances is the ONLY way exact dedup survives an
     unbounded stream (unbounded dropDuplicates state grows forever at
-    100 TB/day); the memory sink is test scaffolding, production sinks
-    append to a table/stream.
+    100 TB/day); the parquet sink stands in for the production table.
     """
     from kitkat_spark.streaming.analytics import stream_dedup
 
@@ -344,22 +159,20 @@ def q_stream_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, n_rows = _replay_info(spark, sf_dir, "dedup_doubled", lambda: doubled)
     stream = spark.readStream.schema(doubled.schema).parquet(path)
     deduped = stream_dedup(stream, keys=["event_id"])
-    # parquet drain, not memory (r14, guide §5): ~100k distinct events at
-    # sf0.1 would be collected single-threaded onto the driver
-    with _state_partitions(spark, n_rows):
-        return _drain_append_parquet(
-            spark,
-            deduped.select("event_id", "user_id", "event_type"),
-            "dedup_wm_sink",
-            sf_dir,
-        )
+    return run_replay(
+        spark,
+        sf_dir,
+        "q_stream_dedup_wm",
+        deduped.select("event_id", "user_id", "event_type"),
+        rows=n_rows,
+    )
 
 
 def q_stream_interval_join_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL stream-stream interval join, driver-verifiable: events replayed
     as TWO watermarked file streams, inner-joined on user with a
     [l_ts, l_ts + 10 min] event-time band (streaming/analytics.py
-    interval_join), drained to a memory sink. The band is what makes the
+    interval_join), drained to a parquet sink. The band is what makes the
     join streamable at all: each side's buffered state evicts once the
     other side's watermark passes ts + gap, so state is O(rows per
     watermark horizon), not O(stream) — Spark rejects the unbanded plan
@@ -372,19 +185,20 @@ def q_stream_interval_join_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, n_rows = _replay_info(spark, sf_dir, "interval_join", lambda: ev)
     left = spark.readStream.schema(ev.schema).parquet(path)
     right = spark.readStream.schema(ev.schema).parquet(path)
-    # parquet drain, not memory (r14, guide §5): ~101k joined rows at
-    # sf0.1 would be collected single-threaded onto the driver
-    with _state_partitions(spark, n_rows):
-        return _drain_append_parquet(
-            spark, interval_join(left, right), "ij_wm_sink", sf_dir
-        )
+    return run_replay(
+        spark,
+        sf_dir,
+        "q_stream_interval_join_wm",
+        interval_join(left, right),
+        rows=n_rows,
+    )
 
 
 def q_stream_session_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL streaming session windows, driver-verifiable: events replayed
     through a watermarked file stream into the native ``session_window``
     aggregation (streaming/analytics.py session_counts — dynamic-gap state
-    merged by the state store), drained via a memory sink in APPEND mode.
+    merged by the state store), drained via a parquet sink in APPEND mode.
 
     Append mode only emits a session once the watermark passes its end, so
     the emitted set is exactly the sessions with
@@ -404,12 +218,9 @@ def q_stream_session_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     path, n_rows = _replay_info(spark, sf_dir, "session_wm", lambda: ev)
     stream = spark.readStream.schema(ev.schema).parquet(path)
-    # parquet drain, not memory (r14, guide §5): ~95k sealed sessions at
-    # sf0.1 would be collected single-threaded onto the driver
-    with _state_partitions(spark, n_rows):
-        return _drain_append_parquet(
-            spark, session_counts(stream), "session_wm_sink", sf_dir
-        )
+    return run_replay(
+        spark, sf_dir, "q_stream_session_wm", session_counts(stream), rows=n_rows
+    )
 
 
 def q_stream_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -471,11 +282,9 @@ def q_stream_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("s.end").alias("session_end"), "user_id", "path")
     )
-    # parquet drain, not memory (r14, guide §5): ~95k sealed sessions at
-    # sf0.1 would be collected single-threaded onto the driver, and the
-    # read-time rollup below re-scans them in parallel from parquet
-    with _state_partitions(spark, n_rows):
-        drained = _drain_append_parquet(spark, sealed, "session_paths_sink", sf_dir)
+    drained = run_replay(
+        spark, sf_dir, "q_stream_session_paths", sealed, rows=n_rows
+    )
     counts = drained.groupBy("path").agg(F.count("*").alias("n_sessions"))
     top = counts.orderBy(F.col("n_sessions").desc(), "path").limit(SP_K)
     w_rank = W.orderBy(F.col("n_sessions").desc(), "path")
@@ -515,17 +324,7 @@ def q_stream_dedup_agg_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
     )
-    name = f"stream_dedup_agg_wm_{_sink_suffix(path)}"
-    with _state_partitions(spark, n_rows):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_replay(spark, sf_dir, "q_stream_dedup_agg_wm", stream, rows=n_rows)
 
 
 def q_stream_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -557,17 +356,8 @@ def q_stream_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"), dsum("value").alias("sum_value"))
         .select(F.col("w.start").alias("h"), "event_type", "n_events", "sum_value")
     )
-    name = f"stream_gap_fill_{_sink_suffix(path)}"
-    with _state_partitions(spark, n_rows):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return gap_fill_hourly(spark.table(name))
+    sealed = run_replay(spark, sf_dir, "q_stream_gap_fill", stream, rows=n_rows)
+    return gap_fill_hourly(sealed)
 
 
 STREAM_TOPK = 3
@@ -600,22 +390,12 @@ def q_stream_topk_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
     )
-    name = f"stream_topk_wm_{_sink_suffix(path)}"
-    with _state_partitions(spark, n_rows):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sealed = run_replay(spark, sf_dir, "q_stream_topk_wm", stream, rows=n_rows)
     w = W.partitionBy("window_start").orderBy(
         F.col("n_events").desc(), "event_type"
     )
     return (
-        spark.table(name)
-        .withColumn("rk", F.row_number().over(w))
+        sealed.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= STREAM_TOPK)
         .select("window_start", "event_type", "n_events", "rk")
     )
@@ -649,22 +429,12 @@ def q_stream_anomaly_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
     )
-    name = f"stream_anomaly_wm_{_sink_suffix(path)}"
-    with _state_partitions(spark, n_rows):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sealed = run_replay(spark, sf_dir, "q_stream_anomaly_wm", stream, rows=n_rows)
     from pyspark.sql import Window as W
 
     w_t = W.partitionBy("event_type")
     st = (
-        spark.table(name)
-        .withColumn("cnt", F.count("*").over(w_t))
+        sealed.withColumn("cnt", F.count("*").over(w_t))
         .withColumn("s", F.sum("n_events").over(w_t))
         .withColumn(
             "ss", F.sum(F.col("n_events") * F.col("n_events")).over(w_t)
@@ -754,17 +524,8 @@ def q_stream_hll_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("rho").alias("r"))
         .select(F.col("w.start").alias("window_start"), "bucket", "r")
     )
-    name = f"stream_hll_wm_{_sink_suffix(path)}"
-    with _state_partitions(spark, n_rows):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    sk = spark.table(name).groupBy("window_start").agg(
+    sealed = run_replay(spark, sf_dir, "q_stream_hll_wm", stream, rows=n_rows)
+    sk = sealed.groupBy("window_start").agg(
         (F.lit(HLL_M) - F.count("*")).cast("long").alias("zeros"),
         (
             F.sum(
@@ -869,28 +630,7 @@ def q_stream_cms_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("window_start"), "seed", "bucket", "n")
     )
-    # parquet sink, not memory (r14 optimization, guide §5 driver
-    # discipline — the q_stream_boilerplate rationale applied here): the
-    # sealed grid is (windows x D x distinct buckets) — ~280k rows at
-    # sf0.1 — and a memory sink collects all of it single-threaded onto
-    # the driver before the probe join can even start; the parquet sink
-    # writes it executor-side and the join below reads it in parallel.
-    import os
-
-    base = _fresh_scratch(spark, "cms_sink", sf_dir)
-    with _state_partitions(spark, n_rows):
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", os.path.join(base, "out"))
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    grid = spark.read.schema(
-        "window_start timestamp, seed int, bucket long, n long"
-    ).parquet(os.path.join(base, "out"))
+    grid = run_replay(spark, sf_dir, "q_stream_cms_wm", stream, rows=n_rows)
     from pyspark.sql import Window as W
 
     exact = (
@@ -943,9 +683,12 @@ def q_stream_late_drop_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     real events table and COMMITS its watermark (max(ts) - 10 min) to the
     checkpoint; the source then gains poison — copies of 10% of the events
     shifted back 3 DAYS with fresh event_ids — and run 2, restoring the
-    committed watermark, must drop every one of them (observed
-    numRowsDroppedByWatermark == late-row count) before the 1-hour
-    tumbling aggregation. Output: the parquet sink's sealed per-type
+    committed watermark, must drop every one of them at the 1-hour
+    tumbling aggregation's state store (run 2's progress in
+    REPLAY_PROGRESS: no state row updated, and numRowsDroppedByWatermark
+    equal to the late (window, event_type) groups — the metric counts rows
+    after the partial aggregation, not input rows; tests/
+    test_replay_harness.py). Output: the parquet sink's sealed per-type
     hourly counts.
 
     The value check is load-bearing in both directions: if late rows leak
@@ -964,53 +707,29 @@ def q_stream_late_drop_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     form drops them. Across a checkpoint restart the late-event watermark
     IS the committed one — the deployment-relevant guarantee.
     """
-    import os
-
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "ts")
-    key = (spark.sparkContext.applicationId, sf_dir, "late_drop")
-    if key not in _REPLAY_CACHE:
-        base = _scratch_dir(spark, REPLAY_ROOT, "late_drop", sf_dir)
-        src = os.path.join(base, "src")
-        sink = os.path.join(base, "sink")
-        ckpt = os.path.join(base, "ckpt")
-        n_rows = ev.count()
+    late = ev.filter(F.pmod("event_id", F.lit(100)) < 10).select(
+        (F.col("event_id") + F.lit(1_000_000_000)).alias("event_id"),
+        "event_type",
+        (F.col("ts") - F.expr("INTERVAL 3 DAYS")).alias("ts"),
+    )
 
-        def run_once() -> None:
-            stream = (
-                spark.readStream.schema(ev.schema)
-                .parquet(src)
-                .withWatermark("ts", "10 minutes")
-                .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-                .agg(F.count("*").alias("n_events"))
-                .select(
-                    F.col("w.start").alias("window_start"),
-                    "event_type",
-                    "n_events",
-                )
-            )
-            with _state_partitions(spark, n_rows):
-                q = (
-                    stream.writeStream.format("parquet")
-                    .option("path", sink)
-                    .option("checkpointLocation", ckpt)
-                    .outputMode("append")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-
-        ev.coalesce(1).write.mode("append").parquet(src)
-        run_once()
-        late = ev.filter(F.pmod("event_id", F.lit(100)) < 10).select(
-            (F.col("event_id") + F.lit(1_000_000_000)).alias("event_id"),
-            "event_type",
-            (F.col("ts") - F.expr("INTERVAL 3 DAYS")).alias("ts"),
+    def hourly(src: DataFrame) -> DataFrame:
+        return (
+            src.withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(F.count("*").alias("n_events"))
+            .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
         )
-        late.coalesce(1).write.mode("append").parquet(src)
-        run_once()
-        _REPLAY_CACHE[key] = (sink, n_rows)
-    sink, _ = _REPLAY_CACHE[key]
-    return spark.read.parquet(sink)
+
+    return run_replay(
+        spark,
+        sf_dir,
+        "q_stream_late_drop_wm",
+        hourly,
+        rows=ev.count(),
+        waves=[ev.coalesce(1), late.coalesce(1)],
+    )
 
 
 def q_stream_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1028,7 +747,7 @@ def q_stream_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning rates), so the streamed keep-set equals the batch query's
     exactly (pytest-equivalence in tests/test_streaming_analytics.py) and
     the DuckDB oracle (shared with q_mix_rebalance_rate) replays it
-    value-for-value. The availableNow file replay + memory sink is test
+    value-for-value. The availableNow file replay + parquet sink is test
     scaffolding, as in the other q_stream_* queries."""
     from kitkat_spark.functions.text import md5_long
     from kitkat_spark.operators.corpus import MIX_SEED
@@ -1050,11 +769,8 @@ def q_stream_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     accepted = stream.filter(
         (u32.cast("double") / F.lit(4294967296.0)) < rates[F.col("source")]
     ).select("doc_id", "source")
-    # parquet drain, not memory (r14, guide §5): the accepted set is
-    # corpus-proportional (rate x corpus), the one streaming output here
-    # that scales with input volume rather than a bounded group domain —
-    # a memory sink would collect it single-threaded onto the driver
-    return _drain_append_parquet(spark, accepted, "mix_rebalance_sink", sf_dir)
+    # stateless filter: no rows= state sizing
+    return run_replay(spark, sf_dir, "q_stream_mix_rebalance", accepted)
 
 
 def q_consume_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1065,33 +781,32 @@ def q_consume_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     performs silently (consumer.go:177-179) made observable. Output is the
     per-disposition row count read back from BOTH sinks, so the driver
     value-checks that nothing was dropped on the floor: rendered =
-    2*count(events) - 5, quarantined:kpl_decode_failed = 1. Re-invocation
-    is a no-op thanks to the checkpointed offsets (availableNow over a
-    caught-up source appends nothing), which is itself the effectively-once
-    property the sink claims."""
-    import os
-
+    2*count(events) - 5, quarantined:kpl_decode_failed = 1. The sink starts
+    its own query, so this call enters the replay harness's scope directly:
+    fresh sinks and checkpoint per call, so every call consumes the whole
+    stream (the effectively-once resume over a caught-up checkpoint is
+    tests/test_sinks.py's to prove)."""
     from kitkat_spark.streaming.sinks import consume_with_dlq
 
     mixed = build_kpl_records(spark, sf_dir).unionByName(
         build_plain_records(spark, sf_dir)
     )
     src, n_rows = _replay_info(spark, sf_dir, "dlq_mixed", lambda: mixed)
-    base = _scratch_dir(spark, "/tmp/kitkat_dlq", "dlq", sf_dir)
     stream = spark.readStream.schema(mixed.schema).parquet(src)
-    with _state_partitions(spark, n_rows):
-        q = consume_with_dlq(
-            stream,
-            good_path=os.path.join(base, "good"),
-            dlq_path=os.path.join(base, "dlq"),
-            checkpoint=os.path.join(base, "ckpt"),
-            verbose=True,
+    with replay_scope(spark, sf_dir, "q_consume_dlq", n_rows) as call:
+        call.drain(
+            consume_with_dlq(
+                stream,
+                good_path=call.path("good"),
+                dlq_path=call.path("dlq"),
+                checkpoint=call.path("ckpt"),
+                verbose=True,
+            )
         )
-        q.awaitTermination()
-    rendered = spark.read.parquet(os.path.join(base, "good")).select(
+    rendered = spark.read.parquet(call.path("good")).select(
         F.lit("rendered").alias("disposition")
     )
-    quarantined = spark.read.parquet(os.path.join(base, "dlq")).select(
+    quarantined = spark.read.parquet(call.path("dlq")).select(
         F.concat(F.lit("quarantined:"), F.col("reason")).alias("disposition")
     )
     return (
@@ -1131,17 +846,9 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, n_rows = _replay_info(spark, sf_dir, "ewma", lambda: ev)
     stream = spark.readStream.schema(ev.schema).parquet(path)
     smoothed = user_ewma(stream, alpha=EWMA_ALPHA)
-    name = f"stream_ewma_{_sink_suffix(path)}"
-    with _state_partitions(spark, n_rows):
-        q = (
-            smoothed.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return run_replay(
+        spark, sf_dir, "q_stream_ewma", smoothed, rows=n_rows, output_mode="update"
+    )
 
 
 from kitkat_spark.operators.sketches import (  # noqa: E402
@@ -1550,37 +1257,6 @@ ORACLE["q_stream_mix_rebalance"] = _corpus.ORACLE["q_mix_rebalance_rate"]
 
 INCR_BATCHES = 4  # ingest "days" replayed through the checkpointed pipeline
 
-# per-call scratch nonces + the last finished dir per (app, variant,
-# sf_dir), so a new call reclaims its predecessor's space without ever
-# touching a path another in-flight call could be using (itertools.count
-# is GIL-atomic).
-import itertools as _itertools
-
-_FRESH_NONCE = _itertools.count()
-_FRESH_DIRS: dict[tuple[str, str, str], str] = {}
-
-
-def _fresh_scratch(spark: SparkSession, variant: str, sf_dir: str) -> str:
-    """A NEVER-REUSED scratch base for streaming ops that must pay their
-    full pipeline on every invocation (no checkpoint carry-over — the
-    bench min-of-2 convention requires each call to run the real thing).
-    The path carries a per-call nonce so no invocation can rmtree
-    another's in-flight checkpoint; the previous call's dir for the same
-    key is reclaimed AFTER this call claims its own, bounding the leak to
-    one finished run under the registry's serial contract."""
-    import shutil
-
-    key = (spark.sparkContext.applicationId, variant, sf_dir)
-    base = (
-        _scratch_dir(spark, REPLAY_ROOT, variant, sf_dir)
-        + f"-call{next(_FRESH_NONCE)}"
-    )
-    prior = _FRESH_DIRS.pop(key, None)
-    if prior is not None:
-        shutil.rmtree(prior, ignore_errors=True)
-    _FRESH_DIRS[key] = base
-    return base
-
 
 def q_stream_incr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING twin of q_incremental_dedup (round-12 verdict #4a): the
@@ -1610,16 +1286,6 @@ def q_stream_incr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled-on-fp join, which Spark plans per micro-batch. The 1-row
     cut/max collect is config-sized; everything corpus-sized stays
     distributed."""
-    import os
-
-    # Rebuilt from scratch on EVERY call (no result cache): a cached
-    # parquet read would make a second timed invocation measure the read,
-    # not the operator — see _fresh_scratch.
-    base = _fresh_scratch(spark, "incr_dedup", sf_dir)
-    src = os.path.join(base, "src")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-
     par = spark.sparkContext.defaultParallelism
     docs = load_table(spark, sf_dir, "documents").repartition(par)
     fp = F.md5(
@@ -1648,33 +1314,23 @@ def q_stream_incr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = [
         int(cut) + (span * i) // INCR_BATCHES for i in range(INCR_BATCHES + 1)
     ]
-    batch0 = d.select(F.col("doc_id"), F.col("fp"))
-    with _state_partitions(spark, span):
-        for lo, hi in zip(bounds, bounds[1:]):
-            batch = (
-                d.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-                .groupBy("fp")
-                .agg(F.min("doc_id").alias("doc_id"))
-                .select("doc_id", "fp")
-            )
-            batch.write.mode("append").parquet(src)
-            stream = spark.readStream.schema(batch0.schema).parquet(src)
-            appended = stream.join(corpus_fps, "fp", "left_anti").dropDuplicates(
-                ["fp"]
-            )
-            q = (
-                appended.select("doc_id", "fp")
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    # explicit schema: a corpus whose incoming range is entirely duplicated
-    # commits zero data files, and a schemaless read of a metadata-only sink
-    # throws where the batch twin cleanly returns an empty frame
-    return spark.read.schema(batch0.schema).parquet(out).select("doc_id", "fp")
+    waves = [
+        d.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+        .groupBy("fp")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id", "fp")
+        for lo, hi in zip(bounds, bounds[1:])
+    ]
+    return run_replay(
+        spark,
+        sf_dir,
+        "q_stream_incr_dedup",
+        lambda src: src.join(corpus_fps, "fp", "left_anti")
+        .dropDuplicates(["fp"])
+        .select("doc_id", "fp"),
+        rows=span,
+        waves=waves,
+    )
 
 
 # Byte-identical oracle: the streaming run must reproduce the batch answer.
@@ -1729,8 +1385,6 @@ def q_stream_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB ingest pipeline persists (the CCNet-style boilerplate list,
     refreshed per window). The read-time classify shuffles on the gram fp
     (keyed join, no all-pairs) and the doc-count is a 1-row broadcast."""
-    import os
-
     from kitkat_spark.functions.text import tokens
     from kitkat_spark.operators.corpus import BOILER_DF_PERMILLE
 
@@ -1769,26 +1423,7 @@ def q_stream_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("df_w"))
         .select(F.col("wdw.end").alias("w_end"), "fp", "df_w")
     )
-    # parquet sink, not memory: the sealed dictionary is corpus-vocabulary
-    # sized (hundreds of thousands of (window, gram) rows at sf0.1 alone)
-    # — a memory sink would collect it single-threaded onto the driver,
-    # and the read-time classify consumes it twice. The base is per-call
-    # (_fresh_scratch) so every invocation pays the real state-maintenance
-    # pipeline instead of riding a caught-up checkpoint.
-    base = _fresh_scratch(spark, "boiler_sink", sf_dir)
-    with _state_partitions(spark, n_rows):
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", os.path.join(base, "out"))
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    sealed = spark.read.schema(
-        "w_end timestamp, fp string, df_w long"
-    ).parquet(os.path.join(base, "out"))
+    sealed = run_replay(spark, sf_dir, "q_stream_boilerplate", stream, rows=n_rows)
     gram_df = sealed.groupBy("fp").agg(F.sum("df_w").alias("df"))
     sealed_wins = sealed.select("w_end").distinct()
     sealed_pairs = (
@@ -1879,9 +1514,9 @@ def q_stream_passjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     index (the stored (partner_len, seg-id, substring-hash) keys of every
     standing doc) joined by the new doc's own segments — the reverse
     direction a one-sided index silently loses (an old LONGER partner
-    can never re-probe a new shorter doc). The ingest batch appends its
-    own segments + probes BEFORE its run, so ingest-internal pairs
-    resolve through the same two joins; the threshold-capped levenshtein
+    can never re-probe a new shorter doc). The ingest's own segments +
+    probes join the standing structures' static side, so ingest-internal
+    pairs resolve through the same two joins; the threshold-capped levenshtein
     verifies in-stream after a static text join-back, verified pairs
     append to the checkpointed sink, and multi-segment / bidirectional
     re-discoveries of a pair (exact duplicate rows — lev and rel_dist
@@ -1905,21 +1540,12 @@ def q_stream_passjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     ALL documents filtered to greatest(doc_a, doc_b) >= the ingest cut —
     the driver hash proves the two-sided incremental machinery loses
     nothing vs the from-scratch join."""
-    import os
-
     from kitkat_spark.operators.dedup import (
         _PASS_M,
         PASSJOIN_K,
         _pass_layout,
         passjoin_triples,
     )
-
-    base = _fresh_scratch(spark, "passjoin_incr", sf_dir)
-    src = os.path.join(base, "src")
-    ing_index = os.path.join(base, "index")
-    ing_probes = os.path.join(base, "probes")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
 
     par = spark.sparkContext.defaultParallelism
     all_docs = load_table(spark, sf_dir, "documents").select(
@@ -1991,107 +1617,86 @@ def q_stream_passjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (built once when the corpus was indexed, long before any ingest
     # wave), so like every replay fixture they are written once per
     # (session, sf_dir) — a timed invocation measures the INGEST path, not
-    # a re-seed production never pays. Ingest-wave appends go to per-call
-    # dirs (the standing structures a call mutates must start pristine);
-    # each static read unions the two.
+    # a re-seed production never pays. The ingest's own structures are
+    # computed per call from the pinned docs; each static side unions the
+    # two.
     corpus = docs.filter(F.col("doc_id") < cut)
-    cp_index = _replay_path(
-        spark, sf_dir, "pj_index", lambda: segments(corpus)
-    )
-    cp_probes = _replay_path(
-        spark, sf_dir, "pj_probes", lambda: probes(corpus)
-    )
-    cp_texts = _replay_path(spark, sf_dir, "pj_texts", lambda: corpus)
-
-    seg_schema = "id_s long, len_s long, i int, seg long"
-    probe_schema = "id_r long, len_r long, len_s long, i int, seg long"
-    # The whole ingest span lands in the standing structures BEFORE the
-    # replay run, in one write each (r14 optimization, guide §1.2/§2.4:
-    # the per-wave loop paid 3 writes + one full streaming-query start +
-    # one ~|corpus probes| static-side shuffle PER WAVE — measured 24 s
-    # steady at sf0.1, of which one whole wave round was duplicated
-    # machinery). The replay is ONE availableNow batch probing the union
-    # structures through the same two joins. Output-identical by
-    # construction: every pair involving an ingested doc is discovered
-    # through d1/d2 exactly as before (the standing side is a superset
-    # per batch, and multi-segment / bidirectional / cross-batch
-    # re-discoveries were ALWAYS collapsed by the read-time distinct —
-    # the driver oracle and the batch-equivalence test pin this). The
-    # growing-index evidence (a pair spanning corpus and ingest) is
-    # unchanged: corpus structures pre-date the call by construction.
     ingest = docs.filter(F.col("doc_id") >= cut)
-    segments(ingest).write.mode("append").parquet(ing_index)
-    probes(ingest).write.mode("append").parquet(ing_probes)
-    ingest.write.mode("append").parquet(src)
 
-    st_index = spark.read.schema(seg_schema).parquet(cp_index, ing_index)
-    st_probes = spark.read.schema(probe_schema).parquet(
-        cp_probes, ing_probes
+    def standing(variant: str, build, schema: str) -> DataFrame:
+        path, _ = _replay_info(spark, sf_dir, variant, lambda: build(corpus))
+        return spark.read.schema(schema).parquet(path).unionByName(build(ingest))
+
+    st_index = standing("pj_index", segments, "id_s long, len_s long, i int, seg long")
+    st_probes = standing(
+        "pj_probes", probes, "id_r long, len_r long, len_s long, i int, seg long"
     )
-    st_texts = spark.read.schema(
-        "doc_id long, text string, n_chars long"
-    ).parquet(cp_texts, src)
-    stream = spark.readStream.schema(docs.schema).parquet(src)
-    # direction 1: the new doc as the LONGER side probes standing
-    # segments; direction 2: the new doc's own segments meet the
-    # standing docs' stored probe keys. The replay batch is STATELESS
-    # (the op's real state is the standing index dirs themselves, as
-    # in q_stream_incr_dedup): a pair discovered through both
-    # directions is collapsed at read time, so no per-batch state
-    # store has to spin up for a candidate-sized distinct.
-    d1 = probes(stream).join(st_index, ["len_s", "i", "seg"])
-    d2 = segments(stream).join(st_probes, ["len_s", "i", "seg"])
-    cols = ["id_s", "len_s", "id_r", "len_r"]
-    cand = (
-        d1.select(*cols)
-        .unionByName(d2.select(*cols))
-        .filter(
-            (F.col("len_s") < F.col("len_r"))
-            | (F.col("id_s") < F.col("id_r"))
+    st_texts = standing(
+        "pj_texts", lambda df: df, "doc_id long, text string, n_chars long"
+    )
+    # The whole ingest span replays as ONE availableNow batch probing the
+    # union structures through the same two joins (r14 optimization, guide
+    # §1.2/§2.4: the per-wave loop paid 3 writes + one full streaming-query
+    # start + one ~|corpus probes| static-side shuffle PER WAVE — measured
+    # 24 s steady at sf0.1, of which one whole wave round was duplicated
+    # machinery). Output-identical by construction: multi-segment /
+    # bidirectional / cross-batch re-discoveries are collapsed by the
+    # read-time distinct — the driver oracle and the batch-equivalence test
+    # pin this. The growing-index evidence (a pair spanning corpus and
+    # ingest) is unchanged: corpus structures pre-date the call.
+
+    def verified_pairs(stream: DataFrame) -> DataFrame:
+        # direction 1: the new doc as the LONGER side probes standing
+        # segments; direction 2: the new doc's own segments meet the
+        # standing docs' stored probe keys. The replay batch is STATELESS
+        # (the op's real state is the standing structures themselves, as
+        # in q_stream_incr_dedup): a pair discovered through both
+        # directions is collapsed at read time, so no per-batch state
+        # store has to spin up for a candidate-sized distinct.
+        d1 = probes(stream).join(st_index, ["len_s", "i", "seg"])
+        d2 = segments(stream).join(st_probes, ["len_s", "i", "seg"])
+        cols = ["id_s", "len_s", "id_r", "len_r"]
+        cand = (
+            d1.select(*cols)
+            .unionByName(d2.select(*cols))
+            .filter(
+                (F.col("len_s") < F.col("len_r"))
+                | (F.col("id_s") < F.col("id_r"))
+            )
+            .select(
+                F.least("id_s", "id_r").alias("doc_a"),
+                F.greatest("id_s", "id_r").alias("doc_b"),
+                F.greatest("len_s", "len_r").alias("mx"),
+            )
         )
-        .select(
-            F.least("id_s", "id_r").alias("doc_a"),
-            F.greatest("id_s", "id_r").alias("doc_b"),
-            F.greatest("len_s", "len_r").alias("mx"),
+        ta = st_texts.select(
+            F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a")
         )
-    )
-    ta = st_texts.select(
-        F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a")
-    )
-    tb = st_texts.select(
-        F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b")
-    )
-    lev = F.levenshtein("text_a", "text_b", PASSJOIN_K)
-    verified = (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .select("doc_a", "doc_b", "mx", lev.alias("lev"))
-        .filter((F.col("lev") >= 0) & (F.col("lev") <= PASSJOIN_K))
-        .select(
-            "doc_a",
-            "doc_b",
-            "lev",
-            F.round(F.col("lev") * 1.0 / F.col("mx"), 4).alias(
-                "rel_dist"
-            ),
+        tb = st_texts.select(
+            F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b")
         )
-    )
-    q = (
-        verified.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # collapse multi-segment / bidirectional re-discoveries of the same
-    # pair (exact duplicate rows by construction — lev and rel_dist are
-    # functions of the pair)
-    return (
-        spark.read.schema("doc_a long, doc_b long, lev int, rel_dist double")
-        .parquet(out)
-        .distinct()
-    )
+        lev = F.levenshtein("text_a", "text_b", PASSJOIN_K)
+        return (
+            cand.join(ta, "doc_a")
+            .join(tb, "doc_b")
+            .select("doc_a", "doc_b", "mx", lev.alias("lev"))
+            .filter((F.col("lev") >= 0) & (F.col("lev") <= PASSJOIN_K))
+            .select(
+                "doc_a",
+                "doc_b",
+                "lev",
+                F.round(F.col("lev") * 1.0 / F.col("mx"), 4).alias(
+                    "rel_dist"
+                ),
+            )
+        )
+
+    # stateless replay (no rows=); collapse multi-segment / bidirectional
+    # re-discoveries of the same pair (exact duplicate rows by construction
+    # — lev and rel_dist are functions of the pair)
+    return run_replay(
+        spark, sf_dir, "q_stream_passjoin", verified_pairs, waves=[ingest]
+    ).distinct()
 
 
 # Brute-force ground truth restricted to pairs that involve an ingested
@@ -2148,8 +1753,6 @@ def q_stream_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     function runs on the config-sized sealed table (sources x hours), so
     the single-partition-per-source window never sees corpus-sized
     data."""
-    import os
-
     from pyspark.sql import Window as W
 
     from kitkat_spark.operators.textops import TOKEN_RE
@@ -2179,21 +1782,7 @@ def q_stream_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("wdw.end").alias("w_end"), "source", "n_docs",
                 "n_words", "n_tokens", "n_chars")
     )
-    base = _fresh_scratch(spark, "fert_sink", sf_dir)
-    with _state_partitions(spark, n_rows):
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", os.path.join(base, "out"))
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    sealed = spark.read.schema(
-        "w_end timestamp, source string, n_docs long, n_words long, "
-        "n_tokens long, n_chars long"
-    ).parquet(os.path.join(base, "out"))
+    sealed = run_replay(spark, sf_dir, "q_stream_fertility", stream, rows=n_rows)
     w = (
         W.partitionBy("source")
         .orderBy("bucket")
@@ -2329,18 +1918,11 @@ def q_stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     content repetition, not corpus size. Wave files land whole into one
     micro-batch each (availableNow with no file-rate limit), so per-key
     arrival order is the ingest order the sort reconstructs."""
-    import os
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from kitkat_spark.operators.corpus import DEDUP_TTL_DOCS
-
-    base = _fresh_scratch(spark, "dedup_ttl", sf_dir)
-    src = os.path.join(base, "src")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
 
     par = spark.sparkContext.defaultParallelism
     docs = load_table(spark, sf_dir, "documents").repartition(par)
@@ -2387,30 +1969,24 @@ def q_stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    with _state_partitions(spark, span, pandas_state=True):
-        for lo, hi in zip(bounds, bounds[1:]):
-            d.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)).write.mode(
-                "append"
-            ).parquet(src)
-            stream = spark.readStream.schema("doc_id long, fp string").parquet(
-                src
-            )
-            audited = stream.groupBy("fp").applyInPandasWithState(
-                ttl_fn,
-                out_schema,
-                "last_id long",
-                "append",
-                GroupStateTimeout.NoTimeout,
-            )
-            q = (
-                audited.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    return spark.read.schema(out_schema).parquet(out)
+    return run_replay(
+        spark,
+        sf_dir,
+        "q_stream_dedup_ttl",
+        lambda src: src.groupBy("fp").applyInPandasWithState(
+            ttl_fn,
+            out_schema,
+            "last_id long",
+            "append",
+            GroupStateTimeout.NoTimeout,
+        ),
+        rows=span,
+        pandas_state=True,
+        waves=[
+            d.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+            for lo, hi in zip(bounds, bounds[1:])
+        ],
+    )
 
 
 # Byte-identical oracle: the custom-state streaming run must reproduce the
@@ -2444,8 +2020,6 @@ def q_stream_boiler_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline persists per window for mix governance; read-time shuffles
     are keyed on the gram fp (pre-aggregated, candidates ~ vocabulary)
     and the doc count is a 1-row broadcast."""
-    import os
-
     from kitkat_spark.functions.text import tokens
     from kitkat_spark.operators.corpus import BOILER_DF_PERMILLE
 
@@ -2480,20 +2054,9 @@ def q_stream_boiler_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("df_ws"))
         .select(F.col("wdw.end").alias("w_end"), "fp", "source", "df_ws")
     )
-    base = _fresh_scratch(spark, "boiler_src_sink", sf_dir)
-    with _state_partitions(spark, n_rows):
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", os.path.join(base, "out"))
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    sealed = spark.read.schema(
-        "w_end timestamp, fp string, source string, df_ws long"
-    ).parquet(os.path.join(base, "out"))
+    sealed = run_replay(
+        spark, sf_dir, "q_stream_boiler_sources", stream, rows=n_rows
+    )
     src_df = sealed.groupBy("fp", "source").agg(F.sum("df_ws").alias("df_src"))
     gram_df = src_df.groupBy("fp").agg(F.sum("df_src").alias("df"))
     sealed_wins = sealed.select("w_end").distinct()
@@ -2594,13 +2157,6 @@ ORACLE["q_stream_boiler_sources"] = f"""
     """
 
 
-# final state-store row count per (applicationId, sf_dir) observed by the
-# last q_stream_ttl_evict run — the bounded-state evidence the semantic
-# test asserts (the query's DataFrame output is eviction-timing-invariant
-# by design, so eviction is observable only through state metrics)
-_TTL_EVICT_STATE_ROWS: dict[tuple[str, str], int] = {}
-
-
 def q_stream_ttl_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION arm of q_stream_dedup_ttl: refresh-on-arrival TTL
     dedup with ACTUAL state eviction via event-time timeout (round-14
@@ -2623,9 +2179,9 @@ def q_stream_ttl_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
     not-yet-evicted expired entry still fails the gap test. The oracle is
     therefore the batch q_dedup_ttl projection to (doc_id, fp, kept) —
     exact equality, no tolerance for eviction jitter needed. What eviction
-    DOES change — state size — is recorded in _TTL_EVICT_STATE_ROWS from
-    the final run's progress metrics and asserted by the semantic test
-    (bounded below the all-time distinct-fp count).
+    DOES change — state size — shows only in the state metrics of the
+    run's progress (REPLAY_PROGRESS), which the semantic test asserts is
+    bounded below the all-time distinct-fp count.
 
     The waves run as ONE availableNow query over pre-written per-wave
     files with maxFilesPerTrigger=1 — three micro-batches in one run, so
@@ -2642,27 +2198,22 @@ def q_stream_ttl_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
     index a 100 TB/day ingest actually persists — the audit twin's
     unbounded variant is its telemetry mode); everything else matches
     q_stream_dedup_ttl (fp-keyed shuffle, Arrow-batched groups)."""
-    import os
-
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from kitkat_spark.operators.corpus import DEDUP_TTL_DOCS
 
-    base = _fresh_scratch(spark, "ttl_evict", sf_dir)
-    src = os.path.join(base, "src")
-    out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-
-    par = spark.sparkContext.defaultParallelism
-    docs = load_table(spark, sf_dir, "documents").repartition(par)
+    # no repartition: the one-run staging writes one filtered scan per wave
+    # in one job, so the waves' md5 already runs in parallel (a repartition
+    # under each wave's scan measured ~0.25 s slower per call at sf0.1)
+    docs = load_table(spark, sf_dir, "documents")
     fp = F.md5(
         F.substring(F.lower(F.regexp_replace("text", r"\s+", " ")), 1, 200)
     )
     # wave bounds from a doc_id-only scan (column-pruned, no md5): the
-    # fingerprint projection now has a single consumer (the one wave write
-    # below), so the r14 localCheckpoint pin is no longer needed (r15)
+    # fingerprint projection has a single consumer (the wave staging), so
+    # the r14 localCheckpoint pin is no longer needed (r15)
     mn, mx = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
     span = int(mx) + 1 - int(mn)
     bounds = [int(mn) + (span * i) // TTL_WAVES for i in range(TTL_WAVES + 1)]
@@ -2693,87 +2244,30 @@ def q_stream_ttl_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         yield pd.DataFrame({"doc_id": ids, "fp": key[0], "kept": kept})
 
-    # one file per wave, written in wave order: the file source's
-    # oldest-first mtime ordering + maxFilesPerTrigger=1 turns them into
-    # three in-order micro-batches of a single availableNow run. The
-    # mtimes are PINNED to strictly increasing per-wave values after the
-    # write — relying on write-order timestamps alone breaks on coarse-
-    # granularity filesystems, where equal mtimes let the source consume
-    # waves out of order and corrupt the per-key gap chain (review
-    # finding; the values stay within seconds of each other so the
-    # source's maxFileAge window is untouched).
-    #
-    # r15: ONE write job instead of three filtered coalesce(1) passes —
-    # hash-repartitioning on the wave id puts each wave entirely in one
-    # task (3 distinct values can collide into fewer tasks but never
-    # split), so partitionBy("wave") still yields exactly one file per
-    # wave directory; the md5 projection is computed once, in parallel,
-    # with no localCheckpoint materialization.
-    import glob as _glob
-
-    # exact same wave membership as the bounds loop: wave k holds
-    # bounds[k] <= doc_id < bounds[k+1]
-    wave = F.lit(0)
-    for k in range(1, TTL_WAVES):
-        wave = F.when(F.col("doc_id") >= F.lit(bounds[k]), k).otherwise(wave)
-    wave = wave.cast("int")
-    (
-        docs.select(
-            "doc_id", fp.alias("fp"), _doc_ingest_ts().alias("ts"),
-            wave.alias("wave"),
-        )
-        .repartition(TTL_WAVES, "wave")
-        .write.mode("overwrite")
-        .partitionBy("wave")
-        .parquet(src)
-    )
-    for k in range(TTL_WAVES):
-        for f in _glob.glob(os.path.join(src, f"wave={k}", "*.parquet")):
-            os.utime(f, (1_700_000_000 + k, 1_700_000_000 + k))
-    # a split wave replays its fragments in arbitrary order and an empty
-    # wave drops a micro-batch: either silently breaks the gap chain
-    per_wave = [
-        len(_glob.glob(os.path.join(d, "*.parquet")))
-        for d in _glob.glob(os.path.join(src, "wave=*"))
-    ]
-    if per_wave != [1] * TTL_WAVES:
-        raise RuntimeError(
-            f"q_stream_ttl_evict replay needs {TTL_WAVES} wave directories "
-            f"of one parquet file each, found files per wave {per_wave}"
-        )
-    last_rows = 0
-    with _state_partitions(spark, span, pandas_state=True):
-        stream = (
-            spark.readStream.schema("doc_id long, fp string, ts timestamp")
-            .option("maxFilesPerTrigger", 1)
-            # plain recursive file listing: the wave=k dirs are replay
-            # scaffolding, not a partition column of the stream schema
-            .option("recursiveFileLookup", "true")
-            .parquet(src)
-            .withWatermark("ts", f"{DOC_WM_MINUTES} minutes")
-        )
-        decided = stream.groupBy("fp").applyInPandasWithState(
+    # ONE run over one file per wave (the harness's one_run staging), so
+    # per-key arrival order across waves is the ingest order
+    feed = docs.select("doc_id", fp.alias("fp"), _doc_ingest_ts().alias("ts"))
+    return run_replay(
+        spark,
+        sf_dir,
+        "q_stream_ttl_evict",
+        lambda src: src.withWatermark("ts", f"{DOC_WM_MINUTES} minutes")
+        .groupBy("fp")
+        .applyInPandasWithState(
             evict_fn,
             out_schema,
             "last_id long",
             "append",
             GroupStateTimeout.EventTimeTimeout,
-        )
-        q = (
-            decided.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        prog = q.lastProgress
-        if prog and prog.get("stateOperators"):
-            last_rows = prog["stateOperators"][0].get("numRowsTotal", 0)
-    _TTL_EVICT_STATE_ROWS[
-        (spark.sparkContext.applicationId, sf_dir)
-    ] = int(last_rows)
-    return spark.read.schema(out_schema).parquet(out)
+        ),
+        rows=span,
+        pandas_state=True,
+        waves=[
+            feed.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
+            for lo, hi in zip(bounds, bounds[1:])
+        ],
+        one_run=True,
+    )
 
 
 # The batch TTL policy projected to the keep decision — the only output a
@@ -2820,8 +2314,6 @@ def q_stream_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is (live windows x sources) rows of two long sums —
     watermark-bounded, corpus-size-free; the allocation runs on the
     config-sized per-source frame exactly as in the batch op."""
-    import os
-
     from kitkat_spark.operators.textops import TOKEN_RE
 
     docs = load_table(spark, sf_dir, "documents")
@@ -2842,20 +2334,9 @@ def q_stream_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("wdw.end").alias("w_end"), "source", "n_docs_w",
                 "n_tokens_w")
     )
-    base = _fresh_scratch(spark, "budget_sink", sf_dir)
-    with _state_partitions(spark, n_rows):
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", os.path.join(base, "out"))
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    sealed = spark.read.schema(
-        "w_end timestamp, source string, n_docs_w long, n_tokens_w long"
-    ).parquet(os.path.join(base, "out"))
+    sealed = run_replay(
+        spark, sf_dir, "q_stream_token_budget", stream, rows=n_rows
+    )
     per = sealed.groupBy("source").agg(
         F.sum("n_docs_w").alias("n_docs"),
         F.sum("n_tokens_w").alias("n_tokens"),

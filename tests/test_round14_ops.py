@@ -581,8 +581,8 @@ def test_stream_ttl_evict_decisions_match_and_state_is_bounded(spark):
     carrying STRICTLY fewer state rows than the all-time distinct
     fingerprint count — the bounded-state property that is the entire point
     of eviction."""
+    from kitkat_spark.operators.replay import REPLAY_PROGRESS
     from kitkat_spark.operators.streamparity import (
-        _TTL_EVICT_STATE_ROWS,
         q_stream_dedup_ttl,
         q_stream_ttl_evict,
     )
@@ -592,9 +592,11 @@ def test_stream_ttl_evict_decisions_match_and_state_is_bounded(spark):
         (r.doc_id, r.fp): r.kept for r in q_stream_dedup_ttl(spark, SF).collect()
     }
     assert evict == audit
-    state_rows = _TTL_EVICT_STATE_ROWS[
-        (spark.sparkContext.applicationId, SF)
+    # the final state-store row count of the run's last progress
+    runs = REPLAY_PROGRESS[
+        (spark.sparkContext.applicationId, SF, "q_stream_ttl_evict")
     ]
+    state_rows = runs[-1][-1]["stateOperators"][0]["numRowsTotal"]
     n_fps = len({fp for (_, fp) in audit})
     assert 0 < state_rows < n_fps, (
         f"eviction must bound state below the all-time distinct count "

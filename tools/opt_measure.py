@@ -29,10 +29,11 @@ import pandas as pd  # noqa: F401 — resolves UDF type hints under PEP 563
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kitkat_spark.caches import release_caches  # noqa: E402
-from kitkat_spark.operators.streamparity import REPLAY_ROOT  # noqa: E402
+from kitkat_spark.operators.replay import REPLAY_ROOT  # noqa: E402
 from kitkat_spark.plans.explain import explain_str  # noqa: E402
 from kitkat_spark.queries import QUERIES  # noqa: E402
 from kitkat_spark.session import get_spark  # noqa: E402
+from perfbench.run import calibrate_cpu  # noqa: E402
 
 # the round whose pool fold --all-slow reads and whose plans/ dir --plans writes
 ROUND = "r15"
@@ -105,7 +106,7 @@ def main() -> None:
     import bench as _bench
 
     calib = {
-        "calib_cpu_s": _bench._calibrate_cpu(),
+        "calib_cpu_s": round(calibrate_cpu(), 4),
         "calib_spark_s": _bench._calibrate_spark(spark),
         "calib_fsync_s": _calibrate_fsync(),
     }
