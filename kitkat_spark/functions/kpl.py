@@ -244,21 +244,3 @@ def is_aggregated_col(data: Column) -> Column:
 def kpl_deaggregate_udf(blobs: pd.Series) -> pd.Series:
     """Arrow-batched deaggregation; pair with explode() for the UDTF shape."""
     return blobs.map(deaggregate_blob)
-
-
-@F.udtf(returnType="partition_key string, data binary, tags map<string,string>")
-class KplDeaggUDTF:
-    """Native Spark 4 Python UDTF form of X1 — one aggregated blob in, N
-    inner records out (0 on decode failure). Register and use laterally:
-
-        spark.udtf.register("kpl_deagg", KplDeaggUDTF)
-        SELECT b.blob_id, t.* FROM blobs b, LATERAL kpl_deagg(b.blob) t
-
-    Semantically identical to explode(kpl_deaggregate_udf(blob)); the UDTF
-    avoids materializing the intermediate array per row, the pandas UDF
-    amortizes per-row Python dispatch via Arrow — pick per workload.
-    """
-
-    def eval(self, blob):  # noqa: D102 - one row per inner record
-        for rec in deaggregate_blob(blob):
-            yield rec["partition_key"], rec["data"], rec["tags"]

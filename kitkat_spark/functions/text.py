@@ -1,10 +1,10 @@
 """Text-analysis column expressions: tokens, shingles, minhash, fingerprints.
 
-Everything here is built-in-function composition (JVM-side, codegen'd) — no
-Python UDFs. MinHash signatures use one xxhash64 pass per shingle plus k
-universal-hash remixes ((a*h + b) mod p), computed with ``transform`` over a
-constant (a, b) array — O(shingles + k) per doc, not O(shingles * k) hash
-calls, which is what you want at 100 TB.
+Everything here is built-in-function composition (JVM-side, codegen'd)
+except the MinHash remix: shingles hash once JVM-side, and the k
+universal-hash remixes ((a*h + b) mod p) run as one Arrow-batched numpy
+reduce (make_minhash_udf) — O(shingles + k) per doc, not O(shingles * k)
+hash calls, which is what you want at 100 TB.
 """
 
 from __future__ import annotations
@@ -61,14 +61,6 @@ def word_shingles(toks: Column, n: int = 3) -> Column:
     return F.array_distinct(F.when(F.size(toks) >= n, joined).otherwise(F.array()))
 
 
-def shingle_hashes(shingles: Column) -> Column:
-    """One xxhash64 (mod p) per shingle — compute ONCE, then feed
-    minhash_from_hashes. Keeping this a separate column stops Catalyst from
-    inlining the hash pass into each of the k signature remixes (which would
-    blow up the codegen'd expression tree k-fold)."""
-    return F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(MINHASH_PRIME)))
-
-
 def _token_hashes(toks: Column) -> Column:
     """One xxhash64 per token — the shared first stage of every n-gram hash
     below. Hashing tokens ONCE and combining the resulting longs per
@@ -78,30 +70,13 @@ def _token_hashes(toks: Column) -> Column:
     return F.transform(toks, lambda t: F.xxhash64(t))
 
 
-def shingle_hashes_from_tokens(toks: Column, n: int = 3) -> Column:
-    """Distinct n-gram hashes straight from the token array — never
-    materializes shingle STRINGS: tokens are hashed once, then each
-    position combines n consecutive token-hashes with one xxhash64 over
-    longs. For hash-consuming paths (minhash/LSH) this dedups longs
-    instead of strings. Jaccard on these equals string-shingle Jaccard up
-    to xxhash64 collisions (~2^-64/pair). mod-p reduced for minhash input
-    (the signature remix needs a*h+b to fit int64)."""
-    hashed = F.transform(
-        _zipped_ngrams(_token_hashes(toks), n),
-        lambda s: F.pmod(
-            F.xxhash64(*[s[str(j)] for j in range(n)]), F.lit(MINHASH_PRIME)
-        ),
-    )
-    return F.array_distinct(
-        F.when(F.size(toks) >= n, hashed).otherwise(F.array().cast("array<bigint>"))
-    )
-
-
 def full_shingle_hashes(toks: Column, n: int = 3) -> Column:
     """Distinct FULL-RANGE combined n-gram hashes (no mod-p reduction) — for
     equality-join paths (inverted-index self-join, decontamination) where
-    the collision budget must stay at the 2^-64 scale. Same
-    hash-tokens-once layout as shingle_hashes_from_tokens."""
+    the collision budget must stay at the 2^-64 scale. Tokens hash once
+    (_token_hashes), then each position combines n consecutive
+    token-hashes with one xxhash64 over longs — shingle STRINGS are never
+    materialized."""
     hashed = F.transform(
         _zipped_ngrams(_token_hashes(toks), n),
         lambda s: F.xxhash64(*[s[str(j)] for j in range(n)]),
@@ -129,8 +104,8 @@ def oracle_shingle_hashes(toks: Column, n: int = 3) -> Column:
     """Distinct mod-p n-gram shingle hashes with DuckDB-reproducible VALUES:
     md5_long of the space-joined shingle string, reduced mod MINHASH_PRIME
     so the minhash remix (a*h + b) stays < 2^62 in int64. Unlike
-    shingle_hashes_from_tokens this materializes the shingle string (md5
-    needs the exact bytes the oracle hashes) — the price of verifiability;
+    full_shingle_hashes this materializes the shingle string (md5 needs
+    the exact bytes the oracle hashes) — the price of verifiability;
     equality-only paths keep the hash-tokens-once xxhash64 layout."""
     hashed = F.transform(
         _zipped_ngrams(toks, n),
@@ -148,61 +123,27 @@ def band_slices(signature: Column, bands: int, rows: int) -> Column:
     """Per-band RAW signature slices (array<long> join keys) for LSH
     bucketing. No hash remix: two docs share a band bucket iff the 4 raw
     minhash values agree, and an external oracle reproduces the key with a
-    plain list literal — unlike band_hashes' xxhash64 digest. Spark groups/
-    joins array<long> keys natively; the key is 32 bytes vs 8 for a digest,
-    a fine trade below ~64 rows per band."""
+    plain list literal — unlike an xxhash64 digest of the slice. Spark
+    groups/joins array<long> keys natively; the key is 32 bytes vs 8 for a
+    digest, a fine trade below ~64 rows per band."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
         lambda b: F.slice(signature, b * rows + 1, rows),
     )
 
 
-def minhash_from_hashes(base: Column, k: int = 32, seed: int = 42) -> Column:
-    """Array of k minhash values from a precomputed shingle-hash array.
-
-    Each of the k permutations is a cheap affine remix (a*h + b) mod p of the
-    base hash. Built as ONE nested transform over a literal (a, b) parameter
-    array, so the expression tree is O(1) in k — k separate array_min
-    expressions would each re-inline the base subtree after Catalyst's
-    projection collapse, exploding codegen size (observed: 13 MB task
-    binaries and ~60 s of compile time at 500 docs).
-    Empty shingle set -> array of p (sentinel max).
-    """
-    params = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in minhash_params(k, seed)
-        ]
-    )
-    return F.transform(
-        params,
-        lambda p: F.coalesce(
-            F.array_min(
-                F.transform(base, lambda h: F.pmod(p["a"] * h + p["b"], F.lit(MINHASH_PRIME)))
-            ),
-            F.lit(MINHASH_PRIME),
-        ),
-    )
-
-
-def minhash_signature(shingles: Column, k: int = 32, seed: int = 42) -> Column:
-    """Convenience one-shot: shingle_hashes + minhash_from_hashes. Prefer the
-    staged form (separate select for the hash array) in operators."""
-    return minhash_from_hashes(shingle_hashes(shingles), k, seed)
-
-
 def make_minhash_udf(k: int = 32, seed: int = 42):
     """Arrow-batched minhash: numpy (a*h+b) mod p min-reduce over the JVM-side
     shingle-hash array.
 
-    Why a pandas UDF when a pure-expression form exists above: the nested
-    higher-order-function tree (transform inside array_min inside transform)
+    Why a pandas UDF and not a pure expression: the nested
+    higher-order-function form (transform inside array_min inside transform)
     drops Spark to interpreted per-element evaluation — measured 330 s for
     500 docs — while this UDF is one Arrow hop + a vectorized matmul-shaped
-    reduce (~2 s). The expensive text hashing still happens JVM-side in
-    shingle_hashes; only the k-permutation remix crosses to Python. The UDF
-    output is a materialized attribute, so downstream band expressions
-    reference a column, not a re-inlined subtree.
+    reduce (~2 s). The expensive text hashing still happens JVM-side
+    (oracle_shingle_hashes); only the k-permutation remix crosses to
+    Python. The UDF output is a materialized attribute, so downstream band
+    expressions reference a column, not a re-inlined subtree.
     """
     params = minhash_params(k, seed)
     A = np.array([a for a, _ in params], dtype=np.int64)[:, None]
@@ -231,21 +172,10 @@ def make_minhash_udf(k: int = 32, seed: int = 42):
     return minhash_udf
 
 
-def band_hashes(signature: Column, bands: int, rows: int) -> Column:
-    """Split a k=bands*rows signature into per-band hashes for LSH bucketing.
-
-    One transform + slice + xxhash64(array<long>) — compact expression tree
-    (see minhash_from_hashes note)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.xxhash64(F.slice(signature, b * rows + 1, rows)),
-    )
-
-
-def simhash64(token_hashes_exploded: None = None) -> None:  # pragma: no cover
-    raise NotImplementedError("simhash is assembled in operators/dedup.py (needs an aggregation)")
-
-
-def fingerprint_md5(text: Column) -> Column:
-    """Whitespace-normalized md5 fingerprint (matches DuckDB md5())."""
-    return F.md5(F.lower(F.regexp_replace(text, r"\s+", " ")))
+def fingerprint_md5(text: Column, prefix: int | None = None) -> Column:
+    """Whitespace-normalized, lower-cased md5 fingerprint — DuckDB's
+    ``md5(lower(regexp_replace(text, '\\s+', ' ', 'g')))``. With ``prefix``
+    only the first ``prefix`` normalized chars are hashed
+    (``substr(..., 1, prefix)``): a cheap prefix-dup key."""
+    norm = F.lower(F.regexp_replace(text, r"\s+", " "))
+    return F.md5(norm if prefix is None else F.substring(norm, 1, prefix))

@@ -31,8 +31,3 @@ def norm2(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm2(a) * norm2(b))
-
-
-def cosine_prenorm(dot_ab: Column, norm_a: Column, norm_b: Column) -> Column:
-    """Cosine from a precomputed dot + norms (normalize-once pattern)."""
-    return dot_ab / (norm_a * norm_b)

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from kitkat_spark.functions.text import full_shingle_hashes, tokens
+from kitkat_spark.functions.text import fingerprint_md5, full_shingle_hashes, tokens
 from kitkat_spark.operators.dedup import (
     PAIRS_SQL_CTES,
     jaccard_pairs,
@@ -502,7 +502,7 @@ def q_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts), one hash agg on source; the fingerprint is the same 200-char
     normalized-prefix md5 as q_split_leakage / q_incremental_dedup."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.substring(F.lower(F.regexp_replace("text", r"\s+", " ")), 1, 200))
+    fp = fingerprint_md5(F.col("text"), prefix=200)
     d = docs.select("doc_id", "source", fp.alias("fp"))
     dd = d.withColumn("n_copies", F.count("*").over(W.partitionBy("fp")))
     return dd.groupBy("source").agg(
@@ -772,7 +772,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cluster where the scan already has many partitions)
     par = spark.sparkContext.defaultParallelism
     docs = load_table(spark, sf_dir, "documents").repartition(par)
-    fp = F.md5(F.substring(F.lower(F.regexp_replace("text", r"\s+", " ")), 1, 200))
+    fp = fingerprint_md5(F.col("text"), prefix=200)
     d = docs.select("doc_id", fp.alias("fp"))
     # scale-free split point: integer arithmetic, exact in both engines;
     # the 1-row aggregate broadcasts onto the fact scan (doc_id-only read)
@@ -1125,7 +1125,7 @@ def q_train_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kitkat_spark.operators.sampling import split_column
 
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.regexp_replace("text", r"\s+", " ")))
+    fp = fingerprint_md5(F.col("text"))
     # one survivor per fingerprint = min(doc_id) per fp — a combinable
     # aggregate, not a row_number window over the corpus (r14, guide
     # §2.3): the partial agg collapses every fingerprint map-side before
@@ -2128,7 +2128,7 @@ def q_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-for-cell."""
     par = spark.sparkContext.defaultParallelism
     docs = load_table(spark, sf_dir, "documents").repartition(par)
-    fp = F.md5(F.substring(F.lower(F.regexp_replace("text", r"\s+", " ")), 1, 200))
+    fp = fingerprint_md5(F.col("text"), prefix=200)
     d = docs.select("doc_id", fp.alias("fp"))
     w = W.partitionBy("fp").orderBy("doc_id")
     gap = F.col("doc_id") - F.lag("doc_id").over(w)

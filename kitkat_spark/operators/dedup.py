@@ -26,8 +26,6 @@ at scale a boilerplate shingle would otherwise create a quadratic bucket).
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,13 +50,6 @@ SIMHASH_MAX_HAMMING = 3
 # near-dup families are far smaller; candidates lost to the cap would be
 # boilerplate-cluster pairs the DF_CAP guard already excludes from scoring.
 LSH_MAX_BUCKET = 1000
-# Edit-distance blocking (q_edit_dedup): max edit distance accepted, the
-# length-bucket width, and the block-size cap (same clique-bound role as
-# LSH_MAX_BUCKET; never approached by real length/lang blocks — sf0.1's
-# largest block is 153).
-EDIT_MAX_DIST = 12
-EDIT_BLOCK_WIDTH = 32
-EDIT_MAX_BUCKET = 500
 # Sentinels for per-source pair attribution (q_lsh_source_curve): a pair
 # whose docs disagree on source is '<cross>'; NULL sources coalesce to
 # '<null>' on BOTH engines first (the q_tclose_audit lesson).
@@ -215,85 +206,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jaccard_pairs(spark, sf_dir)
 
 
-def q_edit_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocked edit-distance near-dup pairs — the record-linkage modality
-    (blocking + verify, Fellegi-Sunter style) the shingle-based detectors
-    don't cover: character-level edits that rewrite many shingles (every
-    shingle spanning an edit changes) but few characters.
-
-    HONEST SCALE LIMIT — this is a TEACHING QUERY, not the family default:
-    length blocks saturate as corpora densify. At the 10x stress, 74
-    blocks exceed EDIT_MAX_BUCKET and 59% of true pairs (147k of 251k)
-    fall in dropped blocks; at 20x the saturation is near-total — 25,860
-    of 1,052,020 true pairs found (97.5% loss, SCALE_NOTES round 10).
-    Length blocking is the cheap low-density detector only; the FAMILY
-    DEFAULT is q_passjoin_dedup (content-partition candidate generation,
-    cap-free, measured strict superset of this query's output at 1x, 10x,
-    and 20x).
-
-    Blocking: each doc lands in TWO length buckets of width 32 — its own
-    grid-0 bucket and a half-width-offset grid-1 bucket. Any pair within
-    the edit threshold has |len_a - len_b| <= EDIT_MAX_DIST (edit distance
-    lower-bounds length difference), and two offset grids of width w
-    guarantee any pair closer than w/2 = 16 > 12 shares a bucket in at
-    least one grid — so blocking provably loses NO qualifying pair while
-    cutting candidates from O(N^2) to sum-of-block^2 (same bucket-cap
-    discipline as LSH via EDIT_MAX_BUCKET).
-
-    Verify: threshold-capped ``levenshtein(a, b, k)`` — Spark's banded DP
-    is O(len x k) with early exit, not O(len^2), and stays JVM-side.
-    Texts are joined back by doc_id AFTER pair generation, so the wide
-    column never rides through the blocking shuffle."""
-    warnings.warn(
-        "q_edit_dedup is the low-density teaching variant: length blocks "
-        "saturate as corpora densify (measured 97.5% true-pair loss at 20x "
-        "scale, SCALE_NOTES round 10). Use q_passjoin_dedup — cap-free, "
-        "recall 1.0 by the PassJoin theorem — as the edit-distance family "
-        "default.",
-        stacklevel=2,
-    )
-    docs = load_table(spark, sf_dir, "documents")
-    w2 = EDIT_BLOCK_WIDTH // 2
-    keyed = docs.select(
-        F.struct("doc_id", "n_chars").alias("idn"),
-        "lang",
-        F.posexplode(
-            F.array(
-                F.floor(F.col("n_chars") / EDIT_BLOCK_WIDTH),
-                F.floor((F.col("n_chars") + w2) / EDIT_BLOCK_WIDTH),
-            )
-        ).alias("grid", "b"),
-    )
-    cand = (
-        bucket_pairs(keyed, ["lang", "grid", "b"], "idn", EDIT_MAX_BUCKET)
-        .filter(
-            F.abs(F.col("id_a.n_chars") - F.col("id_b.n_chars")) <= EDIT_MAX_DIST
-        )
-        .select(
-            F.col("id_a.doc_id").alias("doc_a"),
-            F.col("id_b.doc_id").alias("doc_b"),
-            F.greatest(F.col("id_a.n_chars"), F.col("id_b.n_chars")).alias("mx"),
-        )
-        .distinct()
-    )
-    ta = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
-    tb = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
-    lev = F.levenshtein("text_a", "text_b", EDIT_MAX_DIST)
-    return (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .select("doc_a", "doc_b", "mx", lev.alias("lev"))
-        .filter((F.col("lev") >= 0) & (F.col("lev") <= EDIT_MAX_DIST))
-        .select(
-            "doc_a",
-            "doc_b",
-            "lev",
-            F.round(F.col("lev") * 1.0 / F.col("mx"), 4).alias("rel_dist"),
-        )
-    )
-
-
-PASSJOIN_K = EDIT_MAX_DIST  # max edit distance; segments per doc = K + 1
+PASSJOIN_K = 12  # max edit distance; segments per doc = K + 1
 _PASS_M = PASSJOIN_K + 1
 
 
@@ -396,10 +309,11 @@ def passjoin_probe(spark: SparkSession, docs: DataFrame) -> DataFrame:
 
 def q_passjoin_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact edit-distance self-join via PassJoin partitioning (Li, Deng &
-    Feng, EDBT 2011) — the cap-free scale path for what q_edit_dedup's
-    length blocking approximates: length blocks saturate as corpora
-    densify (at 10x, 74 blocks exceed EDIT_MAX_BUCKET and their pairs are
-    lost), while PassJoin's candidate volume is LINEAR in corpus size.
+    Feng, EDBT 2011) — the edit-distance near-dup detector: character-level
+    edits that rewrite many shingles but few characters. Unlike length
+    blocking, whose blocks saturate as corpora densify (its pairs in
+    over-cap blocks are lost), PassJoin needs no cap and its candidate
+    volume is LINEAR in corpus size.
 
     Pigeonhole: split every doc into m = k+1 = 13 segments; at most one
     segment per edit is touched, so any pair within distance k shares at
@@ -872,36 +786,6 @@ _SIM_PACK = "\n                   + ".join(
 )
 
 ORACLE: dict[str, str] = {
-    "q_edit_dedup": f"""
-        WITH keyed AS (
-            SELECT doc_id, lang, n_chars, g.grid,
-                   CASE g.grid
-                       WHEN 0 THEN n_chars // {EDIT_BLOCK_WIDTH}
-                       ELSE (n_chars + {EDIT_BLOCK_WIDTH // 2}) // {EDIT_BLOCK_WIDTH}
-                   END AS b
-            FROM documents, (SELECT unnest([0, 1]) AS grid) g
-        ), bsz AS (
-            SELECT lang, grid, b, count(*) AS c FROM keyed GROUP BY 1, 2, 3
-        ), cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   greatest(a.n_chars, b.n_chars) AS mx
-            FROM keyed a
-            JOIN keyed b ON a.lang = b.lang AND a.grid = b.grid AND a.b = b.b
-                        AND a.doc_id < b.doc_id
-            JOIN bsz s ON s.lang = a.lang AND s.grid = a.grid AND s.b = a.b
-                      AND s.c BETWEEN 2 AND {EDIT_MAX_BUCKET}
-            WHERE abs(a.n_chars - b.n_chars) <= {EDIT_MAX_DIST}
-        ), scored AS (
-            SELECT c.doc_a, c.doc_b, c.mx,
-                   CAST(levenshtein(da.text, db.text) AS INT) AS lev
-            FROM cand c
-            JOIN documents da ON da.doc_id = c.doc_a
-            JOIN documents db ON db.doc_id = c.doc_b
-        )
-        SELECT doc_a, doc_b, lev,
-               round(lev * 1.0 / mx, 4) AS rel_dist
-        FROM scored WHERE lev <= {EDIT_MAX_DIST}
-    """,
     # deliberately the brute force PassJoin replaces: if the hash matches,
     # the whole partition/probe pipeline provably lost no pair
     "q_passjoin_dedup": f"""
@@ -1251,7 +1135,7 @@ def q_minhash_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs^2). est = matches/32 and exact = |A&B| / (|A| + |B| - |A&B|) are
     exact rationals of integers; every reported value quantizes to 1e-4
     units via CAST(round(x * 10000) AS BIGINT) — the micro-unit rule
-    (q_gram_matrix lesson) — because round(x, 4) itself diverges between
+    (as in q_gram_blocked) — because round(x, 4) itself diverges between
     engines on ulp-below-boundary doubles (DuckDB rounds the shortest
     DECIMAL repr, the JVM the binary value: measured on
     |1/32 - 57/2375| = 0.00724999...95 -> 0.0073 vs 0.0072)."""

@@ -54,23 +54,6 @@ from pyspark.sql import types as T
 
 from kitkat_spark.sources import load_table
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("content", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType()),
-                    T.StructField("n_bytes", T.LongType()),
-                ]
-            ),
-        ),
-    ]
-)
-
 FEATURE_SCHEMA = (
     "media_id long, media_type string, n_bytes long, magic string, "
     "width int, height int, n_px long, px_sum long, duration_s double, "

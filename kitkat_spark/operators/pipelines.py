@@ -671,62 +671,13 @@ def q_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_groupmap_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user min-max normalization via ``applyInPandas`` — the Arrow
-    grouped-map path, driver-verified. The normalization itself is
-    deliberately SQL-expressible (the oracle is two window aggregates), so
-    the thing under value-level test is the MACHINERY: group shuffling,
-    Arrow batch transfer, pandas execution, schema enforcement — the same
-    path a per-group model-scoring or feature-engineering UDF rides when
-    the logic genuinely can't be expressed in built-ins.
-
-    Scale: one shuffle on the grouping key; each group must fit a worker's
-    memory. The entity key is BUCKETED before the grouped-map
-    (user_id mod ~2x-parallelism) and the pandas body does a vectorized
-    within-bucket groupby — the "batch small groups" rule realized: the
-    round-9 form shipped one pandas frame per user (1,500 tiny groups at
-    sf0.1) and per-group construction overhead made it 28x the JVM window
-    twin (3.6 s vs 0.13 s); bucketing amortizes that overhead over ~64
-    Arrow batches and measures 0.85 s at sf0.1 — within ~2-4x of pure
-    JVM, the honest floor for data that must cross into Python at all.
-    Results
-    are bit-identical to the per-user form (normalization is per-user
-    either way; rounding happens JVM-side AFTER the UDF so the
-    engine-portable half-away-from-zero rule applies — numpy rounds
-    half-even, a cross-engine hash mismatch waiting to happen).
-
-    The remaining gap vs q_normalize_window IS the lesson the repo's
-    "UDFs are the slow path" rule encodes: reach for applyInPandas only
-    when the per-group logic has no built-in expression.
-    """
-    import pandas as pd
-
-    ev = load_table(spark, sf_dir, "events").select("user_id", "event_id", "value")
-    n_buckets = spark.sparkContext.defaultParallelism * 2
-
-    def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        g = pdf.groupby("user_id")["value"]
-        lo = g.transform("min")
-        rng = g.transform("max") - lo
-        norm = (pdf["value"] - lo) / rng
-        return pdf.assign(norm=norm.where(rng != 0, 0.5))[
-            ["user_id", "event_id", "norm"]
-        ]
-
-    out = ev.groupBy(F.pmod("user_id", F.lit(n_buckets))).applyInPandas(
-        normalize, "user_id long, event_id long, norm double"
-    )
-    return out.select("user_id", "event_id", F.round("norm", 6).alias("norm"))
-
-
 def q_normalize_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The RECOMMENDED formulation of q_groupmap_normalize: per-user
-    min-max normalization as two window aggregates — pure JVM, whole-stage
-    codegen, ONE shuffle on the partition key and no per-group Python
-    (still ~2-4x faster than even the bucketed grouped-map twin at sf0.1,
-    and 28x faster than the naive per-user grouped-map it replaced).
-    Registered alongside the UDF variant so the registry itself documents
-    which shape production should reach for; both share the same oracle."""
+    """Per-user min-max normalization as two window aggregates — pure
+    JVM, whole-stage codegen, ONE shuffle on the partition key and no
+    per-group Python. The grouped-map (``applyInPandas``) form of the same
+    normalization measured ~3x slower at sf0.1 on 8 cores even with the
+    entity key bucketed (0.62 s vs 0.21 s), and 28x slower shipping one
+    pandas frame per user: the "UDFs are the slow path" rule, measured."""
     from pyspark.sql import Window as W
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_id", "value")
@@ -1291,16 +1242,6 @@ ORACLE: dict[str, str] = {
         FROM cooc
         JOIN vocab va ON va.token = a
         JOIN vocab vb ON vb.token = b
-    """,
-    # q_normalize_window shares this oracle (same semantics, JVM plan)
-    "q_groupmap_normalize": """
-        SELECT user_id, event_id,
-               round(CASE WHEN max(value) OVER w = min(value) OVER w THEN 0.5
-                          ELSE (value - min(value) OVER w)
-                               / (max(value) OVER w - min(value) OVER w)
-                     END, 6) AS norm
-        FROM events
-        WINDOW w AS (PARTITION BY user_id)
     """,
     "q_normalize_window": """
         SELECT user_id, event_id,

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from kitkat_spark.functions.text import fingerprint_md5
 from kitkat_spark.sources import load_table
 
 # Knuth's multiplicative constant (golden-ratio scaling for 32-bit hashing).
@@ -98,7 +99,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the same shape extends to full near-dup leakage by swapping the
     fingerprint for MinHash band keys."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.substring(F.lower(F.regexp_replace("text", r"\s+", " ")), 1, 200))
+    fp = fingerprint_md5(F.col("text"), prefix=200)
     return (
         docs.select(
             fp.alias("fp"),

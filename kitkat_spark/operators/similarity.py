@@ -1333,102 +1333,40 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 GRAM_SCALE = 1_000_000  # embedding values quantized to integer micro-units
 
 
-def q_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+def q_gram_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The distributed Gram matrix G = X^T X over the embedding corpus —
     the one-pass building block of PCA / whitening / linear probing at
-    scale: G is D x D (4096 cells at D = 64) REGARDLESS of corpus size,
-    every row contributes its outer product, and contributions sum — so
-    the whole computation is one map-side fan-out plus ONE combinable
-    shuffle whose key domain is the upper triangle (D(D+1)/2 = 2080
-    cells). Driver-side eigendecomposition of the 64x64 result is
-    config-sized; the distributed part IS this query.
+    scale: G is D x D REGARDLESS of corpus size, every row contributes its
+    outer product, and contributions sum. Driver-side eigendecomposition
+    of the D x D result is config-sized; the distributed part IS this
+    query.
+
+    Per-partition BLAS accumulation instead of a per-row pair fan-out: a
+    fan-out emits D(D+1)/2 structs PER ROW (524k structs/row at D = 1024).
+    Here each partition's Arrow batches feed ONE integer matmul (numpy,
+    int64 chunks) and the partition emits exactly D(D+1)/2 partial rows
+    REGARDLESS of its row count — shuffle volume is partitions x D^2/2,
+    and per-row work is a BLAS inner loop. Measured ~10x faster than the
+    array fan-out at 100x data even at D = 64 (1.2 s vs 11.7 s,
+    SCALE_NOTES round-11 100x sweep).
 
     Exactness discipline (floats sum order-dependently — the decimal-sum
-    rule): values quantize to integer micro-units FIRST via the product
-    form cast(round(x * 1e6) as bigint) — the same IEEE product on both
-    engines, integer half-away-from-zero agrees (the q_anomaly_mad ulp
-    lesson) — then cell sums run as exact integers (decimal(38,0)
-    accumulator: |q| <= ~2^20, products <= 2^40, corpus rows push past
-    int64 at ~2^23 rows — the graph.py overflow lesson) and ONE exact
-    division converts back at the end.
+    rule): quantization to integer micro-units happens JVM-SIDE via the
+    product form cast(round(x * 1e6) as bigint) — the same IEEE product
+    on both engines, integer half-away-from-zero agrees (the q_anomaly_mad
+    ulp lesson; numpy's rint rounds half-to-even, so running the rounding
+    in Python would diverge). The Python side touches ONLY integers
+    (chunked int64 matmul, chunk rows bounded so no partial sum can
+    overflow, accumulated into an arbitrary-precision object array),
+    partials ship as decimal(38,0), and the cell sums run as exact
+    decimals with ONE exact division at the end — value-for-value what
+    the DuckDB oracle's all-pairs fan-out computes.
 
-    The pair fan-out is ARRAY-NATIVE (nested transform over the
-    quantized vector — q_assoc_rules' move): D(D+1)/2 structs per row,
-    no self-join, no shuffle until the cell aggregation.
-
-    FAMILY DEFAULT AT SCALE: q_gram_blocked (hash-equal by construction,
-    pytest-pinned) — the per-row struct churn here is CPU-linear in
-    rows x D^2 and measured ~10x slower than the partition-BLAS path at
-    100x data even at D = 64 (11.7 s vs 1.2 s, SCALE_NOTES round-11 100x
-    sweep); this form stays as the pure-built-in derivation the oracle
-    mirrors structurally."""
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.size("embedding") > 0)
-    quant = emb.select(
-        F.expr(
-            f"transform(embedding, x -> cast(round(x * {GRAM_SCALE}) as bigint))"
-        ).alias("q")
-    )
-    cells = quant.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(q, (xi, i) -> "
-                "transform(slice(q, i + 1, size(q) - i), (xj, jo) -> "
-                "struct(i AS i, i + jo AS j, xi * xj AS p))))"
-            )
-        ).alias("c")
-    )
-    return (
-        cells.groupBy(F.col("c.i").alias("i"), F.col("c.j").alias("j"))
-        .agg(F.sum(F.col("c.p").cast("decimal(38,0)")).alias("s"))
-        .select(
-            F.col("i").cast("int").alias("i"),
-            F.col("j").cast("int").alias("j"),
-            # product-form rounding (the q_anomaly_mad ulp lesson): the
-            # scaled double is the same IEEE value on both engines and
-            # integer half-away agrees; Spark's round(x, 9) (exact decimal
-            # expansion) disagrees with DuckDB's at 0.5-ulp boundaries
-            (
-                F.round(
-                    F.col("s").cast("double")
-                    / F.lit(float(GRAM_SCALE) ** 2)
-                    * F.lit(1e9)
-                )
-                / F.lit(1e9)
-            ).alias("gram"),
-        )
-    )
-
-
-def q_gram_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LARGE-D Gram path: same G = X^T X as q_gram_matrix, computed by
-    per-partition BLAS accumulation instead of the array pair fan-out.
-    q_gram_matrix emits D(D+1)/2 structs PER ROW — perfect at D = 64
-    (2080 cells), quadratic-per-row at D >= 1024 (524k structs/row, the
-    round-10 verdict's named gap). Here each partition's Arrow batches
-    feed ONE integer matmul (numpy, int64 chunks) and the partition emits
-    exactly D(D+1)/2 partial rows REGARDLESS of its row count — shuffle
-    volume drops from rows x D^2/2 to partitions x D^2/2, and per-row
-    work becomes a BLAS inner loop instead of struct explosion.
-
-    Exactness is UNCHANGED from q_gram_matrix (its hashes must match,
-    pytest-pinned): quantization to integer micro-units happens JVM-SIDE
-    with the identical round(x * 1e6) expression (numpy's rint rounds
-    half-to-even — running the rounding in Python would diverge from the
-    Spark/DuckDB half-away agreement), the Python side touches ONLY
-    integers (chunked int64 matmul, chunk rows bounded so no partial sum
-    can overflow, accumulated into an arbitrary-precision object array),
-    partials ship as decimal(38,0), and the final cell sum + one division
-    reuse q_gram_matrix's exact aggregation. Same DuckDB oracle, same
-    values, two execution strategies — pick by D.
-
-    This is the one deliberate Pandas-path operator of the family: at
-    large D the built-in expression form is the slow path (quadratic
-    struct churn per row), and Arrow-batched integer BLAS is exactly the
-    'drop to mapInPandas only where built-ins genuinely can't express it
-    efficiently' case. Rows per Python batch are Arrow-sized; partitions
-    parallelize by file split at scale. Measured: ~10x faster than
-    q_gram_matrix at 100x data even at D = 64 (1.2 s vs 11.7 s,
-    SCALE_NOTES round-11 100x sweep) — the FAMILY DEFAULT at scale."""
+    This is the one deliberate Pandas-path operator of the family: the
+    built-in expression form is the slow path (quadratic struct churn per
+    row), and Arrow-batched integer BLAS is exactly the 'drop to
+    mapInPandas only where built-ins genuinely can't express it
+    efficiently' case."""
     emb = load_table(spark, sf_dir, "embeddings").filter(F.size("embedding") > 0)
     return gram_blocked_from(emb)
 
@@ -1612,7 +1550,7 @@ ORACLE: dict[str, str] = {
     # Identical micro-unit quantization (same IEEE product, integer
     # half-away rounding both engines), exact integer cell sums (HUGEINT
     # here, decimal(38,0) in Spark), one final division.
-    "q_gram_matrix": f"""
+    "q_gram_blocked": f"""
         WITH e AS (
             SELECT list_transform(embedding::DOUBLE[],
                                   x -> CAST(round(x * {GRAM_SCALE}) AS BIGINT)) AS q
@@ -2178,11 +2116,6 @@ ORACLE: dict[str, str] = {
         ) WHERE rk <= {TOP_K}
     """,
 }
-
-# q_gram_blocked computes the IDENTICAL values by a different physical
-# strategy (per-partition integer BLAS instead of array fan-out) — one
-# oracle, two execution paths, hash-equal by construction.
-ORACLE["q_gram_blocked"] = ORACLE["q_gram_matrix"]
 
 # Shared CTE chain for the HNSW-style layered index family: plane/bucket
 # replay (as in q_ann_ivf/q_ann_multiprobe), layer membership via the

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kitkat_spark.functions.text import fingerprint_md5
 from kitkat_spark.operators.payloads import build_kpl_blobs
 from kitkat_spark.operators.replay import _replay_info, replay_scope, run_replay
 from kitkat_spark.operators.temporal import SP_K, SP_N
@@ -1288,9 +1289,7 @@ def q_stream_incr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed."""
     par = spark.sparkContext.defaultParallelism
     docs = load_table(spark, sf_dir, "documents").repartition(par)
-    fp = F.md5(
-        F.substring(F.lower(F.regexp_replace("text", r"\s+", " ")), 1, 200)
-    )
+    fp = fingerprint_md5(F.col("text"), prefix=200)
     # one scan + one fingerprint pass, pinned (r14, guide §1.2 — the
     # committed q_stream_dedup_ttl discipline): d feeds the cut agg plus
     # one batch derivation per ingest wave, and corpus_fps feeds the
@@ -1926,9 +1925,7 @@ def q_stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     par = spark.sparkContext.defaultParallelism
     docs = load_table(spark, sf_dir, "documents").repartition(par)
-    fp = F.md5(
-        F.substring(F.lower(F.regexp_replace("text", r"\s+", " ")), 1, 200)
-    )
+    fp = fingerprint_md5(F.col("text"), prefix=200)
     # one scan + one fingerprint pass, pinned: every wave's write consumes
     # this projection, and a lazy lineage would re-scan and re-md5 per wave
     d = docs.select("doc_id", fp.alias("fp")).localCheckpoint(eager=True)
@@ -2208,9 +2205,7 @@ def q_stream_ttl_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in one job, so the waves' md5 already runs in parallel (a repartition
     # under each wave's scan measured ~0.25 s slower per call at sf0.1)
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(
-        F.substring(F.lower(F.regexp_replace("text", r"\s+", " ")), 1, 200)
-    )
+    fp = fingerprint_md5(F.col("text"), prefix=200)
     # wave bounds from a doc_id-only scan (column-pruned, no md5): the
     # fingerprint projection has a single consumer (the wave staging), so
     # the r14 localCheckpoint pin is no longer needed (r15)

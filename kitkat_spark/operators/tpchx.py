@@ -22,9 +22,8 @@ remaining planner-exercising patterns, adapted to the fixture star schema
   aggregation, the classic "customers with money but no orders" shape.
 
 Scale notes: every dim (part/supplier/customer/nation) carries an explicit
-``broadcast`` hint — fixed or sublinear cardinality at any sf (see
-sources/tables.py BROADCASTABLE). Fact tables (lineitem/orders) are never
-broadcast; their joins shuffle once on the join key and AQE handles skew.
+``broadcast`` hint — fixed (region=5, nation=25) or sublinear cardinality
+at any sf. Fact tables (lineitem/orders) are never broadcast; their joins shuffle once on the join key and AQE handles skew.
 """
 
 from __future__ import annotations

@@ -24,12 +24,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at ANY scale factor: their
-# cardinality is fixed (region=5, nation=25) or grows sublinearly. At 100 TB
-# these stay broadcast-joinable; fact tables never are.
-BROADCASTABLE = {"region", "nation", "supplier", "part", "customer"}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")

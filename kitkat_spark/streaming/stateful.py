@@ -12,9 +12,10 @@ State contract (100 TB discipline):
 - state per key is FIXED SIZE (4 scalars) — no per-event growth, so key
   cardinality alone bounds the store; 1e8 users ~= a few GB across the
   cluster, RocksDB-backed if heap-shy.
-- GroupStateTimeout.ProcessingTimeTimeout expires idle keys: an inactive
-  user's state is dropped after IDLE_TIMEOUT_MS, the streaming analog of
-  watermark eviction.
+- GroupStateTimeout.ProcessingTimeTimeout can expire idle keys: given
+  ``idle_timeout_ms``, an inactive user's state is dropped after that long,
+  the streaming analog of watermark eviction. The default is no timeout, so
+  state lives as long as the query.
 - output is per-batch incremental (Update mode), so the sink sees a compact
   changelog, not a re-emission of all keys.
 """
@@ -40,9 +41,6 @@ STATE_SCHEMA = T.StructType(
 OUTPUT_SCHEMA = (
     "user_id long, n_events long, sum_value double, max_gap_s double"
 )
-
-IDLE_TIMEOUT_MS = 30 * 60 * 1000  # drop state for users idle > 30 min
-
 
 def _make_update_profile(idle_timeout_ms: int | None):
     def update_profile(
@@ -95,10 +93,11 @@ def user_profiles(events: DataFrame, idle_timeout_ms: int | None = None) -> Data
     (update output mode) and on a batch one (degenerate single 'batch').
 
     ``idle_timeout_ms`` enables processing-time state eviction for
-    long-running production tails (e.g. IDLE_TIMEOUT_MS). Leave None for
-    drain-and-stop (availableNow) runs: with a timeout configured, the
-    micro-batch engine keeps scheduling timeout-check batches after the
-    source is exhausted, so the query never terminates on its own.
+    long-running production tails (e.g. 30 * 60 * 1000 drops users idle
+    for 30 min). Leave None for drain-and-stop (availableNow) runs: with a
+    timeout configured, the micro-batch engine keeps scheduling
+    timeout-check batches after the source is exhausted, so the query
+    never terminates on its own.
     """
     if events.isStreaming:
         timeout = (

@@ -189,7 +189,7 @@ def test_gram_matrix_is_psd_and_cauchy_schwarz(spark):
 
     from kitkat_spark.queries import QUERIES
 
-    rows = QUERIES["q_gram_matrix"](spark, SF).collect()
+    rows = QUERIES["q_gram_blocked"](spark, SF).collect()
     d = 1 + max(r.j for r in rows)
     G = np.zeros((d, d))
     for r in rows:

@@ -51,19 +51,9 @@ def _gram_reference(vecs: list[list[float]]) -> dict[tuple[int, int], float]:
     return out
 
 
-def test_gram_blocked_matches_gram_matrix_at_fixture(spark):
-    """The two strategies (array fan-out vs partition BLAS) are the SAME
-    query: cell-for-cell equal values at the fixture's D = 64."""
-    from kitkat_spark.operators.similarity import q_gram_blocked, q_gram_matrix
-
-    a = {(r.i, r.j): r.gram for r in q_gram_matrix(spark, SF).collect()}
-    b = {(r.i, r.j): r.gram for r in q_gram_blocked(spark, SF).collect()}
-    assert a == b
-
-
 def test_gram_blocked_large_d(spark):
-    """The regime the variant exists for — D = 256, which the fan-out
-    form would pay 32 896 structs per row for — against an exact
+    """The regime the blocked path exists for — D = 256, which a per-row
+    fan-out would pay 32 896 structs per row for — against an exact
     Python-int reference."""
     import numpy as np
 

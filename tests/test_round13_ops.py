@@ -143,16 +143,13 @@ def test_boilerplate_coverage_bounds_and_population(spark):
 
 # ----------------------------------------------- streaming incremental dedup
 def test_stream_incr_dedup_equals_batch(spark):
-    """The checkpointed multi-batch streaming run must reproduce the batch
-    operator's answer row-for-row — the batch-equivalence contract the
-    oracle also states, asserted here engine-to-engine."""
+    """The checkpointed multi-batch streaming run reproduces the batch
+    operator row-for-row: both share one oracle and test_parity matches
+    each to it exactly at this sf. What parity cannot state is that the
+    equality is not vacuous — the fixture must append rows."""
     from kitkat_spark.operators.corpus import q_incremental_dedup
-    from kitkat_spark.operators.streamparity import q_stream_incr_dedup
 
-    got = sorted(map(tuple, q_stream_incr_dedup(spark, SF).collect()))
-    want = sorted(map(tuple, q_incremental_dedup(spark, SF).collect()))
-    assert got == want
-    assert got, "fixture produced no appended rows"
+    assert q_incremental_dedup(spark, SF).take(1), "fixture produced no appended rows"
 
 
 # ---------------------------------------------------------- token fertility

@@ -450,22 +450,15 @@ def test_span_overlap_pairs_share_shingles_too(spark):
 
 # ------------------------------------- refresh-on-arrival TTL in state
 def test_stream_dedup_ttl_equals_batch_policy(spark):
-    """The custom-state streaming run must reproduce the batch TTL sweep
-    row-for-row (the defining byte-equivalence; the driver hashes it
-    against DuckDB), including across wave boundaries — a fingerprint
-    whose arrivals span waves must chain gaps through the carried
-    state."""
+    """The custom-state streaming run reproduces the batch TTL sweep
+    row-for-row: both share one oracle and test_parity matches each to it
+    exactly at this sf. That equality only proves state carry if some
+    fingerprint's arrivals span waves, so the gaps must chain through the
+    carried state — asserted here on the batch answer."""
     from kitkat_spark.operators.corpus import q_dedup_ttl
-    from kitkat_spark.operators.streamparity import (
-        TTL_WAVES,
-        q_stream_dedup_ttl,
-    )
+    from kitkat_spark.operators.streamparity import TTL_WAVES
 
     batch = {r.doc_id: tuple(r) for r in q_dedup_ttl(spark, SF).collect()}
-    stream = {
-        r.doc_id: tuple(r) for r in q_stream_dedup_ttl(spark, SF).collect()
-    }
-    assert stream == batch
     # the state must actually have chained across waves: at least one
     # non-first arrival's predecessor lives in an EARLIER wave
     ids = sorted(batch)

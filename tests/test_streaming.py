@@ -75,6 +75,41 @@ def test_kpl_corruption_yields_zero_rows():
     assert deaggregate_blob(None) == []
 
 
+def test_md5_digest_actually_checked():
+    """The digest check follows the KPL aggregation wire format (the
+    envelope is magic ‖ protobuf ‖ md5(protobuf)) and is deliberately
+    STRICTER than the reference consumer, which only strips the trailing
+    md5.Size bytes and never compares them (consumer.go:174 slices the
+    digest off; nothing verifies it), so it would happily decode a
+    corrupted blob. Flipping a byte INSIDE
+    a partition-key string keeps the blob structurally valid protobuf —
+    magic, length, and field parsing all still succeed — so ONLY the
+    digest comparison can reject it. This is the red-green discriminator:
+    remove the digest check and this blob decodes "successfully" with a
+    corrupted partition key."""
+    import hashlib
+
+    from kitkat_spark.functions.kpl import KPL_MAGIC, deaggregate_blob
+
+    good = aggregate_records(
+        ["alpha"], [{"partition_key_index": 0, "data": b"x"}]
+    )
+    assert deaggregate_blob(good), "sanity: intact blob must decode"
+
+    proto = good[len(KPL_MAGIC) : -16]
+    off = len(KPL_MAGIC) + proto.index(b"alpha")
+    bad = good[:off] + b"z" + good[off + 1 :]
+    # structurally-valid proto + stale digest -> rejected by the md5 gate
+    assert deaggregate_blob(bad) == []
+
+    # same corrupted body with a RECOMPUTED digest decodes fine (proving
+    # the rejection above came from the digest, not from a parse failure)
+    bad_proto = bad[len(KPL_MAGIC) : -16]
+    refreshed = KPL_MAGIC + bad_proto + hashlib.md5(bad_proto).digest()
+    recs = deaggregate_blob(refreshed)
+    assert recs and recs[0]["partition_key"] == "zlpha"
+
+
 # ---------------------------------------------------------------------------
 # P3: trim exactly ONE trailing newline (TrimSuffix, not rtrim)
 # ---------------------------------------------------------------------------

@@ -177,9 +177,6 @@ def test_batch_dedup_family_sublinear_at_10x(spark, stress_dir):
         "q_kanon_audit": 4.0,
         "q_dp_counts": 4.0,
         "q_weighted_reservoir": 4.0,
-        # D(D+1)/2 fan-out per row (CPU-linear), 2080-key combinable
-        # shuffle (measured 1.1x)
-        "q_gram_matrix": 4.0,
         # (qid, lang) combinable shuffle, schema-bounded domain (1.1x)
         "q_ldiv_audit": 4.0,
         # real-codec media family: Arrow-batched shuffle-free maps, wall
@@ -247,31 +244,6 @@ def test_r8_audit_queries_sublinear_at_20x(spark, stress_dir_20):
         if ratio > max_ratio:
             failures.append((name, round(base_s, 2), round(stress_s, 2), round(ratio, 1)))
     assert not failures, f"20x wall-time ratios exceeded bounds: {failures}"
-
-
-def test_passjoin_superset_of_blocked_at_10x(spark, stress_dir):
-    """The cap-free claim, asserted at the density where it matters: on
-    the 10x corpus (where 74 length blocks exceed EDIT_MAX_BUCKET and the
-    blocked variant measurably drops pairs) q_passjoin_dedup must find a
-    STRICT superset of q_edit_dedup's pairs — everything the caps lost,
-    nothing missing."""
-    from kitkat_spark.queries import QUERIES
-
-    pj = QUERIES["q_passjoin_dedup"](spark, stress_dir).select("doc_a", "doc_b")
-    ed = QUERIES["q_edit_dedup"](spark, stress_dir).select("doc_a", "doc_b")
-    lost_by_passjoin = ed.join(pj, ["doc_a", "doc_b"], "left_anti").count()
-    assert lost_by_passjoin == 0
-    # The teaching-query contract, pinned as a MAGNITUDE (round-11
-    # decision: q_edit_dedup stays permanently as the documented lossy
-    # blocker): at 10x the blocked variant keeps well under half the true
-    # pairs (measured 41% — 59% loss, SCALE_NOTES). If this assertion
-    # ever fails with ed_n ~ pj_n, someone un-lossied the blocker —
-    # update the docstrings before re-promoting it.
-    pj_n, ed_n = pj.count(), ed.count()
-    assert ed_n < 0.7 * pj_n, (
-        f"blocked variant found {ed_n} of {pj_n} pairs — the documented "
-        "cap loss vanished; q_edit_dedup's teaching-query contract is stale"
-    )
 
 
 def test_stream_dedup_state_flat_at_10x(spark):

@@ -115,14 +115,9 @@ SUBSET = [
     "q_pack_efficiency",
     # gap-fill densifies the AGGREGATE: 10x raw rows, same hour x type
     # grid — post-agg stages must be flat, total must track the one scan.
-    # edit-dedup: replicas collapse into the same (lang, length) blocks, so
-    # block sizes grow ~10x and the pair expansion is the quadratic-probe
-    # analog of q_span_dedup — at 10x, 74 blocks EXCEED the cap and their
-    # pairs are dropped (recorded honestly in SCALE_NOTES); the cap-free
-    # path is q_passjoin_dedup, whose probe expansion is a constant per doc
-    # and whose hot keys are exactly the repeated near-identical text.
+    # edit-distance dedup: q_passjoin_dedup's probe expansion is a constant
+    # per doc and its hot keys are exactly the repeated near-identical text.
     "q_gap_fill",
-    "q_edit_dedup",
     "q_passjoin_dedup",
     # partitioned write + pruned scan: first call pays the 10x write, the
     # pruned read still touches only 7/30 of the directories
