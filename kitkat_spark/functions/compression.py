@@ -19,6 +19,16 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kitkat_spark.functions.udf import per_context
+
+
+def inflates(compression: str | None) -> bool:
+    """Whether ``--compress`` value ``compression`` (None or ``"zlib"``)
+    inflates payloads; any other value raises."""
+    if compression not in (None, "zlib"):
+        raise ValueError(f"unsupported compression {compression!r} (only 'zlib')")
+    return compression == "zlib"
+
 
 def _decompress_one(data: bytes | None) -> bytes | None:
     if data is None:
@@ -29,11 +39,11 @@ def _decompress_one(data: bytes | None) -> bytes | None:
         return data  # passthrough, consumer.go:213-216,220-223
 
 
-@F.pandas_udf(T.BinaryType())
+@per_context(F.pandas_udf(T.BinaryType()))
 def zlib_decompress_udf(s: pd.Series) -> pd.Series:
     return s.map(_decompress_one)
 
 
-@F.pandas_udf(T.BinaryType())
+@per_context(F.pandas_udf(T.BinaryType()))
 def zlib_compress_udf(s: pd.Series) -> pd.Series:
     return s.map(lambda b: None if b is None else zlib.compress(b))

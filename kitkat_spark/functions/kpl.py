@@ -20,6 +20,8 @@ Schema (/root/reference/aggregated/aggregated.proto:4-20, proto2):
 We hand-roll the 3-message wire codec (pure python, ~80 lines — no protobuf
 dependency) and expose deaggregation as an Arrow-batched pandas UDF returning
 ``array<struct>`` that callers ``explode()`` — the idiomatic Spark UDTF shape.
+The consume path calls ``deaggregate_blob`` from ``functions/kinesis.py``
+instead, which also inflates the inner payloads in the same Arrow pass.
 
 Scale: the UDF is applied per input record (one aggregate blob in, N small
 records out) with no shuffle; deaggregation parallelism equals source
@@ -36,6 +38,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from kitkat_spark.functions.udf import per_context
 
 KPL_MAGIC = b"\xf3\x89\x9a\xc2"  # consumer.go:22
 
@@ -240,7 +244,7 @@ def is_aggregated_col(data: Column) -> Column:
     return F.startswith(data, F.lit(KPL_MAGIC))
 
 
-@F.pandas_udf(INNER_RECORD_TYPE)
+@per_context(F.pandas_udf(INNER_RECORD_TYPE))
 def kpl_deaggregate_udf(blobs: pd.Series) -> pd.Series:
     """Arrow-batched deaggregation; pair with explode() for the UDTF shape."""
     return blobs.map(deaggregate_blob)

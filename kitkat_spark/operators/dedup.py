@@ -37,6 +37,7 @@ from kitkat_spark.functions.text import (
     oracle_shingle_hashes,
     tokens,
 )
+from kitkat_spark.functions.udf import per_context
 from kitkat_spark.sources import load_table
 
 SHINGLE_N = 3
@@ -62,7 +63,7 @@ import pandas as pd  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
 
 
-@F.pandas_udf(T.LongType())
+@per_context(F.pandas_udf(T.LongType()))
 def _simhash_pack_udf(token_hashes: pd.Series) -> pd.Series:
     """64-bit SimHash from an array of token hashes: per bit i, vote +-1 by
     hash bit i; sign of the vote sum becomes fingerprint bit i.

@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kitkat_spark.functions.udf import per_context
 from kitkat_spark.sources import load_table
 
 FEATURE_SCHEMA = (
@@ -321,7 +322,7 @@ def sample_frames(
     return media.mapInPandas(run, schema=FRAME_SCHEMA)
 
 
-@F.pandas_udf(T.BinaryType())
+@per_context(F.pandas_udf(T.BinaryType()))
 def _png_for_doc(doc_id: pd.Series) -> pd.Series:
     """Deterministic PNG payload per doc: greyscale when doc_id % 8 == 0,
     truecolour otherwise (image docs have doc_id % 4 == 0, so the split is
@@ -337,7 +338,7 @@ def _png_for_doc(doc_id: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@F.pandas_udf(T.BinaryType())
+@per_context(F.pandas_udf(T.BinaryType()))
 def _wav_for_doc(doc_id: pd.Series) -> pd.Series:
     """Deterministic WAV payload per audio doc: mono 16-bit PCM at
     WAV_RATE, _wav_frames(doc_id) frames, sample i = (doc_id*31 + i*17)
@@ -356,7 +357,7 @@ def _wav_for_doc(doc_id: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@F.pandas_udf(T.BinaryType())
+@per_context(F.pandas_udf(T.BinaryType()))
 def _y4m_for_doc(doc_id: pd.Series) -> pd.Series:
     """Deterministic Y4M payload per video doc: C420 at Y4M_FPS,
     _y4m_nframes(doc_id) frames of _y4m_dims(doc_id); luma(f, x, y) =
@@ -384,7 +385,7 @@ def _y4m_for_doc(doc_id: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@F.pandas_udf(T.BinaryType())
+@per_context(F.pandas_udf(T.BinaryType()))
 def _image_for_doc(doc_id: pd.Series) -> pd.Series:
     """Mixed-format payload per doc for q_image_decode: PNG greyscale
     (doc_id % 3 == 0), PNG truecolour (== 1), 24-bit BMP (== 2)."""

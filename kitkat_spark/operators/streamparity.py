@@ -35,7 +35,6 @@ from kitkat_spark.operators.replay import _replay_info, replay_scope, run_replay
 from kitkat_spark.operators.temporal import SP_K, SP_N
 from kitkat_spark.sources import load_table
 from kitkat_spark.streaming.consumer import ConsumeOptions, consume
-from kitkat_spark.streaming.pipeline import consume_transform
 
 
 N_SHARD_BUCKETS = 16

@@ -5,9 +5,10 @@ The reference SILENTLY drops undecodable payloads (consumer.go:177-179:
 failed deagg -> zero rows; 213-216: failed inflate -> passthrough). At
 100 TB silent drops are unacceptable — a corrupt-blob burst must be
 observable and replayable. ``consume_with_dlq`` decodes each record ONCE
-(``classify_records``: KPL per outer record, zlib per inner record) and
-splits that pass: healthy rows are only rendered, undecodable ones land in
-a quarantine table with the raw payload and a reason column.
+(``classify_records``: one Arrow pass per outer record that deaggregates
+KPL and inflates zlib, functions/kinesis.py) and splits that pass: healthy
+rows are only rendered, undecodable ones land in a quarantine table with
+the raw payload and a reason column.
 
 Both paths are written by ONE foreachBatch so a micro-batch commits good
 and bad rows atomically-enough for replay (checkpointed offsets + idempotent
@@ -21,7 +22,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from kitkat_spark.streaming.pipeline import decompress, deaggregate_outer, render
+from kitkat_spark.streaming.pipeline import deaggregate_outer, render
 
 
 def classify_records(df: DataFrame, compression: str | None = None) -> DataFrame:
@@ -33,7 +34,7 @@ def classify_records(df: DataFrame, compression: str | None = None) -> DataFrame
     ``kpl_decode_failed`` row (bad md5 / truncated / bad protobuf); with
     zlib on, a plain payload that fails to inflate is ``zlib_decode_failed``.
     A bad ``compression`` raises here."""
-    out = decompress(deaggregate_outer(df.withColumn("_raw", F.struct("data", "partitionKey"))), compression)
+    out = deaggregate_outer(df.withColumn("_raw", F.struct("data", "partitionKey")), compression)
     raw = F.col("_raw.data")
     reason = F.when(F.col("_kpl_failed"), F.lit("kpl_decode_failed"))
     if compression == "zlib":

@@ -22,7 +22,7 @@ State contract (100 TB discipline):
 
 from __future__ import annotations
 
-from typing import Any, Iterable, Iterator
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame

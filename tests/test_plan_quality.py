@@ -8,8 +8,6 @@ zero shuffles. A regression here is a performance bug even if results match.
 
 from __future__ import annotations
 
-import pytest
-
 from kitkat_spark.plans import (
     broadcast_join_count,
     has_pushed_filters,
@@ -73,29 +71,56 @@ def _run_plan_nodes(spark, query_id: str) -> list[tuple[str, str]]:
     return out
 
 
-def test_dlq_batch_decodes_each_record_once(spark, tmp_path):
-    """consume_with_dlq decodes once (streaming/sinks.py): the KPL UDF and
-    the zlib UDF each run in ONE ArrowEvalPython node, and the batch pays
-    zero shuffles. The good write executes the micro-batch plan (the
-    foreachBatch frame wraps its RDD), so both plans count as its path; the
-    write itself only renders the persisted rows."""
-    from kitkat_spark.streaming import replay_stream
-    from kitkat_spark.streaming.sinks import consume_with_dlq
+def _assert_one_python_node_no_exchange(spark, q) -> None:
+    nodes = _run_plan_nodes(spark, str(q.id))
+    arrow = [d for name, d in nodes if name == "ArrowEvalPython"]
+    assert len(arrow) == 1 and "kinesis_decode_udf" in arrow[0], arrow
+    assert not [name for name, _ in nodes if "Exchange" in name]
+
+
+def _mixed_source(spark, tmp_path) -> str:
     from tests.test_sinks import _mixed_rows, _write
 
     rows, _ = _mixed_rows()
     _write(spark, rows, str(tmp_path / "src"))
+    return str(tmp_path / "src")
+
+
+def test_dlq_batch_decodes_each_record_once(spark, tmp_path):
+    """consume_with_dlq decodes once (streaming/sinks.py): KPL
+    deaggregation and zlib inflate run in ONE ArrowEvalPython node, and the
+    batch pays zero shuffles. The good write executes the micro-batch plan
+    (the foreachBatch frame wraps its RDD), so both plans count as its path;
+    the write itself only renders the persisted rows."""
+    from kitkat_spark.streaming import replay_stream
+    from kitkat_spark.streaming.sinks import consume_with_dlq
+
     q = consume_with_dlq(
-        replay_stream(spark, str(tmp_path / "src")),
+        replay_stream(spark, _mixed_source(spark, tmp_path)),
         *(str(tmp_path / d) for d in ("good", "dlq", "ckpt")),
         compression="zlib",
     )
     assert q.awaitTermination(180)
-    nodes = _run_plan_nodes(spark, str(q.id))
-    arrow = [d for name, d in nodes if name == "ArrowEvalPython"]
-    assert sum("kpl_deaggregate_udf" in d for d in arrow) == 1, arrow
-    assert sum("zlib_decompress_udf" in d for d in arrow) == 1, arrow
-    assert not [name for name, _ in nodes if "Exchange" in name]
+    _assert_one_python_node_no_exchange(spark, q)
+
+
+def test_consume_tail_batch_has_one_python_node(spark, tmp_path):
+    """The plain consume path (consume_transform with zlib into a file
+    sink) crosses into Python once per micro-batch: one ArrowEvalPython
+    node, zero shuffles."""
+    from kitkat_spark.streaming import replay_stream
+    from kitkat_spark.streaming.pipeline import consume_transform
+
+    q = (
+        consume_transform(replay_stream(spark, _mixed_source(spark, tmp_path)), compression="zlib")
+        .writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(180)
+    _assert_one_python_node_no_exchange(spark, q)
 
 
 def test_agg_group_partial_aggregation(spark):

@@ -6,11 +6,15 @@ Arrow UDFs call per batch.
 
 from __future__ import annotations
 
+import hashlib
+import zlib
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from kitkat_spark.functions.kpl import (
     KPL_MAGIC,
+    _write_len_delim,
     aggregate_records,
     deaggregate_blob,
 )
@@ -81,6 +85,87 @@ def test_zlib_roundtrip_and_passthrough(data):
     assert _decompress_one(z.compress(data)) == data  # roundtrip
     if not data.startswith(b"\x78"):
         assert _decompress_one(data) == data  # graceful passthrough
+
+
+# --- the fused decode kernel (functions/kinesis.py) ------------------------
+
+inner_payloads = st.one_of(
+    st.none(),
+    st.just(b""),
+    payloads,
+    payloads.map(zlib.compress),
+    payloads.map(lambda b: b"\x78\x9c" + b),  # looks deflated, does not inflate
+)
+
+
+@st.composite
+def kinesis_records(draw):
+    """(data, partitionKey) of an outer record: a plain payload, a valid
+    KPL blob, or one with a bad md5, a truncation, an out-of-range key
+    index or a non-UTF-8 partition key."""
+    kind = draw(st.sampled_from(["plain", "valid", "bad_md5", "truncated", "bad_index", "bad_utf8"]))
+    pk = draw(st.one_of(st.none(), keys))
+    if kind == "plain":
+        return draw(inner_payloads), pk
+    pk_table = draw(st.lists(keys, min_size=1, max_size=3))
+    recs = draw(
+        st.lists(
+            st.fixed_dictionaries(
+                {
+                    "partition_key_index": st.integers(0, len(pk_table) - 1),
+                    "data": inner_payloads.filter(lambda b: b is not None),
+                    "tags": st.lists(st.tuples(keys, st.one_of(st.none(), keys)), max_size=2),
+                }
+            ),
+            min_size=1,
+            max_size=4,
+        )
+    )
+    if kind == "bad_index":
+        recs[-1]["partition_key_index"] = len(pk_table)
+    blob = aggregate_records(pk_table, recs)
+    if kind == "bad_utf8":
+        proto = bytearray()
+        _write_len_delim(1, b"\xff\xfe", proto)
+        proto += blob[len(KPL_MAGIC) : -16]
+        blob = KPL_MAGIC + bytes(proto) + hashlib.md5(bytes(proto)).digest()
+    elif kind == "bad_md5":
+        blob = blob[:-1] + bytes([blob[-1] ^ 0x01])
+    elif kind == "truncated":
+        blob = blob[: draw(st.integers(0, len(blob) - 1))]
+    return blob, pk
+
+
+@given(st.lists(kinesis_records(), max_size=6), st.booleans())
+@settings(max_examples=200, deadline=None)
+def test_decode_kernel_matches_deaggregate_then_decompress(records, inflate):
+    """The kernel's rows equal the reference composition: deaggregate_blob,
+    then _decompress_one per inner payload; a plain payload passes through
+    as one row, a failed blob gives none."""
+    import pyarrow as pa
+
+    from kitkat_spark.functions.compression import _decompress_one
+    from kitkat_spark.functions.kinesis import decode_records
+
+    def codec(b):
+        return _decompress_one(b) if inflate else b
+
+    want = []
+    for blob, pk in records:
+        if blob is not None and blob.startswith(KPL_MAGIC):
+            want.append([(r["partition_key"], codec(r["data"]), r["tags"]) for r in deaggregate_blob(blob)])
+        else:
+            want.append([(pk, codec(blob), None)])
+    got = decode_records(
+        pa.array([b for b, _ in records], pa.binary()),
+        pa.array([k for _, k in records], pa.string()),
+        pa.array([inflate] * len(records)),
+    ).to_pylist()
+    got = [
+        [(r["partition_key"], r["data"], None if r["tags"] is None else dict(r["tags"])) for r in rows]
+        for rows in got
+    ]
+    assert got == want
 
 
 # ---------------------------------------------------------------------------

@@ -6,7 +6,6 @@ consistency."""
 
 from __future__ import annotations
 
-import math
 from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
