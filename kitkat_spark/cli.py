@@ -30,6 +30,7 @@ from kitkat_spark.streaming import (
     replay_stream,
     start_console,
 )
+from kitkat_spark.streaming.consumer import since_datetime
 
 
 def _build_parser() -> argparse.ArgumentParser:
@@ -84,6 +85,15 @@ def _build_parser() -> argparse.ArgumentParser:
 
 
 def _cmd_consume(args: argparse.Namespace) -> int:
+    # F4: a bad or missing --since fails before Spark starts, for replay
+    # and live sources alike
+    since_ts = None
+    if args.iterator == "at_timestamp" or args.since is not None:
+        try:
+            since_ts = since_datetime(args.since)
+        except ValueError as exc:
+            print(f"error: {exc}", file=sys.stderr)
+            return 1
     spark = get_spark(app_name="kitkat-consume")
     opts = ConsumeOptions(
         position=args.iterator,
@@ -105,14 +115,6 @@ def _cmd_consume(args: argparse.Namespace) -> int:
             from kitkat_spark.streaming.pipeline import consume_transform
             from kitkat_spark.streaming.records import live_records_df
 
-            since_ts = None
-            if opts.position == "at_timestamp":
-                import datetime as dt
-
-                # same strict RFC3339 contract as parse_since (F4)
-                since_ts = dt.datetime.fromisoformat(
-                    (args.since or "").replace("Z", "+00:00")
-                )
             for name in missing:
                 snap = live_records_df(
                     spark,

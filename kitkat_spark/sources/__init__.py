@@ -1,1 +1,1 @@
-from kitkat_spark.sources.tables import TABLES, load_table, load_tables  # noqa: F401
+from kitkat_spark.sources.tables import TABLES, load_table  # noqa: F401

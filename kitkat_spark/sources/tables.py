@@ -46,7 +46,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}

@@ -3,7 +3,6 @@
 from kitkat_spark.streaming.consumer import (
     ConsumeOptions,
     consume,
-    consume_replay,
     parse_since,
     start_console,
     stream_info,
@@ -36,7 +35,6 @@ __all__ = [
     "consume_with_dlq",
     "ConsumeOptions",
     "consume",
-    "consume_replay",
     "parse_since",
     "start_console",
     "stream_info",

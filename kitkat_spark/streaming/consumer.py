@@ -20,32 +20,36 @@ checkpointed offsets replace the reference's ``NextShardIterator`` token.
 
 from __future__ import annotations
 
+import datetime as dt
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kitkat_spark.streaming.pipeline import consume_transform
-from kitkat_spark.streaming.records import replay_stream
 
 POSITIONS = ("latest", "trim_horizon", "at_sequence_number", "at_timestamp")
 
 
-def parse_since(since: str) -> F.Column:
-    """F4: strict RFC3339 parse; malformed input is a hard error before any
-    stream is opened (consumer.go:49-51,63-72)."""
-    import datetime as dt
-
+def since_datetime(since: str | None) -> dt.datetime:
+    """F4: strict RFC3339 parse of ``--since`` into a naive UTC datetime;
+    malformed or missing input is a hard error before any stream is opened
+    (consumer.go:49-51,63-72)."""
     try:
-        parsed = dt.datetime.fromisoformat(since.replace("Z", "+00:00"))
+        parsed = dt.datetime.fromisoformat((since or "").replace("Z", "+00:00"))
     except ValueError as exc:
         raise ValueError(f"--since must be RFC3339, got {since!r}") from exc
     if parsed.tzinfo is not None:
         # Compare instants like the reference's time.Parse: convert the
         # offset to UTC before dropping tzinfo, never just strip it.
         parsed = parsed.astimezone(dt.timezone.utc).replace(tzinfo=None)
-    return F.lit(parsed).cast("timestamp")
+    return parsed
+
+
+def parse_since(since: str | None) -> F.Column:
+    """:func:`since_datetime` as a timestamp literal for the replay filter."""
+    return F.lit(since_datetime(since)).cast("timestamp")
 
 
 @dataclass
@@ -85,17 +89,6 @@ def consume(
     return consume_transform(
         df, compression=opts.compression, verbose=opts.verbose, since=since_col
     )
-
-
-def consume_replay(
-    spark: SparkSession,
-    paths: list[str],
-    opts: ConsumeOptions | None = None,
-) -> DataFrame:
-    """``kitkat consume -s S1,S2`` with file-replay sources (test/dev mode).
-    The fetch limit maps to maxFilesPerTrigger-style source batching."""
-    opts = opts or ConsumeOptions()
-    return consume([replay_stream(spark, p) for p in paths], opts)
 
 
 def start_console(

@@ -118,6 +118,35 @@ def test_cli_consume_stream_name_without_connector_fails_gracefully():
     assert "us-east-1" in r.stderr
 
 
+def _consume_cli(*argv: str, cwd: str) -> subprocess.CompletedProcess:
+    return subprocess.run(
+        [sys.executable, "-m", "kitkat_spark.cli", "consume", *argv],
+        capture_output=True, text=True, timeout=240, cwd=cwd,
+        env={**os.environ, "PYTHONPATH": REPO},
+    )
+
+
+def test_cli_consume_at_timestamp_without_since_fails_before_spark(tmp_path):
+    """A live --once snapshot at_timestamp with no --since reports the
+    RFC3339 contract, not a failed Kinesis call."""
+    r = _consume_cli("-s", "nosuchstream", "-I", "at_timestamp", "--once",
+                     cwd=str(tmp_path))
+    assert r.returncode == 1
+    assert "--since must be RFC3339, got None" in r.stderr
+    assert "snapshot failed" not in r.stderr
+
+
+def test_cli_consume_replay_bad_since_fails_cleanly(tmp_path):
+    """A malformed --since on a replay directory exits 1 with the parse
+    message instead of a traceback."""
+    (tmp_path / "recs").mkdir()
+    r = _consume_cli("-s", str(tmp_path / "recs"), "-I", "at_timestamp",
+                     "-t", "yesterday", "--once", cwd=str(tmp_path))
+    assert r.returncode == 1
+    assert "--since must be RFC3339, got 'yesterday'" in r.stderr
+    assert "Traceback" not in r.stderr
+
+
 def test_produce_batch_empty_source(spark, tmp_path):
     """Zero-partition / empty input returns (0, []) instead of raising
     (treeReduce cannot fold an empty RDD)."""
