@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from kitkat_spark.caches import fixture
 from kitkat_spark.functions.text import fingerprint_md5, full_shingle_hashes, tokens
 from kitkat_spark.operators.dedup import (
     PAIRS_SQL_CTES,
@@ -92,20 +93,6 @@ def connected_components(
     return connected_components_star(e0, src="u", dst="v")
 
 
-# Materialized cluster-membership tables, one parquet dir per sf_dir
-# (tempfile.mkdtemp's random suffix keeps concurrent pytest/bench
-# processes from clobbering each other's files). Each re-materialization
-# creates a fresh dir and the superseded ones stay on disk until process
-# exit (_cleanup_members_dirs) — bounded growth: one small parquet dir per
-# q_dedup_clusters call, paid only by long sessions that re-cluster.
-# This is the production layout: clustering writes a
-# membership table ONCE; every downstream consumer (canonical selection,
-# the corpus anti-join, dup-rate reporting) reads the table instead of
-# re-deriving the pair graph + CC — at 100 TB the membership table is the
-# contract between the dedup stage and everything after it.
-_MEMBERS_PATHS: dict[str, str] = {}
-
-
 def _compute_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = jaccard_pairs(spark, sf_dir).select("doc_a", "doc_b")
     cc = connected_components(pairs, src="doc_a", dst="doc_b")
@@ -116,48 +103,32 @@ def _compute_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MEMBERS_DIRS_CREATED: list[str] = []
+def _members_path(spark: SparkSession, sf_dir: str, replace: bool = False) -> str:
+    """The materialized cluster-membership parquet: the session's
+    ``members`` fixture. This is the production layout: clustering writes
+    a membership table ONCE; every downstream consumer (canonical
+    selection, the corpus anti-join, dup-rate reporting) reads the table
+    instead of re-deriving the pair graph + CC — at 100 TB the membership
+    table is the contract between the dedup stage and everything after it.
 
+    ``replace`` re-materializes into a fresh dir and never overwrites in
+    place: a live DataFrame from an earlier ``cluster_members`` call still
+    lists the old part files, and overwriting them under it is a
+    FileNotFoundException at its next action."""
 
-def _cleanup_members_dirs() -> None:
-    import shutil
+    def write(path: str) -> str:
+        _compute_members(spark, sf_dir).write.parquet(path)
+        return path
 
-    for d in _MEMBERS_DIRS_CREATED:
-        shutil.rmtree(d, ignore_errors=True)
-    # a mid-process call must not leave the memo pointing at deleted dirs
-    _MEMBERS_DIRS_CREATED.clear()
-    _MEMBERS_PATHS.clear()
-
-
-def _materialize_members(spark: SparkSession, sf_dir: str, members: DataFrame) -> str:
-    import atexit
-    import hashlib
-    import os
-    import tempfile
-
-    # a fresh versioned dir per materialization (never overwrite in place:
-    # a live DataFrame from a previous cluster_members() call still lists
-    # the old part files — overwriting them under it is a
-    # FileNotFoundException at its next action); all dirs are removed at
-    # process exit
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = tempfile.mkdtemp(prefix=f"kitkat_members_{key}_")
-    members.write.mode("overwrite").parquet(path)
-    if not _MEMBERS_DIRS_CREATED:
-        atexit.register(_cleanup_members_dirs)
-    _MEMBERS_DIRS_CREATED.append(path)
-    _MEMBERS_PATHS[sf_dir] = path
-    return path
+    return fixture(spark, sf_dir, "members", write, replace=replace)
 
 
 def cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The membership table, from the materialized parquet — computing and
-    writing it first if this process hasn't yet. Consumers always plan a
+    writing it first if this session hasn't yet. Consumers always plan a
     plain parquet scan (order-deterministic for the plan-facts gate); only
-    the FIRST caller in a process pays the pair-graph + CC derivation."""
-    if sf_dir not in _MEMBERS_PATHS:
-        _materialize_members(spark, sf_dir, _compute_members(spark, sf_dir))
-    return spark.read.parquet(_MEMBERS_PATHS[sf_dir])
+    the FIRST caller in a session pays the pair-graph + CC derivation."""
+    return spark.read.parquet(_members_path(spark, sf_dir))
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -177,9 +148,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection and the timing boundary (compute + write inside this call)
     cannot silently regress if the CC output ever stops being
     checkpointed."""
-    members = _compute_members(spark, sf_dir)
-    path = _materialize_members(spark, sf_dir, members)
-    return spark.read.parquet(path)
+    return spark.read.parquet(_members_path(spark, sf_dir, replace=True))
 
 
 def q_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kitkat_spark.caches import fixture
 from kitkat_spark.functions.text import (
     band_slices,
     full_shingle_hashes,
@@ -379,11 +380,6 @@ def q_passjoin_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, sf_dir) -> (sig, cand); entries for other
-# applications are evicted on access — see the docstring below
-_SIG_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def lsh_signatures_and_candidates(
     spark: SparkSession, sf_dir: str, with_source: bool = False
 ) -> tuple[DataFrame, DataFrame]:
@@ -412,32 +408,16 @@ def lsh_signatures_and_candidates(
     whole LSH family paid it twice); now one table serves every consumer
     and the source-blind ones simply never select ``src``.
 
-    The built (sig, cand) pair is cached per (applicationId, sf_dir) —
-    the fresh minhash UDF object per call would otherwise defeat Spark's
-    CacheManager plan-dedup and a session running the whole LSH family
-    would accumulate an independent persisted signature table per
-    consumer (round-12 ADVICE). Entries keyed to any OTHER application
-    are evicted on access: a cached DataFrame pins its session object, so
-    without eviction a multi-session host could never garbage-collect a
-    stopped session (round-13 review)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    # evict other applications' entries: a cached DataFrame pins its
-    # (possibly stopped) session, so the cache must never outlive the
-    # session boundary (round-13 review). Eviction also UNPERSISTS the
-    # stale signature table: if the other application is still alive
-    # (multi-session host), dropping only the dict reference would leak
-    # its materialized block — and the rebuild would register a second
-    # copy (round-13 verdict #8). A stopped session raises; that is the
-    # case where the JVM already reclaimed the blocks.
-    for stale in [k for k in _SIG_CACHE if k[0] != key[0]]:
-        stale_sig, _ = _SIG_CACHE.pop(stale)
-        try:
-            stale_sig.unpersist()
-        except Exception:
-            pass  # session already stopped; blocks died with it
-    hit = _SIG_CACHE.get(key)
-    if hit is not None:
-        return hit
+    The built (sig, cand) pair is the session's ``lsh_signatures``
+    fixture (caches.py, which also unpersists it once another application
+    shows up) — the fresh minhash UDF object per call would otherwise
+    defeat Spark's CacheManager plan-dedup and a session running the whole
+    LSH family would accumulate an independent persisted signature table
+    per consumer."""
+    return fixture(spark, sf_dir, "lsh_signatures", lambda _: _lsh_build(spark, sf_dir))
+
+
+def _lsh_build(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     par = spark.sparkContext.defaultParallelism
     docs = (
         load_table(spark, sf_dir, "documents")
@@ -466,7 +446,6 @@ def lsh_signatures_and_candidates(
         .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
         .distinct()
     )
-    _SIG_CACHE[key] = (sig, cand)
     return sig, cand
 
 

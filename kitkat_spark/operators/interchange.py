@@ -1,9 +1,10 @@
-"""Format interchange: a driver-verified JSON round trip over the events
-table (SURVEY.md §2.B source/sink surface — sources/formats.py implements
-parquet/ORC/JSON/CSV parity and tests/test_formats.py proves it per format;
-this query puts one full write→read→aggregate loop in the driver's
-value-checked set so format fidelity is cross-engine-verified, not just
-self-consistent).
+"""Format interchange: driver-verified JSON, CSV and ORC round trips over
+the events table (SURVEY.md §2.B source/sink surface — sources/formats.py
+implements parquet/ORC/JSON/CSV parity and tests/test_formats.py proves it
+per format; these queries put one full write→read→aggregate loop per
+format in the driver's value-checked set, through the same
+``write_table``/``read_table``, so format fidelity is cross-engine-verified,
+not just self-consistent).
 
 What the round trip must preserve to hash-match the parquet-side oracle:
 microsecond timestamps (ISO-8601 serialization both ways), float
@@ -17,8 +18,8 @@ skips the inference pass (which at 100 TB is a full extra scan) and makes
 malformed rows surface as nulls under the default PERMISSIVE mode rather
 than failing the job (pair with columnNameOfCorruptRecord + a DLQ filter —
 streaming/sinks.py is the streaming version of that pattern). The fixture
-write is cached per (session, sf) like the replay fixtures, so repeat
-invocations measure the READ path. Text formats cost ~5-10x parquet scan
+write is a per-session ``caches.fixture`` like the replay fixtures, so
+repeat invocations measure the READ path. Text formats cost ~5-10x parquet scan
 bytes and lose pushdown/pruning — the production use is ingest-once into
 parquet (sources/formats.py ingest_to_parquet), never repeated analytics.
 """
@@ -28,147 +29,55 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kitkat_spark.caches import fixture
 from kitkat_spark.functions.numeric import dsum
 from kitkat_spark.sources import load_table
-
-_JSON_CACHE: dict[tuple[str, str], str] = {}
-
-_TS_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
+from kitkat_spark.sources.formats import read_table, write_table
 
 
-def _json_fixture(spark: SparkSession, sf_dir: str) -> str:
-    import os
+def _roundtrip_rollup(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
+    """events -> ``fmt`` (written once per session) -> explicit-schema read
+    -> per-type rollup. The oracle computes the same rollup on the ORIGINAL
+    parquet, so any loss of timestamp precision, float digits, or row
+    fidelity in the round trip hash-fails."""
+    ev = load_table(spark, sf_dir, "events")
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _JSON_CACHE:
-        path = os.path.join(
-            "/tmp/kitkat_interchange",
-            spark.sparkContext.applicationId,
-            os.path.basename(os.path.normpath(sf_dir)),
-            "events_json",
-        )
-        # Spark's DEFAULT JSON timestampFormat carries only milliseconds —
-        # a silent 1000x precision loss this query exists to catch (it
-        # hash-failed the oracle until the format was pinned to microseconds
-        # on BOTH sides of the trip)
-        (
-            load_table(spark, sf_dir, "events")
-            .write.mode("overwrite")
-            .option("timestampFormat", _TS_FMT)
-            .json(path)
-        )
-        _JSON_CACHE[key] = path
-    return _JSON_CACHE[key]
+    def write(path: str) -> str:
+        write_table(ev, path, fmt)
+        return path
+
+    path = fixture(spark, sf_dir, f"events_{fmt}", write)
+    back = read_table(spark, path, fmt, ev.schema)
+    return back.groupBy("event_type").agg(
+        F.count("*").alias("n_events"),
+        dsum("value").alias("sum_value"),
+        F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("first_ts"),
+        F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("last_ts"),
+        F.count_distinct("props").alias("n_props"),
+    )
 
 
 def q_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events -> JSON lines -> explicit-schema read -> per-type rollup; the
-    oracle computes the same rollup on the ORIGINAL parquet, so any loss of
-    timestamp precision, float digits, or row fidelity in the round trip
-    hash-fails."""
-    ev = load_table(spark, sf_dir, "events")
-    path = _json_fixture(spark, sf_dir)
-    back = spark.read.schema(ev.schema).option("timestampFormat", _TS_FMT).json(path)
-    return back.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        dsum("value").alias("sum_value"),
-        F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("first_ts"),
-        F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("last_ts"),
-        F.count_distinct("props").alias("n_props"),
-    )
-
-
-_CSV_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _csv_fixture(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CSV_CACHE:
-        path = os.path.join(
-            "/tmp/kitkat_interchange",
-            spark.sparkContext.applicationId,
-            os.path.basename(os.path.normpath(sf_dir)),
-            "events_csv",
-        )
-        # header on, quoting left at the RFC-4180 defaults (the props column
-        # is a JSON document full of commas/quotes — the quote/escape round
-        # trip is exactly what this fixture must exercise), microsecond
-        # timestamps pinned like the JSON trip
-        (
-            load_table(spark, sf_dir, "events")
-            .write.mode("overwrite")
-            .option("header", "true")
-            .option("timestampFormat", _TS_FMT)
-            .csv(path)
-        )
-        _CSV_CACHE[key] = path
-    return _CSV_CACHE[key]
+    """events -> JSON lines (µs timestamps) -> rollup."""
+    return _roundtrip_rollup(spark, sf_dir, "json")
 
 
 def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events -> CSV (RFC-4180 quoting, header, µs timestamps) ->
-    explicit-schema read -> per-type rollup; same contract as
-    q_format_roundtrip but through the escaping-sensitive format: the
-    nested-JSON `props` column is full of commas and double quotes, so a
-    quoting/escaping bug in either direction changes n_props or drops rows
-    and hash-fails against the parquet-side oracle."""
-    ev = load_table(spark, sf_dir, "events")
-    path = _csv_fixture(spark, sf_dir)
-    back = (
-        spark.read.schema(ev.schema)
-        .option("header", "true")
-        .option("timestampFormat", _TS_FMT)
-        .csv(path)
-    )
-    return back.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        dsum("value").alias("sum_value"),
-        F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("first_ts"),
-        F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("last_ts"),
-        F.count_distinct("props").alias("n_props"),
-    )
-
-
-_ORC_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _orc_fixture(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ORC_CACHE:
-        path = os.path.join(
-            "/tmp/kitkat_interchange",
-            spark.sparkContext.applicationId,
-            os.path.basename(os.path.normpath(sf_dir)),
-            "events_orc",
-        )
-        load_table(spark, sf_dir, "events").write.mode("overwrite").orc(path)
-        _ORC_CACHE[key] = path
-    return _ORC_CACHE[key]
+    """events -> CSV (RFC-4180 quoting, header, µs timestamps) -> rollup:
+    the escaping-sensitive format. The nested-JSON `props` column is full
+    of commas and double quotes, so a quoting/escaping bug in either
+    direction changes n_props or drops rows and hash-fails."""
+    return _roundtrip_rollup(spark, sf_dir, "csv")
 
 
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events -> ORC -> read -> per-type rollup; completes the interchange
-    matrix (parquet native, JSON, CSV, ORC — the second columnar format a
-    warehouse migration actually moves through). Unlike the text trips,
-    ORC is binary columnar: timestamps carry nanos natively (no format
-    pinning needed) and the read side keeps predicate pushdown and column
-    pruning — the rollup here reads only its 3 columns. The oracle runs
-    the same rollup on the ORIGINAL parquet, so any type coercion or
-    precision loss in the ORC writer/reader hash-fails."""
-    ev = load_table(spark, sf_dir, "events")
-    path = _orc_fixture(spark, sf_dir)
-    back = spark.read.schema(ev.schema).orc(path)
-    return back.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        dsum("value").alias("sum_value"),
-        F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("first_ts"),
-        F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("last_ts"),
-        F.count_distinct("props").alias("n_props"),
-    )
+    """events -> ORC -> rollup; completes the interchange matrix (parquet
+    native, JSON, CSV, ORC — the second columnar format a warehouse
+    migration actually moves through). Unlike the text trips, ORC is binary
+    columnar: timestamps carry their precision natively (no format pinning
+    needed) and the read side keeps predicate pushdown and column pruning —
+    the rollup here reads only its 4 columns."""
+    return _roundtrip_rollup(spark, sf_dir, "orc")
 
 
 ORACLE: dict[str, str] = {

@@ -34,6 +34,7 @@ import functools
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kitkat_spark.caches import fixture
 from kitkat_spark.sources import load_table
 
 Z_BITS = 8  # bits per dimension -> 16-bit z-value
@@ -102,48 +103,20 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# partitioned-events layout memo: one date-partitioned write per
-# (process, sf_dir) via sources/writer.py, then every q_partition_prune
-# call plans a pruned scan of it (mkdtemp keeps concurrent processes
-# apart; dirs removed at interpreter exit)
-_PART_PATHS: dict[str, str] = {}
-_PART_DIRS_CREATED: list[str] = []
-
-
-def _cleanup_part_dirs() -> None:
-    import shutil
-
-    for d in _PART_DIRS_CREATED:
-        shutil.rmtree(d, ignore_errors=True)
-    _PART_DIRS_CREATED.clear()
-    _PART_PATHS.clear()
-
-
 def partitioned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table in a day-partitioned layout (written once per
-    process through sources/writer.py write_partitioned, sorted by ts
-    within each day so row-group stats prune on time too)."""
-    import atexit
-    import os
-    import tempfile
+    session, a ``caches.fixture``, through sources/writer.py
+    write_partitioned, sorted by ts within each day so row-group stats
+    prune on time too); every q_partition_prune call plans a pruned scan
+    of it."""
+    from kitkat_spark.sources.writer import write_partitioned
 
-    if sf_dir not in _PART_PATHS:
-        # benign check-then-set race (threads): both write identical
-        # layouts to distinct mkdtemp roots; last memo wins, both dirs are
-        # cleaned at exit (same non-guarantee as _MEMBERS_PATHS).
-        from kitkat_spark.sources.writer import write_partitioned
-
-        root = tempfile.mkdtemp(prefix="kitkat_events_by_day_")
-        if not _PART_DIRS_CREATED:
-            atexit.register(_cleanup_part_dirs)
-        _PART_DIRS_CREATED.append(root)
-        path = os.path.join(root, "t")
-        ev = load_table(spark, sf_dir, "events").withColumn(
-            "day", F.to_date("ts")
-        )
+    def write(path: str) -> str:
+        ev = load_table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
         write_partitioned(ev, path, ["day"], sort_within=["ts"])
-        _PART_PATHS[sf_dir] = path
-    df = spark.read.parquet(_PART_PATHS[sf_dir])
+        return path
+
+    df = spark.read.parquet(fixture(spark, sf_dir, "events_by_day", write))
     # The day partition column's DATE type comes from partition-column type
     # inference (spark.sql.sources.partitionColumnTypeInference.enabled,
     # default true); a host session with it disabled would read it back as

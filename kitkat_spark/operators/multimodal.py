@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kitkat_spark.caches import fixture
 from kitkat_spark.functions.udf import per_context
 from kitkat_spark.sources import load_table
 
@@ -523,37 +524,30 @@ def q_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BF_CACHE: dict[tuple[str, str], str] = {}
 BF_FILES = 256  # fixture size — the operator's subject is the source path
 
 
 def _binary_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Directory of BF_FILES real PNG files with deterministic content
     derived from the file id (same pixel arithmetic as the media fixtures).
-    Built DRIVER-side once per (session, sf) — fixture construction
-    standing in for the object store a production ingest reads, not part
-    of the measured operator; the file count is the fixture's bound, not a
-    silent cap on the query. Benign check-then-set race as with
-    _JSON_CACHE: last writer wins, content is byte-identical."""
+    Built DRIVER-side once per session (a ``caches.fixture``) — fixture
+    construction standing in for the object store a production ingest
+    reads, not part of the measured operator; the file count is the
+    fixture's bound, not a silent cap on the query."""
     import os
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BF_CACHE:
-        from kitkat_spark.functions.imagecodec import png_encode
+    from kitkat_spark.functions.imagecodec import png_encode
 
-        path = os.path.join(
-            "/tmp/kitkat_binaryfiles",
-            spark.sparkContext.applicationId,
-            os.path.basename(os.path.normpath(sf_dir)),
-        )
+    def write(path: str) -> str:
         os.makedirs(path, exist_ok=True)
         for d in range(BF_FILES):
             c = 1 if d % 2 == 0 else 3
             w, h = _img_dims(d)
             with open(os.path.join(path, f"img_{d:06d}.png"), "wb") as f:
                 f.write(png_encode(_img_pixels(d, c).tobytes(), w, h, c))
-        _BF_CACHE[key] = path
-    return _BF_CACHE[key]
+        return path
+
+    return fixture(spark, sf_dir, "binaryfiles", write)
 
 
 def q_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:

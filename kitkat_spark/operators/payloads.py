@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kitkat_spark.caches import fixture
 from kitkat_spark.functions.compression import zlib_compress_udf, zlib_decompress_udf
 from kitkat_spark.functions.kpl import (
     aggregate_records,
@@ -33,17 +34,15 @@ from kitkat_spark.sources import load_table
 
 BLOB_SIZE = 5
 
-# fixture cache: blob synthesis is test scaffolding, not the operator under
-# test — build once per (session, sf_dir) and persist so repeated queries
-# measure deaggregation itself
-_BLOB_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 
 def build_kpl_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BLOB_CACHE:
-        _BLOB_CACHE[key] = _build_kpl_blobs(spark, sf_dir).persist()
-    return _BLOB_CACHE[key]
+    """The persisted blob fixture, built once per session (a
+    ``caches.fixture``): blob synthesis is test scaffolding, not the
+    operator under test, so repeated queries measure deaggregation
+    itself."""
+    return fixture(
+        spark, sf_dir, "kpl_blobs", lambda _: _build_kpl_blobs(spark, sf_dir).persist()
+    )
 
 
 def _build_kpl_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:

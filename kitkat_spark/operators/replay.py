@@ -5,9 +5,11 @@ fixtures through real Structured Streaming queries. ``run_replay`` runs each
 of them the same way:
 
 - **Scratch.** Fixtures that depend only on ``(sf_dir, variant)`` are
-  written once per session (``_replay_info``). Every sink, checkpoint and
-  wave source is fresh on every call (``replay_scope``), so a repeated call
-  runs the real pipeline instead of reading an earlier call's sink.
+  written once per session (``_replay_info``, a ``caches.fixture``). Every
+  sink, checkpoint and wave source is fresh on every call (``replay_scope``,
+  a ``caches.scratch_dir(fresh=True)``), so a repeated call runs the real
+  pipeline instead of reading an earlier call's sink. Both live under
+  ``caches.SCRATCH_ROOT`` and go with the application's dirs.
 - **State sizing.** Given a row count, shuffle partitions are sized for the
   state store while the call's queries plan and run (``_state_partitions``).
 - **Waves.** Either one ``availableNow`` run per wave on one checkpoint
@@ -27,7 +29,6 @@ from __future__ import annotations
 import functools
 import glob
 import hashlib
-import itertools
 import os
 import shutil
 from typing import Callable
@@ -35,8 +36,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# scratch root of the replay fixtures, sources, sinks and checkpoints
-REPLAY_ROOT = "/tmp/kitkat_replay"
+from kitkat_spark.caches import fixture, scratch_dir
 
 # target rows per state-store task (see _state_partitions)
 STATE_ROWS_PER_TASK = 16_384
@@ -69,36 +69,17 @@ ROCKSDB_PROVIDER = (
 )
 
 
-def _scratch_dir(spark: SparkSession, root: str, variant: str, sf_dir: str) -> str:
-    """Per-(session, variant, sf_dir) scratch path for replay fixtures and
-    checkpoints. Keyed on a HASH of the fully-resolved sf_dir, not its
-    basename: two fixture dirs sharing a final component (`a/sf0.01` vs
-    `b/sf0.01`) must never map to the same checkpoint/source state. The
-    basename is kept as a human-readable prefix only."""
-    resolved = os.path.abspath(os.path.normpath(sf_dir))
-    tag = "{}-{}".format(
-        os.path.basename(resolved), hashlib.md5(resolved.encode()).hexdigest()[:10]
-    )
-    return os.path.join(root, spark.sparkContext.applicationId, variant, tag)
-
-
-# replay fixtures for the streaming-native queries: written once per
-# (session, sf_dir, variant) — test scaffolding (production reads a real
-# source), so repeat invocations (bench's two passes) measure the streaming
-# op, not the fixture write. Caches (path, row_count): the count prices the
-# state-partition sizing below.
-_REPLAY_CACHE: dict[tuple[str, str, str], tuple[str, int]] = {}
-
-
 def _replay_info(spark: SparkSession, sf_dir: str, variant: str, df_fn) -> tuple[str, int]:
-    key = (spark.sparkContext.applicationId, sf_dir, variant)
-    if key not in _REPLAY_CACHE:
-        path = _scratch_dir(spark, REPLAY_ROOT, variant, sf_dir)
+    """The session's replay fixture ``variant``: ``df_fn()`` written once as
+    parquet, with its row count (it prices the state-partition sizing)."""
+
+    def write(path: str) -> tuple[str, int]:
         df_fn().write.mode("overwrite").parquet(path)
         # count the written files (footer metadata), not df: that would
         # run the fixture's whole lineage a second time
-        _REPLAY_CACHE[key] = (path, spark.read.parquet(path).count())
-    return _REPLAY_CACHE[key]
+        return path, spark.read.parquet(path).count()
+
+    return fixture(spark, sf_dir, variant, write)
 
 
 class _state_partitions:
@@ -182,10 +163,8 @@ class _state_partitions:
 # of that run's progress dicts (StreamingQueryProgress)
 REPLAY_PROGRESS: dict[tuple[str, str, str], list[list[dict]]] = {}
 
-# per-call scratch nonces + the last call's dir per key, so a new call
-# reclaims its predecessor's space without ever touching a path another
-# in-flight call could be using (itertools.count is GIL-atomic)
-_FRESH_NONCE = itertools.count()
+# the last call's dir per key, so a new call reclaims its predecessor's
+# space without ever touching a path another in-flight call could be using
 _FRESH_DIRS: dict[tuple[str, str, str], str] = {}
 
 
@@ -214,8 +193,8 @@ class replay_scope:
         pandas_state: bool = False,
     ):
         key = (spark.sparkContext.applicationId, sf_dir, variant)
-        stem = _scratch_dir(spark, REPLAY_ROOT, variant, sf_dir)
-        self.base = f"{stem}-call{next(_FRESH_NONCE)}"
+        stem = scratch_dir(spark, sf_dir, variant)
+        self.base = scratch_dir(spark, sf_dir, variant, fresh=True)
         prior = _FRESH_DIRS.pop(key, None)
         if prior is not None:
             shutil.rmtree(prior, ignore_errors=True)

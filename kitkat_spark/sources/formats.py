@@ -38,6 +38,11 @@ FORMATS = ("parquet", "orc", "json", "csv")
 # embeddings (array<float>), which round-trips through a delimited string.
 _CSV_ARRAY_SEP = ";"
 
+# Spark's DEFAULT json/csv timestampFormat carries only milliseconds — a
+# silent 1000x precision loss (events.ts .778549 came back .778000) — so
+# both text formats pin microseconds on BOTH sides of the trip
+_TEXT_OPTS = {"timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"}
+
 
 def write_table(df: DataFrame, path: str, fmt: str = "parquet") -> None:
     """Write a table in the given interchange format (CSV flattens array
@@ -52,9 +57,9 @@ def write_table(df: DataFrame, path: str, fmt: str = "parquet") -> None:
                     f.name,
                     F.array_join(F.col(f.name).cast("array<string>"), _CSV_ARRAY_SEP),
                 )
-        out.write.mode("overwrite").option("header", True).csv(path)
+        out.write.mode("overwrite").options(header=True, **_TEXT_OPTS).csv(path)
     elif fmt == "json":
-        out.write.mode("overwrite").json(path)
+        out.write.mode("overwrite").options(**_TEXT_OPTS).json(path)
     elif fmt == "orc":
         out.write.mode("overwrite").orc(path)
     else:
@@ -75,7 +80,7 @@ def read_table(
     if fmt == "orc":
         return spark.read.schema(schema).orc(path)
     if fmt == "json":
-        return spark.read.schema(schema).json(path).select(
+        return spark.read.schema(schema).options(**_TEXT_OPTS).json(path).select(
             *[f.name for f in schema.fields]
         )
     flat = T.StructType(
@@ -88,7 +93,7 @@ def read_table(
             for f in schema.fields
         ]
     )
-    df = spark.read.schema(flat).option("header", True).csv(path)
+    df = spark.read.schema(flat).options(header=True, **_TEXT_OPTS).csv(path)
     for f in schema.fields:
         if isinstance(f.dataType, T.ArrayType):
             df = df.withColumn(

@@ -1,4 +1,4 @@
-"""Cache lifetime hygiene (VERDICT r5 item 5).
+"""Cache and fixture lifetime hygiene.
 
 Several operators persist() optimizer boundaries that outlive the builder
 call (the result DataFrame is collected by the caller). Two guarantees keep
@@ -9,18 +9,31 @@ a long-lived session from accumulating blocks:
 2. Every registry entry is wrapped by ``queries._cache_scoped``: invoking
    query N+1 sweeps query N's blocks, so a driver loop that never calls
    release_caches still holds at most one query's working set.
+
+Per-session fixtures live in one store (``caches.fixture``): keyed per
+application and resolved sf_dir, evicted (unpersisted, dirs removed) once
+another application shows up, and removed from disk at process exit.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import subprocess
+import sys
+import textwrap
 
 import pytest
 
+from kitkat_spark import caches
 from kitkat_spark.caches import release_caches
 from kitkat_spark.queries import QUERIES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# every kitkat scratch root under the temp dir, at one application id
+_SCRATCH_GLOB = os.path.join(os.path.dirname(caches.SCRATCH_ROOT), "kitkat_*", "{app}")
 
 # Three queries whose implementations persist() intermediates
 # (dedup.py, similarity.py, textops.py — the sites VERDICT r5 flagged).
@@ -58,23 +71,25 @@ def test_back_to_back_queries_do_not_accumulate(spark):
     assert _n_cached(spark) == 0
 
 
-# ---- the session-scoped LSH signature cache (round-13 verdict #8) ----
+# ---- the per-session fixture store (caches.fixture) ----
+#
+# One process holds one live SparkContext, so "another application" is an
+# entry planted in the store under a made-up application id; the next
+# access under this session must evict it.
+
+_OTHER_APP = "some-other-app"
 
 
 def test_sig_cache_two_sf_dirs_do_not_cross_contaminate(spark):
     """Two fixture dirs served from one session must each get their OWN
-    signature table: the cache key carries sf_dir, a hit returns the same
+    signature table: the fixture key carries sf_dir, a hit returns the same
     handles, and the two tables disagree on content (different corpora)."""
-    from kitkat_spark.operators.dedup import (
-        _SIG_CACHE,
-        lsh_signatures_and_candidates,
-    )
+    from kitkat_spark.operators.dedup import lsh_signatures_and_candidates
 
     release_caches(spark)
-    _SIG_CACHE.clear()
     sig_a, cand_a = lsh_signatures_and_candidates(spark, "/root/testdata/sf0.001")
     sig_b, cand_b = lsh_signatures_and_candidates(spark, "/root/testdata/sf0.01")
-    # same key -> same handles (the cache actually caches)
+    # same key -> same handles (the store actually memoizes)
     sig_a2, cand_a2 = lsh_signatures_and_candidates(
         spark, "/root/testdata/sf0.001"
     )
@@ -86,38 +101,117 @@ def test_sig_cache_two_sf_dirs_do_not_cross_contaminate(spark):
     common = set(rows_a) & set(rows_b)
     assert common, "fixtures share doc_ids; key isolation untestable"
     assert any(rows_a[d] != rows_b[d] for d in common), (
-        "sf0.001 and sf0.01 signature tables are identical — a cache key "
+        "sf0.001 and sf0.01 signature tables are identical — a fixture key "
         "collision would be invisible"
     )
     release_caches(spark)
-    _SIG_CACHE.clear()
+
+
+def _plant_foreign(spark, name):
+    """A persisted frame stored as another application's ``name`` entry."""
+    foreign = spark.range(10).persist()
+    foreign.count()
+    assert foreign.storageLevel.useMemory
+    key = (_OTHER_APP, os.path.abspath(SF_DIR), name)
+    caches._FIXTURES[key] = (foreign, foreign)
+    return key, foreign
 
 
 def test_sig_cache_eviction_unpersists(spark):
     """Evicting another application's entry must UNPERSIST its signature
-    table, not just drop the dict reference (a live multi-session host
-    would otherwise leak the materialized block). Red-green: with the
-    `del`-only eviction this block stays at a real storage level."""
-    from kitkat_spark.operators.dedup import (
-        _SIG_CACHE,
-        lsh_signatures_and_candidates,
-    )
+    table, not just drop the reference (a live multi-session host would
+    otherwise leak the materialized block)."""
+    from kitkat_spark.operators.dedup import lsh_signatures_and_candidates
 
     release_caches(spark)
-    _SIG_CACHE.clear()
-    # stand-in for a live foreign session's entry: a persisted frame keyed
-    # to a different applicationId
-    foreign = spark.range(10).persist()
-    foreign.count()
-    assert foreign.storageLevel.useMemory
-    _SIG_CACHE[("some-other-app", "/root/testdata/sf0.001", False)] = (
-        foreign,
-        foreign,
-    )
-    lsh_signatures_and_candidates(spark, "/root/testdata/sf0.001")
-    assert ("some-other-app", "/root/testdata/sf0.001", False) not in _SIG_CACHE
+    key, foreign = _plant_foreign(spark, "lsh_signatures")
+    lsh_signatures_and_candidates(spark, SF_DIR)
+    assert key not in caches._FIXTURES
     assert not foreign.storageLevel.useMemory, (
         "evicted entry's signature table is still persisted"
     )
     release_caches(spark)
-    _SIG_CACHE.clear()
+
+
+def test_foreign_kpl_blobs_unpersisted_on_access(spark):
+    """The KPL blob fixture is a persisted frame too: another application's
+    entry is unpersisted on the next access, so it cannot pin a stopped
+    session."""
+    from kitkat_spark.operators.payloads import build_kpl_blobs
+
+    key, foreign = _plant_foreign(spark, "kpl_blobs")
+    build_kpl_blobs(spark, SF_DIR)
+    assert key not in caches._FIXTURES
+    assert not foreign.storageLevel.useMemory
+    release_caches(spark)
+
+
+def test_same_basename_sf_dirs_get_distinct_interchange_fixtures(spark, tmp_path):
+    """``a/sf0.001`` and ``b/sf0.001`` share a final component but hold
+    different events: each must round-trip its own copy, also when read
+    again after the other's fixture was written."""
+    from kitkat_spark.operators.interchange import q_orc_roundtrip
+
+    dirs = []
+    other = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    for parent, src in (("a", SF_DIR), ("b", other)):
+        d = tmp_path / parent / "sf0.001"
+        d.mkdir(parents=True)
+        shutil.copyfile(os.path.join(src, "events.parquet"), d / "events.parquet")
+        dirs.append(str(d))
+
+    def rows(sf_dir):
+        return sorted(tuple(r) for r in q_orc_roundtrip(spark, sf_dir).collect())
+
+    first_a, b = rows(dirs[0]), rows(dirs[1])
+    assert first_a != b, "the two copies must differ for the test to bite"
+    assert rows(dirs[0]) == first_a
+    assert caches.scratch_dir(spark, dirs[0], "events_orc") != caches.scratch_dir(
+        spark, dirs[1], "events_orc"
+    )
+
+
+def test_process_exit_removes_its_scratch(tmp_path):
+    """A driver that runs a fixture-backed query and a streaming replay,
+    then exits without stopping its session, leaves no scratch dir under
+    its application id."""
+    driver = tmp_path / "driver.py"
+    driver.write_text(
+        textwrap.dedent(
+            f"""
+            import glob, sys
+            sys.path.insert(0, {REPO!r})
+            from kitkat_spark.queries import QUERIES
+            from kitkat_spark.session import get_spark
+
+            spark = get_spark(app_name="scratch_exit", shuffle_partitions=2)
+            for name in ("q_orc_roundtrip", "q_stream_dedup_wm"):
+                QUERIES[name](spark, {SF_DIR!r}).collect()
+            app = spark.sparkContext.applicationId
+            print("APP", app)
+            print("DIRS", len(glob.glob({_SCRATCH_GLOB!r}.format(app=app))))
+            """
+        )
+    )
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    r = subprocess.run(
+        [sys.executable, str(driver)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-3000:]
+    out = dict(line.split(" ", 1) for line in r.stdout.splitlines() if " " in line)
+    assert int(out["DIRS"]) > 0, "the driver wrote no scratch; test cannot bite"
+    assert glob.glob(_SCRATCH_GLOB.format(app=out["APP"])) == []
+
+
+def test_operators_hold_no_scratch_paths_or_exit_hooks():
+    """Scratch locations and their cleanup belong to caches.py alone."""
+    ops = os.path.join(REPO, "kitkat_spark", "operators")
+    hits = [
+        f"{name}: {needle}"
+        for name in sorted(os.listdir(ops))
+        if name.endswith(".py")
+        for needle in ('"/tmp/', "mkdtemp", "atexit")
+        if needle in open(os.path.join(ops, name)).read()
+    ]
+    assert hits == []

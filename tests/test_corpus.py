@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from kitkat_spark.operators.corpus import (
     CHUNK_STRIDE,
     CHUNK_TOKENS,
+    cluster_members,
     connected_components,
     q_chunk_docs,
     q_corpus_mix,
@@ -146,28 +147,33 @@ def test_dedup_pipeline_stages_agree(spark):
     assert {d for d, k in kept.items() if k == "singleton"} == all_docs - member_ids
 
 
-def test_members_dir_cleanup_removes_created_dirs(tmp_path):
-    """Isolated on swapped-in state: calling the real cleanup on the
-    process-shared list would delete the membership dirs other tests'
-    memo still points to (the exact bug this test's first version had)."""
+def test_members_dir_cleanup_removes_created_dirs(spark):
+    """Membership dirs are removed with their application's scratch, and
+    the store drops the entry, so no memo points at a deleted dir. Within
+    the session a re-cluster never removes or overwrites the dir an
+    earlier ``cluster_members`` frame still lists. Another application is
+    stood in by an entry planted under a made-up id (one process holds one
+    live SparkContext); the next access under this session evicts it."""
     import os
 
-    from kitkat_spark.operators import corpus
+    from kitkat_spark import caches
 
-    d = tmp_path / "fake_members"
-    d.mkdir()
-    (d / "part-0.parquet").write_bytes(b"x")
-    orig_dirs = corpus._MEMBERS_DIRS_CREATED[:]
-    orig_paths = dict(corpus._MEMBERS_PATHS)
-    corpus._MEMBERS_DIRS_CREATED[:] = [str(d)]
-    try:
-        corpus._cleanup_members_dirs()
-        assert not os.path.exists(d)
-        assert corpus._MEMBERS_DIRS_CREATED == []
-    finally:
-        corpus._MEMBERS_DIRS_CREATED[:] = orig_dirs
-        corpus._MEMBERS_PATHS.clear()
-        corpus._MEMBERS_PATHS.update(orig_paths)
+    fake = os.path.join(caches.SCRATCH_ROOT, "fake-app")
+    d = os.path.join(fake, "members", "x")
+    os.makedirs(d, exist_ok=True)
+    with open(os.path.join(d, "part-0.parquet"), "wb") as f:
+        f.write(b"x")
+    key = ("fake-app", os.path.abspath(SF), "members")
+    caches._FIXTURES[key] = d
+    caches._APPS.add("fake-app")
+
+    before = cluster_members(spark, SF)
+    n = before.count()
+    assert not os.path.exists(fake)
+    assert key not in caches._FIXTURES
+
+    q_dedup_clusters(spark, SF).count()
+    assert before.count() == n, "re-clustering broke an earlier members frame"
 
 
 def test_cdc_chunks_shift_resilient(spark):

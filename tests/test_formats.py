@@ -22,24 +22,30 @@ def _sorted_rows(df, key):
     return [tuple(r) for r in df.orderBy(key).collect()]
 
 
+def _assert_roundtrip(spark, tmp_path, table, key, fmt):
+    src = load_table(spark, SF, table)
+    p = str(tmp_path / f"{table}_{fmt}")
+    write_table(src, p, fmt)
+    back = read_table(spark, p, fmt, table_schema(spark, SF, table))
+    assert back.schema == src.schema
+    assert _sorted_rows(back, key) == _sorted_rows(src, key)
+
+
 @pytest.mark.parametrize("fmt", ["orc", "json", "csv"])
 def test_documents_roundtrip(spark, tmp_path, fmt):
-    src = load_table(spark, SF, "documents")
-    p = str(tmp_path / f"docs_{fmt}")
-    write_table(src, p, fmt)
-    back = read_table(spark, p, fmt, table_schema(spark, SF, "documents"))
-    assert back.schema == src.schema
-    assert _sorted_rows(back, "doc_id") == _sorted_rows(src, "doc_id")
+    _assert_roundtrip(spark, tmp_path, "documents", "doc_id", fmt)
 
 
 @pytest.mark.parametrize("fmt", ["orc", "json", "csv"])
 def test_embeddings_array_column_roundtrip(spark, tmp_path, fmt):
-    src = load_table(spark, SF, "embeddings")
-    p = str(tmp_path / f"emb_{fmt}")
-    write_table(src, p, fmt)
-    back = read_table(spark, p, fmt, table_schema(spark, SF, "embeddings"))
-    assert back.schema == src.schema
-    assert _sorted_rows(back, "vec_id") == _sorted_rows(src, "vec_id")
+    _assert_roundtrip(spark, tmp_path, "embeddings", "vec_id", fmt)
+
+
+@pytest.mark.parametrize("fmt", ["orc", "json", "csv"])
+def test_events_microsecond_timestamps_roundtrip(spark, tmp_path, fmt):
+    """events.ts carries microseconds; Spark's default json/csv
+    timestampFormat would write milliseconds only."""
+    _assert_roundtrip(spark, tmp_path, "events", "event_id", fmt)
 
 
 def test_operator_results_format_invariant(spark, tmp_path):

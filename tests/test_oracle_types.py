@@ -5,7 +5,7 @@ while the local harness's ``fetchall()`` coerces DuckDB types to plain
 Python values — so an oracle whose output column is HUGEINT (DuckDB
 ``sum(INTEGER)`` → int128) hashes differently from Spark's BIGINT even
 when every value is equal, and the local gate cannot see it
-(q_canonical_docs, CORRECTNESS_r06.json, the only red row of 144).
+(q_canonical_docs: the only red row of 144 in the round-6 driver check).
 
 This test makes that class a pre-driver failure: plan every oracle in
 ``ORACLES`` against the sf0.001 parquet views and assert no output column
