@@ -381,11 +381,11 @@ def q_passjoin_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def lsh_signatures_and_candidates(
-    spark: SparkSession, sf_dir: str, with_source: bool = False
+    spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """The audited MinHash-LSH candidate pipeline shared by q_near_dedup,
     q_minhash_accuracy, and q_lsh_source_curve: a PERSISTED signature
-    table (doc_id[, src], shingle hashes, k-component signature) and the
+    table (doc_id, src, shingle hashes, k-component signature) and the
     unique candidate pairs from the capped band-bucket self-join.
 
     Two deliberate scale moves (shared by every consumer):
@@ -401,12 +401,10 @@ def lsh_signatures_and_candidates(
 
     The coalesced source column ('<null>' sentinel) is ALWAYS threaded
     through the signature table — the one extra byte that makes
-    per-source attribution free downstream. ``with_source`` is kept for
-    caller clarity but no longer forks the build: before r14 the True and
-    False variants each built and persisted their own shingle+minhash
-    table (the query's dominant pass, guide §1.2 — a session running the
-    whole LSH family paid it twice); now one table serves every consumer
-    and the source-blind ones simply never select ``src``.
+    per-source attribution free downstream. One table serves every
+    consumer (a per-variant table would pay the shingle+minhash pass, the
+    query's dominant one, once per variant); the source-blind ones simply
+    never select ``src``.
 
     The built (sig, cand) pair is the session's ``lsh_signatures``
     fixture (caches.py, which also unpersists it once another application
@@ -632,11 +630,11 @@ def q_lsh_source_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     or cross-source (fix the pipeline).
 
     Shape: the identical audited candidate pipeline (the shared
-    lsh_signatures_and_candidates, with_source=True) — the ONE extra byte
+    lsh_signatures_and_candidates) — the ONE extra byte
     is the source column carried through the persisted signature table, so
     attribution costs zero additional joins or shuffles; then the shared
     s_curve fan-out into a (sources+1) x 6-row aggregate."""
-    sig, cand = lsh_signatures_and_candidates(spark, sf_dir, with_source=True)
+    sig, cand = lsh_signatures_and_candidates(spark, sf_dir)
     sa = sig.select(
         F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"), F.col("src").alias("src_a")
     )
@@ -1106,7 +1104,7 @@ def q_minhash_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch path aggregates k longs per source).
 
     Scale shape: rides the shared persisted signature table
-    (lsh_signatures_and_candidates, with_source=True); the source rollup
+    (lsh_signatures_and_candidates); the source rollup
     is ONE combinable groupBy over config-many groups; the exact side is
     one distinct (source, shingle-hash) pass with the q_source_overlap
     set-expansion (pairs bounded by C(sources, 2) per hash). At 100 TB the
@@ -1119,7 +1117,7 @@ def q_minhash_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines on ulp-below-boundary doubles (DuckDB rounds the shortest
     DECIMAL repr, the JVM the binary value: measured on
     |1/32 - 57/2375| = 0.00724999...95 -> 0.0073 vs 0.0072)."""
-    sig, _ = lsh_signatures_and_candidates(spark, sf_dir, with_source=True)
+    sig, _ = lsh_signatures_and_candidates(spark, sf_dir)
     # one combinable min-rollup: the MERGE
     msig = sig.groupBy("src").agg(
         F.array(

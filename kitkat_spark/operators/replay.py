@@ -21,7 +21,9 @@ of them the same way:
   driver (O(stream) at production scale), while the parquet sink writes
   executor-side and the read-back scan is parallel. Update mode, which the
   file sink does not support, drains to a memory sink.
-- **Progress.** Every run's ``recentProgress`` lands in ``REPLAY_PROGRESS``.
+- **Progress.** Every run's ``recentProgress`` lands in the store with the
+  call (``replay_progress`` reads the last call's), so it goes with the
+  application like every other fixture.
 """
 
 from __future__ import annotations
@@ -158,14 +160,17 @@ class _state_partitions:
         return False
 
 
-# every replay run's recentProgress, per (applicationId, sf_dir, variant):
-# a list with one entry per streaming run of the last call, each the list
-# of that run's progress dicts (StreamingQueryProgress)
-REPLAY_PROGRESS: dict[tuple[str, str, str], list[list[dict]]] = {}
+def _last_call(spark: SparkSession, sf_dir: str, variant: str) -> dict:
+    """The session's record of the last ``variant`` call over ``sf_dir``
+    (empty before the first): its scratch ``base`` and its ``progress``."""
+    return fixture(spark, sf_dir, f"{variant}/last_call", lambda _: {})
 
-# the last call's dir per key, so a new call reclaims its predecessor's
-# space without ever touching a path another in-flight call could be using
-_FRESH_DIRS: dict[tuple[str, str, str], str] = {}
+
+def replay_progress(spark: SparkSession, sf_dir: str, variant: str) -> list[list[dict]]:
+    """The last ``variant`` call's progress in this session: one entry per
+    streaming run, each the list of that run's progress dicts
+    (StreamingQueryProgress)."""
+    return _last_call(spark, sf_dir, variant)["progress"]
 
 
 class replay_scope:
@@ -176,13 +181,13 @@ class replay_scope:
       checkpoints and wave sources — no checkpoint carry-over, so every
       call runs the real thing (the bench min-of-2 convention). The path
       carries a per-call nonce so no call can rmtree another's in-flight
-      checkpoint; the previous call's dir for the same key is reclaimed
-      when this call claims its own, bounding the leak to one finished run
-      under the registry's serial contract.
+      checkpoint; the previous call's dir for the same variant and
+      ``sf_dir`` is reclaimed when this call claims its own, bounding the
+      leak to one finished run under the registry's serial contract.
     - with ``rows``, the state sizing of ``_state_partitions`` for the
       duration; without, the session's shuffle partitions (stateless).
-    - ``drain(q)`` awaits a started query and appends its progress to
-      ``REPLAY_PROGRESS`` under the call's key."""
+    - ``drain(q)`` awaits a started query and appends its progress to the
+      call's ``replay_progress``."""
 
     def __init__(
         self,
@@ -192,18 +197,16 @@ class replay_scope:
         rows: int | None = None,
         pandas_state: bool = False,
     ):
-        key = (spark.sparkContext.applicationId, sf_dir, variant)
         stem = scratch_dir(spark, sf_dir, variant)
         self.base = scratch_dir(spark, sf_dir, variant, fresh=True)
-        prior = _FRESH_DIRS.pop(key, None)
-        if prior is not None:
-            shutil.rmtree(prior, ignore_errors=True)
-        _FRESH_DIRS[key] = self.base
+        last = _last_call(spark, sf_dir, variant)
+        if "base" in last:
+            shutil.rmtree(last["base"], ignore_errors=True)
         # md5, not Python ``hash``: string hashing is PYTHONHASHSEED-salted
         # across processes
         self.sink_name = "replay_" + hashlib.md5(stem.encode()).hexdigest()[:8]
         self.runs: list[list[dict]] = []
-        REPLAY_PROGRESS[key] = self.runs
+        last.update(base=self.base, progress=self.runs)
         self._state = (
             None if rows is None else _state_partitions(spark, rows, pandas_state)
         )
@@ -304,7 +307,7 @@ def run_replay(
 
     ``rows`` sizes the state store (``_state_partitions``; ``pandas_state``
     for applyInPandasWithState); leave it out for a stateless replay.
-    ``variant`` names the call's scratch and its ``REPLAY_PROGRESS`` key."""
+    ``variant`` names the call's scratch and its ``replay_progress``."""
     with replay_scope(spark, sf_dir, variant, rows, pandas_state) as call:
         if waves is None:
             sdf = stream

@@ -18,7 +18,7 @@ value-oracled by the driver:
   them against a batch SQL oracle. Every one runs through the shared replay
   harness (operators/replay.py run_replay): cached fixtures, fresh per-call
   sinks and checkpoints, a parquet sink in append mode (memory in update
-  mode), and progress kept in REPLAY_PROGRESS.
+  mode), and progress kept in the store (``replay.replay_progress``).
 
 Scale: fixtures are narrow maps over events; the consume pipeline itself is
 shuffle-free (see streaming/pipeline.py docstring).
@@ -685,7 +685,7 @@ def q_stream_late_drop_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     shifted back 3 DAYS with fresh event_ids — and run 2, restoring the
     committed watermark, must drop every one of them at the 1-hour
     tumbling aggregation's state store (run 2's progress in
-    REPLAY_PROGRESS: no state row updated, and numRowsDroppedByWatermark
+    replay_progress: no state row updated, and numRowsDroppedByWatermark
     equal to the late (window, event_type) groups — the metric counts rows
     after the partial aggregation, not input rows; tests/
     test_replay_harness.py). Output: the parquet sink's sealed per-type
@@ -2176,7 +2176,7 @@ def q_stream_ttl_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
     therefore the batch q_dedup_ttl projection to (doc_id, fp, kept) —
     exact equality, no tolerance for eviction jitter needed. What eviction
     DOES change — state size — shows only in the state metrics of the
-    run's progress (REPLAY_PROGRESS), which the semantic test asserts is
+    run's progress (replay_progress), which the semantic test asserts is
     bounded below the all-time distinct-fp count.
 
     The waves run as ONE availableNow query over pre-written per-wave

@@ -9,61 +9,22 @@ tests/test_smoke_all_queries.py keeps the two key sets equal.
 from __future__ import annotations
 
 import functools
+import importlib
+import pkgutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from kitkat_spark import operators
 from kitkat_spark.caches import release_caches
 
-from kitkat_spark.operators import (
-    analytic,
-    corpus,
-    dedup,
-    graph,
-    interchange,
-    layout,
-    multimodal,
-    payloads,
-    pipelines,
-    privacy,
-    profiling,
-    relational,
-    runtimefilter,
-    sampling,
-    similarity,
-    sketches,
-    skew,
-    tpchx,
-    warehouse,
-    streamparity,
-    temporal,
-    textops,
-)
+# every module of the operators package; a module declares its queries as
+# ``q_*`` functions and their oracles in an ``ORACLE`` dict
+_MODULES = [
+    importlib.import_module(f"{operators.__name__}.{m.name}")
+    for m in pkgutil.iter_modules(operators.__path__)
+]
 
-_MODULES = (
-    relational,
-    graph,
-    interchange,
-    layout,
-    privacy,
-    profiling,
-    runtimefilter,
-    sampling,
-    sketches,
-    skew,
-    analytic,
-    temporal,
-    dedup,
-    similarity,
-    textops,
-    payloads,
-    multimodal,
-    streamparity,
-    pipelines,
-    corpus,
-    warehouse,
-    tpchx,
-)
 
 def _cache_scoped(fn):
     """Release blocks persisted by the PREVIOUS query before building this

@@ -28,6 +28,9 @@ import pytest
 
 from kitkat_spark import caches
 from kitkat_spark.caches import release_caches
+from kitkat_spark.operators.dedup import lsh_signatures_and_candidates
+from kitkat_spark.operators.payloads import build_kpl_blobs
+from kitkat_spark.operators.replay import run_replay
 from kitkat_spark.queries import QUERIES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
@@ -84,8 +87,6 @@ def test_sig_cache_two_sf_dirs_do_not_cross_contaminate(spark):
     """Two fixture dirs served from one session must each get their OWN
     signature table: the fixture key carries sf_dir, a hit returns the same
     handles, and the two tables disagree on content (different corpora)."""
-    from kitkat_spark.operators.dedup import lsh_signatures_and_candidates
-
     release_caches(spark)
     sig_a, cand_a = lsh_signatures_and_candidates(spark, "/root/testdata/sf0.001")
     sig_b, cand_b = lsh_signatures_and_candidates(spark, "/root/testdata/sf0.01")
@@ -117,32 +118,39 @@ def _plant_foreign(spark, name):
     return key, foreign
 
 
-def test_sig_cache_eviction_unpersists(spark):
-    """Evicting another application's entry must UNPERSIST its signature
-    table, not just drop the reference (a live multi-session host would
-    otherwise leak the materialized block)."""
-    from kitkat_spark.operators.dedup import lsh_signatures_and_candidates
+# each input: the store entry's name, and an access that keeps it there
+_ENTRIES = {
+    "lsh_signatures": (
+        "lsh_signatures",
+        lambda spark: lsh_signatures_and_candidates(spark, SF_DIR),
+    ),
+    "kpl_blobs": ("kpl_blobs", lambda spark: build_kpl_blobs(spark, SF_DIR)),
+    # a replay call's record: its scratch dir and its runs' progress
+    "replay": (
+        "t_foreign/last_call",
+        lambda spark: run_replay(
+            spark, SF_DIR, "t_foreign", lambda src: src, waves=[spark.range(3)]
+        ),
+    ),
+}
 
+
+@pytest.mark.parametrize("entry", list(_ENTRIES))
+def test_foreign_entry_dropped_on_access(spark, entry):
+    """What a query keeps beyond its call lives in the store, and another
+    application's entry is dropped on the next access under this session:
+    a persisted frame is UNPERSISTED, not just dereferenced, so it cannot
+    pin a stopped session (a live multi-session host would otherwise leak
+    the materialized block)."""
+    name, access = _ENTRIES[entry]
     release_caches(spark)
-    key, foreign = _plant_foreign(spark, "lsh_signatures")
-    lsh_signatures_and_candidates(spark, SF_DIR)
+    access(spark)
+    mine = (spark.sparkContext.applicationId, os.path.abspath(SF_DIR), name)
+    assert mine in caches._FIXTURES, f"{entry} keeps its value outside the store"
+    key, foreign = _plant_foreign(spark, name)
+    access(spark)
     assert key not in caches._FIXTURES
-    assert not foreign.storageLevel.useMemory, (
-        "evicted entry's signature table is still persisted"
-    )
-    release_caches(spark)
-
-
-def test_foreign_kpl_blobs_unpersisted_on_access(spark):
-    """The KPL blob fixture is a persisted frame too: another application's
-    entry is unpersisted on the next access, so it cannot pin a stopped
-    session."""
-    from kitkat_spark.operators.payloads import build_kpl_blobs
-
-    key, foreign = _plant_foreign(spark, "kpl_blobs")
-    build_kpl_blobs(spark, SF_DIR)
-    assert key not in caches._FIXTURES
-    assert not foreign.storageLevel.useMemory
+    assert not foreign.storageLevel.useMemory, "evicted entry is still persisted"
     release_caches(spark)
 
 

@@ -264,13 +264,9 @@ def test_expensive_hash_subtrees_not_reinlined(spark):
     copies, jaccard_pairs at 21 xxhash64 copies — each a 2-11x slowdown
     with the oversized filter falling off codegen). The expensive
     hash-stream subtree must appear a bounded number of times in the
-    physical plan; the materialization boundaries keep it there."""
-    from kitkat_spark.plans.explain import explain_str
-
-    # cached relations from earlier tests embed their ORIGINAL subtree in
-    # the plan text and double the counts — measure from a cold catalog
-    spark.catalog.clearCache()
-
+    physical plan; the materialization boundaries keep it there. Caches
+    that earlier tests materialized print their plan twice; explain_str
+    reads each once."""
     bounds = {
         "q_winnow_fingerprint": ("md5(", 4),
         "q_ngram_jaccard": ("xxhash64(", 8),
@@ -281,6 +277,34 @@ def test_expensive_hash_subtrees_not_reinlined(spark):
         plan = explain_str(QUERIES[name](spark, SF))
         n = plan.count(needle)
         assert n <= cap, f"{name}: {n} {needle} subtrees in plan (cap {cap})"
+
+
+def test_plan_reads_the_same_after_its_cache_and_itself_ran(spark):
+    """An adaptive plan that has run prints a Final and an Initial tree;
+    explain_str keeps one, so counts do not depend on what ran before."""
+    from pyspark.sql import functions as F
+
+    cached = (
+        spark.range(100)
+        .select((F.col("id") % 7).alias("k"), F.xxhash64("id").alias("h"))
+        .groupBy("k")
+        .agg(F.max("h").alias("m"))
+        .persist()
+    )
+
+    def plan():
+        keys = spark.range(50).select((F.col("id") % 7).alias("k"))
+        return keys.join(cached, "k").groupBy("k").agg(F.xxhash64("k").alias("h"))
+
+    def counts(df):
+        return shuffle_count(df), explain_str(df).count("xxhash64(")
+
+    fresh = counts(plan())
+    cached.count()
+    ran = plan()
+    ran.collect()
+    assert counts(ran) == fresh
+    cached.unpersist()
 
 
 def test_decontaminate_bench_side_filter_pushed_down(spark):

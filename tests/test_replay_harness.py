@@ -11,7 +11,7 @@ import pytest
 from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
-from kitkat_spark.operators.replay import REPLAY_PROGRESS, run_replay
+from kitkat_spark.operators.replay import replay_progress, run_replay
 
 def _waves(spark, *sizes):
     out, lo = [], 0
@@ -48,15 +48,13 @@ def test_empty_wave_raises(spark, sf_dir):
 
 
 def test_calls_get_fresh_checkpoints_and_reclaim_the_last(spark, sf_dir):
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir, "t_fresh")
-
     def call():
         df = run_replay(spark, sf_dir, "t_fresh", lambda src: src, waves=_waves(spark, 4))
         files = [f.removeprefix("file:") for f in df.inputFiles()]
         assert df.count() == 4 and files
         # <base>/out/part-*.parquet
-        return os.path.dirname(os.path.dirname(files[0])), REPLAY_PROGRESS[key]
+        base = os.path.dirname(os.path.dirname(files[0]))
+        return base, replay_progress(spark, sf_dir, "t_fresh")
 
     base1, runs1 = call()
     base2, runs2 = call()
@@ -100,7 +98,7 @@ def test_late_drop_second_run_drops_every_late_row(spark, sf_dir):
     from kitkat_spark.sources import load_table
 
     q_stream_late_drop_wm(spark, sf_dir)
-    runs = REPLAY_PROGRESS[(spark.sparkContext.applicationId, sf_dir, "q_stream_late_drop_wm")]
+    runs = replay_progress(spark, sf_dir, "q_stream_late_drop_wm")
     assert len(runs) == 2
     late = (
         load_table(spark, sf_dir, "events")

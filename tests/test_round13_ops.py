@@ -65,7 +65,7 @@ def test_minhash_merge_identity(spark):
         lsh_signatures_and_candidates,
     )
 
-    sig, _ = lsh_signatures_and_candidates(spark, SF, with_source=True)
+    sig, _ = lsh_signatures_and_candidates(spark, SF)
     merged = {
         r.src: list(r.msig)
         for r in sig.groupBy("src")

@@ -574,7 +574,7 @@ def test_stream_ttl_evict_decisions_match_and_state_is_bounded(spark):
     carrying STRICTLY fewer state rows than the all-time distinct
     fingerprint count — the bounded-state property that is the entire point
     of eviction."""
-    from kitkat_spark.operators.replay import REPLAY_PROGRESS
+    from kitkat_spark.operators.replay import replay_progress
     from kitkat_spark.operators.streamparity import (
         q_stream_dedup_ttl,
         q_stream_ttl_evict,
@@ -586,9 +586,7 @@ def test_stream_ttl_evict_decisions_match_and_state_is_bounded(spark):
     }
     assert evict == audit
     # the final state-store row count of the run's last progress
-    runs = REPLAY_PROGRESS[
-        (spark.sparkContext.applicationId, SF, "q_stream_ttl_evict")
-    ]
+    runs = replay_progress(spark, SF, "q_stream_ttl_evict")
     state_rows = runs[-1][-1]["stateOperators"][0]["numRowsTotal"]
     n_fps = len({fp for (_, fp) in audit})
     assert 0 < state_rows < n_fps, (

@@ -2,6 +2,7 @@
 """Regenerate PLAN_FACTS.md: one row per declared query with the physical
 plan's scale-relevant facts (shuffles, join strategies, Python-UDF nodes,
 pushed filters), read from the ACTUAL Catalyst plan at sf0.001.
+``recorded`` reads the file back for tests/test_oracle_parity.py.
 
 Run: python tools/plan_report.py
 """
@@ -9,26 +10,37 @@ Run: python tools/plan_report.py
 from __future__ import annotations
 
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from kitkat_spark.plans import plan_facts  # noqa: E402
-from kitkat_spark.queries import ORACLES, QUERIES  # noqa: E402
+from kitkat_spark.queries import QUERIES  # noqa: E402
 from kitkat_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
+PLAN_FACTS = os.path.join(REPO, "PLAN_FACTS.md")
+# query, shuffles, broadcast joins, sort-merge joins, py-UDF nodes
+_ROW = re.compile(r"^\| (q_\w+) \| (\d+) \| \d+ \| \d+ \| (\d+) \|")
 
 HEADER = """# PLAN FACTS — physical-plan shape per query (generated)
 
 Generated by `tools/plan_report.py` from the live Catalyst plan at sf0.001.
 Columns: Exchange (shuffle) count, broadcast vs sort-merge join counts,
-Arrow/Python UDF nodes, whether the parquet scan carries pushed filters, and
-the oracle kind. Regenerate after plan-affecting changes.
+Arrow/Python UDF nodes, and whether the parquet scan carries pushed filters.
+Regenerate after plan-affecting changes.
 
-| query | shuffles | broadcast joins | sort-merge joins | py-UDF nodes | pushed filters | oracle |
-|---|---|---|---|---|---|---|
+| query | shuffles | broadcast joins | sort-merge joins | py-UDF nodes | pushed filters |
+|---|---|---|---|---|---|
 """
+
+
+def recorded() -> dict[str, tuple[int, int]]:
+    """Each query's recorded (shuffles, py-UDF nodes)."""
+    with open(PLAN_FACTS) as fh:
+        return {m[1]: (int(m[2]), int(m[3])) for m in map(_ROW.match, fh) if m}
 
 
 def main() -> None:
@@ -37,15 +49,13 @@ def main() -> None:
     for name in sorted(QUERIES):
         f = plan_facts(QUERIES[name](spark, SF))
         pushed = "yes" if any(p.strip() for p in f["pushed_filters"]) else "—"
-        oracle = "SQL" if name in ORACLES else "rows-only"
         lines.append(
             f"| {name} | {f['shuffles']} | {f['broadcast_joins']} | "
-            f"{f['sortmerge_joins']} | {f['python_udf_nodes']} | {pushed} | {oracle} |\n"
+            f"{f['sortmerge_joins']} | {f['python_udf_nodes']} | {pushed} |\n"
         )
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLAN_FACTS.md")
-    with open(out, "w") as fh:
+    with open(PLAN_FACTS, "w") as fh:
         fh.writelines(lines)
-    print(f"wrote {out} ({len(QUERIES)} queries)")
+    print(f"wrote {PLAN_FACTS} ({len(QUERIES)} queries)")
 
 
 if __name__ == "__main__":
