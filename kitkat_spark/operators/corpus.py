@@ -25,7 +25,7 @@ The ops a 100 TB training-corpus build runs between dedup and tokenization:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from kitkat_spark.caches import fixture
@@ -391,23 +391,28 @@ def q_mix_rebalance_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation), so the keep-set is value-replayable by the oracle.
     tests/test_corpus.py proves the bounded-difference contract vs the
     exact-rank variant."""
-    from kitkat_spark.functions.text import md5_long
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     counts = docs.groupBy("source").agg(F.count("*").alias("n_src"))
     m = counts.agg(F.min("n_src").alias("m"))
-    u32 = md5_long(
-        F.concat(F.lit(MIX_SEED + "|"), F.col("doc_id").cast("string")), hex_chars=8
-    )
-    accept = (u32.cast("double") / F.lit(4294967296.0)) < (
-        F.col("m").cast("double") / F.col("n_src").cast("double")
-    )
+    rate = F.col("m").cast("double") / F.col("n_src").cast("double")
     return (
         docs.join(F.broadcast(counts), "source")
         .crossJoin(F.broadcast(m))
-        .filter(accept)
+        .filter(mix_accept(rate))
         .select("doc_id", "source")
     )
+
+
+def mix_accept(rate: Column) -> Column:
+    """The rate-based keep test u/2^32 < rate, u the seeded 32-bit md5
+    hash of doc_id: a pure function of (MIX_SEED, doc_id, rate), shared by
+    q_mix_rebalance_rate and its ingest-time twin q_stream_mix_rebalance."""
+    from kitkat_spark.functions.text import md5_long
+
+    u32 = md5_long(
+        F.concat(F.lit(MIX_SEED + "|"), F.col("doc_id").cast("string")), hex_chars=8
+    )
+    return (u32.cast("double") / F.lit(4294967296.0)) < rate
 
 
 QUALITY_MIN = 0.55
@@ -1755,21 +1760,34 @@ def q_boilerplate_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select("doc_id", tokens(F.col("text")).alias("w")).filter(
         F.size("w") >= 3
     )
-    pairs = d.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("w") - 2),
-                    lambda p: F.md5(F.concat_ws(" ", F.slice("w", p, 3))),
-                )
-            )
-        ).alias("fp"),
-    )
+    pairs = d.select("doc_id", trigram_fps("w").alias("fp"))
     n_docs = d.agg(F.count("*").alias("n_docs"))
     marked = pairs.select(
         "doc_id", F.count("*").over(W.partitionBy("fp")).alias("df")
     )
+    return boiler_doc_rollup(marked, n_docs)
+
+
+def trigram_fps(w: str) -> Column:
+    """The DISTINCT 3-gram fingerprints of token-array column ``w``, one
+    row each (a generator): md5 of the space-joined gram. The (doc, gram)
+    incidence both boilerplate queries and their streaming twins build."""
+    return F.explode(
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(1), F.size(w) - 2),
+                lambda p: F.md5(F.concat_ws(" ", F.slice(w, p, 3))),
+            )
+        )
+    )
+
+
+def boiler_doc_rollup(marked: DataFrame, n_docs: DataFrame) -> DataFrame:
+    """Per-doc commodity roll-up of (doc_id, df) rows — one per (doc,
+    distinct gram), df the gram's document frequency — against the 1-row
+    ``n_docs`` frame: a gram is commodity when df * 1000 > n_docs *
+    BOILER_DF_PERMILLE (exact integers). Shared by q_boilerplate_coverage
+    and q_stream_boilerplate."""
     return (
         marked.crossJoin(F.broadcast(n_docs))
         .groupBy("doc_id")
@@ -1973,22 +1991,22 @@ def q_boilerplate_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select("doc_id", "source", tokens(F.col("text")).alias("w")).filter(
         F.size("w") >= 3
     )
-    pairs = d.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("w") - 2),
-                    lambda p: F.md5(F.concat_ws(" ", F.slice("w", p, 3))),
-                )
-            )
-        ).alias("fp"),
-    ).persist()
+    pairs = d.select("doc_id", "source", trigram_fps("w").alias("fp")).persist()
     n_docs = d.agg(F.count("*").alias("n_docs_corpus"))
+    src_df = pairs.groupBy("fp", "source").agg(F.count("*").alias("df_src"))
+    return boiler_source_rollup(pairs, src_df, n_docs)
+
+
+def boiler_source_rollup(
+    pairs: DataFrame, src_df: DataFrame, n_docs: DataFrame
+) -> DataFrame:
+    """Per-source commodity attribution of the (doc_id, source, fp)
+    incidence ``pairs``, given its per-(fp, source) document frequencies
+    ``src_df`` (fp, source, df_src) and the 1-row ``n_docs`` frame
+    (n_docs_corpus). Shared by q_boilerplate_sources and
+    q_stream_boiler_sources."""
     # per-(gram, source) counts roll up to the gram's df: one combinable
     # aggregate feeds both the commodity cut and the dominance test
-    src_df = pairs.groupBy("fp", "source").agg(F.count("*").alias("df_src"))
     gram_df = src_df.groupBy("fp").agg(F.sum("df_src").alias("df"))
     commodity = (
         gram_df.crossJoin(F.broadcast(n_docs))

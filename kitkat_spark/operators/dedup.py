@@ -252,7 +252,8 @@ def passjoin_index(docs: DataFrame) -> DataFrame:
     xxhash64 of the content: collisions can only ADD candidates (the
     levenshtein verify discards them), never lose one, and a long key
     hashes/compares far cheaper than a ~30-char string. Shared by
-    q_passjoin_dedup and q_passjoin_planner — one implementation."""
+    q_passjoin_dedup, q_passjoin_planner and q_stream_passjoin — one
+    implementation."""
     i_col = F.explode(F.sequence(F.lit(0), F.lit(_PASS_M - 1))).alias("i")
     seg_len, seg_start = _pass_layout(F.col("len_s"), F.col("i"))
     return docs.select(
@@ -281,7 +282,9 @@ def passjoin_probe(spark: SparkSession, docs: DataFrame) -> DataFrame:
     driver-side and broadcast-hash-joined on a constant key instead of
     being re-derived per doc with explode + array-HOF filters:
     higher-order functions run interpreted (outside whole-stage codegen)
-    and were 60% of q_passjoin_dedup's wall time."""
+    and were 60% of q_passjoin_dedup's wall time. ``docs`` may be a
+    streaming frame: the triple broadcast is a stream-static join, so
+    q_stream_passjoin probes its ingest batches with this same function."""
     tdf = spark.createDataFrame(passjoin_triples(), "delta int, i int, d int")
     p_len, p_start = _pass_layout(F.col("len_s"), F.col("i"))
     return (
@@ -346,28 +349,34 @@ def q_passjoin_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
         .persist()
     )
-    # segment index + multi-match-aware probe expansion: the shared
-    # builders above (one implementation with q_passjoin_planner)
-    index = passjoin_index(docs)
-    probe = passjoin_probe(spark, docs)
-    cand = (
-        index.join(probe, ["len_s", "i", "seg"])
-        .filter(
-            (F.col("len_s") < F.col("len_r"))
-            | (F.col("id_s") < F.col("id_r"))
-        )
-        .select(
-            F.least("id_s", "id_r").alias("doc_a"),
-            F.greatest("id_s", "id_r").alias("doc_b"),
-            F.greatest("len_s", "len_r").alias("mx"),
-        )
-        .distinct()
+    matches = passjoin_index(docs).join(
+        passjoin_probe(spark, docs), ["len_s", "i", "seg"]
     )
-    ta = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
-    tb = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
+    return passjoin_verify(passjoin_pairs(matches).distinct(), docs)
+
+
+def passjoin_pairs(matches: DataFrame) -> DataFrame:
+    """Index/probe key matches (id_s, len_s, id_r, len_r) as ordered
+    candidate pairs (doc_a < doc_b, mx = the longer length). A pair of
+    equal-length docs meets itself in both roles; the id order keeps one."""
+    return matches.filter(
+        (F.col("len_s") < F.col("len_r")) | (F.col("id_s") < F.col("id_r"))
+    ).select(
+        F.least("id_s", "id_r").alias("doc_a"),
+        F.greatest("id_s", "id_r").alias("doc_b"),
+        F.greatest("len_s", "len_r").alias("mx"),
+    )
+
+
+def passjoin_verify(pairs: DataFrame, texts: DataFrame) -> DataFrame:
+    """Threshold-capped levenshtein verify of (doc_a, doc_b, mx) candidate
+    pairs against a (doc_id, text) frame: pairs within PASSJOIN_K edits
+    with rel_dist = lev / mx at 4 dp."""
+    ta = texts.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
+    tb = texts.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
     lev = F.levenshtein("text_a", "text_b", PASSJOIN_K)
     return (
-        cand.join(ta, "doc_a")
+        pairs.join(ta, "doc_a")
         .join(tb, "doc_b")
         .select("doc_a", "doc_b", "mx", lev.alias("lev"))
         .filter((F.col("lev") >= 0) & (F.col("lev") <= PASSJOIN_K))

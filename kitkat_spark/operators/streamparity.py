@@ -738,10 +738,11 @@ def q_stream_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     its docstring promises for 100 TB: a planning pass computes per-source
     acceptance rates m/n_src ONCE (a handful of rows — production ships
     them as config refreshed per planning cycle), and the document stream
-    is then filtered row-by-row with the seeded-hash predicate
-    u32/2^32 < rate[source]. The filter is STATELESS — no watermark, no
-    state store, no shuffle; every micro-batch is embarrassingly parallel,
-    so ingest throughput is scan-bound at any scale.
+    is then filtered row-by-row with the batch op's seeded-hash predicate
+    (corpus.mix_accept: u32/2^32 < rate[source]). The filter is STATELESS
+    — no watermark, no state store, no shuffle; every micro-batch is
+    embarrassingly parallel, so ingest throughput is scan-bound at any
+    scale.
 
     Determinism: the keep-decision is a pure function of (seed, doc_id,
     planning rates), so the streamed keep-set equals the batch query's
@@ -749,8 +750,7 @@ def q_stream_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DuckDB oracle (shared with q_mix_rebalance_rate) replays it
     value-for-value. The availableNow file replay + parquet sink is test
     scaffolding, as in the other q_stream_* queries."""
-    from kitkat_spark.functions.text import md5_long
-    from kitkat_spark.operators.corpus import MIX_SEED
+    from kitkat_spark.operators.corpus import mix_accept
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     # the planning stats: both divisions are single correctly-rounded IEEE
@@ -763,12 +763,9 @@ def q_stream_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     rates = F.create_map(*rate_entries)
     path, _ = _replay_info(spark, sf_dir, "mix_docs", lambda: docs)
     stream = spark.readStream.schema(docs.schema).parquet(path)
-    u32 = md5_long(
-        F.concat(F.lit(MIX_SEED + "|"), F.col("doc_id").cast("string")), hex_chars=8
+    accepted = stream.filter(mix_accept(rates[F.col("source")])).select(
+        "doc_id", "source"
     )
-    accepted = stream.filter(
-        (u32.cast("double") / F.lit(4294967296.0)) < rates[F.col("source")]
-    ).select("doc_id", "source")
     # stateless filter: no rows= state sizing
     return run_replay(spark, sf_dir, "q_stream_mix_rebalance", accepted)
 
@@ -1251,6 +1248,7 @@ ORACLE: dict[str, str] = {
 # oracle is shared verbatim with q_mix_rebalance_rate
 from kitkat_spark.operators import corpus as _corpus  # noqa: E402
 from kitkat_spark.operators import dedup as _dedup  # noqa: E402
+from kitkat_spark.operators import textops as _textops  # noqa: E402
 
 ORACLE["q_stream_mix_rebalance"] = _corpus.ORACLE["q_mix_rebalance_rate"]
 
@@ -1367,13 +1365,13 @@ def q_stream_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Read-time classification: the sealed dictionary is the per-gram df
     summed over emitted windows (a doc lives in exactly one window, so
     this equals document frequency over the sealed horizon); documents of
-    the emitted windows are then classified with the BATCH query's exact
-    roll-up — a gram is commodity when df * 1000 > n_docs *
-    BOILER_DF_PERMILLE,
-    both sides exact integers. The oracle is q_boilerplate_coverage's SQL
-    filtered to the sealed horizon (window_end <= max ingest ts - 10 min,
-    i.e. (doc_id div 60 + 1) * 60 <= max(doc_id) - 10 on the token-bearing
-    docs), per the round-13 verdict's done-criterion. Joining the
+    the emitted windows are then classified by the BATCH query's own
+    roll-up (corpus.boiler_doc_rollup) — a gram is commodity when df * 1000
+    > n_docs * BOILER_DF_PERMILLE, both sides exact integers. The oracle is
+    q_boilerplate_coverage's SQL filtered to the sealed horizon
+    (window_end <= max ingest ts - 10 min, i.e. (doc_id div 60 + 1) * 60
+    <= max(doc_id) - 10 on the token-bearing docs), per the round-13
+    verdict's done-criterion. Joining the
     classifier on the EMITTED window set (not a recomputed horizon) makes
     the driver hash a real emission audit: a window Spark failed to seal,
     or sealed early, diverges from the oracle loudly.
@@ -1384,23 +1382,13 @@ def q_stream_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     refreshed per window). The read-time classify shuffles on the gram fp
     (keyed join, no all-pairs) and the doc-count is a 1-row broadcast."""
     from kitkat_spark.functions.text import tokens
-    from kitkat_spark.operators.corpus import BOILER_DF_PERMILLE
+    from kitkat_spark.operators.corpus import boiler_doc_rollup, trigram_fps
 
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select("doc_id", tokens(F.col("text")).alias("w")).filter(
         F.size("w") >= 3
     )
-    pairs = d.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("w") - 2),
-                    lambda p: F.md5(F.concat_ws(" ", F.slice("w", p, 3))),
-                )
-            )
-        ).alias("fp"),
-    )
+    pairs = d.select("doc_id", trigram_fps("w").alias("fp"))
     feed = pairs.select("doc_id", "fp", _doc_ingest_ts().alias("ts"))
     path, n_rows = _replay_info(spark, sf_dir, "boiler_grams", lambda: feed)
     # read-time classify consumes the SAME (doc_id, fp, ts) rows the replay
@@ -1430,32 +1418,7 @@ def q_stream_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(sealed_wins), "w_end")
     )
     n_docs = sealed_pairs.agg(F.countDistinct("doc_id").alias("n_docs"))
-    return (
-        sealed_pairs.join(gram_df, "fp")
-        .crossJoin(F.broadcast(n_docs))
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_grams"),
-            F.sum(
-                (F.col("df") * 1000 > F.col("n_docs") * BOILER_DF_PERMILLE).cast(
-                    "long"
-                )
-            ).alias("n_boiler"),
-        )
-        .select(
-            "doc_id",
-            "n_grams",
-            "n_boiler",
-            # integer micro-units, not round(x, 4) (the q_minhash_merge
-            # cross-engine rounding lesson)
-            (
-                F.round(F.col("n_boiler") / F.col("n_grams") * 10000).cast(
-                    "long"
-                )
-                / F.lit(10000.0)
-            ).alias("boiler_frac"),
-        )
-    )
+    return boiler_doc_rollup(sealed_pairs.join(gram_df, "fp"), n_docs)
 
 
 # The batch boilerplate audit filtered to the sealed horizon: the ingest
@@ -1540,9 +1503,10 @@ def q_stream_passjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing vs the from-scratch join."""
     from kitkat_spark.operators.dedup import (
         _PASS_M,
-        PASSJOIN_K,
-        _pass_layout,
-        passjoin_triples,
+        passjoin_index,
+        passjoin_pairs,
+        passjoin_probe,
+        passjoin_verify,
     )
 
     par = spark.sparkContext.defaultParallelism
@@ -1552,64 +1516,14 @@ def q_stream_passjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = all_docs.agg(
         F.expr("(max(doc_id) + 1) * 4 div 5").alias("cut")
     ).first()[0]
-    # one scan + one fan-out shuffle, pinned: segments()/probes()/src all
-    # consume the doc set once per wave, and a lazy lineage would re-scan
+    # one scan + one fan-out shuffle, pinned: the index, probe and text
+    # structures all consume the doc set, and a lazy lineage would re-scan
     # and re-shuffle the parquet for every one of those writes
     docs = (
         all_docs.filter(F.col("n_chars") >= _PASS_M)
         .repartition(par)
         .localCheckpoint(eager=True)
     )
-    tdf = spark.createDataFrame(
-        passjoin_triples(), "delta int, i int, d int"
-    )
-
-    def segments(df: DataFrame) -> DataFrame:
-        i_col = F.explode(F.sequence(F.lit(0), F.lit(_PASS_M - 1))).alias("i")
-        seg_len, seg_start = _pass_layout(F.col("len_s"), F.col("i"))
-        return df.select(
-            F.col("doc_id").alias("id_s"),
-            F.col("n_chars").alias("len_s"),
-            "text",
-            i_col,
-        ).select(
-            "id_s",
-            "len_s",
-            "i",
-            F.xxhash64(
-                F.substring("text", seg_start + 1, seg_len)
-            ).alias("seg"),
-        )
-
-    def probes(df: DataFrame) -> DataFrame:
-        p_len, p_start = _pass_layout(F.col("len_s"), F.col("i"))
-        return (
-            df.select(
-                F.col("doc_id").alias("id_r"),
-                F.col("n_chars").alias("len_r"),
-                "text",
-                F.lit(1).alias("one"),
-            )
-            .join(F.broadcast(tdf.withColumn("one", F.lit(1))), "one")
-            .withColumn("len_s", F.col("len_r") - F.col("delta"))
-            .filter(F.col("len_s") >= _PASS_M)
-            .select(
-                "id_r", "len_r", "len_s", "text", "i",
-                p_len.alias("sl"), (p_start + F.col("d")).alias("q"),
-            )
-            .filter(
-                (F.col("q") >= 0) & (F.col("q") + F.col("sl") <= F.col("len_r"))
-            )
-            .select(
-                "id_r",
-                "len_r",
-                "len_s",
-                "i",
-                F.xxhash64(
-                    F.substring("text", F.col("q") + 1, F.col("sl"))
-                ).alias("seg"),
-            )
-        )
 
     # The corpus-side standing structures are IMMUTABLE deployment state
     # (built once when the corpus was indexed, long before any ingest
@@ -1625,9 +1539,13 @@ def q_stream_passjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         path, _ = _replay_info(spark, sf_dir, variant, lambda: build(corpus))
         return spark.read.schema(schema).parquet(path).unionByName(build(ingest))
 
-    st_index = standing("pj_index", segments, "id_s long, len_s long, i int, seg long")
+    st_index = standing(
+        "pj_index", passjoin_index, "id_s long, len_s long, i int, seg long"
+    )
     st_probes = standing(
-        "pj_probes", probes, "id_r long, len_r long, len_s long, i int, seg long"
+        "pj_probes",
+        lambda df: passjoin_probe(spark, df),
+        "id_r long, len_r long, len_s long, i int, seg long",
     )
     st_texts = standing(
         "pj_texts", lambda df: df, "doc_id long, text string, n_chars long"
@@ -1651,43 +1569,11 @@ def q_stream_passjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
         # in q_stream_incr_dedup): a pair discovered through both
         # directions is collapsed at read time, so no per-batch state
         # store has to spin up for a candidate-sized distinct.
-        d1 = probes(stream).join(st_index, ["len_s", "i", "seg"])
-        d2 = segments(stream).join(st_probes, ["len_s", "i", "seg"])
+        d1 = passjoin_probe(spark, stream).join(st_index, ["len_s", "i", "seg"])
+        d2 = passjoin_index(stream).join(st_probes, ["len_s", "i", "seg"])
         cols = ["id_s", "len_s", "id_r", "len_r"]
-        cand = (
-            d1.select(*cols)
-            .unionByName(d2.select(*cols))
-            .filter(
-                (F.col("len_s") < F.col("len_r"))
-                | (F.col("id_s") < F.col("id_r"))
-            )
-            .select(
-                F.least("id_s", "id_r").alias("doc_a"),
-                F.greatest("id_s", "id_r").alias("doc_b"),
-                F.greatest("len_s", "len_r").alias("mx"),
-            )
-        )
-        ta = st_texts.select(
-            F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a")
-        )
-        tb = st_texts.select(
-            F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b")
-        )
-        lev = F.levenshtein("text_a", "text_b", PASSJOIN_K)
-        return (
-            cand.join(ta, "doc_a")
-            .join(tb, "doc_b")
-            .select("doc_a", "doc_b", "mx", lev.alias("lev"))
-            .filter((F.col("lev") >= 0) & (F.col("lev") <= PASSJOIN_K))
-            .select(
-                "doc_a",
-                "doc_b",
-                "lev",
-                F.round(F.col("lev") * 1.0 / F.col("mx"), 4).alias(
-                    "rel_dist"
-                ),
-            )
-        )
+        matches = d1.select(*cols).unionByName(d2.select(*cols))
+        return passjoin_verify(passjoin_pairs(matches), st_texts)
 
     # stateless replay (no rows=); collapse multi-segment / bidirectional
     # re-discoveries of the same pair (exact duplicate rows by construction
@@ -1718,24 +1604,22 @@ ORACLE["q_stream_passjoin"] = f"""
     """
 
 
-FERT_STREAM_DRIFT_PCT = 3  # same cut as the batch op (textops.FERT_DRIFT_PCT)
-
-
 def q_stream_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_fertility_drift (operators/textops.py) — the
     per-source tokenizer-budget early-warning maintained at INGEST time
     (round-14 survey worklist): documents arrive on the synthetic
     1-doc/min ingest clock, each contributes its whitespace-word / regex-
     token / char counts, and a watermarked 1-hour windowed aggregate keeps
-    per-(window, source) token sums in the state store. Sealed windows
-    emit their cohort rows once in append mode; the DRIFT CLASSIFICATION
-    composes at read time over the sealed history — each sealed cohort's
-    fertility (regex tokens per word) and chars-per-token are compared to
-    the TRAILING cumulative over that source's earlier sealed windows, and
-    the flag fires when either ratio moves more than FERT_STREAM_DRIFT_PCT
-    percent (1e-4 integer micro-units on both sides of every compare; a
-    source's first sealed window has no trailing, so its trailing columns
-    and flag are NULL in both engines).
+    per-(window, source) token sums in the state store (the batch op's
+    textops.fertility_counts / fertility_sums). Sealed windows emit their
+    cohort rows once in append mode; the DRIFT CLASSIFICATION composes at
+    read time over the sealed history (textops.fertility_drift) — each
+    sealed cohort's fertility (regex tokens per word) and chars-per-token
+    are compared to the TRAILING cumulative over that source's earlier
+    sealed windows, and the flag fires when either ratio moves more than
+    textops.FERT_DRIFT_PCT percent (1e-4 integer micro-units on both sides
+    of every compare; a source's first sealed window has no trailing, so
+    its trailing columns and flag are NULL in both engines).
 
     The batch op cohorts by 100-doc ingest buckets; the streaming cohort
     is the 60-doc hour the ingest clock defines — the oracle replays
@@ -1751,76 +1635,27 @@ def q_stream_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     function runs on the config-sized sealed table (sources x hours), so
     the single-partition-per-source window never sees corpus-sized
     data."""
-    from pyspark.sql import Window as W
-
-    from kitkat_spark.operators.textops import TOKEN_RE
+    from kitkat_spark.operators.textops import (
+        fertility_counts,
+        fertility_drift,
+        fertility_sums,
+    )
 
     docs = load_table(spark, sf_dir, "documents")
-    feed = docs.select(
-        "source",
-        F.size(F.split("text", " ")).cast("long").alias("ws"),
-        F.size(
-            F.regexp_extract_all(F.col("text"), F.lit(TOKEN_RE), F.lit(0))
-        ).cast("long").alias("re_t"),
-        F.length("text").cast("long").alias("ch"),
-        _doc_ingest_ts().alias("ts"),
-    )
+    feed = docs.select("source", *fertility_counts(), _doc_ingest_ts().alias("ts"))
     path, n_rows = _replay_info(spark, sf_dir, "fert_feed", lambda: feed)
     stream = (
         spark.readStream.schema(feed.schema)
         .parquet(path)
         .withWatermark("ts", f"{DOC_WM_MINUTES} minutes")
         .groupBy(F.window("ts", "1 hour").alias("wdw"), "source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("ws").alias("n_words"),
-            F.sum("re_t").alias("n_tokens"),
-            F.sum("ch").alias("n_chars"),
-        )
+        .agg(*fertility_sums())
         .select(F.col("wdw.end").alias("w_end"), "source", "n_docs",
                 "n_words", "n_tokens", "n_chars")
     )
     sealed = run_replay(spark, sf_dir, "q_stream_fertility", stream, rows=n_rows)
-    w = (
-        W.partitionBy("source")
-        .orderBy("bucket")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    cohorts = sealed.select(
-        "source",
-        (
-            (F.unix_timestamp("w_end") - F.lit(DOC_TS_BASE_S)) / 3600 - 1
-        ).cast("long").alias("bucket"),
-        "n_docs",
-        "n_words",
-        "n_tokens",
-        "n_chars",
-    )
-    fm = F.round(F.col("n_tokens") / F.col("n_words") * 10000).cast("long")
-    cm = F.round(F.col("n_chars") / F.col("n_tokens") * 10000).cast("long")
-    ft = F.round(
-        F.sum("n_tokens").over(w) / F.sum("n_words").over(w) * 10000
-    ).cast("long")
-    ct = F.round(
-        F.sum("n_chars").over(w) / F.sum("n_tokens").over(w) * 10000
-    ).cast("long")
-    pct = F.lit(FERT_STREAM_DRIFT_PCT)
-    return cohorts.select(
-        "source",
-        "bucket",
-        "n_docs",
-        "n_words",
-        "n_tokens",
-        "n_chars",
-        (fm / F.lit(10000.0)).alias("fertility"),
-        (ft / F.lit(10000.0)).alias("trailing_fertility"),
-        (cm / F.lit(10000.0)).alias("chars_per_token"),
-        (ct / F.lit(10000.0)).alias("trailing_cpt"),
-        (
-            (F.abs(fm - ft) * 100 > ft * pct)
-            | (F.abs(cm - ct) * 100 > ct * pct)
-        ).alias("drift"),
-    )
+    bucket = (F.unix_timestamp("w_end") - F.lit(DOC_TS_BASE_S)) / 3600 - 1
+    return fertility_drift(sealed.withColumn("bucket", bucket.cast("long")))
 
 
 # The batch fertility-drift computation on the ingest clock's 60-doc hour
@@ -1867,13 +1702,25 @@ ORACLE["q_stream_fertility"] = f"""
                ft / 10000.0 AS trailing_fertility,
                cm / 10000.0 AS chars_per_token,
                ctr / 10000.0 AS trailing_cpt,
-               (abs(fm - ft) * 100 > ft * {FERT_STREAM_DRIFT_PCT}
-                OR abs(cm - ctr) * 100 > ctr * {FERT_STREAM_DRIFT_PCT}) AS drift
+               (abs(fm - ft) * 100 > ft * {_textops.FERT_DRIFT_PCT}
+                OR abs(cm - ctr) * 100 > ctr * {_textops.FERT_DRIFT_PCT}) AS drift
         FROM units
     """
 
 
 TTL_WAVES = 3  # ingest waves replayed through the TTL'd fingerprint state
+
+
+def _ttl_waves(docs: DataFrame) -> tuple[int, list]:
+    """(span, wave filters) of a doc_id frame: its doc_id span and
+    TTL_WAVES ascending, equal-width doc_id ranges covering it."""
+    mn, mx = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
+    span = int(mx) + 1 - int(mn)
+    bounds = [int(mn) + (span * i) // TTL_WAVES for i in range(TTL_WAVES + 1)]
+    return span, [
+        (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
+        for lo, hi in zip(bounds, bounds[1:])
+    ]
 
 
 def q_stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1928,9 +1775,7 @@ def q_stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one scan + one fingerprint pass, pinned: every wave's write consumes
     # this projection, and a lazy lineage would re-scan and re-md5 per wave
     d = docs.select("doc_id", fp.alias("fp")).localCheckpoint(eager=True)
-    mn, mx = d.agg(F.min("doc_id"), F.max("doc_id")).first()
-    span = int(mx) + 1 - int(mn)
-    bounds = [int(mn) + (span * i) // TTL_WAVES for i in range(TTL_WAVES + 1)]
+    span, waves = _ttl_waves(d)
 
     out_schema = (
         "doc_id long, fp string, prev_gap long, kept boolean, "
@@ -1978,10 +1823,7 @@ def q_stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         rows=span,
         pandas_state=True,
-        waves=[
-            d.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-            for lo, hi in zip(bounds, bounds[1:])
-        ],
+        waves=[d.filter(w) for w in waves],
     )
 
 
@@ -2000,7 +1842,8 @@ def q_stream_boiler_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     document frequencies in the state store. Sealed windows emit once in
     append mode; the GOVERNANCE roll-up (who reuses boilerplate vs who
     INJECTS it — the dominance column) composes at read time over the
-    sealed dictionary with the batch query's exact integer semantics:
+    sealed dictionary through the batch query's own roll-up
+    (corpus.boiler_source_rollup):
     per-(gram, source) df rolls up to the gram's corpus df (a doc lives
     in exactly one window, so window sums are document frequencies over
     the sealed horizon), a gram is commodity when df * 1000 > n_docs *
@@ -2017,24 +1860,13 @@ def q_stream_boiler_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     are keyed on the gram fp (pre-aggregated, candidates ~ vocabulary)
     and the doc count is a 1-row broadcast."""
     from kitkat_spark.functions.text import tokens
-    from kitkat_spark.operators.corpus import BOILER_DF_PERMILLE
+    from kitkat_spark.operators.corpus import boiler_source_rollup, trigram_fps
 
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id", "source", tokens(F.col("text")).alias("w")
     ).filter(F.size("w") >= 3)
-    pairs = d.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("w") - 2),
-                    lambda p: F.md5(F.concat_ws(" ", F.slice("w", p, 3))),
-                )
-            )
-        ).alias("fp"),
-    )
+    pairs = d.select("doc_id", "source", trigram_fps("w").alias("fp"))
     feed = pairs.select("doc_id", "source", "fp", _doc_ingest_ts().alias("ts"))
     path, n_rows = _replay_info(spark, sf_dir, "boiler_src_grams", lambda: feed)
     # same r14 optimization as q_stream_boilerplate: the read-time roll-up
@@ -2054,7 +1886,6 @@ def q_stream_boiler_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, "q_stream_boiler_sources", stream, rows=n_rows
     )
     src_df = sealed.groupBy("fp", "source").agg(F.sum("df_ws").alias("df_src"))
-    gram_df = src_df.groupBy("fp").agg(F.sum("df_src").alias("df"))
     sealed_wins = sealed.select("w_end").distinct()
     sealed_pairs = (
         feed_back.withColumn("wdw", F.window(F.col("ts"), "1 hour"))
@@ -2064,43 +1895,7 @@ def q_stream_boiler_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = sealed_pairs.agg(
         F.countDistinct("doc_id").alias("n_docs_corpus")
     )
-    commodity = (
-        gram_df.crossJoin(F.broadcast(n_docs))
-        .filter(F.col("df") * 1000 > F.col("n_docs_corpus") * BOILER_DF_PERMILLE)
-        .select("fp", "df")
-    )
-    hits = (
-        sealed_pairs.join(
-            commodity.select("fp", F.lit(True).alias("boiler")), "fp", "left"
-        )
-        .groupBy("source")
-        .agg(
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.count("*").alias("n_hits"),
-            F.sum(F.col("boiler").isNotNull().cast("long")).alias(
-                "n_boiler_hits"
-            ),
-        )
-    )
-    dominated = (
-        src_df.join(commodity, "fp")
-        .filter(F.col("df_src") * 2 > F.col("df"))
-        .groupBy("source")
-        .agg(F.count("*").alias("n_dominated"))
-    )
-    return hits.join(dominated, "source", "left").select(
-        "source",
-        "n_docs",
-        "n_hits",
-        "n_boiler_hits",
-        (
-            F.round(F.col("n_boiler_hits") / F.col("n_hits") * 10000).cast(
-                "long"
-            )
-            / F.lit(10000.0)
-        ).alias("boiler_frac"),
-        F.coalesce("n_dominated", F.lit(0)).alias("n_dominated"),
-    )
+    return boiler_source_rollup(sealed_pairs, src_df, n_docs)
 
 
 # The batch per-source attribution filtered to the sealed horizon (the
@@ -2208,9 +2003,7 @@ def q_stream_ttl_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wave bounds from a doc_id-only scan (column-pruned, no md5): the
     # fingerprint projection has a single consumer (the wave staging), so
     # the r14 localCheckpoint pin is no longer needed (r15)
-    mn, mx = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
-    span = int(mx) + 1 - int(mn)
-    bounds = [int(mn) + (span * i) // TTL_WAVES for i in range(TTL_WAVES + 1)]
+    span, waves = _ttl_waves(docs)
 
     out_schema = "doc_id long, fp string, kept boolean"
 
@@ -2256,10 +2049,7 @@ def q_stream_ttl_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         rows=span,
         pandas_state=True,
-        waves=[
-            feed.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-            for lo, hi in zip(bounds, bounds[1:])
-        ],
+        waves=[feed.filter(w) for w in waves],
         one_run=True,
     )
 

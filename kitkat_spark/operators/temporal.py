@@ -1,8 +1,9 @@
 """Temporal / windowed operators (SURVEY.md §2.B, M2).
 
-Batch analogs of the streaming surface so the DuckDB oracle can verify them;
-the true streaming versions (watermarks, session_window state) live in
-kitkat_spark/streaming/ and share these column expressions.
+Batch analogs of the streaming surface so the DuckDB oracle can verify them.
+q_stream_tumbling and q_stream_sliding ARE the streaming transforms
+(streaming/analytics.py) run over the batch table; the other streaming
+versions (watermarks, session_window state) live in kitkat_spark/streaming/.
 
 Scale notes:
 - Tumbling/sliding aggregation is a single hash-agg shuffle keyed by
@@ -25,34 +26,22 @@ from pyspark.sql import functions as F
 
 from kitkat_spark.functions.numeric import dsum, dsum_sql
 from kitkat_spark.sources import load_table
+from kitkat_spark.streaming.analytics import sliding_counts, tumbling_counts
 
 SESSION_GAP_MINUTES = 30
 
 
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hour tumbling event counts per type (epoch-aligned, matches
-    date_trunc). Streaming twin: streaming/consumer.py windowed_counts."""
-    events = load_table(spark, sf_dir, "events")
-    return (
-        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), dsum("value").alias("sum_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    """1-hour tumbling event counts and value sums per type: the streaming
+    transform streaming/analytics.py tumbling_counts, run over the batch
+    ``events`` table."""
+    return tumbling_counts(load_table(spark, sf_dir, "events"))
 
 
 def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1-hour window sliding every 15 min: each event lands in 4 buckets."""
-    events = load_table(spark, sf_dir, "events")
-    return (
-        events.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
+    """1-hour window sliding every 15 min (each event lands in 4 buckets):
+    streaming/analytics.py sliding_counts over the batch ``events`` table."""
+    return sliding_counts(load_table(spark, sf_dir, "events"))
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:

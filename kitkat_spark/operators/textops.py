@@ -8,7 +8,7 @@ same thing in Java regex (Spark) and RE2 (DuckDB).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from kitkat_spark.functions.text import fingerprint_md5, tokens
@@ -878,18 +878,40 @@ def q_fertility_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = docs.select(
         "source",
         F.expr(f"doc_id div {FERT_BUCKET_DOCS}").alias("bucket"),
+        *fertility_counts(),
+    )
+    return fertility_drift(per.groupBy("source", "bucket").agg(*fertility_sums()))
+
+
+def fertility_counts() -> list[Column]:
+    """Per-doc (ws, re_t, ch): whitespace words, TOKEN_RE tokens and
+    chars of ``text``, as longs."""
+    return [
         F.size(tokens(F.col("text"))).cast("long").alias("ws"),
         F.size(
             F.regexp_extract_all(F.col("text"), F.lit(TOKEN_RE), F.lit(0))
         ).cast("long").alias("re_t"),
         F.length("text").cast("long").alias("ch"),
-    )
-    agg = per.groupBy("source", "bucket").agg(
+    ]
+
+
+def fertility_sums() -> list[Column]:
+    """Cohort aggregates of fertility_counts rows: n_docs, n_words,
+    n_tokens, n_chars."""
+    return [
         F.count("*").alias("n_docs"),
         F.sum("ws").alias("n_words"),
         F.sum("re_t").alias("n_tokens"),
         F.sum("ch").alias("n_chars"),
-    )
+    ]
+
+
+def fertility_drift(cohorts: DataFrame) -> DataFrame:
+    """The drift classifier over a (source, bucket, n_docs, n_words,
+    n_tokens, n_chars) cohort frame: each cohort's fertility and
+    chars-per-token against the trailing cumulative of the source's
+    earlier buckets, flagged past FERT_DRIFT_PCT. Shared by
+    q_fertility_drift and q_stream_fertility."""
     w = (
         W.partitionBy("source")
         .orderBy("bucket")
@@ -904,7 +926,7 @@ def q_fertility_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_chars").over(w) / F.sum("n_tokens").over(w) * 10000
     ).cast("long")
     pct = F.lit(FERT_DRIFT_PCT)
-    return agg.select(
+    return cohorts.select(
         "source",
         F.col("bucket").cast("long").alias("bucket"),
         "n_docs",

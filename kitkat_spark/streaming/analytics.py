@@ -1,10 +1,13 @@
-"""Streaming-native analytics: the q_stream_* batch analogs as REAL
-Structured Streaming transforms with watermarks and state.
+"""Streaming-native analytics: windowed counts, sessions, dedup and
+interval joins as Structured Streaming transforms with watermarks and state.
 
-The driver oracle checks the batch analogs (operators/temporal.py); this
-module is the production streaming form of the same operators, tested by
-replaying ``events`` through a file source and asserting the streaming
-result equals the batch result (the exactly-once contract).
+Each transform runs unchanged over a batch or a streaming frame; only a
+streaming input gets the watermark. The registry's batch windows call it
+(operators/temporal.py q_stream_tumbling and q_stream_sliding are
+``tumbling_counts`` and ``sliding_counts`` over ``events``), so the driver
+oracle checks this code; tests replay ``events`` through a file source and
+assert the streaming result equals the batch result (the exactly-once
+contract).
 
 State sizing at 100 TB (SURVEY.md §4): state per key-window is O(aggregate
 size), evicted at watermark; with a 10-minute delay and ~1e6 active
@@ -20,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kitkat_spark.functions.numeric import dsum
+
 DEFAULT_WATERMARK = "10 minutes"
 
 
@@ -29,20 +34,21 @@ def tumbling_counts(
     watermark: str = DEFAULT_WATERMARK,
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Watermarked tumbling-window counts per event_type (streaming form of
-    q_stream_tumbling). Late rows beyond the watermark are dropped; the
-    window close emits exactly one final row per (window, event_type) in
-    append mode."""
+    """Watermarked tumbling-window event counts and exact value sums
+    (``dsum``) per event_type; epoch-aligned, so a 1-hour window matches
+    date_trunc. Late rows beyond the watermark are dropped; the window
+    close emits exactly one final row per (window, event_type) in append
+    mode."""
     if events.isStreaming:
         events = events.withWatermark(ts_col, watermark)
     return (
         events.groupBy(F.window(F.col(ts_col), window).alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.sum("value").alias("total_value"))
+        .agg(F.count("*").alias("n_events"), dsum("value").alias("sum_value"))
         .select(
             F.col("w.start").alias("window_start"),
             "event_type",
             "n_events",
-            "total_value",
+            "sum_value",
         )
     )
 
@@ -54,8 +60,8 @@ def sliding_counts(
     watermark: str = DEFAULT_WATERMARK,
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Watermarked sliding-window aggregate (q_stream_sliding streaming
-    form). Each event lands in window/slide buckets — state is
+    """Watermarked sliding-window event counts per event_type. Each event
+    lands in window/slide buckets (4 by default) — state is
     (window/slide)x larger than tumbling; watermark eviction bounds it."""
     if events.isStreaming:
         events = events.withWatermark(ts_col, watermark)

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from kitkat_spark.streaming.records import kinesis_client
+
 PUT_BATCH_MAX = 500  # public PutRecords limit
 ACK_SAMPLE = 20  # max acks retained per partition / returned to the driver
 # --aggregated: lines packed per KPL blob. The KPL library packs to a byte
@@ -53,41 +55,24 @@ def assign_partition_key(df: DataFrame, key: str | None = None, line_col: str = 
 PutRecordsFn = Callable[[list[tuple[str, bytes]]], list[tuple[str, str]]]
 
 
-# Per-process boto3 client cache: the PutRecordsFn closure ships to
-# executors via pickle, and a botocore client is NOT picklable — so the
-# boto3 path must capture only (stream, region) strings and build/reuse the
-# client inside the task process (executors re-import this module).
-_BOTO3_CLIENTS: dict[str | None, object] = {}
-
-
-def _boto3_client(region: str | None):
-    cli = _BOTO3_CLIENTS.get(region)
-    if cli is None:
-        import boto3  # type: ignore[import-not-found]
-
-        cli = _BOTO3_CLIENTS[region] = boto3.client("kinesis", region_name=region)
-    return cli
-
-
 def kinesis_put_records(
     stream_name: str, region: str | None = None, client=None
 ) -> PutRecordsFn:
     """Production sink callable. ``client`` is the injection seam (any
     boto3-shaped object with ``put_records`` — the reference's mockKinesis
     pattern, consumer/consumer_test.go:20-37); without one, boto3 must be
-    importable and the real client is built lazily PER EXECUTOR PROCESS
-    (never captured in the closure — see ``_BOTO3_CLIENTS``)."""
+    importable: the driver builds a client once to fail fast, and each
+    executor process builds its own on first put (never captured in the
+    closure — see ``records.kinesis_client``)."""
+    missing = (
+        "boto3 unavailable; pass a boto3-shaped `client` or inject "
+        "your own PutRecordsFn (tests do)"
+    )
     if client is None:
-        try:
-            import boto3  # type: ignore[import-not-found]  # noqa: F401
-        except ImportError as exc:
-            raise NotImplementedError(
-                "boto3 unavailable; pass a boto3-shaped `client` or inject "
-                "your own PutRecordsFn (tests do)"
-            ) from exc
+        kinesis_client(region, missing)
 
     def put(batch: list[tuple[str, bytes]]) -> list[tuple[str, str]]:
-        c = client if client is not None else _boto3_client(region)
+        c = client if client is not None else kinesis_client(region, missing)
         resp = c.put_records(
             StreamName=stream_name,
             Records=[{"PartitionKey": k, "Data": d} for k, d in batch],

@@ -107,6 +107,27 @@ def kinesis_reader_options(
     return opts
 
 
+# Per-process boto3 client cache: a botocore client is NOT picklable, so a
+# closure that ships to executors captures only the region string and
+# builds/reuses the client inside the task process (executors re-import
+# this module).
+_BOTO3_CLIENTS: dict[str | None, object] = {}
+
+
+def kinesis_client(region: str | None, missing: str):
+    """This process's boto3 Kinesis client for ``region``, built once.
+    Raises ``NotImplementedError(missing)`` when boto3 is not importable,
+    so each caller names its own injection seam."""
+    cli = _BOTO3_CLIENTS.get(region)
+    if cli is None:
+        try:
+            import boto3  # type: ignore[import-not-found]
+        except ImportError as exc:
+            raise NotImplementedError(missing) from exc
+        cli = _BOTO3_CLIENTS[region] = boto3.client("kinesis", region_name=region)
+    return cli
+
+
 def batch_records(spark: SparkSession, path: str) -> DataFrame:
     """Batch scan of the same record directory (oracle/bench path)."""
     return spark.read.schema(RECORD_SCHEMA).parquet(path)
@@ -129,15 +150,12 @@ def describe_stream_df(
     API contract specifies.
     """
     if client is None:
-        try:
-            import boto3  # type: ignore[import-not-found]
-        except ImportError as exc:
-            raise NotImplementedError(
-                "boto3 is unavailable; pass a boto3-shaped `client` or build "
-                "meta/shard DataFrames with SHARD_SCHEMA/STREAM_META_SCHEMA "
-                "from your own DescribeStream call"
-            ) from exc
-        client = boto3.client("kinesis", region_name=region)  # pragma: no cover
+        client = kinesis_client(
+            region,
+            "boto3 is unavailable; pass a boto3-shaped `client` or build "
+            "meta/shard DataFrames with SHARD_SCHEMA/STREAM_META_SCHEMA "
+            "from your own DescribeStream call",
+        )
     shard_rows: list[tuple] = []
     kwargs: dict = {"StreamName": stream_name}
     while True:
@@ -259,13 +277,9 @@ def live_records_df(
     — driver-side polling is O(snapshot) and deliberately not a stream.
     Pass ``client=None`` to build a boto3 client for ``region``."""
     if client is None:
-        try:
-            import boto3  # type: ignore[import-not-found]
-        except ImportError as exc:
-            raise NotImplementedError(
-                "boto3 is unavailable; pass a boto3-shaped `client`"
-            ) from exc
-        client = boto3.client("kinesis", region_name=region)
+        client = kinesis_client(
+            region, "boto3 is unavailable; pass a boto3-shaped `client`"
+        )
     _, shards = describe_stream_df(spark, stream_name, client=client)
     rows: list[tuple] = []
     for s in open_shards(shards).collect():

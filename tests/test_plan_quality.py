@@ -470,10 +470,16 @@ def test_ann_index_delete_drop_list_broadcasts(spark):
 
 
 def test_stream_passjoin_probe_expansion_is_constant(spark):
-    """The probe relation join must be a broadcast of the ~800 constant
+    """The PassJoin probe expansion (q_passjoin_dedup and q_stream_passjoin
+    both run dedup.passjoin_probe) must be a broadcast of the ~800 constant
     (delta, i, d) triples — the per-doc expansion is map-side, with no
     shuffle between the doc scan and the substring hashing."""
-    from kitkat_spark.operators.dedup import passjoin_triples
+    from kitkat_spark.operators.dedup import passjoin_probe, passjoin_triples
+    from kitkat_spark.sources import load_table
 
     n = len(passjoin_triples())
     assert 700 <= n <= 900, n  # k=12 multi-match-aware window
+    docs = load_table(spark, SF, "documents").select("doc_id", "text", "n_chars")
+    probe = passjoin_probe(spark, docs)
+    assert shuffle_count(probe) == 0
+    assert broadcast_join_count(probe) == 1

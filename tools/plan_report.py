@@ -1,8 +1,8 @@
 #!/usr/bin/env python
-"""Regenerate PLAN_FACTS.md: one row per declared query with the physical
-plan's scale-relevant facts (shuffles, join strategies, Python-UDF nodes,
-pushed filters), read from the ACTUAL Catalyst plan at sf0.001.
-``recorded`` reads the file back for tests/test_oracle_parity.py.
+"""Regenerate PLAN_FACTS.md: one row per declared query with the two
+physical-plan facts test_parity gates (shuffles and Python-UDF nodes),
+read from the ACTUAL Catalyst plan at sf0.001. ``recorded`` reads the file
+back for tests/test_oracle_parity.py.
 
 Run: python tools/plan_report.py
 """
@@ -22,18 +22,18 @@ from kitkat_spark.session import get_spark  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
 PLAN_FACTS = os.path.join(REPO, "PLAN_FACTS.md")
-# query, shuffles, broadcast joins, sort-merge joins, py-UDF nodes
-_ROW = re.compile(r"^\| (q_\w+) \| (\d+) \| \d+ \| \d+ \| (\d+) \|")
+# query, shuffles, py-UDF nodes
+_ROW = re.compile(r"^\| (q_\w+) \| (\d+) \| (\d+) \|")
 
 HEADER = """# PLAN FACTS — physical-plan shape per query (generated)
 
 Generated by `tools/plan_report.py` from the live Catalyst plan at sf0.001.
-Columns: Exchange (shuffle) count, broadcast vs sort-merge join counts,
-Arrow/Python UDF nodes, and whether the parquet scan carries pushed filters.
+Columns: Exchange (shuffle) count and Arrow/Python UDF nodes — the two
+facts `test_parity` holds each query to (live count <= recorded).
 Regenerate after plan-affecting changes.
 
-| query | shuffles | broadcast joins | sort-merge joins | py-UDF nodes | pushed filters |
-|---|---|---|---|---|---|
+| query | shuffles | py-UDF nodes |
+|---|---|---|
 """
 
 
@@ -48,11 +48,7 @@ def main() -> None:
     lines = [HEADER]
     for name in sorted(QUERIES):
         f = plan_facts(QUERIES[name](spark, SF))
-        pushed = "yes" if any(p.strip() for p in f["pushed_filters"]) else "—"
-        lines.append(
-            f"| {name} | {f['shuffles']} | {f['broadcast_joins']} | "
-            f"{f['sortmerge_joins']} | {f['python_udf_nodes']} | {pushed} |\n"
-        )
+        lines.append(f"| {name} | {f['shuffles']} | {f['python_udf_nodes']} |\n")
     with open(PLAN_FACTS, "w") as fh:
         fh.writelines(lines)
     print(f"wrote {PLAN_FACTS} ({len(QUERIES)} queries)")
