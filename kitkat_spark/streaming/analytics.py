@@ -25,24 +25,25 @@ from pyspark.sql import functions as F
 
 from kitkat_spark.functions.numeric import dsum
 
-DEFAULT_WATERMARK = "10 minutes"
+# event-time column, watermark delay and window shapes of every transform here
+TS_COL = "ts"
+WATERMARK = "10 minutes"
+WINDOW = "1 hour"
+SLIDE = "15 minutes"
+SESSION_GAP = "30 minutes"
+JOIN_GAP = "10 minutes"
 
 
-def tumbling_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = DEFAULT_WATERMARK,
-    ts_col: str = "ts",
-) -> DataFrame:
+def tumbling_counts(events: DataFrame) -> DataFrame:
     """Watermarked tumbling-window event counts and exact value sums
     (``dsum``) per event_type; epoch-aligned, so a 1-hour window matches
     date_trunc. Late rows beyond the watermark are dropped; the window
     close emits exactly one final row per (window, event_type) in append
     mode."""
     if events.isStreaming:
-        events = events.withWatermark(ts_col, watermark)
+        events = events.withWatermark(TS_COL, WATERMARK)
     return (
-        events.groupBy(F.window(F.col(ts_col), window).alias("w"), "event_type")
+        events.groupBy(F.window(F.col(TS_COL), WINDOW).alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), dsum("value").alias("sum_value"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -53,38 +54,27 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str = DEFAULT_WATERMARK,
-    ts_col: str = "ts",
-) -> DataFrame:
+def sliding_counts(events: DataFrame) -> DataFrame:
     """Watermarked sliding-window event counts per event_type. Each event
-    lands in window/slide buckets (4 by default) — state is
-    (window/slide)x larger than tumbling; watermark eviction bounds it."""
+    lands in WINDOW/SLIDE = 4 buckets — state is
+    4x larger than tumbling; watermark eviction bounds it."""
     if events.isStreaming:
-        events = events.withWatermark(ts_col, watermark)
+        events = events.withWatermark(TS_COL, WATERMARK)
     return (
-        events.groupBy(F.window(F.col(ts_col), window, slide).alias("w"), "event_type")
+        events.groupBy(F.window(F.col(TS_COL), WINDOW, SLIDE).alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
     )
 
 
-def session_counts(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = DEFAULT_WATERMARK,
-    ts_col: str = "ts",
-) -> DataFrame:
+def session_counts(events: DataFrame) -> DataFrame:
     """Session windows per user (q_sessionize streaming form) via the native
     ``session_window`` — dynamic-gap state merged by the state store, not a
     gap-and-island window function (that's the batch/oracle analog)."""
     if events.isStreaming:
-        events = events.withWatermark(ts_col, watermark)
+        events = events.withWatermark(TS_COL, WATERMARK)
     return (
-        events.groupBy(F.session_window(F.col(ts_col), gap).alias("s"), "user_id")
+        events.groupBy(F.session_window(F.col(TS_COL), SESSION_GAP).alias("s"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
             F.col("s.start").alias("session_start"),
@@ -95,37 +85,27 @@ def session_counts(
     )
 
 
-def stream_dedup(
-    events: DataFrame,
-    keys: list[str] | None = None,
-    watermark: str = DEFAULT_WATERMARK,
-    ts_col: str = "ts",
-) -> DataFrame:
+def stream_dedup(events: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """Exact streaming dedup (q_dedup streaming form). With a watermark the
     key set is evicted as event time advances — bounded state, the only way
     dedup survives an unbounded stream; unbounded dropDuplicates state grows
     forever at 100 TB/day."""
     keys = keys or ["event_id"]
     if events.isStreaming:
-        events = events.withWatermark(ts_col, watermark)
+        events = events.withWatermark(TS_COL, WATERMARK)
         return events.dropDuplicatesWithinWatermark(keys)
     return events.dropDuplicates(keys)
 
 
-def interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    gap: str = "10 minutes",
-    watermark: str = DEFAULT_WATERMARK,
-) -> DataFrame:
+def interval_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """Stream-stream inner interval join: pair each left event with right
-    events of the SAME user arriving in [left.ts, left.ts + gap].
+    events of the SAME user arriving in [left.ts, left.ts + JOIN_GAP].
 
     Streaming semantics (the reference has no join at all — SURVEY §2.A
     "deliberately absent"; this is north-star surface): both sides carry a
     watermark and the join condition carries the time band, so each side's
     buffered state is evicted once the other side's watermark passes
-    ts + gap — state is O(rows per watermark horizon), not O(stream).
+    ts + JOIN_GAP — state is O(rows per watermark horizon), not O(stream).
     Without the band the state would be unbounded and Spark rejects the
     plan (UnsupportedOperationChecker), which is exactly the 100 TB-safe
     default.
@@ -136,21 +116,21 @@ def interval_join(
     l = left.select(
         "user_id",
         F.col("event_id").alias("l_id"),
-        F.col("ts").alias("l_ts"),
+        F.col(TS_COL).alias("l_ts"),
     )
     r = right.select(
         F.col("user_id").alias("r_user"),
         F.col("event_id").alias("r_id"),
-        F.col("ts").alias("r_ts"),
+        F.col(TS_COL).alias("r_ts"),
     )
     if l.isStreaming:
-        l = l.withWatermark("l_ts", watermark)
+        l = l.withWatermark("l_ts", WATERMARK)
     if r.isStreaming:
-        r = r.withWatermark("r_ts", watermark)
+        r = r.withWatermark("r_ts", WATERMARK)
     cond = (
         (F.col("user_id") == F.col("r_user"))
         & (F.col("r_ts") >= F.col("l_ts"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {gap}"))
+        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {JOIN_GAP}"))
         & (F.col("l_id") != F.col("r_id"))
     )
     return l.join(r, cond).select("user_id", "l_id", "r_id", "l_ts", "r_ts")
