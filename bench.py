@@ -9,8 +9,10 @@ Prints one ``# q_name = 1.234 s`` line per query, then ONE compact JSON
 object as the last stdout line: {"metric", "value": total_sec, "unit",
 "queries": slowest 10, "sf", "n_queries", "lanes", "throttled",
 "cpu_steal_share", "conf"}. It writes no file. ``throttled`` follows
-perfbench's rule: the CPU calibration at start and end more than 1.25x
-apart, a 1-min loadavg above nproc at start, or more than 5% CPU steal.
+perfbench's rule: the CPU calibrations at start and end more than 1.25x
+apart in either direction (the CPU got more than 25% slower OR faster
+during the run), a 1-min loadavg above nproc at start, or more than 5% CPU
+steal.
 
 We report wall seconds per query (count() to force full execution without
 driver-side result transfer dominating).
@@ -112,9 +114,10 @@ def main(names: list[str]) -> int:
     calib_cpu.append(calibrate_cpu())
     steal1, total1 = cpu_times()
     steal_share = (steal1 - steal0) / max(1, total1 - total0)
-    # perfbench/run.py's rule: the CPU got >25% slower during the run, the
-    # machine was oversubscribed when it started, or the hypervisor took
-    # more than 5% of its CPU time during the run
+    # perfbench/run.py's rule: the CPU speed drifted more than 25% either
+    # way during the run (slowest calibration over fastest, so a faster end
+    # fires too), the machine was oversubscribed when it started, or the
+    # hypervisor took more than 5% of its CPU time during the run
     throttled = (
         max(calib_cpu) > 1.25 * min(calib_cpu)
         or load0[0] > (os.cpu_count() or 1)

@@ -994,6 +994,33 @@ def lcp_span_fold(k: int) -> F.Column:
     )
 
 
+def _lcp_marked(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(d, marked): the token arrays (doc_id, w) of docs with >= LCP_GRAM
+    tokens, and every stride-1 LCP_GRAM-gram start (doc_id, p, dup) with
+    dup = its md5 fingerprint occurs more than once in the corpus — the
+    gram/mark stage q_lcp_dedup and q_longest_repeat share."""
+    k = LCP_GRAM
+    docs = load_table(spark, sf_dir, "documents")
+    d = docs.select("doc_id", tokens(F.col("text")).alias("w")).filter(
+        F.size("w") >= k
+    )
+    grams = d.select(
+        "doc_id",
+        F.explode(F.sequence(F.lit(1), F.size("w") - (k - 1))).alias("p"),
+        "w",
+    ).select(
+        "doc_id",
+        "p",
+        F.md5(F.concat_ws(" ", F.slice("w", F.col("p"), k))).alias("fp"),
+    )
+    marked = grams.select(
+        "doc_id",
+        "p",
+        (F.count("*").over(W.partitionBy("fp")) > 1).alias("dup"),
+    )
+    return d, marked
+
+
 def q_lcp_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring dedup audit (the suffix-array exact-substring dedup
     of Lee et al., "Deduplicating Training Data Makes Language Models
@@ -1026,24 +1053,7 @@ def q_lcp_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     join back — n_tokens re-derives as n_grams + K - 1. The fold's island
     arithmetic is integer-exact; the one division rounds at 4 dp."""
     k = LCP_GRAM
-    docs = load_table(spark, sf_dir, "documents")
-    d = docs.select("doc_id", tokens(F.col("text")).alias("w")).filter(
-        F.size("w") >= k
-    )
-    grams = d.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(1), F.size("w") - (k - 1))).alias("p"),
-        "w",
-    ).select(
-        "doc_id",
-        "p",
-        F.md5(F.concat_ws(" ", F.slice("w", F.col("p"), k))).alias("fp"),
-    )
-    marked = grams.select(
-        "doc_id",
-        "p",
-        (F.count("*").over(W.partitionBy("fp")) > 1).alias("dup"),
-    )
+    marked = _lcp_marked(spark, sf_dir)[1]
     per_doc = marked.groupBy("doc_id").agg(
         F.count("*").alias("n_grams"),
         F.sort_array(
@@ -1183,6 +1193,47 @@ def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Shared oracle CTEs. _CC_REACH_SQL labels the Jaccard-pair graph's
+# connected components (reach(u, r): every root r reachable from u) over
+# PAIRS_SQL_CTES' jpairs; _KEEPER_RANK_SQL ranks each component's members
+# longest-first (rn = 1 is the kept canonical doc); _LCP_SPANS_SQL merges
+# a ``dups`` CTE's duplicate gram starts into per-doc islands and spans;
+# _OVERLAP_SCORES_SQL scores source pairs' shared spans (``inter``) by
+# containment and Jaccard over their ``sizes``.
+_CC_REACH_SQL = """edges AS (
+            SELECT doc_a AS u, doc_b AS v FROM jpairs
+            UNION ALL
+            SELECT doc_b, doc_a FROM jpairs
+        ),
+        reach(u, r) AS (
+            SELECT DISTINCT u, u FROM edges
+            UNION
+            SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.u
+        )"""
+_KEEPER_RANK_SQL = """ranked AS (
+            SELECT m.doc_id,
+                   row_number() OVER (PARTITION BY m.cluster_id
+                                      ORDER BY d.n_chars DESC, m.doc_id) AS rn
+            FROM members m JOIN documents d ON m.doc_id = d.doc_id
+        )"""
+_LCP_SPANS_SQL = f"""isl AS (
+            SELECT doc_id, p,
+                   sum(new_s) OVER (PARTITION BY doc_id ORDER BY p
+                                    ROWS UNBOUNDED PRECEDING) AS sid
+            FROM dups
+        ), spans AS (
+            SELECT doc_id, min(p) AS s, max(p) + {LCP_GRAM} - 1 AS e
+            FROM isl GROUP BY doc_id, sid"""
+_OVERLAP_SCORES_SQL = """CAST(round(n_common * 1.0 / least(sa.n_sp, sb.n_sp)
+                              * 1000000) AS BIGINT) / 1000000.0
+                       AS containment,
+                   CAST(round(n_common * 1.0
+                              / (sa.n_sp + sb.n_sp - n_common)
+                              * 1000000) AS BIGINT) / 1000000.0 AS jaccard
+            FROM inter
+            JOIN sizes sa ON src_a = sa.source
+            JOIN sizes sb ON src_b = sb.source"""
+
 ORACLE: dict[str, str] = {
     # Independent replay: DuckDB computes the SAME maximal spans via the
     # classic gaps-and-islands window (lag + cumulative sum) instead of
@@ -1209,14 +1260,7 @@ ORACLE: dict[str, str] = {
                         THEN 1 ELSE 0 END AS new_s
             FROM marked WHERE dup
             WINDOW w AS (PARTITION BY doc_id ORDER BY p)
-        ), isl AS (
-            SELECT doc_id, p,
-                   sum(new_s) OVER (PARTITION BY doc_id ORDER BY p
-                                    ROWS UNBOUNDED PRECEDING) AS sid
-            FROM dups
-        ), spans AS (
-            SELECT doc_id, min(p) AS s, max(p) + {LCP_GRAM} - 1 AS e
-            FROM isl GROUP BY doc_id, sid
+        ), {_LCP_SPANS_SQL}
         ), per_doc AS (
             SELECT doc_id, CAST(count(*) AS INT) AS n_dup_spans,
                    CAST(sum(e - s + 1) AS BIGINT) AS dup_tokens,
@@ -1539,16 +1583,7 @@ ORACLE: dict[str, str] = {
     """,
     "q_dedup_clusters": f"""
         WITH RECURSIVE {PAIRS_SQL_CTES},
-        edges AS (
-            SELECT doc_a AS u, doc_b AS v FROM jpairs
-            UNION ALL
-            SELECT doc_b, doc_a FROM jpairs
-        ),
-        reach(u, r) AS (
-            SELECT DISTINCT u, u FROM edges
-            UNION
-            SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.u
-        )
+        {_CC_REACH_SQL}
         SELECT u AS doc_id, min(r) AS cluster_id, u = min(r) AS is_canonical
         FROM reach GROUP BY u
     """,
@@ -1583,16 +1618,7 @@ ORACLE: dict[str, str] = {
     """,
     "q_canonical_docs": f"""
         WITH RECURSIVE {PAIRS_SQL_CTES},
-        edges AS (
-            SELECT doc_a AS u, doc_b AS v FROM jpairs
-            UNION ALL
-            SELECT doc_b, doc_a FROM jpairs
-        ),
-        reach(u, r) AS (
-            SELECT DISTINCT u, u FROM edges
-            UNION
-            SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.u
-        ),
+        {_CC_REACH_SQL},
         members AS (
             SELECT u AS doc_id, min(r) AS cluster_id FROM reach GROUP BY u
         ),
@@ -1612,25 +1638,11 @@ ORACLE: dict[str, str] = {
     """,
     "q_dedup_apply": f"""
         WITH RECURSIVE {PAIRS_SQL_CTES},
-        edges AS (
-            SELECT doc_a AS u, doc_b AS v FROM jpairs
-            UNION ALL
-            SELECT doc_b, doc_a FROM jpairs
-        ),
-        reach(u, r) AS (
-            SELECT DISTINCT u, u FROM edges
-            UNION
-            SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.u
-        ),
+        {_CC_REACH_SQL},
         members AS (
             SELECT u AS doc_id, min(r) AS cluster_id FROM reach GROUP BY u
         ),
-        ranked AS (
-            SELECT m.doc_id,
-                   row_number() OVER (PARTITION BY m.cluster_id
-                                      ORDER BY d.n_chars DESC, m.doc_id) AS rn
-            FROM members m JOIN documents d ON m.doc_id = d.doc_id
-        )
+        {_KEEPER_RANK_SQL}
         SELECT d.doc_id, d.source, d.n_chars,
                CASE WHEN r.rn = 1 THEN 'canonical' ELSE 'singleton' END AS kept_as
         FROM documents d LEFT JOIN ranked r ON d.doc_id = r.doc_id
@@ -1641,25 +1653,11 @@ ORACLE: dict[str, str] = {
     # (document frequencies recomputed on it, as the Spark side does).
     "q_dedup_verify": f"""
         WITH RECURSIVE {PAIRS_SQL_CTES},
-        edges AS (
-            SELECT doc_a AS u, doc_b AS v FROM jpairs
-            UNION ALL
-            SELECT doc_b, doc_a FROM jpairs
-        ),
-        reach(u, r) AS (
-            SELECT DISTINCT u, u FROM edges
-            UNION
-            SELECT e.u, reach.r FROM edges e JOIN reach ON e.v = reach.u
-        ),
+        {_CC_REACH_SQL},
         members AS (
             SELECT u AS doc_id, min(r) AS cluster_id FROM reach GROUP BY u
         ),
-        ranked AS (
-            SELECT m.doc_id,
-                   row_number() OVER (PARTITION BY m.cluster_id
-                                      ORDER BY d.n_chars DESC, m.doc_id) AS rn
-            FROM members m JOIN documents d ON m.doc_id = d.doc_id
-        ),
+        {_KEEPER_RANK_SQL},
         kept AS (
             SELECT d.doc_id, d.text
             FROM documents d LEFT JOIN ranked r ON d.doc_id = r.doc_id
@@ -1828,24 +1826,8 @@ def q_longest_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the wide text column never rides the fingerprint shuffle. Span
     arithmetic is integer-exact; there are no divisions at all."""
     k = LCP_GRAM
-    docs = load_table(spark, sf_dir, "documents")
-    d = docs.select("doc_id", tokens(F.col("text")).alias("w")).filter(
-        F.size("w") >= k
-    )
-    grams = d.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(1), F.size("w") - (k - 1))).alias("p"),
-        "w",
-    ).select(
-        "doc_id",
-        "p",
-        F.md5(F.concat_ws(" ", F.slice("w", F.col("p"), k))).alias("fp"),
-    )
-    dups = grams.select(
-        "doc_id",
-        "p",
-        (F.count("*").over(W.partitionBy("fp")) > 1).alias("dup"),
-    ).filter("dup")
+    d, marked = _lcp_marked(spark, sf_dir)
+    dups = marked.filter("dup")
     wd = W.partitionBy("doc_id").orderBy("p")
     isl = dups.select(
         "doc_id",
@@ -1887,12 +1869,11 @@ def q_longest_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE["q_boilerplate_coverage"] = f"""
-        WITH toks AS (
-            SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        ), d AS (
-            SELECT doc_id, w FROM toks WHERE len(w) >= 3
-        ), pairs AS (
+# Per-doc boilerplate roll-up over a ``d`` (doc_id, w) CTE: distinct
+# 3-gram fingerprints, their document frequency, and each doc's share of
+# grams above BOILER_DF_PERMILLE — also q_stream_boilerplate's, over the
+# sealed horizon.
+BOILER_ROLLUP_SQL = f"""pairs AS (
             SELECT DISTINCT doc_id,
                    md5(array_to_string(list_slice(w, i, i + 2), ' ')) AS fp
             FROM d, UNNEST(generate_series(1, len(w) - 2)) AS t(i)
@@ -1909,7 +1890,14 @@ ORACLE["q_boilerplate_coverage"] = f"""
                               THEN 1 ELSE 0 END) * 1.0 / count(*) * 10000)
                     AS BIGINT) / 10000.0 AS boiler_frac
         FROM marked, nd
-        GROUP BY doc_id
+        GROUP BY doc_id"""
+
+ORACLE["q_boilerplate_coverage"] = f"""
+        WITH toks AS (
+            SELECT doc_id, string_split(text, ' ') AS w FROM documents
+        ), d AS (
+            SELECT doc_id, w FROM toks WHERE len(w) >= 3
+        ), {BOILER_ROLLUP_SQL}
     """
 
 ORACLE["q_longest_repeat"] = f"""
@@ -1933,14 +1921,7 @@ ORACLE["q_longest_repeat"] = f"""
                 FROM grams
             ) WHERE dup
             WINDOW w AS (PARTITION BY doc_id ORDER BY p)
-        ), isl AS (
-            SELECT doc_id, p,
-                   sum(new_s) OVER (PARTITION BY doc_id ORDER BY p
-                                    ROWS UNBOUNDED PRECEDING) AS sid
-            FROM dups
-        ), spans AS (
-            SELECT doc_id, min(p) AS s, max(p) + {LCP_GRAM} - 1 AS e
-            FROM isl GROUP BY doc_id, sid
+        ), {_LCP_SPANS_SQL}
         ), winner AS (
             SELECT doc_id, s, e,
                    row_number() OVER (PARTITION BY doc_id
@@ -2041,12 +2022,9 @@ def boiler_source_rollup(
     )
 
 
-ORACLE["q_boilerplate_sources"] = f"""
-        WITH toks AS (
-            SELECT doc_id, source, string_split(text, ' ') AS w FROM documents
-        ), d AS (
-            SELECT doc_id, source, w FROM toks WHERE len(w) >= 3
-        ), pairs AS (
+# Per-source boilerplate attribution over a ``d`` (doc_id, source, w) CTE
+# — also q_stream_boiler_sources's, over the sealed horizon.
+BOILER_SOURCES_SQL = f"""pairs AS (
             SELECT DISTINCT doc_id, source,
                    md5(array_to_string(list_slice(w, i, i + 2), ' ')) AS fp
             FROM d, UNNEST(generate_series(1, len(w) - 2)) AS t(i)
@@ -2079,7 +2057,14 @@ ORACLE["q_boilerplate_sources"] = f"""
                CAST(round(h.n_boiler_hits * 1.0 / h.n_hits * 10000) AS BIGINT)
                    / 10000.0 AS boiler_frac,
                coalesce(dom.n_dominated, 0) AS n_dominated
-        FROM hits h LEFT JOIN dom USING (source)
+        FROM hits h LEFT JOIN dom USING (source)"""
+
+ORACLE["q_boilerplate_sources"] = f"""
+        WITH toks AS (
+            SELECT doc_id, source, string_split(text, ' ') AS w FROM documents
+        ), d AS (
+            SELECT doc_id, source, w FROM toks WHERE len(w) >= 3
+        ), {BOILER_SOURCES_SQL}
     """
 
 
@@ -2254,15 +2239,7 @@ ORACLE["q_span_overlap"] = f"""
             GROUP BY 1, 2
         ), scored AS (
             SELECT src_a, src_b, n_common, sa.n_sp AS n_a, sb.n_sp AS n_b,
-                   CAST(round(n_common * 1.0 / least(sa.n_sp, sb.n_sp)
-                              * 1000000) AS BIGINT) / 1000000.0
-                       AS containment,
-                   CAST(round(n_common * 1.0
-                              / (sa.n_sp + sb.n_sp - n_common)
-                              * 1000000) AS BIGINT) / 1000000.0 AS jaccard
-            FROM inter
-            JOIN sizes sa ON src_a = sa.source
-            JOIN sizes sb ON src_b = sb.source
+                   {_OVERLAP_SCORES_SQL}
         )
         SELECT CAST(row_number() OVER (
                    ORDER BY containment DESC, jaccard DESC, src_a, src_b)
@@ -2274,8 +2251,9 @@ ORACLE["q_span_overlap"] = f"""
     """
 
 
-ORACLE["q_dedup_ttl"] = f"""
-        WITH d AS (
+# Each doc's fingerprint and its doc-clock gap to the previous arrival of
+# the same fingerprint — also q_stream_ttl_evict's.
+TTL_GAPS_SQL = """d AS (
             SELECT doc_id,
                    md5(substr(lower(regexp_replace(text, '\\s+', ' ', 'g')),
                        1, 200)) AS fp
@@ -2285,7 +2263,10 @@ ORACLE["q_dedup_ttl"] = f"""
                    doc_id - lag(doc_id) OVER (PARTITION BY fp ORDER BY doc_id)
                        AS prev_gap
             FROM d
-        )
+        )"""
+
+ORACLE["q_dedup_ttl"] = f"""
+        WITH {TTL_GAPS_SQL}
         SELECT doc_id, fp, CAST(prev_gap AS BIGINT) AS prev_gap,
                (prev_gap IS NULL OR prev_gap > {DEDUP_TTL_DOCS}) AS kept,
                (prev_gap IS NOT NULL AND prev_gap > {DEDUP_TTL_DOCS})
@@ -2411,15 +2392,7 @@ ORACLE["q_span_attribution"] = f"""
             GROUP BY 1, 2
         ), scored AS (
             SELECT src_a, src_b,
-                   CAST(round(n_common * 1.0 / least(sa.n_sp, sb.n_sp)
-                              * 1000000) AS BIGINT) / 1000000.0
-                       AS containment,
-                   CAST(round(n_common * 1.0
-                              / (sa.n_sp + sb.n_sp - n_common)
-                              * 1000000) AS BIGINT) / 1000000.0 AS jaccard
-            FROM inter
-            JOIN sizes sa ON src_a = sa.source
-            JOIN sizes sb ON src_b = sb.source
+                   {_OVERLAP_SCORES_SQL}
         ), top_pairs AS (
             SELECT CAST(row_number() OVER (
                        ORDER BY containment DESC, jaccard DESC, src_a,
@@ -2655,13 +2628,9 @@ def _unimax_ctes_sql(census: str) -> str:
         )"""
 
 
-ORACLE["q_token_budget"] = _unimax_ctes_sql("""
-        WITH tok AS (
-            SELECT source,
-                   CAST(len(regexp_extract_all(text,
-                       '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS t
-            FROM documents
-        """) + """
+# The per-source allocation report over _unimax_ctes_sql's ``alloc`` —
+# also q_stream_token_budget's, over the sealed horizon.
+BUDGET_ALLOC_SQL = """
         SELECT source, n_docs, n_tokens,
                w / 1000000.0 AS weight,
                CAST(round(budget * 1.0 / wt * w) AS BIGINT) AS naive_tokens,
@@ -2672,6 +2641,15 @@ ORACLE["q_token_budget"] = _unimax_ctes_sql("""
                    / 10000.0 AS epochs
         FROM alloc
     """
+
+
+ORACLE["q_token_budget"] = _unimax_ctes_sql("""
+        WITH tok AS (
+            SELECT source,
+                   CAST(len(regexp_extract_all(text,
+                       '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS t
+            FROM documents
+        """) + BUDGET_ALLOC_SQL
 
 REALIZE_SALT = "realize1"  # acceptance-hash salt for the fractional epoch
 

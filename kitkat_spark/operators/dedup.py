@@ -225,14 +225,21 @@ def _pass_layout(length: F.Column, i: F.Column) -> tuple[F.Column, F.Column]:
     return seg_len, seg_start
 
 
+def _seg_ordinals() -> F.Column:
+    """One row per segment ordinal i in [0, _PASS_M)."""
+    return F.explode(F.sequence(F.lit(0), F.lit(_PASS_M - 1))).alias("i")
+
+
 def passjoin_triples() -> list[tuple[int, int, int]]:
     """The DOC-INDEPENDENT valid (delta, i, d) probe set for PassJoin at
     k = PASSJOIN_K (~800 triples for k=12): delta = length difference in
     [0, k], i = segment index, d = start shift inside the multi-match-aware
     window of the EDBT 2011 paper. Precomputed driver-side and broadcast
     (higher-order-function re-derivation per doc ran interpreted and was
-    60% of q_passjoin_dedup's wall time); shared with the incremental
-    streaming probe (operators/streamparity.py q_stream_passjoin)."""
+    60% of q_passjoin_dedup's wall time); passjoin_windows joins it for
+    every probe: q_passjoin_dedup, q_passjoin_planner, the incremental
+    streaming probe (operators/streamparity.py q_stream_passjoin) and
+    q_passjoin_delete's audit."""
     return [
         (delta, i, d)
         for delta in range(PASSJOIN_K + 1)
@@ -252,20 +259,40 @@ def passjoin_index(docs: DataFrame) -> DataFrame:
     xxhash64 of the content: collisions can only ADD candidates (the
     levenshtein verify discards them), never lose one, and a long key
     hashes/compares far cheaper than a ~30-char string. Shared by
-    q_passjoin_dedup, q_passjoin_planner and q_stream_passjoin — one
-    implementation."""
-    i_col = F.explode(F.sequence(F.lit(0), F.lit(_PASS_M - 1))).alias("i")
+    q_passjoin_dedup, q_passjoin_planner and q_stream_passjoin;
+    q_passjoin_delete's audit counts the same _seg_ordinals per length."""
     seg_len, seg_start = _pass_layout(F.col("len_s"), F.col("i"))
     return docs.select(
         F.col("doc_id").alias("id_s"),
         F.col("n_chars").alias("len_s"),
         "text",
-        i_col,
+        _seg_ordinals(),
     ).select(
         "id_s",
         "len_s",
         "i",
         F.xxhash64(F.substring("text", seg_start + 1, seg_len)).alias("seg"),
+    )
+
+
+def passjoin_windows(spark: SparkSession, rows: DataFrame) -> DataFrame:
+    """PassJoin's probe enumeration over any frame with a ``len_r``
+    column: each row crossed with the broadcast (delta, i, d) triples, cut
+    to partner lengths len_s = len_r - delta >= _PASS_M, and kept where the
+    shifted window (q = segment start + d, sl = segment length) lies inside
+    len_r. Returns ``rows``' columns plus len_s, i, sl, q. Shared by
+    passjoin_probe (which hashes the substrings) and q_passjoin_delete's
+    occupancy audit (which counts them over the length distribution)."""
+    tdf = spark.createDataFrame(passjoin_triples(), "delta int, i int, d int")
+    p_len, p_start = _pass_layout(F.col("len_s"), F.col("i"))
+    return (
+        rows.withColumn("one", F.lit(1))
+        .join(F.broadcast(tdf.withColumn("one", F.lit(1))), "one")
+        .withColumn("len_s", F.col("len_r") - F.col("delta"))
+        .filter(F.col("len_s") >= _PASS_M)
+        .select(*rows.columns, "len_s", "i",
+                p_len.alias("sl"), (p_start + F.col("d")).alias("q"))
+        .filter((F.col("q") >= 0) & (F.col("q") + F.col("sl") <= F.col("len_r")))
     )
 
 
@@ -284,31 +311,21 @@ def passjoin_probe(spark: SparkSession, docs: DataFrame) -> DataFrame:
     higher-order functions run interpreted (outside whole-stage codegen)
     and were 60% of q_passjoin_dedup's wall time. ``docs`` may be a
     streaming frame: the triple broadcast is a stream-static join, so
-    q_stream_passjoin probes its ingest batches with this same function."""
-    tdf = spark.createDataFrame(passjoin_triples(), "delta int, i int, d int")
-    p_len, p_start = _pass_layout(F.col("len_s"), F.col("i"))
-    return (
+    q_stream_passjoin probes its ingest batches with this same function.
+    The enumeration itself is passjoin_windows, which q_passjoin_delete's
+    audit also runs."""
+    windows = passjoin_windows(
+        spark,
         docs.select(
-            F.col("doc_id").alias("id_r"),
-            F.col("n_chars").alias("len_r"),
-            "text",
-            F.lit(1).alias("one"),
-        )
-        .join(F.broadcast(tdf.withColumn("one", F.lit(1))), "one")
-        .withColumn("len_s", F.col("len_r") - F.col("delta"))
-        .filter(F.col("len_s") >= _PASS_M)
-        .select("id_r", "len_r", "len_s", "text", "i",
-                p_len.alias("sl"), (p_start + F.col("d")).alias("q"))
-        .filter((F.col("q") >= 0) & (F.col("q") + F.col("sl") <= F.col("len_r")))
-        .select(
-            "id_r",
-            "len_r",
-            "len_s",
-            "i",
-            F.xxhash64(
-                F.substring("text", F.col("q") + 1, F.col("sl"))
-            ).alias("seg"),
-        )
+            F.col("doc_id").alias("id_r"), F.col("n_chars").alias("len_r"), "text"
+        ),
+    )
+    return windows.select(
+        "id_r",
+        "len_r",
+        "len_s",
+        "i",
+        F.xxhash64(F.substring("text", F.col("q") + 1, F.col("sl"))).alias("seg"),
     )
 
 
@@ -772,25 +789,11 @@ _SIM_PACK = "\n                   + ".join(
     f"(CASE WHEN 2 * c{i} > n THEN (1::BIGINT << {i}) ELSE 0 END)" for i in range(60)
 )
 
-ORACLE: dict[str, str] = {
-    # deliberately the brute force PassJoin replaces: if the hash matches,
-    # the whole partition/probe pipeline provably lost no pair
-    "q_passjoin_dedup": f"""
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-               CAST(levenshtein(a.text, b.text) AS INT) AS lev,
-               round(levenshtein(a.text, b.text) * 1.0
-                     / greatest(a.n_chars, b.n_chars), 4) AS rel_dist
-        FROM documents a
-        JOIN documents b
-          ON a.doc_id < b.doc_id
-         AND abs(a.n_chars - b.n_chars) <= {PASSJOIN_K}
-         AND a.n_chars >= {_PASS_M} AND b.n_chars >= {_PASS_M}
-        WHERE levenshtein(a.text, b.text) <= {PASSJOIN_K}
-    """,
-    "q_minhash_accuracy": f"""
-        WITH toks AS (
-            SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        ), sh AS (
+# The MinHash LSH candidate chain over a ``toks`` CTE: distinct 3-shingle
+# hashes (sh), signatures (sig), band keys, capped bucket sizes, candidate
+# pairs and their exact shingle overlap (common) — the replay of
+# lsh_signatures_and_candidates.
+_LSH_PAIRS_SQL = f"""sh AS (
             SELECT DISTINCT doc_id,
                    ('0x' || substr(md5(w[i] || ' ' || w[i+1] || ' ' || w[i+2]), 1, 15))::BIGINT
                        % {MINHASH_PRIME} AS h
@@ -817,7 +820,27 @@ ORACLE: dict[str, str] = {
             JOIN sh x ON x.doc_id = c.doc_a
             JOIN sh y ON y.doc_id = c.doc_b AND x.h = y.h
             GROUP BY 1, 2
-        ), scored AS (
+        )"""
+
+ORACLE: dict[str, str] = {
+    # deliberately the brute force PassJoin replaces: if the hash matches,
+    # the whole partition/probe pipeline provably lost no pair
+    "q_passjoin_dedup": f"""
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               CAST(levenshtein(a.text, b.text) AS INT) AS lev,
+               round(levenshtein(a.text, b.text) * 1.0
+                     / greatest(a.n_chars, b.n_chars), 4) AS rel_dist
+        FROM documents a
+        JOIN documents b
+          ON a.doc_id < b.doc_id
+         AND abs(a.n_chars - b.n_chars) <= {PASSJOIN_K}
+         AND a.n_chars >= {_PASS_M} AND b.n_chars >= {_PASS_M}
+        WHERE levenshtein(a.text, b.text) <= {PASSJOIN_K}
+    """,
+    "q_minhash_accuracy": f"""
+        WITH toks AS (
+            SELECT doc_id, string_split(text, ' ') AS w FROM documents
+        ), {_LSH_PAIRS_SQL}, scored AS (
             SELECT c.doc_a, c.doc_b,
                    coalesce(m.n_common, 0) * 1.0
                        / (na.n_sh + nb.n_sh - coalesce(m.n_common, 0)) AS exact_j,
@@ -840,34 +863,7 @@ ORACLE: dict[str, str] = {
     "q_near_dedup": f"""
         WITH toks AS (
             SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        ), sh AS (
-            SELECT DISTINCT doc_id,
-                   ('0x' || substr(md5(w[i] || ' ' || w[i+1] || ' ' || w[i+2]), 1, 15))::BIGINT
-                       % {MINHASH_PRIME} AS h
-            FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)
-            WHERE len(w) >= 3
-        ), sig AS (
-            SELECT doc_id, count(*) AS n_sh,
-                   {_SIG_MINS}
-            FROM sh GROUP BY doc_id
-        ), bands AS (
-            {_BAND_SELECTS}
-        ), bsz AS (
-            SELECT band_id, key, count(*) AS c FROM bands GROUP BY 1, 2
-        ), cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a
-            JOIN bands b ON a.band_id = b.band_id AND a.key = b.key
-                        AND a.doc_id < b.doc_id
-            JOIN bsz s ON s.band_id = a.band_id AND s.key = a.key
-                      AND s.c BETWEEN 2 AND {LSH_MAX_BUCKET}
-        ), common AS (
-            SELECT c.doc_a, c.doc_b, count(*) AS n_common
-            FROM cand c
-            JOIN sh x ON x.doc_id = c.doc_a
-            JOIN sh y ON y.doc_id = c.doc_b AND x.h = y.h
-            GROUP BY 1, 2
-        )
+        ), {_LSH_PAIRS_SQL}
         SELECT c.doc_a, c.doc_b,
                round(n_common * 1.0 / (na.n_sh + nb.n_sh - n_common), 4) AS jaccard
         FROM common c
@@ -935,39 +931,35 @@ def _tune_configs_sql(extra_cols: str = "") -> str:
 
 _TUNE_CONFIGS = _tune_configs_sql()
 
+# Per-config pair counts and micro-unit S-curve sums over ``cfg``, and the
+# expected rates they divide into — q_lsh_tuning's and q_lsh_source_curve's
+# aggregation (the latter with pair_source as an extra leading key).
+_CURVE_SUMS_SQL = f"""CAST(sum(CASE WHEN j >= {JACCARD_THRESHOLD} THEN 1 ELSE 0 END)
+                        AS BIGINT) AS n_dup_pairs,
+                   CAST(sum(CASE WHEN j < {JACCARD_THRESHOLD} THEN 1 ELSE 0 END)
+                        AS BIGINT) AS n_nondup_pairs,
+                   CAST(sum(CASE WHEN j >= {JACCARD_THRESHOLD}
+                            THEN CAST(round(p * 1000000.0) AS BIGINT)
+                            ELSE 0 END) AS BIGINT) AS p6_dup,
+                   CAST(sum(CASE WHEN j < {JACCARD_THRESHOLD}
+                            THEN CAST(round(p * 1000000.0) AS BIGINT)
+                            ELSE 0 END) AS BIGINT) AS p6_nondup
+            FROM cfg"""
+_CURVE_RATES_SQL = """n_bands, n_rows, n_dup_pairs, n_nondup_pairs,
+               CASE WHEN n_dup_pairs > 0
+                    THEN round(p6_dup / (n_dup_pairs * 1000000.0), 6)
+               END AS exp_recall_dup,
+               CASE WHEN n_nondup_pairs > 0
+                    THEN round(p6_nondup / (n_nondup_pairs * 1000000.0), 6)
+               END AS exp_catch_nondup
+        FROM agg"""
+
 # Rides the q_minhash_accuracy pair chain (exact Jaccard only), then the
 # repeated-squaring S-curve per power-of-two config and micro-unit sums.
 ORACLE["q_lsh_tuning"] = f"""
         WITH toks AS (
             SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        ), sh AS (
-            SELECT DISTINCT doc_id,
-                   ('0x' || substr(md5(w[i] || ' ' || w[i+1] || ' ' || w[i+2]), 1, 15))::BIGINT
-                       % {MINHASH_PRIME} AS h
-            FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)
-            WHERE len(w) >= 3
-        ), sig AS (
-            SELECT doc_id, count(*) AS n_sh,
-                   {_SIG_MINS}
-            FROM sh GROUP BY doc_id
-        ), bands AS (
-            {_BAND_SELECTS}
-        ), bsz AS (
-            SELECT band_id, key, count(*) AS c FROM bands GROUP BY 1, 2
-        ), cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a
-            JOIN bands b ON a.band_id = b.band_id AND a.key = b.key
-                        AND a.doc_id < b.doc_id
-            JOIN bsz s ON s.band_id = a.band_id AND s.key = a.key
-                      AND s.c BETWEEN 2 AND {LSH_MAX_BUCKET}
-        ), common AS (
-            SELECT c.doc_a, c.doc_b, count(*) AS n_common
-            FROM cand c
-            JOIN sh x ON x.doc_id = c.doc_a
-            JOIN sh y ON y.doc_id = c.doc_b AND x.h = y.h
-            GROUP BY 1, 2
-        ), jp AS (
+        ), {_LSH_PAIRS_SQL}, jp AS (
             SELECT round(coalesce(m.n_common, 0) * 1.0
                          / (na.n_sh + nb.n_sh - coalesce(m.n_common, 0)), 4) AS j
             FROM cand c
@@ -978,26 +970,10 @@ ORACLE["q_lsh_tuning"] = f"""
             {_TUNE_CONFIGS}
         ), agg AS (
             SELECT n_bands, n_rows,
-                   CAST(sum(CASE WHEN j >= {JACCARD_THRESHOLD} THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_dup_pairs,
-                   CAST(sum(CASE WHEN j < {JACCARD_THRESHOLD} THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_nondup_pairs,
-                   CAST(sum(CASE WHEN j >= {JACCARD_THRESHOLD}
-                            THEN CAST(round(p * 1000000.0) AS BIGINT)
-                            ELSE 0 END) AS BIGINT) AS p6_dup,
-                   CAST(sum(CASE WHEN j < {JACCARD_THRESHOLD}
-                            THEN CAST(round(p * 1000000.0) AS BIGINT)
-                            ELSE 0 END) AS BIGINT) AS p6_nondup
-            FROM cfg GROUP BY 1, 2
+                   {_CURVE_SUMS_SQL}
+            GROUP BY 1, 2
         )
-        SELECT n_bands, n_rows, n_dup_pairs, n_nondup_pairs,
-               CASE WHEN n_dup_pairs > 0
-                    THEN round(p6_dup / (n_dup_pairs * 1000000.0), 6)
-               END AS exp_recall_dup,
-               CASE WHEN n_nondup_pairs > 0
-                    THEN round(p6_nondup / (n_nondup_pairs * 1000000.0), 6)
-               END AS exp_catch_nondup
-        FROM agg
+        SELECT {_CURVE_RATES_SQL}
     """
 
 # The same pair chain with the coalesced source attributed per pair (same
@@ -1009,34 +985,7 @@ ORACLE["q_lsh_source_curve"] = f"""
         ), srcs AS (
             SELECT doc_id, coalesce(source, '{NULL_SOURCE}') AS src
             FROM documents
-        ), sh AS (
-            SELECT DISTINCT doc_id,
-                   ('0x' || substr(md5(w[i] || ' ' || w[i+1] || ' ' || w[i+2]), 1, 15))::BIGINT
-                       % {MINHASH_PRIME} AS h
-            FROM toks, UNNEST(generate_series(1, len(w) - 2)) AS t(i)
-            WHERE len(w) >= 3
-        ), sig AS (
-            SELECT doc_id, count(*) AS n_sh,
-                   {_SIG_MINS}
-            FROM sh GROUP BY doc_id
-        ), bands AS (
-            {_BAND_SELECTS}
-        ), bsz AS (
-            SELECT band_id, key, count(*) AS c FROM bands GROUP BY 1, 2
-        ), cand AS (
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a
-            JOIN bands b ON a.band_id = b.band_id AND a.key = b.key
-                        AND a.doc_id < b.doc_id
-            JOIN bsz s ON s.band_id = a.band_id AND s.key = a.key
-                      AND s.c BETWEEN 2 AND {LSH_MAX_BUCKET}
-        ), common AS (
-            SELECT c.doc_a, c.doc_b, count(*) AS n_common
-            FROM cand c
-            JOIN sh x ON x.doc_id = c.doc_a
-            JOIN sh y ON y.doc_id = c.doc_b AND x.h = y.h
-            GROUP BY 1, 2
-        ), jp AS (
+        ), {_LSH_PAIRS_SQL}, jp AS (
             SELECT CASE WHEN da.src = db.src THEN da.src
                         ELSE '{CROSS_SOURCE}' END AS pair_source,
                    round(coalesce(m.n_common, 0) * 1.0
@@ -1051,26 +1000,10 @@ ORACLE["q_lsh_source_curve"] = f"""
             {_tune_configs_sql("pair_source, ")}
         ), agg AS (
             SELECT pair_source, n_bands, n_rows,
-                   CAST(sum(CASE WHEN j >= {JACCARD_THRESHOLD} THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_dup_pairs,
-                   CAST(sum(CASE WHEN j < {JACCARD_THRESHOLD} THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_nondup_pairs,
-                   CAST(sum(CASE WHEN j >= {JACCARD_THRESHOLD}
-                            THEN CAST(round(p * 1000000.0) AS BIGINT)
-                            ELSE 0 END) AS BIGINT) AS p6_dup,
-                   CAST(sum(CASE WHEN j < {JACCARD_THRESHOLD}
-                            THEN CAST(round(p * 1000000.0) AS BIGINT)
-                            ELSE 0 END) AS BIGINT) AS p6_nondup
-            FROM cfg GROUP BY 1, 2, 3
+                   {_CURVE_SUMS_SQL}
+            GROUP BY 1, 2, 3
         )
-        SELECT pair_source, n_bands, n_rows, n_dup_pairs, n_nondup_pairs,
-               CASE WHEN n_dup_pairs > 0
-                    THEN round(p6_dup / (n_dup_pairs * 1000000.0), 6)
-               END AS exp_recall_dup,
-               CASE WHEN n_nondup_pairs > 0
-                    THEN round(p6_nondup / (n_nondup_pairs * 1000000.0), 6)
-               END AS exp_catch_nondup
-        FROM agg
+        SELECT pair_source, {_CURVE_RATES_SQL}
     """
 
 
@@ -1299,46 +1232,20 @@ def q_passjoin_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("cnt"))
         .localCheckpoint(eager=True)
     )
-    tdf = spark.createDataFrame(passjoin_triples(), "delta int, i int, d int")
-
     def seg_rows(df: DataFrame) -> DataFrame:
         return df.select(
             "retired",
             "cnt",
             F.col("n_chars").alias("len_s"),
-            F.explode(F.sequence(F.lit(0), F.lit(_PASS_M - 1))).alias("i"),
+            _seg_ordinals(),
         ).select(
             F.lit("segments").alias("structure"), "len_s", "i", "retired", "cnt"
         )
 
     def probe_rows(df: DataFrame) -> DataFrame:
-        p_len, p_start = _pass_layout(F.col("len_s"), F.col("i"))
-        return (
-            df.select(
-                "retired",
-                "cnt",
-                F.col("n_chars").alias("len_r"),
-                F.lit(1).alias("one"),
-            )
-            .join(F.broadcast(tdf.withColumn("one", F.lit(1))), "one")
-            .withColumn("len_s", F.col("len_r") - F.col("delta"))
-            .filter(F.col("len_s") >= _PASS_M)
-            .select(
-                "retired",
-                "cnt",
-                "len_r",
-                "len_s",
-                "i",
-                p_len.alias("sl"),
-                (p_start + F.col("d")).alias("q"),
-            )
-            .filter(
-                (F.col("q") >= 0) & (F.col("q") + F.col("sl") <= F.col("len_r"))
-            )
-            .select(
-                F.lit("probes").alias("structure"), "len_s", "i", "retired", "cnt"
-            )
-        )
+        return passjoin_windows(
+            spark, df.select("retired", "cnt", F.col("n_chars").alias("len_r"))
+        ).select(F.lit("probes").alias("structure"), "len_s", "i", "retired", "cnt")
 
     stored = seg_rows(ldist).unionByName(probe_rows(ldist))
     audit = stored.groupBy("structure", "len_s", "i").agg(

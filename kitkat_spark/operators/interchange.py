@@ -80,8 +80,9 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _roundtrip_rollup(spark, sf_dir, "orc")
 
 
-ORACLE: dict[str, str] = {
-    "q_orc_roundtrip": """
+# Every trip must reproduce the parquet rollup exactly, so all three share
+# one oracle.
+_ROLLUP_SQL = """
         SELECT event_type,
                count(*) AS n_events,
                CAST(round(sum(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE)
@@ -90,25 +91,7 @@ ORACLE: dict[str, str] = {
                strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') AS last_ts,
                count(DISTINCT props) AS n_props
         FROM events GROUP BY event_type
-    """,
-    "q_csv_roundtrip": """
-        SELECT event_type,
-               count(*) AS n_events,
-               CAST(round(sum(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE)
-                   AS sum_value,
-               strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS first_ts,
-               strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') AS last_ts,
-               count(DISTINCT props) AS n_props
-        FROM events GROUP BY event_type
-    """,
-    "q_format_roundtrip": """
-        SELECT event_type,
-               count(*) AS n_events,
-               CAST(round(sum(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE)
-                   AS sum_value,
-               strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f') AS first_ts,
-               strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f') AS last_ts,
-               count(DISTINCT props) AS n_props
-        FROM events GROUP BY event_type
-    """,
-}
+    """
+ORACLE: dict[str, str] = dict.fromkeys(
+    ("q_orc_roundtrip", "q_csv_roundtrip", "q_format_roundtrip"), _ROLLUP_SQL
+)

@@ -232,6 +232,29 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every adjacent token pair (t1, t2) of the corpus, one row each."""
+    par = spark.sparkContext.defaultParallelism
+    docs = load_table(spark, sf_dir, "documents").repartition(par)
+    toks = tokens(F.col("text"))
+    return docs.select(
+        F.explode(
+            F.when(F.size(toks) >= 2, _zipped_ngrams(toks, 2)).otherwise(F.array())
+        ).alias("b")
+    ).select(F.col("b")["0"].alias("t1"), F.col("b")["1"].alias("t2"))
+
+
+def _term_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(token, tf): the corpus term-frequency table."""
+    par = spark.sparkContext.defaultParallelism
+    docs = load_table(spark, sf_dir, "documents").repartition(par)
+    return (
+        docs.select(F.explode(tokens(F.col("text"))).alias("token"))
+        .groupBy("token")
+        .agg(F.count("*").alias("tf"))
+    )
+
+
 def q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram language-model table: for every frequent first token (>= 50
     bigram occurrences), its most likely continuation with the conditional
@@ -242,14 +265,7 @@ def q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(t1) computes the per-t1 total AND picks the argmax
     continuation via min(struct(-n_bigram, t2)) in the same pass — no
     window, no per-t1 sort. Ties break on the token."""
-    par = spark.sparkContext.defaultParallelism
-    docs = load_table(spark, sf_dir, "documents").repartition(par)
-    toks = tokens(F.col("text"))
-    bg = docs.select(
-        F.explode(
-            F.when(F.size(toks) >= 2, _zipped_ngrams(toks, 2)).otherwise(F.array())
-        ).alias("b")
-    ).select(F.col("b")["0"].alias("t1"), F.col("b")["1"].alias("t2"))
+    bg = _bigrams(spark, sf_dir)
     pair = bg.groupBy("t1", "t2").agg(F.count("*").alias("n_bigram"))
     # argmax continuation AND the per-t1 total in ONE combinable groupBy
     # (r14, guide §2.3): min(struct(-n_bigram, t2)) == (n_bigram desc,
@@ -790,13 +806,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     then operate on the VOCABULARY (tokenizer-sized: tens of thousands of
     rows at production scale, 31 here), so the single-partition window is
     deliberate and irrelevant at any corpus size."""
-    par = spark.sparkContext.defaultParallelism
-    docs = load_table(spark, sf_dir, "documents").repartition(par)
-    tf = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("tf"))
-    )
+    tf = _term_freqs(spark, sf_dir)
     w = W.orderBy(F.col("tf").desc(), "token")
     ranked = tf.select(
         "token", "tf", F.row_number().over(w).alias("rank")
@@ -825,13 +835,7 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect_list array left-to-right — bit-identical accumulation in both
     engines, where a parallel regr_slope's partial-sum order would not be
     (same determinism move as q_label_centroid's integer sums)."""
-    par = spark.sparkContext.defaultParallelism
-    docs = load_table(spark, sf_dir, "documents").repartition(par)
-    tf = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("token"))
-        .groupBy("token")
-        .agg(F.count("*").alias("tf"))
-    )
+    tf = _term_freqs(spark, sf_dir)
     w = W.orderBy(F.col("tf").desc(), "token")
     pts = tf.select(F.row_number().over(w).alias("rank"), "tf").agg(
         F.sort_array(F.collect_list(F.struct("rank", "tf"))).alias("pts")
@@ -879,14 +883,7 @@ def q_kn_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from a partitionBy(t2) window over the same tiny table, B from a 1-row
     broadcast. All counts are exact integers; the probability arithmetic
     is written in the identical order in both engines."""
-    par = spark.sparkContext.defaultParallelism
-    docs = load_table(spark, sf_dir, "documents").repartition(par)
-    toks = tokens(F.col("text"))
-    bg = docs.select(
-        F.explode(
-            F.when(F.size(toks) >= 2, _zipped_ngrams(toks, 2)).otherwise(F.array())
-        ).alias("b")
-    ).select(F.col("b")["0"].alias("t1"), F.col("b")["1"].alias("t2"))
+    bg = _bigrams(spark, sf_dir)
     # the bigram-type table is consumed by BOTH the B aggregate and the
     # scored windows — eager checkpoint (it is vocab^2-bounded) so the
     # corpus explode+agg runs once, not once per consumer (q_oov_rate's
@@ -1114,6 +1111,17 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The bigram LM over a ``bg`` (t1, t2) CTE: log P(t2 | t1) of every bigram
+# with at least LM_MIN_BIGRAM occurrences — q_lm_score's and
+# q_lm_calibration's model.
+_LM_SQL = f"""pair AS (
+            SELECT t1, t2, count(*) AS n_bigram FROM bg GROUP BY t1, t2
+        ), lm AS (
+            SELECT t1, t2, ln(n_bigram * 1.0 / sum(n_bigram) OVER (PARTITION BY t1)) AS logp
+            FROM pair
+            QUALIFY n_bigram >= {LM_MIN_BIGRAM}
+        )"""
+
 ORACLE: dict[str, str] = {
     # Replays the hashed-bigram bucketing, both smoothed marginals, and the
     # sorted per-doc fold (list ORDER BY bucket == Spark's sort_array on a
@@ -1259,13 +1267,7 @@ ORACLE: dict[str, str] = {
             SELECT doc_id, w[i] AS t1, w[i+1] AS t2
             FROM toks, UNNEST(generate_series(1, len(w) - 1)) AS t(i)
             WHERE len(w) >= 2
-        ), pair AS (
-            SELECT t1, t2, count(*) AS n_bigram FROM bg GROUP BY t1, t2
-        ), lm AS (
-            SELECT t1, t2, ln(n_bigram * 1.0 / sum(n_bigram) OVER (PARTITION BY t1)) AS logp
-            FROM pair
-            QUALIFY n_bigram >= {LM_MIN_BIGRAM}
-        )
+        ), {_LM_SQL}
         SELECT bg.doc_id,
                count(*) AS n_bigrams,
                round(avg(coalesce(lm.logp, {LM_UNSEEN_LOGP})), 4) AS mean_logp,
@@ -1284,13 +1286,7 @@ ORACLE: dict[str, str] = {
             SELECT doc_id, source, w[i] AS t1, w[i+1] AS t2
             FROM toks, UNNEST(generate_series(1, len(w) - 1)) AS t(i)
             WHERE len(w) >= 2
-        ), pair AS (
-            SELECT t1, t2, count(*) AS n_bigram FROM bg GROUP BY t1, t2
-        ), lm AS (
-            SELECT t1, t2, ln(n_bigram * 1.0 / sum(n_bigram) OVER (PARTITION BY t1)) AS logp
-            FROM pair
-            QUALIFY n_bigram >= {LM_MIN_BIGRAM}
-        ), scored AS (
+        ), {_LM_SQL}, scored AS (
             SELECT bg.doc_id, bg.source,
                    round(avg(coalesce(lm.logp, {LM_UNSEEN_LOGP})), 4) AS mean_logp
             FROM bg LEFT JOIN lm ON bg.t1 = lm.t1 AND bg.t2 = lm.t2

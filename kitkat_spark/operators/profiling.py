@@ -70,13 +70,10 @@ def profile(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
-def q_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-column profile of `events`; ts profiled via the second-truncated
-    render and the double `value` via a fixed-scale decimal projection —
-    default double->string casts are NOT engine-portable (Java
-    Double.toString goes scientific for |x| >= 1e7 or < 1e-3 while DuckDB
-    renders plainly), so min/max must never surface a raw double render."""
-    ev = load_table(spark, sf_dir, "events").select(
+def _profiled_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events columns both profilers read, with ``value`` as a
+    fixed-scale decimal and ``ts`` as a second-resolution string."""
+    return load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         "event_type",
@@ -84,6 +81,15 @@ def q_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "props",
         F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
     )
+
+
+def q_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full-column profile of `events`; ts profiled via the second-truncated
+    render and the double `value` via a fixed-scale decimal projection —
+    default double->string casts are NOT engine-portable (Java
+    Double.toString goes scientific for |x| >= 1e7 or < 1e-3 while DuckDB
+    renders plainly), so min/max must never surface a raw double render."""
+    ev = _profiled_events(spark, sf_dir)
     return profile(ev, PROFILE_COLS)
 
 
@@ -98,14 +104,7 @@ def q_column_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     the q_count_min / q_agg_distinct sketch-vs-exact pattern); a
     production run keeps only the approx side and skips the exact
     verification branches."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.col("value").cast("decimal(18,4)").alias("value"),
-        "props",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts"),
-    )
+    ev = _profiled_events(spark, sf_dir)
     approx_long = ev.agg(
         *[F.approx_count_distinct(c, rsd=0.02).alias(c) for c in PROFILE_COLS]
     ).unpivot([], PROFILE_COLS, "column_name", "n_approx")

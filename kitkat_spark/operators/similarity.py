@@ -66,6 +66,39 @@ def _with_norm(df: DataFrame) -> DataFrame:
     ).withColumn("nrm", norm2(F.col("v")))
 
 
+def _cosine() -> F.Column:
+    """Query (qv, qn) x candidate (v, nrm) cosine, rounded to 6 so both
+    engines rank the same values."""
+    return F.round(
+        dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
+    ).alias("cosine")
+
+
+def _top_k(scored: DataFrame) -> DataFrame:
+    """Per-query top-TOP_K of (query_id, cand_id, cosine) scored pairs:
+    cosine desc, ties on cand_id — the ranking every exact and ANN probe
+    reports."""
+    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), "cand_id")
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= TOP_K)
+        .select("query_id", "cand_id", "cosine", "rk")
+    )
+
+
+def _bucket_top_k(emb: DataFrame, queries: DataFrame) -> DataFrame:
+    """Top-k of each query (query_id, qv, qn, bucket) over the indexed
+    vectors sharing its probed bucket — the probe q_ann_ivf and
+    q_ann_multiprobe share."""
+    cand = emb.select(F.col("vec_id").alias("cand_id"), "v", "nrm", "bucket")
+    scored = (
+        cand.join(F.broadcast(queries), "bucket")
+        .filter(F.col("cand_id") != F.col("query_id"))
+        .select("query_id", "cand_id", _cosine())
+    )
+    return _top_k(scored)
+
+
 def q_similarity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 cosine neighbors for query vectors vec_id < 5 (excluding self)."""
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
@@ -75,20 +108,9 @@ def q_similarity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = emb.select(F.col("vec_id").alias("cand_id"), "v", "nrm")
     scored = (
         cand.join(F.broadcast(queries), F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6).alias(
-                "cosine"
-            ),
-        )
+        .select("query_id", "cand_id", _cosine())
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "cand_id", "cosine", "rk")
-    )
+    return _top_k(scored)
 
 
 TRIPLET_MARGIN = 0.2  # required cosine separation pos vs neg (FaceNet alpha)
@@ -125,9 +147,7 @@ def q_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "anchor_label",
             "cand_id",
             "label",
-            F.round(
-                dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
-            ).alias("cosine"),
+            _cosine(),
         )
     )
     # hardest positive / negative as min/max struct aggregates, not
@@ -359,24 +379,7 @@ def _ann_ivf_from(emb: DataFrame) -> DataFrame:
         F.col("nrm").alias("qn"),
         "bucket",
     )
-    cand = emb.select(F.col("vec_id").alias("cand_id"), "v", "nrm", "bucket")
-    scored = (
-        cand.join(F.broadcast(queries), "bucket")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "cand_id", "cosine", "rk")
-    )
+    return _bucket_top_k(emb, queries)
 
 
 def q_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -404,24 +407,7 @@ def q_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("qn"),
         F.explode(probes).alias("bucket"),
     )
-    cand = emb.select(F.col("vec_id").alias("cand_id"), "v", "nrm", "bucket")
-    scored = (
-        cand.join(F.broadcast(queries), "bucket")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6).alias(
-                "cosine"
-            ),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "cand_id", "cosine", "rk")
-    )
+    return _bucket_top_k(emb, queries)
 
 
 def q_ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -511,20 +497,9 @@ def q_ann_kmeans_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         cand.join(F.broadcast(queries), "cell")
         .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6).alias(
-                "cosine"
-            ),
-        )
+        .select("query_id", "cand_id", _cosine())
     )
-    wq = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), "cand_id")
-    return (
-        pairs.withColumn("rk", F.row_number().over(wq))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "cand_id", "cosine", "rk")
-    )
+    return _top_k(pairs)
 
 
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -679,12 +654,7 @@ def _ann_hnsw_from(emb: DataFrame, n_planes: int) -> DataFrame:
             ).alias("cosine")
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "cand_id", "cosine", "rk")
-    )
+    return _top_k(scored)
 
 
 def q_ann_recall_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1000,27 +970,25 @@ PQ_SUBSPACES = 4  # M sub-vectors per embedding
 PQ_CODEBOOK_K = 4  # centroids per subspace (deterministic: vec_id < K)
 
 
-def q_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization encode — the compression layer of an IVF-PQ
-    index (Jégou, Douze & Schmid, "Product Quantization for Nearest
-    Neighbor Search", TPAMI 2011): each 64-dim embedding splits into
-    M = 4 sub-vectors, each assigned to its nearest sub-centroid by
-    squared L2, giving a 4-code representation (here 4 x 2 bits vs 64
-    doubles — the ratio that makes 100 TB of vectors fit an ANN index).
-    Codebook = the sub-vectors of vec_id < K, the same deterministic
-    convention as q_ann_kmeans_ivf's centroids.
-
-    Shape: slices posexplode to (vec, subspace, sub-vector) — a narrow map;
-    the codebook (M x K sub-centroids) broadcasts; argmin is one min-struct
-    aggregate on rounded distance with centroid-id tie-break. d2 = xx - 2*xc + cc is
-    built from three dot() folds, the proven parity primitive, so the
-    oracle replays the distance bit-for-bit. Output adds the per-subspace
-    quantization error — summed per vector it is the reconstruction-error
-    audit a PQ deployment tracks."""
-    emb = _with_norm(
-        load_table(spark, sf_dir, "embeddings").filter(F.size("embedding") > 0)
+def _pq_encode(emb: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """PQ encode: (subs, cb, codes) — every embedding split into
+    PQ_SUBSPACES sub-vectors (vec_id, sub_id, sv); the codebook (code,
+    cb_sub, cv, cc) of the vec_id < PQ_CODEBOOK_K sub-vectors; and each
+    sub-vector's nearest sub-centroid (vec_id, sub_id, code, quant_err).
+    q_pq_codebook reports the codes, q_pq_search ranks the corpus by them
+    against a query's LUT over the same codebook."""
+    dim_per = 64 // PQ_SUBSPACES
+    subs = emb.select(
+        "vec_id",
+        F.posexplode(
+            F.array(
+                *[
+                    F.slice(F.col("v"), s * dim_per + 1, dim_per)
+                    for s in range(PQ_SUBSPACES)
+                ]
+            )
+        ).alias("sub_id", "sv"),
     )
-    subs = _pq_subvectors(emb)
     cb = (
         subs.filter(F.col("vec_id") < PQ_CODEBOOK_K)
         .select(
@@ -1045,7 +1013,7 @@ def q_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     # argmin as min(struct(d2, code)) per (vec, subspace) (r14, guide
     # §2.3): identical (d2 asc, code asc) ranking to the former
     # row_number window, map-side combinable, no sort
-    return (
+    codes = (
         scored.groupBy("vec_id", "sub_id")
         .agg(F.min(F.struct("d2", "code")).alias("best"))
         .select(
@@ -1055,27 +1023,34 @@ def q_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("best.d2").alias("quant_err"),
         )
     )
+    return subs, cb, codes
+
+
+def q_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization encode — the compression layer of an IVF-PQ
+    index (Jégou, Douze & Schmid, "Product Quantization for Nearest
+    Neighbor Search", TPAMI 2011): each 64-dim embedding splits into
+    M = 4 sub-vectors, each assigned to its nearest sub-centroid by
+    squared L2, giving a 4-code representation (here 4 x 2 bits vs 64
+    doubles — the ratio that makes 100 TB of vectors fit an ANN index).
+    Codebook = the sub-vectors of vec_id < K, the same deterministic
+    convention as q_ann_kmeans_ivf's centroids.
+
+    Shape: slices posexplode to (vec, subspace, sub-vector) — a narrow map;
+    the codebook (M x K sub-centroids) broadcasts; argmin is one min-struct
+    aggregate on rounded distance with centroid-id tie-break. d2 = xx - 2*xc + cc is
+    built from three dot() folds, the proven parity primitive, so the
+    oracle replays the distance bit-for-bit. Output adds the per-subspace
+    quantization error — summed per vector it is the reconstruction-error
+    audit a PQ deployment tracks."""
+    emb = _with_norm(
+        load_table(spark, sf_dir, "embeddings").filter(F.size("embedding") > 0)
+    )
+    return _pq_encode(emb)[2]
 
 
 PQ_QUERY_VEC = 7  # ADC query vector (outside the vec_id < 4 codebook)
 PQ_SEARCH_TOP = 10
-
-
-def _pq_subvectors(emb: DataFrame) -> DataFrame:
-    """(vec_id, sub_id, sv): every embedding split into PQ_SUBSPACES
-    sub-vectors — shared by q_pq_codebook (encode) and q_pq_search (ADC)."""
-    dim_per = 64 // PQ_SUBSPACES
-    return emb.select(
-        "vec_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice(F.col("v"), s * dim_per + 1, dim_per)
-                    for s in range(PQ_SUBSPACES)
-                ]
-            )
-        ).alias("sub_id", "sv"),
-    )
 
 
 def q_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1094,39 +1069,14 @@ def q_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     hang the ranking on accumulation order). Top-k by (adc_d2, vec_id)
     via TakeOrderedAndProject; `in_exact_topk` marks overlap with the
     true squared-L2 top-{PQ_SEARCH_TOP} — the recall signal an ADC
-    deployment monitors (reconstruction error is q_pq_codebook's)."""
+    deployment monitors (reconstruction error is q_pq_codebook's). The
+    corpus codes and the codebook come from _pq_encode, the same encode
+    q_pq_codebook reports."""
     emb = _with_norm(
         load_table(spark, sf_dir, "embeddings").filter(F.size("embedding") > 0)
     )
-    subs = _pq_subvectors(emb)
-    cb = (
-        subs.filter(F.col("vec_id") < PQ_CODEBOOK_K)
-        .select(
-            F.col("vec_id").alias("code"),
-            F.col("sub_id").alias("cb_sub"),
-            F.col("sv").alias("cv"),
-        )
-        .withColumn("cc", dot(F.col("cv"), F.col("cv")))
-    )
-    # encode: every corpus vector's nearest sub-centroid per subspace
-    scored = (
-        subs.withColumn("xx", dot(F.col("sv"), F.col("sv")))
-        .join(F.broadcast(cb), F.col("sub_id") == F.col("cb_sub"))
-        .select(
-            "vec_id",
-            "sub_id",
-            "code",
-            F.round(
-                F.col("xx") - 2 * dot(F.col("sv"), F.col("cv")) + F.col("cc"), 6
-            ).alias("d2"),
-        )
-    )
-    # same min-struct argmin as q_pq_codebook's encode (r14, guide §2.3)
-    codes = (
-        scored.groupBy("vec_id", "sub_id")
-        .agg(F.min(F.struct("d2", "code")).alias("best"))
-        .select("vec_id", "sub_id", F.col("best.code").alias("code"))
-    )
+    subs, cb, codes = _pq_encode(emb)
+    codes = codes.select("vec_id", "sub_id", "code")
     # query-side LUT: d2(query sub-vector, each sub-centroid)
     qsub = subs.filter(F.col("vec_id") == PQ_QUERY_VEC).select(
         F.col("sub_id").alias("q_sub"), F.col("sv").alias("qv")
@@ -1300,10 +1250,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("qv"), F.col("nrm").alias("qn")
     )
     sem = emb.crossJoin(F.broadcast(q)).select(
-        F.col("vec_id").alias("doc_id"),
-        F.round(
-            dot(F.col("qv"), F.col("v")) / (F.col("qn") * F.col("nrm")), 6
-        ).alias("cosine"),
+        F.col("vec_id").alias("doc_id"), _cosine()
     )
     sem_top = sem.orderBy(F.col("cosine").desc(), "doc_id").limit(RRF_POOL)
     w_sem = W.orderBy(F.col("cosine").desc(), "doc_id")
@@ -1493,17 +1440,61 @@ _ANN_PARAMS_SQL = f"""params AS (
             FROM embeddings WHERE len(embedding) > 0
         ), """
 
+# Embeddings as doubles with their L2 norm (_with_norm's replay).
+_NORMED_SQL = """SELECT vec_id, embedding::DOUBLE[] AS v,
+                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
+                       AS nrm
+            FROM embeddings"""
+# Per-query top-TOP_K of a ``scored`` (query_id, cand_id, cosine) CTE —
+# _top_k's replay.
+_TOP_K_SQL = f"""SELECT query_id, cand_id, cosine, rk FROM (
+            SELECT *, CAST(row_number() OVER (
+                PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS INT) AS rk
+            FROM scored
+        ) WHERE rk <= {TOP_K}"""
+# Nearest centroid (cents: centroid_id, cv, cn) of every ``e`` vector,
+# ties to the lower centroid id.
+_CELL_ASSIGN_SQL = """assigned AS (
+            SELECT vec_id, centroid_id AS cell FROM (
+                SELECT e.vec_id, c.centroid_id,
+                       row_number() OVER (
+                           PARTITION BY e.vec_id
+                           ORDER BY round(list_dot_product(e.v, c.cv)
+                                          / (e.nrm * c.cn), 6) DESC,
+                                    c.centroid_id) AS rk
+                FROM e CROSS JOIN cents c
+            ) WHERE rk = 1
+        )"""
+
 from kitkat_spark.operators.textops import BM25_SCORED_SQL  # noqa: E402
+
+# The md5-derived sign-LSH hyperplanes (_md5_planes: components in
+# [-1, 1)) and every vector's sign-bit bucket over them (_make_sign_sig_udf)
+# — the one replay the ANN-index oracles below share.
+_PLANE_ROW_SQL = """SELECT p, list_transform(generate_series(0, (SELECT d - 1 FROM dims)),
+                   d -> ('0x' || substr(md5('plane_' || p || '_' || d), 1, 15))::BIGINT
+                        / 1152921504606846976.0 * 2 - 1) AS pv"""
+_ANN_PLANES_SQL = f"""{_ANN_PARAMS_SQL}dims AS (
+            SELECT max(len(embedding)) AS d FROM embeddings
+        ), planes AS (
+            {_PLANE_ROW_SQL}
+            FROM UNNEST(generate_series(0, (SELECT np FROM params) - 1)) AS t(p)
+        ), """
+_SIGN_BUCKET_SQL = """sum(CASE WHEN list_dot_product(e.v, pl.pv) > 0
+                            THEN (1::BIGINT << pl.p) ELSE 0 END) AS bucket"""
+_ANN_BUCKETS_SQL = f"""buckets AS (
+            SELECT vec_id, {_SIGN_BUCKET_SQL}
+            FROM e, planes pl
+            GROUP BY vec_id
+        )"""
+
 
 # The SemDeDup replay (cell assignment -> within-cell threshold pairs ->
 # component labeling as a recursive CTE), shared verbatim between the
 # q_semdedup oracle and q_ann_index_delete's tombstone feed so the two
 # oracles can never drift on what "dedup-flagged" means.
 _SEMDEDUP_CTE_SQL = f"""e AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v,
-                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-                       AS nrm
-            FROM embeddings WHERE len(embedding) > 0
+            {_NORMED_SQL} WHERE len(embedding) > 0
         ), params AS (
             -- mirrors _semdedup_cells (uncapped); the flat argmax below is
             -- the k <= SEMDEDUP_MAX_CELLS regime, which holds at every
@@ -1516,17 +1507,7 @@ _SEMDEDUP_CTE_SQL = f"""e AS (
         ), cents AS (
             SELECT vec_id AS centroid_id, v AS cv, nrm AS cn
             FROM e, params WHERE vec_id < params.k
-        ), assigned AS (
-            SELECT vec_id, centroid_id AS cell FROM (
-                SELECT e.vec_id, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY e.vec_id
-                           ORDER BY round(list_dot_product(e.v, c.cv)
-                                          / (e.nrm * c.cn), 6) DESC,
-                                    c.centroid_id) AS rk
-                FROM e CROSS JOIN cents c
-            ) WHERE rk = 1
-        ), pairs AS (
+        ), {_CELL_ASSIGN_SQL}, pairs AS (
             SELECT a.vec_id AS ua, b.vec_id AS ub
             FROM assigned a
             JOIN assigned b ON b.cell = a.cell AND a.vec_id < b.vec_id
@@ -1545,6 +1526,32 @@ _SEMDEDUP_CTE_SQL = f"""e AS (
         ), comp AS (
             SELECT u, min(r) AS cluster FROM reach GROUP BY u
         )"""
+
+# PQ encode inputs: non-empty embeddings (e), their PQ_SUBSPACES
+# sub-vectors (subs) and the vec_id < PQ_CODEBOOK_K codebook (cb) — the
+# replay of _pq_encode that q_pq_codebook and q_pq_search share.
+_PQ_CODEBOOK_SQL = f"""e AS (
+            SELECT vec_id, embedding::DOUBLE[] AS v
+            FROM embeddings WHERE len(embedding) > 0
+        ), subs AS (
+            SELECT vec_id, CAST(s.s AS INT) AS sub_id,
+                   v[s.s * {_PQ_DIM_PER} + 1 : s.s * {_PQ_DIM_PER} + {_PQ_DIM_PER}]
+                       AS sv
+            FROM e, (SELECT unnest(generate_series(0, {PQ_SUBSPACES - 1})) AS s) s
+        ), cb AS (
+            SELECT vec_id AS code, sub_id AS cb_sub, sv AS cv,
+                   list_dot_product(sv, sv) AS cc
+            FROM subs WHERE vec_id < {PQ_CODEBOOK_K}
+        )"""
+
+# Per-query recall@k of an approximate top-k joined as ``a`` onto the
+# brute-force ``exact`` top-k (x).
+_RECALL_SQL = """CAST(count(*) AS INT) AS n_exact,
+               CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS INT)
+                   AS n_hits,
+               round(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END)
+                     / count(*), 4) AS recall_at_k
+        FROM exact x"""
 
 ORACLE: dict[str, str] = {
     # Identical micro-unit quantization (same IEEE product, integer
@@ -1578,10 +1585,7 @@ ORACLE: dict[str, str] = {
                   ORDER BY score DESC, doc_id LIMIT {RRF_POOL})
         ),
         e AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v,
-                   sqrt(list_dot_product(embedding::DOUBLE[],
-                                         embedding::DOUBLE[])) AS nrm
-            FROM embeddings
+            {_NORMED_SQL}
         ),
         sem AS (
             SELECT c.vec_id AS doc_id,
@@ -1624,19 +1628,7 @@ ORACLE: dict[str, str] = {
     # d2 = xx - 2xc + cc distance (three list_dot_product folds — the same
     # parity primitive as every cosine in this module).
     "q_pq_codebook": f"""
-        WITH e AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v
-            FROM embeddings WHERE len(embedding) > 0
-        ), subs AS (
-            SELECT vec_id, CAST(s.s AS INT) AS sub_id,
-                   v[s.s * {_PQ_DIM_PER} + 1 : s.s * {_PQ_DIM_PER} + {_PQ_DIM_PER}]
-                       AS sv
-            FROM e, (SELECT unnest(generate_series(0, {PQ_SUBSPACES - 1})) AS s) s
-        ), cb AS (
-            SELECT vec_id AS code, sub_id AS cb_sub, sv AS cv,
-                   list_dot_product(sv, sv) AS cc
-            FROM subs WHERE vec_id < {PQ_CODEBOOK_K}
-        ), scored AS (
+        WITH {_PQ_CODEBOOK_SQL}, scored AS (
             SELECT subs.vec_id, subs.sub_id, cb.code,
                    round(list_dot_product(subs.sv, subs.sv)
                          - 2 * list_dot_product(subs.sv, cb.cv) + cb.cc, 6)
@@ -1649,24 +1641,12 @@ ORACLE: dict[str, str] = {
             FROM scored
         ) WHERE rk = 1
     """,
-    # ADC replay: re-derive the codes (q_pq_codebook verbatim), build the
-    # query-side LUT, sum the per-subspace LUT distances as DECIMAL(18,6)
+    # ADC replay: re-derive the codes over the shared codebook CTEs, build
+    # the query-side LUT, sum the per-subspace LUT distances as DECIMAL(18,6)
     # (exact fixed-point — order-independent in both engines), and flag
     # overlap with the brute-force squared-L2 top-k.
     "q_pq_search": f"""
-        WITH e AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v
-            FROM embeddings WHERE len(embedding) > 0
-        ), subs AS (
-            SELECT vec_id, CAST(s.s AS INT) AS sub_id,
-                   v[s.s * {_PQ_DIM_PER} + 1 : s.s * {_PQ_DIM_PER} + {_PQ_DIM_PER}]
-                       AS sv
-            FROM e, (SELECT unnest(generate_series(0, {PQ_SUBSPACES - 1})) AS s) s
-        ), cb AS (
-            SELECT vec_id AS code, sub_id AS cb_sub, sv AS cv,
-                   list_dot_product(sv, sv) AS cc
-            FROM subs WHERE vec_id < {PQ_CODEBOOK_K}
-        ), codes AS (
+        WITH {_PQ_CODEBOOK_SQL}, codes AS (
             SELECT vec_id, sub_id, code FROM (
                 SELECT subs.vec_id, subs.sub_id, cb.code,
                        row_number() OVER (
@@ -1711,23 +1691,11 @@ ORACLE: dict[str, str] = {
                    AS rk
         FROM top t LEFT JOIN exact ex ON ex.vec_id = t.vec_id
     """,
-    # Shared replay of the sign-LSH bucketing (as in q_ann_ivf /
-    # q_ann_multiprobe) plus the brute-force exact side (q_similarity_search
-    # verbatim), then one recall aggregation per index, unioned with the
-    # index_name tag.
+    # The sign-LSH bucketing replay plus the brute-force exact side, then
+    # one recall aggregation per index, unioned with the index_name tag.
     "q_ann_recall_multiprobe": f"""
-        WITH {_ANN_PARAMS_SQL}dims AS (
-            SELECT max(len(embedding)) AS d FROM embeddings
-        ), planes AS (
-            SELECT p, list_transform(generate_series(0, (SELECT d - 1 FROM dims)),
-                   d -> ('0x' || substr(md5('plane_' || p || '_' || d), 1, 15))::BIGINT
-                        / 1152921504606846976.0 * 2 - 1) AS pv
-            FROM UNNEST(generate_series(0, (SELECT np FROM params) - 1)) AS t(p)
-        ), ea AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v,
-                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-                       AS nrm
-            FROM embeddings
+        WITH {_ANN_PLANES_SQL}ea AS (
+            {_NORMED_SQL}
         ), exact AS (
             -- q_similarity_search verbatim (over ALL embeddings)
             SELECT query_id, cand_id FROM (
@@ -1741,13 +1709,7 @@ ORACLE: dict[str, str] = {
             ) WHERE rk <= {TOP_K}
         ), e AS (
             SELECT vec_id, v, nrm FROM ea WHERE len(v) > 0
-        ), buckets AS (
-            SELECT vec_id,
-                   sum(CASE WHEN list_dot_product(e.v, pl.pv) > 0
-                            THEN (1::BIGINT << pl.p) ELSE 0 END) AS bucket
-            FROM e, planes pl
-            GROUP BY vec_id
-        ), stopk AS (
+        ), {_ANN_BUCKETS_SQL}, stopk AS (
             -- q_ann_ivf verbatim: probe = own bucket only
             SELECT query_id, cand_id FROM (
                 SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
@@ -1783,30 +1745,18 @@ ORACLE: dict[str, str] = {
             ) WHERE rk <= {TOP_K}
         )
         SELECT 'lsh_1probe' AS index_name, x.query_id,
-               CAST(count(*) AS INT) AS n_exact,
-               CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS INT)
-                   AS n_hits,
-               round(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END)
-                     / count(*), 4) AS recall_at_k
-        FROM exact x
+               {_RECALL_SQL}
         LEFT JOIN stopk a ON a.query_id = x.query_id AND a.cand_id = x.cand_id
         GROUP BY x.query_id
         UNION ALL
         SELECT 'lsh_multiprobe' AS index_name, x.query_id,
-               CAST(count(*) AS INT) AS n_exact,
-               CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS INT)
-                   AS n_hits,
-               round(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END)
-                     / count(*), 4) AS recall_at_k
-        FROM exact x
+               {_RECALL_SQL}
         LEFT JOIN mtopk a ON a.query_id = x.query_id AND a.cand_id = x.cand_id
         GROUP BY x.query_id
     """,
     "q_ann_recall": f"""
         WITH e AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v,
-                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-            FROM embeddings
+            {_NORMED_SQL}
         ), exact AS (
             -- q_similarity_search verbatim (over ALL embeddings)
             SELECT query_id, cand_id FROM (
@@ -1849,12 +1799,7 @@ ORACLE: dict[str, str] = {
             ) WHERE rk <= {TOP_K}
         )
         SELECT x.query_id,
-               CAST(count(*) AS INT) AS n_exact,
-               CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS INT)
-                   AS n_hits,
-               round(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END)
-                     / count(*), 4) AS recall_at_k
-        FROM exact x
+               {_RECALL_SQL}
         LEFT JOIN approx a ON a.query_id = x.query_id AND a.cand_id = x.cand_id
         GROUP BY x.query_id
     """,
@@ -1870,25 +1815,12 @@ ORACLE: dict[str, str] = {
     # top-k — value-verifying the k-means IVF index end to end
     "q_ann_kmeans_ivf": f"""
         WITH e AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v,
-                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-                       AS nrm
-            FROM embeddings
+            {_NORMED_SQL}
             WHERE len(embedding) > 0
         ), cents AS (
             SELECT vec_id AS centroid_id, v AS cv, nrm AS cn
             FROM e WHERE vec_id < {N_CENTROIDS}
-        ), assigned AS (
-            SELECT vec_id, centroid_id AS cell FROM (
-                SELECT e.vec_id, c.centroid_id,
-                       row_number() OVER (
-                           PARTITION BY e.vec_id
-                           ORDER BY round(list_dot_product(e.v, c.cv)
-                                          / (e.nrm * c.cn), 6) DESC,
-                                    c.centroid_id) AS rk
-                FROM e CROSS JOIN cents c
-            ) WHERE rk = 1
-        ), scored AS (
+        ), {_CELL_ASSIGN_SQL}, scored AS (
             SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
                    round(list_dot_product(eq.v, ec.v) / (eq.nrm * ec.nrm), 6)
                        AS cosine
@@ -1898,17 +1830,11 @@ ORACLE: dict[str, str] = {
             JOIN e ec ON ec.vec_id = c.vec_id
             WHERE q.vec_id < {N_QUERIES}
         )
-        SELECT query_id, cand_id, cosine, rk FROM (
-            SELECT *, CAST(row_number() OVER (
-                PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS INT) AS rk
-            FROM scored
-        ) WHERE rk <= {TOP_K}
+        {_TOP_K_SQL}
     """,
-    "q_centroid_assign": """
+    "q_centroid_assign": f"""
         WITH e AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v,
-                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-            FROM embeddings
+            {_NORMED_SQL}
         ), scored AS (
             SELECT e.vec_id, c.vec_id AS centroid_id,
                    round(list_dot_product(e.v, c.v) / (e.nrm * c.nrm), 6) AS cosine
@@ -1993,9 +1919,7 @@ ORACLE: dict[str, str] = {
         ), dims AS (
             SELECT max(len(embedding)) AS d FROM embeddings
         ), planes AS (
-            SELECT p, list_transform(generate_series(0, (SELECT d - 1 FROM dims)),
-                   d -> ('0x' || substr(md5('plane_' || p || '_' || d), 1, 15))::BIGINT
-                        / 1152921504606846976.0 * 2 - 1) AS pv
+            {_PLANE_ROW_SQL}
             FROM UNNEST(generate_series(0,
                  {ND_BANDS} * (SELECT r FROM params) - 1)) AS t(p)
         ), sig AS (
@@ -2030,32 +1954,15 @@ ORACLE: dict[str, str] = {
         WHERE round(list_dot_product(ea.v, eb.v) / (ea.nrm * eb.nrm), 6)
               >= {NEAR_DUP_COSINE}
     """,
-    # Replays the LSH bucketing value-for-value: hyperplane components are
-    # md5-derived (see _md5_planes), bucket = sum of sign bits, then the
-    # same bucket-local top-k as q_similarity_search. Embedding dim is
+    # Replays the LSH bucketing value-for-value (_ANN_PLANES_SQL,
+    # _ANN_BUCKETS_SQL), then the bucket-local top-k. Embedding dim is
     # derived from the table (constant per table, like the Spark UDF's
     # per-batch mat.shape[1]) rather than hardcoded.
     "q_ann_ivf": f"""
-        WITH {_ANN_PARAMS_SQL}dims AS (
-            SELECT max(len(embedding)) AS d FROM embeddings
-        ), planes AS (
-            SELECT p, list_transform(generate_series(0, (SELECT d - 1 FROM dims)),
-                   d -> ('0x' || substr(md5('plane_' || p || '_' || d), 1, 15))::BIGINT
-                        / 1152921504606846976.0 * 2 - 1) AS pv
-            FROM UNNEST(generate_series(0, (SELECT np FROM params) - 1)) AS t(p)
-        ), e AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v,
-                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-                       AS nrm
-            FROM embeddings
+        WITH {_ANN_PLANES_SQL}e AS (
+            {_NORMED_SQL}
             WHERE len(embedding) > 0
-        ), buckets AS (
-            SELECT vec_id,
-                   sum(CASE WHEN list_dot_product(e.v, pl.pv) > 0
-                            THEN (1::BIGINT << pl.p) ELSE 0 END) AS bucket
-            FROM e, planes pl
-            GROUP BY vec_id
-        ), scored AS (
+        ), {_ANN_BUCKETS_SQL}, scored AS (
             SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
                    round(list_dot_product(eq.v, ec.v) / (eq.nrm * ec.nrm), 6)
                        AS cosine
@@ -2065,35 +1972,15 @@ ORACLE: dict[str, str] = {
             JOIN e ec ON ec.vec_id = c.vec_id
             WHERE q.vec_id < {N_QUERIES}
         )
-        SELECT query_id, cand_id, cosine, rk FROM (
-            SELECT *, CAST(row_number() OVER (
-                PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS INT) AS rk
-            FROM scored
-        ) WHERE rk <= {TOP_K}
+        {_TOP_K_SQL}
     """,
     # Same bucketing replay as q_ann_ivf, plus the Hamming-1 probe fan-out
     # on the query side (bucket XOR each single bit).
     "q_ann_multiprobe": f"""
-        WITH {_ANN_PARAMS_SQL}dims AS (
-            SELECT max(len(embedding)) AS d FROM embeddings
-        ), planes AS (
-            SELECT p, list_transform(generate_series(0, (SELECT d - 1 FROM dims)),
-                   d -> ('0x' || substr(md5('plane_' || p || '_' || d), 1, 15))::BIGINT
-                        / 1152921504606846976.0 * 2 - 1) AS pv
-            FROM UNNEST(generate_series(0, (SELECT np FROM params) - 1)) AS t(p)
-        ), e AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v,
-                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-                       AS nrm
-            FROM embeddings
+        WITH {_ANN_PLANES_SQL}e AS (
+            {_NORMED_SQL}
             WHERE len(embedding) > 0
-        ), buckets AS (
-            SELECT vec_id,
-                   sum(CASE WHEN list_dot_product(e.v, pl.pv) > 0
-                            THEN (1::BIGINT << pl.p) ELSE 0 END) AS bucket
-            FROM e, planes pl
-            GROUP BY vec_id
-        ), qprobes AS (
+        ), {_ANN_BUCKETS_SQL}, qprobes AS (
             SELECT q.vec_id,
                    unnest([q.bucket] || list_transform(
                        generate_series(0, (SELECT np FROM params) - 1),
@@ -2109,41 +1996,20 @@ ORACLE: dict[str, str] = {
             JOIN e eq ON eq.vec_id = qp.vec_id
             JOIN e ec ON ec.vec_id = c.vec_id
         )
-        SELECT query_id, cand_id, cosine, rk FROM (
-            SELECT *, CAST(row_number() OVER (
-                PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS INT) AS rk
-            FROM scored
-        ) WHERE rk <= {TOP_K}
+        {_TOP_K_SQL}
     """,
 }
 
 # Shared CTE chain for the HNSW-style layered index family: plane/bucket
-# replay (as in q_ann_ivf/q_ann_multiprobe), layer membership via the
-# md5_long('lvl_<id>') % 2^l == 0 geometric rule, per-layer prefix-bucket
-# candidate joins, and the final exact re-rank (htopk). Also carries the
-# exact brute-force side (q_similarity_search verbatim) and the 1-probe
-# side (q_ann_ivf verbatim) for the recall/nDCG audits.
-_HNSW_CTES_SQL = f"""{_ANN_PARAMS_SQL}dims AS (
-            SELECT max(len(embedding)) AS d FROM embeddings
-        ), planes AS (
-            SELECT p, list_transform(generate_series(0, (SELECT d - 1 FROM dims)),
-                   d -> ('0x' || substr(md5('plane_' || p || '_' || d), 1, 15))::BIGINT
-                        / 1152921504606846976.0 * 2 - 1) AS pv
-            FROM UNNEST(generate_series(0, (SELECT np FROM params) - 1)) AS t(p)
-        ), ea AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v,
-                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-                       AS nrm
-            FROM embeddings
+# replay, layer membership via the md5_long('lvl_<id>') % 2^l == 0
+# geometric rule, per-layer prefix-bucket candidate joins, and the final
+# exact re-rank (htopk). Also carries the exact brute-force side and the
+# 1-probe side for the recall/nDCG audits.
+_HNSW_CTES_SQL = f"""{_ANN_PLANES_SQL}ea AS (
+            {_NORMED_SQL}
         ), e AS (
             SELECT vec_id, v, nrm FROM ea WHERE len(v) > 0
-        ), buckets AS (
-            SELECT vec_id,
-                   sum(CASE WHEN list_dot_product(e.v, pl.pv) > 0
-                            THEN (1::BIGINT << pl.p) ELSE 0 END) AS bucket
-            FROM e, planes pl
-            GROUP BY vec_id
-        ), htop AS (
+        ), {_ANN_BUCKETS_SQL}, htop AS (
             SELECT least((SELECT np FROM params), {HNSW_MAX_LAYERS}) AS top
         ), hcand AS (
             SELECT b.vec_id, t.l,
@@ -2213,22 +2079,12 @@ ORACLE["q_ann_hnsw"] = f"""
 ORACLE["q_ann_recall_hnsw"] = f"""
         WITH {_HNSW_CTES_SQL}
         SELECT 'lsh_1probe' AS index_name, x.query_id,
-               CAST(count(*) AS INT) AS n_exact,
-               CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS INT)
-                   AS n_hits,
-               round(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END)
-                     / count(*), 4) AS recall_at_k
-        FROM exact x
+               {_RECALL_SQL}
         LEFT JOIN stopk a ON a.query_id = x.query_id AND a.cand_id = x.cand_id
         GROUP BY x.query_id
         UNION ALL
         SELECT 'hnsw_layered' AS index_name, x.query_id,
-               CAST(count(*) AS INT) AS n_exact,
-               CAST(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS INT)
-                   AS n_hits,
-               round(sum(CASE WHEN a.cand_id IS NOT NULL THEN 1 ELSE 0 END)
-                     / count(*), 4) AS recall_at_k
-        FROM exact x
+               {_RECALL_SQL}
         LEFT JOIN htopk a ON a.query_id = x.query_id AND a.cand_id = x.cand_id
         GROUP BY x.query_id
     """
@@ -2274,28 +2130,15 @@ ORACLE["q_ndcg_eval"] = f"""
         FROM idcg i LEFT JOIN hd h ON h.query_id = i.query_id
     """
 
-# Replays the shared sign-LSH bucket assignment (identical planes/buckets
-# CTEs as q_ann_ivf), then the two shrinking integer aggregations; the
+# Replays the shared sign-LSH bucket assignment, then the two shrinking
+# integer aggregations; the
 # cumulative fraction sums BIGINT vector counts before its one division, so
 # the window never accumulates floating error.
 ORACLE["q_ann_index_stats"] = f"""
-        WITH {_ANN_PARAMS_SQL}dims AS (
-            SELECT max(len(embedding)) AS d FROM embeddings
-        ), planes AS (
-            SELECT p, list_transform(generate_series(0, (SELECT d - 1 FROM dims)),
-                   d -> ('0x' || substr(md5('plane_' || p || '_' || d), 1, 15))::BIGINT
-                        / 1152921504606846976.0 * 2 - 1) AS pv
-            FROM UNNEST(generate_series(0, (SELECT np FROM params) - 1)) AS t(p)
-        ), e AS (
+        WITH {_ANN_PLANES_SQL}e AS (
             SELECT vec_id, embedding::DOUBLE[] AS v
             FROM embeddings WHERE len(embedding) > 0
-        ), buckets AS (
-            SELECT vec_id,
-                   sum(CASE WHEN list_dot_product(e.v, pl.pv) > 0
-                            THEN (1::BIGINT << pl.p) ELSE 0 END) AS bucket
-            FROM e, planes pl
-            GROUP BY vec_id
-        ), occ AS (
+        ), {_ANN_BUCKETS_SQL}, occ AS (
             SELECT bucket, CAST(count(*) AS BIGINT) AS bucket_size
             FROM buckets GROUP BY bucket
         ), hist AS (
@@ -2465,23 +2308,10 @@ def q_ann_probe_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vec_id parity (the two ingest shards), and checks bucket-wise additivity
 # against the from-scratch occupancy — all exact integer counts.
 ORACLE["q_ann_index_merge"] = f"""
-        WITH {_ANN_PARAMS_SQL}dims AS (
-            SELECT max(len(embedding)) AS d FROM embeddings
-        ), planes AS (
-            SELECT p, list_transform(generate_series(0, (SELECT d - 1 FROM dims)),
-                   d -> ('0x' || substr(md5('plane_' || p || '_' || d), 1, 15))::BIGINT
-                        / 1152921504606846976.0 * 2 - 1) AS pv
-            FROM UNNEST(generate_series(0, (SELECT np FROM params) - 1)) AS t(p)
-        ), e AS (
+        WITH {_ANN_PLANES_SQL}e AS (
             SELECT vec_id, embedding::DOUBLE[] AS v
             FROM embeddings WHERE len(embedding) > 0
-        ), buckets AS (
-            SELECT vec_id,
-                   sum(CASE WHEN list_dot_product(e.v, pl.pv) > 0
-                            THEN (1::BIGINT << pl.p) ELSE 0 END) AS bucket
-            FROM e, planes pl
-            GROUP BY vec_id
-        ), seg_occ AS (
+        ), {_ANN_BUCKETS_SQL}, seg_occ AS (
             SELECT CAST(bucket AS BIGINT) AS bucket,
                    CAST(sum(CASE WHEN vec_id % 2 = 0 THEN 1 ELSE 0 END)
                         AS BIGINT) AS n_seg_a,
@@ -2506,23 +2336,10 @@ ORACLE["q_ann_index_merge"] = f"""
 # The capacity model on the occupancy table: exact integer numerators
 # (sum c^2 and sum c * (c + Hamming-1 neighborhood)), one division each.
 ORACLE["q_ann_probe_planner"] = f"""
-        WITH {_ANN_PARAMS_SQL}dims AS (
-            SELECT max(len(embedding)) AS d FROM embeddings
-        ), planes AS (
-            SELECT p, list_transform(generate_series(0, (SELECT d - 1 FROM dims)),
-                   d -> ('0x' || substr(md5('plane_' || p || '_' || d), 1, 15))::BIGINT
-                        / 1152921504606846976.0 * 2 - 1) AS pv
-            FROM UNNEST(generate_series(0, (SELECT np FROM params) - 1)) AS t(p)
-        ), e AS (
+        WITH {_ANN_PLANES_SQL}e AS (
             SELECT vec_id, embedding::DOUBLE[] AS v
             FROM embeddings WHERE len(embedding) > 0
-        ), buckets AS (
-            SELECT vec_id,
-                   sum(CASE WHEN list_dot_product(e.v, pl.pv) > 0
-                            THEN (1::BIGINT << pl.p) ELSE 0 END) AS bucket
-            FROM e, planes pl
-            GROUP BY vec_id
-        ), occ AS (
+        ), {_ANN_BUCKETS_SQL}, occ AS (
             SELECT bucket, CAST(count(*) AS BIGINT) AS c
             FROM buckets GROUP BY bucket
         ), tot AS (
@@ -2656,14 +2473,11 @@ ORACLE["q_ann_index_delete"] = f"""
         ), dims AS (
             SELECT max(len(embedding)) AS d FROM embeddings
         ), planes AS (
-            SELECT p, list_transform(generate_series(0, (SELECT d - 1 FROM dims)),
-                   d -> ('0x' || substr(md5('plane_' || p || '_' || d), 1, 15))::BIGINT
-                        / 1152921504606846976.0 * 2 - 1) AS pv
+            {_PLANE_ROW_SQL}
             FROM UNNEST(generate_series(0, (SELECT np FROM annp) - 1)) AS t(p)
         ), bkts AS (
             SELECT e.vec_id,
-                   sum(CASE WHEN list_dot_product(e.v, pl.pv) > 0
-                            THEN (1::BIGINT << pl.p) ELSE 0 END) AS bucket
+                   {_SIGN_BUCKET_SQL}
             FROM e, planes pl
             GROUP BY e.vec_id
         ), audit AS (
@@ -2786,20 +2600,12 @@ def q_ann_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the reversed (refreshed) embeddings through the same md5 planes; the
 # incremental n_after must equal the from-scratch post-update occupancy.
 ORACLE["q_ann_index_update"] = f"""
-        WITH {_ANN_PARAMS_SQL}dims AS (
-            SELECT max(len(embedding)) AS d FROM embeddings
-        ), planes AS (
-            SELECT p, list_transform(generate_series(0, (SELECT d - 1 FROM dims)),
-                   d -> ('0x' || substr(md5('plane_' || p || '_' || d), 1, 15))::BIGINT
-                        / 1152921504606846976.0 * 2 - 1) AS pv
-            FROM UNNEST(generate_series(0, (SELECT np FROM params) - 1)) AS t(p)
-        ), e AS (
+        WITH {_ANN_PLANES_SQL}e AS (
             SELECT vec_id, embedding::DOUBLE[] AS v
             FROM embeddings WHERE len(embedding) > 0
         ), old_b AS (
             SELECT vec_id,
-                   sum(CASE WHEN list_dot_product(e.v, pl.pv) > 0
-                            THEN (1::BIGINT << pl.p) ELSE 0 END) AS bucket
+                   {_SIGN_BUCKET_SQL}
             FROM e, planes pl
             GROUP BY vec_id
         ), new_b AS (
@@ -2979,9 +2785,7 @@ ORACLE["q_ann_rebalance"] = f"""
             SELECT vec_id, embedding::DOUBLE[] AS v
             FROM embeddings WHERE len(embedding) > 0
         ), planes0 AS (
-            SELECT p, list_transform(generate_series(0, (SELECT d - 1 FROM dims)),
-                   d -> ('0x' || substr(md5('plane_' || p || '_' || d), 1, 15))::BIGINT
-                        / 1152921504606846976.0 * 2 - 1) AS pv
+            {_PLANE_ROW_SQL}
             FROM UNNEST(generate_series(0, (SELECT np FROM params) - 1)) AS t(p)
         ), planes1 AS (
             SELECT p, list_transform(generate_series(0, (SELECT d - 1 FROM dims)),
@@ -2990,13 +2794,11 @@ ORACLE["q_ann_rebalance"] = f"""
             FROM UNNEST(generate_series(0, (SELECT np FROM params) - 1)) AS t(p)
         ), b0 AS (
             SELECT vec_id,
-                   sum(CASE WHEN list_dot_product(e.v, pl.pv) > 0
-                            THEN (1::BIGINT << pl.p) ELSE 0 END) AS bucket
+                   {_SIGN_BUCKET_SQL}
             FROM e, planes0 pl GROUP BY vec_id
         ), b1 AS (
             SELECT vec_id,
-                   sum(CASE WHEN list_dot_product(e.v, pl.pv) > 0
-                            THEN (1::BIGINT << pl.p) ELSE 0 END) AS bucket
+                   {_SIGN_BUCKET_SQL}
             FROM e, planes1 pl GROUP BY vec_id
         ), o0 AS (
             SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM b0 GROUP BY bucket
@@ -3104,20 +2906,12 @@ def q_ann_gen_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # policies that would break it (a generation built from a filtered or
 # stale snapshot) — a Spark-side divergence hash-fails loudly.
 ORACLE["q_ann_gen_gc"] = f"""
-        WITH {_ANN_PARAMS_SQL}dims AS (
-            SELECT max(len(embedding)) AS d FROM embeddings
-        ), planes AS (
-            SELECT p, list_transform(generate_series(0, (SELECT d - 1 FROM dims)),
-                   d -> ('0x' || substr(md5('plane_' || p || '_' || d), 1, 15))::BIGINT
-                        / 1152921504606846976.0 * 2 - 1) AS pv
-            FROM UNNEST(generate_series(0, (SELECT np FROM params) - 1)) AS t(p)
-        ), e AS (
+        WITH {_ANN_PLANES_SQL}e AS (
             SELECT vec_id, embedding::DOUBLE[] AS v
             FROM embeddings WHERE len(embedding) > 0
         ), b0 AS (
             SELECT vec_id,
-                   sum(CASE WHEN list_dot_product(e.v, pl.pv) > 0
-                            THEN (1::BIGINT << pl.p) ELSE 0 END) AS bucket
+                   {_SIGN_BUCKET_SQL}
             FROM e, planes pl GROUP BY vec_id
         ), audit AS (
             SELECT CAST(bucket AS BIGINT) AS bucket,

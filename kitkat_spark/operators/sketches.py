@@ -43,24 +43,24 @@ def _bucket(token: Column, seed: int) -> Column:
     )
 
 
+def _cms_cells(token: Column) -> Column:
+    """The D (seed, bucket) grid cells of ``token``, one row each."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(s).alias("seed"), _bucket(token, s).alias("bucket"))
+                for s in range(CMS_D)
+            ]
+        )
+    )
+
+
 def cms_counters(token_stream: DataFrame, col: str = "token") -> DataFrame:
     """(seed, bucket, n): the D x W grid as a DataFrame — at most D*W rows
     no matter the input size; the explode is map-side (D rows per token)
     and the groupBy key domain is the grid itself, so the shuffle carries
     only partial counters."""
-    cells = token_stream.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("seed"),
-                        _bucket(F.col(col), s).alias("bucket"),
-                    )
-                    for s in range(CMS_D)
-                ]
-            )
-        ).alias("c")
-    )
+    cells = token_stream.select(_cms_cells(F.col(col)).alias("c"))
     return cells.groupBy("c.seed", "c.bucket").agg(F.count("*").alias("n"))
 
 
@@ -90,17 +90,7 @@ def q_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     counters = (
         freq.select(
             F.col("n_true").alias("n"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("seed"),
-                            _bucket(F.col("token"), s).alias("bucket"),
-                        )
-                        for s in range(CMS_D)
-                    ]
-                )
-            ).alias("c"),
+            _cms_cells(F.col("token")).alias("c"),
         )
         .groupBy("c.seed", "c.bucket")
         .agg(F.sum("n").alias("n"))
@@ -109,17 +99,7 @@ def q_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = top.select(
         "token",
         "n_true",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("seed"),
-                        _bucket(F.col("token"), s).alias("bucket"),
-                    )
-                    for s in range(CMS_D)
-                ]
-            )
-        ).alias("c"),
+        _cms_cells(F.col("token")).alias("c"),
     ).select("token", "n_true", "c.seed", "c.bucket")
     # D*K probe rows vs <= D*W grid rows: broadcast the probes
     est = (
@@ -258,6 +238,60 @@ _HLL_LC_SQL = (
 )
 
 
+def hll_register(h: Column) -> tuple[Column, Column]:
+    """(bucket, rho) register update of a 64-bit hash ``h``: the low HLL_P
+    bits pick the register, rho = 1-based position of the leading 1-bit in
+    the next REST_W-bit window — REST_W - bitlength(rest) + 1, with
+    all-zeros mapping to REST_W + 1. bitlength via length(bin(x)): bin()
+    drops leading zeros identically in Spark and DuckDB."""
+    rest = F.pmod(F.shiftright(h, HLL_P), F.lit(1 << HLL_REST_W))
+    rho = F.when(rest == 0, F.lit(HLL_REST_W + 1)).otherwise(
+        F.lit(HLL_REST_W + 1) - F.length(F.bin(rest))
+    )
+    return F.pmod(h, F.lit(HLL_M)).alias("bucket"), rho.alias("rho")
+
+
+def hll_estimate(regs: DataFrame, key: str) -> DataFrame:
+    """(key, zeros, hsum, est_distinct) from the registers (key, bucket, r)
+    of one HLL sketch per ``key`` value — shared by q_hll_distinct (key:
+    flag) and q_stream_hll_wm (key: window_start). Empty registers never
+    surface as rows; they contribute 2^S each to the harmonic sum (register
+    value 0), folded in arithmetically. The small-range branch serves the
+    precomputed HLL_LC table, decided on the engine-identical raw
+    estimate."""
+    sk = regs.groupBy(key).agg(
+        (F.lit(HLL_M) - F.count("*")).cast("long").alias("zeros"),
+        (
+            F.sum(
+                F.expr(
+                    f"shiftleft(cast(1 as bigint), cast({HLL_S} - r as int))"
+                )
+            )
+            + (F.lit(HLL_M) - F.count("*")) * F.lit(1 << HLL_S)
+        )
+        .cast("long")
+        .alias("hsum"),
+    )
+    raw = F.lit(HLL_ALPHA) * F.lit(float(_HLL_M2S)) / F.col("hsum").cast(
+        "double"
+    )
+    return sk.select(
+        key,
+        "zeros",
+        "hsum",
+        F.when(
+            (raw <= F.lit(2.5 * HLL_M)) & (F.col("zeros") > 0),
+            F.element_at(
+                F.array(*[F.lit(v) for v in HLL_LC]),
+                F.greatest(F.col("zeros"), F.lit(1)).cast("int"),
+            ),
+        )
+        .otherwise(F.round(raw))
+        .cast("long")
+        .alias("est_distinct"),
+    )
+
+
 def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog distinct-count audit: estimate |distinct l_orderkey| per
     l_returnflag from a 64-register HLL sketch (Flajolet, Fusy, Gandouet,
@@ -284,66 +318,20 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no cross-engine ln()); the branch decision itself compares the
     engine-identical raw estimate. At every tested SF the per-flag
     cardinality (>= ~700) keeps the pure-HLL branch taken here — the
-    streaming variant (q_stream_hll_wm) exercises the linear branch hot.
+    streaming variant (q_stream_hll_wm, the same hll_register and
+    hll_estimate keyed on its window) exercises the linear branch hot.
     Expected relative error is 1.04/sqrt(64) ~= 13%; tests/test_sketches.py
     asserts the measured error inside that envelope."""
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"), F.col("l_orderkey").alias("k")
     )
     h = md5_long(F.concat(F.lit("hll|"), F.col("k").cast("string")))
-    hashed = li.select(
-        "flag",
-        F.pmod(h, F.lit(HLL_M)).alias("bucket"),
-        F.pmod(F.shiftright(h, HLL_P), F.lit(1 << HLL_REST_W)).alias("rest"),
-    )
-    # rho = 1-based position of the leading 1-bit in the REST_W-bit window:
-    # REST_W - bitlength(rest) + 1, with all-zeros mapping to REST_W + 1.
-    # bitlength via length(bin(x)) — bin() drops leading zeros identically
-    # in Spark and DuckDB.
     regs = (
-        hashed.select(
-            "flag",
-            "bucket",
-            F.when(F.col("rest") == 0, F.lit(HLL_REST_W + 1))
-            .otherwise(F.lit(HLL_REST_W + 1) - F.length(F.bin("rest")))
-            .alias("rho"),
-        )
+        li.select("flag", *hll_register(h))
         .groupBy("flag", "bucket")
         .agg(F.max("rho").alias("r"))
     )
-    # Empty registers never surface as rows; they contribute 2^S each to
-    # the harmonic sum (register value 0), folded in arithmetically.
-    sk = regs.groupBy("flag").agg(
-        (F.lit(HLL_M) - F.count("*")).cast("long").alias("zeros"),
-        (
-            F.sum(
-                F.expr(
-                    f"shiftleft(cast(1 as bigint), cast({HLL_S} - r as int))"
-                )
-            )
-            + (F.lit(HLL_M) - F.count("*")) * F.lit(1 << HLL_S)
-        )
-        .cast("long")
-        .alias("hsum"),
-    )
-    raw = F.lit(HLL_ALPHA) * F.lit(float(_HLL_M2S)) / F.col("hsum").cast(
-        "double"
-    )
-    est = sk.select(
-        "flag",
-        "zeros",
-        "hsum",
-        F.when(
-            (raw <= F.lit(2.5 * HLL_M)) & (F.col("zeros") > 0),
-            F.element_at(
-                F.array(*[F.lit(v) for v in HLL_LC]),
-                F.greatest(F.col("zeros"), F.lit(1)).cast("int"),
-            ),
-        )
-        .otherwise(F.round(raw))
-        .cast("long")
-        .alias("est_distinct"),
-    )
+    est = hll_estimate(regs, "flag")
     exact = li.groupBy("flag").agg(
         F.countDistinct("k").alias("exact_distinct")
     )

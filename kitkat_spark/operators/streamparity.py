@@ -32,7 +32,12 @@ from pyspark.sql import functions as F
 from kitkat_spark.functions.text import fingerprint_md5
 from kitkat_spark.operators.payloads import build_kpl_blobs
 from kitkat_spark.operators.replay import _replay_info, replay_scope, run_replay
-from kitkat_spark.operators.temporal import SP_K, SP_N
+from kitkat_spark.operators.temporal import (
+    GAP_FILL_GRID_SQL,
+    SP_K,
+    SP_N,
+    session_path,
+)
 from kitkat_spark.sources import load_table
 from kitkat_spark.streaming.consumer import ConsumeOptions, consume
 
@@ -252,7 +257,6 @@ def q_stream_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     path domain with a TakeOrderedAndProject top-K."""
     from pyspark.sql import Window as W
 
-    from kitkat_spark.operators.temporal import SP_K, SP_N
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
@@ -265,21 +269,7 @@ def q_stream_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sealed = (
         stream.groupBy(F.session_window(F.col("ts"), "30 minutes").alias("s"), "user_id")
-        .agg(
-            F.concat_ws(
-                ">",
-                F.transform(
-                    F.slice(
-                        F.array_sort(
-                            F.collect_list(F.struct("ts", "event_id", "event_type"))
-                        ),
-                        1,
-                        SP_N,
-                    ),
-                    lambda e: e["event_type"],
-                ),
-            ).alias("path")
-        )
+        .agg(session_path().alias("path"))
         .select(F.col("s.end").alias("session_end"), "user_id", "path")
     )
     drained = run_replay(
@@ -480,7 +470,9 @@ def q_stream_hll_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver hash-compares the estimates — including the small-range
     linear-counting branch, which is HOT at fixture scale (1-30 distinct
     users/window) and served from the precomputed HLL_LC table in both
-    engines (sketches.py — no cross-engine ln()). At sf0.1 (~100-170
+    engines (sketches.py — no cross-engine ln()). The register update and
+    the estimator are q_hll_distinct's own (sketches.hll_register,
+    sketches.hll_estimate keyed on window_start). At sf0.1 (~100-170
     users/window) windows straddle the branch boundary, exercising both
     paths with the branch decided by the engine-identical raw estimate.
 
@@ -489,15 +481,7 @@ def q_stream_hll_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the same boundary — verification only; a production run keeps just
     the registers."""
     from kitkat_spark.functions.text import md5_long
-    from kitkat_spark.operators.sketches import (
-        HLL_ALPHA,
-        HLL_LC,
-        HLL_M,
-        HLL_P,
-        HLL_REST_W,
-        HLL_S,
-        _HLL_M2S,
-    )
+    from kitkat_spark.operators.sketches import hll_estimate, hll_register
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
     path, n_rows = _replay_info(spark, sf_dir, "hll", lambda: ev)
@@ -506,55 +490,13 @@ def q_stream_hll_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.readStream.schema(ev.schema)
         .parquet(path)
         .withWatermark("ts", "10 minutes")
-        .select(
-            "ts",
-            F.pmod(h, F.lit(HLL_M)).alias("bucket"),
-            F.pmod(F.shiftright(h, HLL_P), F.lit(1 << HLL_REST_W)).alias(
-                "rest"
-            ),
-        )
-        .select(
-            "ts",
-            "bucket",
-            F.when(F.col("rest") == 0, F.lit(HLL_REST_W + 1))
-            .otherwise(F.lit(HLL_REST_W + 1) - F.length(F.bin("rest")))
-            .alias("rho"),
-        )
+        .select("ts", *hll_register(h))
         .groupBy(F.window("ts", "1 hour").alias("w"), "bucket")
         .agg(F.max("rho").alias("r"))
         .select(F.col("w.start").alias("window_start"), "bucket", "r")
     )
     sealed = run_replay(spark, sf_dir, "q_stream_hll_wm", stream, rows=n_rows)
-    sk = sealed.groupBy("window_start").agg(
-        (F.lit(HLL_M) - F.count("*")).cast("long").alias("zeros"),
-        (
-            F.sum(
-                F.expr(
-                    f"shiftleft(cast(1 as bigint), cast({HLL_S} - r as int))"
-                )
-            )
-            + (F.lit(HLL_M) - F.count("*")) * F.lit(1 << HLL_S)
-        )
-        .cast("long")
-        .alias("hsum"),
-    )
-    raw = F.lit(HLL_ALPHA) * F.lit(float(_HLL_M2S)) / F.col("hsum").cast(
-        "double"
-    )
-    est = sk.select(
-        "window_start",
-        "zeros",
-        F.when(
-            (raw <= F.lit(2.5 * HLL_M)) & (F.col("zeros") > 0),
-            F.element_at(
-                F.array(*[F.lit(v) for v in HLL_LC]),
-                F.greatest(F.col("zeros"), F.lit(1)).cast("int"),
-            ),
-        )
-        .otherwise(F.round(raw))
-        .cast("long")
-        .alias("est_distinct"),
-    )
+    est = hll_estimate(sealed, "window_start")
     exact = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.window("ts", "1 hour").alias("w"))
@@ -781,8 +723,8 @@ def q_consume_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     2*count(events) - 5, quarantined:kpl_decode_failed = 1. The sink starts
     its own query, so this call enters the replay harness's scope directly:
     fresh sinks and checkpoint per call, so every call consumes the whole
-    stream (the effectively-once resume over a caught-up checkpoint is
-    tests/test_sinks.py's to prove)."""
+    stream (that a restart over a caught-up checkpoint appends nothing
+    again is tests/test_sinks.py's to prove)."""
     from kitkat_spark.streaming.sinks import consume_with_dlq
 
     mixed = build_kpl_records(spark, sf_dir).unionByName(
@@ -856,6 +798,18 @@ from kitkat_spark.operators.sketches import (  # noqa: E402
     HLL_REST_W as _HRW,
     HLL_S as _HS,
 )
+
+# Hourly per-type counts of the windows the final watermark sealed
+# (window end <= max(ts) - 10 min).
+_SEALED_HOURLY_SQL = """
+        SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
+               event_type,
+               count(*) AS n_events
+        FROM events
+        GROUP BY 1, 2
+        HAVING CAST(date_trunc('hour', ts) AS TIMESTAMP) + INTERVAL 1 HOUR
+               <= (SELECT max(ts) - INTERVAL 10 MINUTE FROM events)
+    """
 
 ORACLE: dict[str, str] = {
     # The same sealed-window boundary and md5 grid as the stream: every
@@ -1017,7 +971,7 @@ ORACLE: dict[str, str] = {
                coalesce(z > {ANOMALY_Z}, false) AS is_anomaly
         FROM scored
     """,
-    "q_stream_gap_fill": """
+    "q_stream_gap_fill": f"""
         WITH hourly AS (
             SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS h, event_type,
                    count(*) AS n_events,
@@ -1026,25 +980,7 @@ ORACLE: dict[str, str] = {
             FROM events GROUP BY 1, 2
             HAVING CAST(date_trunc('hour', ts) AS TIMESTAMP) + INTERVAL 1 HOUR
                    <= (SELECT max(ts) - INTERVAL 10 MINUTE FROM events)
-        ), spans AS (
-            SELECT event_type, min(h) AS h0, max(h) AS h1 FROM hourly GROUP BY 1
-        ), grid AS (
-            SELECT s.event_type, CAST(g.gs AS TIMESTAMP) AS window_start
-            FROM spans s, LATERAL (
-                SELECT unnest(generate_series(s.h0, s.h1, INTERVAL 1 HOUR)) AS gs
-            ) g
-        )
-        SELECT g.window_start, g.event_type,
-               coalesce(h.n_events, 0) AS n_events,
-               coalesce(h.sum_value, 0.0) AS sum_value,
-               CAST(h.n_events IS NULL AS INT) AS is_gap,
-               last_value(h.sum_value IGNORE NULLS) OVER (
-                   PARTITION BY g.event_type ORDER BY g.window_start
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ) AS filled_value
-        FROM grid g
-        LEFT JOIN hourly h
-          ON h.event_type = g.event_type AND h.h = g.window_start
+        ), {GAP_FILL_GRID_SQL}
     """,
     "q_stream_dedup_wm": """
         SELECT DISTINCT event_id, user_id, event_type FROM events
@@ -1052,26 +988,10 @@ ORACLE: dict[str, str] = {
     # the on-time half only: batch 2's 3-days-late rows must be dropped by
     # the watermark, so emitted counts are the ORIGINAL events in windows
     # the final watermark sealed
-    "q_stream_late_drop_wm": """
-        SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
-               event_type,
-               count(*) AS n_events
-        FROM events
-        GROUP BY 1, 2
-        HAVING CAST(date_trunc('hour', ts) AS TIMESTAMP) + INTERVAL 1 HOUR
-               <= (SELECT max(ts) - INTERVAL 10 MINUTE FROM events)
-    """,
+    "q_stream_late_drop_wm": _SEALED_HOURLY_SQL,
     # dedup collapses the doubled stream to distinct events; append mode
     # seals hourly windows whose end the final watermark passed
-    "q_stream_dedup_agg_wm": """
-        SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
-               event_type,
-               count(*) AS n_events
-        FROM events
-        GROUP BY 1, 2
-        HAVING CAST(date_trunc('hour', ts) AS TIMESTAMP) + INTERVAL 1 HOUR
-               <= (SELECT max(ts) - INTERVAL 10 MINUTE FROM events)
-    """,
+    "q_stream_dedup_agg_wm": _SEALED_HOURLY_SQL,
     # gap-and-island twin of session_window (new session when gap >= 30 min
     # — the half-open merge rule), filtered to the sessions append mode
     # seals: end <= final watermark = max(ts) - 10 min
@@ -1434,24 +1354,7 @@ ORACLE["q_stream_boilerplate"] = f"""
         ), d AS (
             SELECT doc_id, w FROM d0, horizon
             WHERE (doc_id // 60 + 1) * 60 <= horizon.wm
-        ), pairs AS (
-            SELECT DISTINCT doc_id,
-                   md5(array_to_string(list_slice(w, i, i + 2), ' ')) AS fp
-            FROM d, UNNEST(generate_series(1, len(w) - 2)) AS t(i)
-        ), nd AS (
-            SELECT count(*) AS n_docs FROM d
-        ), marked AS (
-            SELECT doc_id, count(*) OVER (PARTITION BY fp) AS df FROM pairs
-        )
-        SELECT doc_id,
-               CAST(count(*) AS BIGINT) AS n_grams,
-               CAST(sum(CASE WHEN df * 1000 > n_docs * {_corpus.BOILER_DF_PERMILLE}
-                             THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler,
-               CAST(round(sum(CASE WHEN df * 1000 > n_docs * {_corpus.BOILER_DF_PERMILLE}
-                              THEN 1 ELSE 0 END) * 1.0 / count(*) * 10000)
-                    AS BIGINT) / 10000.0 AS boiler_frac
-        FROM marked, nd
-        GROUP BY doc_id
+        ), {_corpus.BOILER_ROLLUP_SQL}
     """
 
 
@@ -1671,40 +1574,7 @@ ORACLE["q_stream_fertility"] = f"""
                    length(text) AS ch
             FROM documents, horizon
             WHERE (doc_id // 60 + 1) * 60 <= horizon.wm
-        ), agg AS (
-            SELECT source, bucket,
-                   CAST(count(*) AS BIGINT) AS n_docs,
-                   CAST(sum(ws) AS BIGINT) AS n_words,
-                   CAST(sum(re_t) AS BIGINT) AS n_tokens,
-                   CAST(sum(ch) AS BIGINT) AS n_chars
-            FROM per GROUP BY 1, 2
-        ), win AS (
-            SELECT *,
-                   CAST(sum(n_words) OVER wt AS BIGINT) AS cw,
-                   CAST(sum(n_tokens) OVER wt AS BIGINT) AS ctk,
-                   CAST(sum(n_chars) OVER wt AS BIGINT) AS cch
-            FROM agg
-            WINDOW wt AS (PARTITION BY source ORDER BY bucket
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        ), units AS (
-            SELECT source, bucket, n_docs, n_words, n_tokens, n_chars,
-                   CAST(round(n_tokens * 1.0 / n_words * 10000) AS BIGINT)
-                       AS fm,
-                   CAST(round(ctk * 1.0 / cw * 10000) AS BIGINT) AS ft,
-                   CAST(round(n_chars * 1.0 / n_tokens * 10000) AS BIGINT)
-                       AS cm,
-                   CAST(round(cch * 1.0 / ctk * 10000) AS BIGINT) AS ctr
-            FROM win
-        )
-        SELECT source, CAST(bucket AS BIGINT) AS bucket,
-               n_docs, n_words, n_tokens, n_chars,
-               fm / 10000.0 AS fertility,
-               ft / 10000.0 AS trailing_fertility,
-               cm / 10000.0 AS chars_per_token,
-               ctr / 10000.0 AS trailing_cpt,
-               (abs(fm - ft) * 100 > ft * {_textops.FERT_DRIFT_PCT}
-                OR abs(cm - ctr) * 100 > ctr * {_textops.FERT_DRIFT_PCT}) AS drift
-        FROM units
+        ), {_textops.FERT_DRIFT_SQL}
     """
 
 
@@ -1911,40 +1781,7 @@ ORACLE["q_stream_boiler_sources"] = f"""
         ), d AS (
             SELECT doc_id, source, w FROM d0, horizon
             WHERE (doc_id // 60 + 1) * 60 <= horizon.wm
-        ), pairs AS (
-            SELECT DISTINCT doc_id, source,
-                   md5(array_to_string(list_slice(w, i, i + 2), ' ')) AS fp
-            FROM d, UNNEST(generate_series(1, len(w) - 2)) AS t(i)
-        ), nd AS (
-            SELECT count(*) AS n_docs_corpus FROM d
-        ), src_df AS (
-            SELECT fp, source, CAST(count(*) AS BIGINT) AS df_src
-            FROM pairs GROUP BY fp, source
-        ), gram_df AS (
-            SELECT fp, CAST(sum(df_src) AS BIGINT) AS df
-            FROM src_df GROUP BY fp
-        ), commodity AS (
-            SELECT fp, df FROM gram_df, nd
-            WHERE df * 1000 > n_docs_corpus * {_corpus.BOILER_DF_PERMILLE}
-        ), hits AS (
-            SELECT p.source,
-                   CAST(count(DISTINCT p.doc_id) AS BIGINT) AS n_docs,
-                   CAST(count(*) AS BIGINT) AS n_hits,
-                   CAST(sum(CASE WHEN c.fp IS NOT NULL THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_boiler_hits
-            FROM pairs p LEFT JOIN commodity c USING (fp)
-            GROUP BY p.source
-        ), dom AS (
-            SELECT s.source, CAST(count(*) AS BIGINT) AS n_dominated
-            FROM src_df s JOIN commodity c USING (fp)
-            WHERE s.df_src * 2 > c.df
-            GROUP BY s.source
-        )
-        SELECT h.source, h.n_docs, h.n_hits, h.n_boiler_hits,
-               CAST(round(h.n_boiler_hits * 1.0 / h.n_hits * 10000) AS BIGINT)
-                   / 10000.0 AS boiler_frac,
-               coalesce(dom.n_dominated, 0) AS n_dominated
-        FROM hits h LEFT JOIN dom USING (source)
+        ), {_corpus.BOILER_SOURCES_SQL}
     """
 
 
@@ -2057,17 +1894,7 @@ def q_stream_ttl_evict(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The batch TTL policy projected to the keep decision — the only output a
 # state-evicting deployment can (and needs to) reproduce exactly.
 ORACLE["q_stream_ttl_evict"] = f"""
-        WITH d AS (
-            SELECT doc_id,
-                   md5(substr(lower(regexp_replace(text, '\\s+', ' ', 'g')),
-                       1, 200)) AS fp
-            FROM documents
-        ), g AS (
-            SELECT doc_id, fp,
-                   doc_id - lag(doc_id) OVER (PARTITION BY fp ORDER BY doc_id)
-                       AS prev_gap
-            FROM d
-        )
+        WITH {_corpus.TTL_GAPS_SQL}
         SELECT doc_id, fp,
                (prev_gap IS NULL OR prev_gap > {_corpus.DEDUP_TTL_DOCS})
                    AS kept
@@ -2142,14 +1969,4 @@ ORACLE["q_stream_token_budget"] = _corpus._unimax_ctes_sql(f"""
                        '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT) AS t
             FROM documents, horizon
             WHERE (doc_id // 60 + 1) * 60 <= horizon.wm
-        """) + """
-        SELECT source, n_docs, n_tokens,
-               w / 1000000.0 AS weight,
-               CAST(round(budget * 1.0 / wt * w) AS BIGINT) AS naive_tokens,
-               cap AS cap_tokens,
-               capped,
-               alloc_tokens,
-               CAST(round(alloc_tokens * 1.0 / n_tokens * 10000) AS BIGINT)
-                   / 10000.0 AS epochs
-        FROM alloc
-    """
+        """) + _corpus.BUDGET_ALLOC_SQL

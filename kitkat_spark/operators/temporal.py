@@ -363,6 +363,25 @@ SP_N = 3  # path prefix length (first N event types per session)
 SP_K = 15  # top paths reported
 
 
+def session_path() -> F.Column:
+    """Aggregate: the session's first SP_N event types in (ts, event_id)
+    order, joined with '>' — q_session_paths' path, also
+    q_stream_session_paths'."""
+    return F.concat_ws(
+        ">",
+        F.transform(
+            F.slice(
+                F.array_sort(
+                    F.collect_list(F.struct("ts", "event_id", "event_type"))
+                ),
+                1,
+                SP_N,
+            ),
+            lambda s: s["event_type"],
+        ),
+    )
+
+
 def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-K session paths — sequence mining next to q_markov_transitions'
     per-step matrix: the most common FIRST-SP_N event-type sequences across
@@ -395,21 +414,7 @@ def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         "session_id",
         F.sum("is_new").over(w.rowsBetween(W.unboundedPreceding, W.currentRow)),
     )
-    paths = sess.groupBy("user_id", "session_id").agg(
-        F.concat_ws(
-            ">",
-            F.transform(
-                F.slice(
-                    F.array_sort(
-                        F.collect_list(F.struct("ts", "event_id", "event_type"))
-                    ),
-                    1,
-                    SP_N,
-                ),
-                lambda s: s["event_type"],
-            ),
-        ).alias("path")
-    )
+    paths = sess.groupBy("user_id", "session_id").agg(session_path().alias("path"))
     counts = paths.groupBy("path").agg(F.count("*").alias("n_sessions"))
     top = counts.orderBy(F.col("n_sessions").desc(), "path").limit(SP_K)
     w_rank = W.orderBy(F.col("n_sessions").desc(), "path")
@@ -418,11 +423,10 @@ def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE: dict[str, str] = {
-    "q_session_paths": f"""
-        WITH flagged AS (
-            SELECT user_id, ts, event_id, event_type,
-                   CASE WHEN epoch(ts) - epoch(lag(ts) OVER w) IS NULL
+# The session rule: the new-session flag (first event, or a gap over
+# SESSION_GAP_MINUTES) closing ``flagged``'s select list, and the running
+# session number per user in ``sessions``.
+_SESSIONS_SQL = f"""CASE WHEN epoch(ts) - epoch(lag(ts) OVER w) IS NULL
                          OR epoch(ts) - epoch(lag(ts) OVER w) > {SESSION_GAP_MINUTES * 60}
                         THEN 1 ELSE 0 END AS is_new
             FROM events
@@ -432,7 +436,37 @@ ORACLE: dict[str, str] = {
                 PARTITION BY user_id ORDER BY ts, event_id
                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
             FROM flagged
-        ), ranked AS (
+        )"""
+
+# Per-event-type hour grid between its first and last ``hourly`` row, each
+# cell's counts (zero for a gap) and the last observed sum carried forward —
+# also q_stream_gap_fill's, over the sealed hours.
+GAP_FILL_GRID_SQL = """spans AS (
+            SELECT event_type, min(h) AS h0, max(h) AS h1 FROM hourly GROUP BY 1
+        ), grid AS (
+            SELECT s.event_type, CAST(g.gs AS TIMESTAMP) AS window_start
+            FROM spans s, LATERAL (
+                SELECT unnest(generate_series(s.h0, s.h1, INTERVAL 1 HOUR)) AS gs
+            ) g
+        )
+        SELECT g.window_start, g.event_type,
+               coalesce(h.n_events, 0) AS n_events,
+               coalesce(h.sum_value, 0.0) AS sum_value,
+               CAST(h.n_events IS NULL AS INT) AS is_gap,
+               last_value(h.sum_value IGNORE NULLS) OVER (
+                   PARTITION BY g.event_type ORDER BY g.window_start
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+               ) AS filled_value
+        FROM grid g
+        LEFT JOIN hourly h
+          ON h.event_type = g.event_type AND h.h = g.window_start"""
+
+
+ORACLE: dict[str, str] = {
+    "q_session_paths": f"""
+        WITH flagged AS (
+            SELECT user_id, ts, event_id, event_type,
+                   {_SESSIONS_SQL}, ranked AS (
             SELECT user_id, session_id, event_type, ts, event_id,
                    row_number() OVER (
                        PARTITION BY user_id, session_id ORDER BY ts, event_id
@@ -520,17 +554,7 @@ ORACLE: dict[str, str] = {
     "q_sessionize": f"""
         WITH flagged AS (
             SELECT user_id, ts, event_id, value,
-                   CASE WHEN epoch(ts) - epoch(lag(ts) OVER w) IS NULL
-                         OR epoch(ts) - epoch(lag(ts) OVER w) > {SESSION_GAP_MINUTES * 60}
-                        THEN 1 ELSE 0 END AS is_new
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), sessions AS (
-            SELECT *, sum(is_new) OVER (
-                PARTITION BY user_id ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-            FROM flagged
-        )
+                   {_SESSIONS_SQL}
         SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
                count(*) AS n_events,
                CAST(date_trunc('second', min(ts)) AS TIMESTAMP) AS session_start,
@@ -564,32 +588,14 @@ ORACLE: dict[str, str] = {
                    sum(n_trans) OVER (PARTITION BY prev_type) AS DOUBLE), 6) AS p
         FROM trans
     """,
-    "q_gap_fill": """
+    "q_gap_fill": f"""
         WITH hourly AS (
             SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS h, event_type,
                    count(*) AS n_events,
                    CAST(round(sum(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE)
                        AS sum_value
             FROM events GROUP BY 1, 2
-        ), spans AS (
-            SELECT event_type, min(h) AS h0, max(h) AS h1 FROM hourly GROUP BY 1
-        ), grid AS (
-            SELECT s.event_type, CAST(g.gs AS TIMESTAMP) AS window_start
-            FROM spans s, LATERAL (
-                SELECT unnest(generate_series(s.h0, s.h1, INTERVAL 1 HOUR)) AS gs
-            ) g
-        )
-        SELECT g.window_start, g.event_type,
-               coalesce(h.n_events, 0) AS n_events,
-               coalesce(h.sum_value, 0.0) AS sum_value,
-               CAST(h.n_events IS NULL AS INT) AS is_gap,
-               last_value(h.sum_value IGNORE NULLS) OVER (
-                   PARTITION BY g.event_type ORDER BY g.window_start
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ) AS filled_value
-        FROM grid g
-        LEFT JOIN hourly h
-          ON h.event_type = g.event_type AND h.h = g.window_start
+        ), {GAP_FILL_GRID_SQL}
     """,
     "q_event_growth": """
         WITH weekly AS (

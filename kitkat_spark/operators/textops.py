@@ -57,9 +57,10 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stopword-hit language ID (deterministic n-gram heuristic)."""
-    docs = load_table(spark, sf_dir, "documents")
+def _lang_scores() -> tuple[dict[str, Column], Column]:
+    """Stopword-hit language ID over ``text``: per-language hit counts and
+    the argmax language (ties to en, then fr) — q_lang_id's classifier,
+    also q_lang_mismatch's detected language."""
     scores = {
         lang: F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), F.lit(0)))
         for lang, pat in LANG_WORDS.items()
@@ -69,6 +70,13 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(scores["fr"] >= scores["de"], "fr")
         .otherwise("de")
     )
+    return scores, pred
+
+
+def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stopword-hit language ID (deterministic n-gram heuristic)."""
+    docs = load_table(spark, sf_dir, "documents")
+    scores, pred = _lang_scores()
     return docs.select(
         "doc_id",
         scores["en"].alias("score_en"),
@@ -86,17 +94,8 @@ def q_lang_mismatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     + one tiny aggregation; the matrix is |langs|^2 rows at any corpus
     size."""
     docs = load_table(spark, sf_dir, "documents")
-    scores = {
-        lang: F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), F.lit(0)))
-        for lang, pat in LANG_WORDS.items()
-    }
-    pred = (
-        F.when((scores["en"] >= scores["fr"]) & (scores["en"] >= scores["de"]), "en")
-        .when(scores["fr"] >= scores["de"], "fr")
-        .otherwise("de")
-    )
     return (
-        docs.select("lang", pred.alias("pred_lang"))
+        docs.select("lang", _lang_scores()[1].alias("pred_lang"))
         .groupBy("lang", "pred_lang")
         .agg(F.count("*").alias("n_docs"))
         .select(
@@ -944,15 +943,10 @@ def fertility_drift(cohorts: DataFrame) -> DataFrame:
     )
 
 
-ORACLE["q_fertility_drift"] = f"""
-        WITH per AS (
-            SELECT source, doc_id // {FERT_BUCKET_DOCS} AS bucket,
-                   len(string_split(text, ' ')) AS ws,
-                   len(regexp_extract_all(text,
-                       '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')) AS re_t,
-                   length(text) AS ch
-            FROM documents
-        ), agg AS (
+# Per-(source, bucket) counts over a ``per`` CTE, their trailing sums and
+# the drift flags in 1e-4 fixed point — also q_stream_fertility's, over
+# the sealed horizon.
+FERT_DRIFT_SQL = f"""agg AS (
             SELECT source, bucket,
                    CAST(count(*) AS BIGINT) AS n_docs,
                    CAST(sum(ws) AS BIGINT) AS n_words,
@@ -985,5 +979,15 @@ ORACLE["q_fertility_drift"] = f"""
                ctr / 10000.0 AS trailing_cpt,
                (abs(fm - ft) * 100 > ft * {FERT_DRIFT_PCT}
                 OR abs(cm - ctr) * 100 > ctr * {FERT_DRIFT_PCT}) AS drift
-        FROM units
+        FROM units"""
+
+ORACLE["q_fertility_drift"] = f"""
+        WITH per AS (
+            SELECT source, doc_id // {FERT_BUCKET_DOCS} AS bucket,
+                   len(string_split(text, ' ')) AS ws,
+                   len(regexp_extract_all(text,
+                       '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')) AS re_t,
+                   length(text) AS ch
+            FROM documents
+        ), {FERT_DRIFT_SQL}
     """

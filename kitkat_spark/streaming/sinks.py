@@ -10,10 +10,14 @@ KPL and inflates zlib, functions/kinesis.py) and splits that pass: healthy
 rows are only rendered, undecodable ones land in a quarantine table with
 the raw payload and a reason column.
 
-Both paths are written by ONE foreachBatch so a micro-batch commits good
-and bad rows atomically-enough for replay (checkpointed offsets + idempotent
-overwrite-by-batch-id gives effectively-once on retries; exactly-once needs
-a transactional table format, which is a deployment choice not taken here).
+Both paths are written by ONE foreachBatch, each with a plain parquet
+append, and the checkpoint commits the batch's offsets only after that
+function returns. The delivery guarantee is therefore AT-LEAST-ONCE: a
+micro-batch re-run after a failure between its writes and its commit
+appends its rows again (nothing keys a write by batch id or overwrites a
+previous attempt). Exactly-once needs a transactional table format that
+commits a batch's files atomically and skips a batch id it has already
+committed, which is a deployment choice not taken here.
 """
 
 from __future__ import annotations

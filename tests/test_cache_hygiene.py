@@ -223,3 +223,16 @@ def test_operators_hold_no_scratch_paths_or_exit_hooks():
         if needle in open(os.path.join(ops, name)).read()
     ]
     assert hits == []
+
+
+def test_sign_lsh_planes_written_once():
+    """The md5 sign-LSH hyperplane expression is written once (the
+    similarity.py oracle constant every ANN oracle interpolates), so no
+    oracle can replay a different plane family than its siblings."""
+    ops = os.path.join(REPO, "kitkat_spark", "operators")
+    n = sum(
+        open(os.path.join(ops, name)).read().count("md5('plane_' ||")
+        for name in os.listdir(ops)
+        if name.endswith(".py")
+    )
+    assert n == 1

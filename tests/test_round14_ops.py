@@ -241,6 +241,7 @@ def test_passjoin_delete_balances_and_compacts(spark):
         _PASS_M,
         PASS_DEL_MOD,
         PASS_DEL_RESIDUE,
+        passjoin_probe,
         q_passjoin_delete,
     )
     from kitkat_spark.sources import load_table
@@ -260,6 +261,16 @@ def test_passjoin_delete_balances_and_compacts(spark):
     seg = [r for r in rows if r.structure == "segments"]
     assert sum(r.n_before for r in seg) == _PASS_M * n_docs
     assert sum(r.n_retired for r in seg) == _PASS_M * n_ret
+    # the length-domain audit and the per-document probe enumerate the
+    # same windows: per ordinal, stored probe rows == probes of the corpus
+    audited: dict[int, int] = {}
+    for r in rows:
+        if r.structure == "probes":
+            audited[r.i] = audited.get(r.i, 0) + r.n_before
+    per_doc = passjoin_probe(spark, d.select("doc_id", "text", "n_chars"))
+    assert audited == {
+        r.i: r["count"] for r in per_doc.groupBy("i").count().collect()
+    }
 
 
 # --------------------------------------------- streaming fertility drift
